@@ -1214,20 +1214,25 @@ object VersionedTable {
             java.nio.file.Paths.get(tmp.toUri.getPath))
           true
         } catch { case _: java.nio.file.FileAlreadyExistsException => false }
-      } else {
-        try {
-          org.apache.hadoop.fs.FileContext
-            .getFileContext(target.toUri, spark.sparkContext.hadoopConfiguration)
-            .rename(tmp, target, org.apache.hadoop.fs.Options.Rename.NONE)
-          true
-        } catch {
-          case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
-          case _: java.io.IOException if f.exists(target) => false
-        }
-      }
+      } else renameNoOverwrite(spark.sparkContext.hadoopConfiguration,
+        tmp, target)
     f.delete(tmp, false)
     won
   }
+
+  /** The HDFS-atomic no-overwrite rename of `src` to `dst` (the Delta
+    * LogStore recipe; safe on executors). Returns true iff this caller
+    * created `dst`. */
+  private def renameNoOverwrite(conf: org.apache.hadoop.conf.Configuration,
+      src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Boolean =
+    try {
+      org.apache.hadoop.fs.FileContext.getFileContext(dst.toUri, conf)
+        .rename(src, dst, org.apache.hadoop.fs.Options.Rename.NONE)
+      true
+    } catch {
+      case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
+      case _: java.io.IOException if dst.getFileSystem(conf).exists(dst) => false
+    }
 
   private def casManifest(spark: SparkSession, dir: String, newV: Long,
       writerId: String, body: String): Boolean = {
@@ -1299,6 +1304,40 @@ object VersionedTable {
     }
     removed.foreach(rel => sb ++= s"removed=$rel\n")
     sb.toString
+  }
+
+  /** The write path's landing step (docs/SCALE.md, "The write path"),
+    * the only code that lands a single manifest: build version
+    * `parent + 1`'s manifest, CAS it, and on a win run the change-feed
+    * hook when the landed meta declares a feed. A lost race returns
+    * false when `onLost` is None (the caller retries); otherwise it
+    * removes `stagingDir` and throws [[CommitConflict]] as
+    * "`op`: lost the race for version N — `onLost`". */
+  private def land(spark: SparkSession, dir: String, op: String,
+      parent: Long, writerId: String,
+      schema: org.apache.spark.sql.types.StructType, files: Seq[String],
+      removed: Seq[String] = Seq.empty,
+      stats: Map[String, Map[String, (String, String)]] = Map.empty,
+      meta: Map[String, String] = Map.empty,
+      dv: Map[String, (String, Long)] = Map.empty,
+      colmap: Map[String, String] = Map.empty,
+      stagingDir: Option[String] = None,
+      onLost: Option[String] = Some("re-read, reconcile, retry")): Boolean = {
+    val newV = parent + 1
+    val body = manifestBody(newV, parent, writerId, schema, stagingDir,
+      files, removed, stats, meta, dv, commitClock(spark), colmap)
+    val won = casManifest(spark, dir, newV, writerId, body)
+    if (won && feedKeys(meta).nonEmpty) ensureFeed(spark, dir, writerId)
+    if (!won) onLost.foreach { advice =>
+      val removedNote = stagingDir.fold("") { rel =>
+        fs(spark, dir).delete(
+          new org.apache.hadoop.fs.Path(s"${rootOf(dir)}/$rel"), true)
+        "staged data removed; "
+      }
+      throw new CommitConflict(
+        s"$op: lost the race for version $newV — $removedNote$advice")
+    }
+    won
   }
 
   // ─────────── CHECK expectations at the commit boundary (round 12) ───────────
@@ -1390,6 +1429,21 @@ object VersionedTable {
         s"unknown cluster mode '$other' — 'range' or 'zorder'")
     }
 
+  /** A planner's rewrite of touched files, shaped into `nFiles` files:
+    * with a clustering declared at `v`, re-clustered so file-local key
+    * envelopes survive (a join's hash shuffle would otherwise spread
+    * every key range across every output file and kill data skipping
+    * for all future reads); else coalesced — sized to the churn, not
+    * fanned into shuffle.partitions tiny files. */
+  private def clusterRewrite(spark: SparkSession, dir: String, v: Long,
+      rows: DataFrame, nFiles: Int): DataFrame = {
+    val cols = clusterColsOf(spark, dir, v)
+      .filter(schemaOf(spark, dir, v).fieldNames.contains)
+    if (cols.nonEmpty)
+      clusterShape(rows, cols, clusterModeOf(spark, dir, v), nFiles)
+    else rows.coalesce(nFiles)
+  }
+
   /** Version `v`'s persisted expectations: name → boolean SQL. */
   def tableExpectations(spark: SparkSession, dir: String, v: Long)
       : Map[String, String] =
@@ -1405,41 +1459,33 @@ object VersionedTable {
   private def expectMeta(spark: SparkSession, dir: String, parent: Long,
       meta: Map[String, String], expectations: Map[String, String])
       : Map[String, String] = {
+    // the parent's TABLE STATE persists ([[persistentMeta]]):
+    //   - the clustering and change-feed declarations (override via an
+    //     explicit meta entry; "" clears it);
+    //   - the dropped-physical-name tombstones, unconditionally — they
+    //     guard EVERY future commit's new columns (see dropColumns);
+    //   - AggView's resolved config ("view.cfg.*", round 15): the
+    //     view's identity, written once at init and read by every
+    //     syncResolved. The "view.synced" marker inherits too (a
+    //     metadata-only commit between syncs — e.g. the propagated
+    //     group-column rename — does not change which source version
+    //     the state reflects); each sync still overrides it explicitly.
+    // Rescan RECEIPTS (view.rescan.*) deliberately do NOT inherit — a
+    // receipt describes its own commit only.
     // NB: the else branch MUST be typed — an untyped Map.empty widens
-    // `inherited` to Iterable[(String, String)], where ++ CONCATENATES
+    // `state` to Iterable[(String, String)], where ++ CONCATENATES
     // instead of overriding by key and an explicit drop would silently
     // not drop (caught by the drop-constraint spec case)
-    val inherited: Map[String, String] =
-      if (parent >= 0) tableExpectations(spark, dir, parent)
+    val state: Map[String, String] =
+      if (parent >= 0) persistentMeta(readManifest(spark, dir, parent).meta)
       else Map.empty[String, String]
-    // the clustering and change-feed declarations persist the same
-    // way (override via an explicit meta entry; "" clears it)
-    val cluster: Map[String, String] =
-      if (parent >= 0)
-        readManifest(spark, dir, parent).meta
-          .filter { case (k, _) => k.startsWith("cluster.") || k == FeedKey }
-      else Map.empty[String, String]
-    // the dropped-physical-name tombstones persist unconditionally —
-    // they guard EVERY future commit's new columns (see dropColumns).
-    // AggView's resolved config ("view.cfg.*", round 15) persists the
-    // same way: it is the view's identity, written once at init and
-    // read by every syncResolved. The "view.synced" marker inherits
-    // too (a metadata-only commit between syncs — e.g. the propagated
-    // group-column rename — does not change which source version the
-    // state reflects); each sync still overrides it explicitly.
-    // Rescan RECEIPTS (view.rescan.*) deliberately do NOT inherit —
-    // a receipt describes its own commit only.
-    val tombstones: Map[String, String] =
-      if (parent >= 0)
-        readManifest(spark, dir, parent).meta
-          .filter { case (k, _) =>
-            k == DroppedPhysKey || k.startsWith("view.cfg.") ||
-              k == "view.synced" }
-      else Map.empty[String, String]
+    val (expects, decls) = state.partition(_._1.startsWith(ExpectPrefix))
+    val inherited = expects.map { case (k, sql) =>
+      k.stripPrefix(ExpectPrefix) -> sql }
     ((inherited ++ expectations)
       .filter { case (_, sql) => sql.trim.nonEmpty } // "" = explicit drop
       .map { case (n, sql) => (s"$ExpectPrefix$n", sql) }
-      .toMap: Map[String, String]) ++ cluster ++ tombstones ++ meta
+      .toMap: Map[String, String]) ++ decls ++ meta
   }
 
   /** The meta keys that are TABLE STATE rather than per-commit
@@ -1456,9 +1502,34 @@ object VersionedTable {
     * delete and could wrongly admit a mask-union rebase). */
   private def persistentMeta(meta: Map[String, String]): Map[String, String] =
     meta.filter { case (k, _) =>
-      k.startsWith(ExpectPrefix) || k.startsWith("cluster.") ||
-        k == FeedKey || k == DroppedPhysKey ||
-        k.startsWith("view.cfg.") || k == "view.synced" }
+      isDeclKey(k) || k.startsWith("view.cfg.") || k == "view.synced" }
+
+  /** Declaration keys: expectations, clustering, the feed keys and —
+    * with `tombstones` — the dropped-physical-name list. */
+  private def isDeclKey(k: String, tombstones: Boolean = true): Boolean =
+    k.startsWith(ExpectPrefix) || k.startsWith("cluster.") ||
+      k == FeedKey || (tombstones && k == DroppedPhysKey)
+
+  /** A manifest's declarations (see [[isDeclKey]]). */
+  private def declsOf(m: Manifest,
+      tombstones: Boolean = true): Map[String, String] =
+    m.meta.filter { case (k, _) => isDeclKey(k, tombstones) }
+
+  /** "name (sql): n rows" for every expectation some of `rows` violate
+    * (not TRUE — NULL counts), from ONE aggregation pass evaluating
+    * them all. */
+  private def violations(rows: DataFrame,
+      expects: Map[String, String]): Seq[String] = {
+    val names = expects.keys.toSeq.sorted
+    val aggs = names.map(n => coalesce(
+      sum(when(!coalesce(expr(expects(n)), lit(false)), 1L).otherwise(0L)),
+      lit(0L)).as(n))
+    val row = rows.agg(aggs.head, aggs.tail: _*).head()
+    names.zipWithIndex.collect {
+      case (n, i) if row.getLong(i) > 0 =>
+        s"$n (${expects(n)}): ${row.getLong(i)} rows"
+    }
+  }
 
   private def enforceExpectations(spark: SparkSession, dir: String,
       stagedRels: Seq[String], schema: org.apache.spark.sql.types.StructType,
@@ -1472,22 +1543,18 @@ object VersionedTable {
     if (expects.isEmpty || stagedRels.isEmpty) return
     // staged files carry PHYSICAL names; expectations are LOGICAL SQL
     val staged = readPhysical(spark, dir, stagedRels, schema, colmap)
-    val names = expects.keys.toSeq.sorted
-    val aggs = names.map(n => coalesce(
-      sum(when(!coalesce(expr(expects(n)), lit(false)), 1L).otherwise(0L)),
-      lit(0L)).as(n))
     // an expectation that no longer ANALYZES against the staged schema
     // (its column was dropped via allowSchemaChange, or the sql is
     // malformed) must refuse the commit the same way a violation does
     // — staging cleaned, ExpectationViolation raised naming the
     // unresolvable constraint — not leak the staged dir via a raw
     // AnalysisException that leaves the table un-committable
-    val row =
-      try staged.agg(aggs.head, aggs.tail: _*).head()
+    val bad =
+      try violations(staged, expects)
       catch {
         case e: org.apache.spark.sql.AnalysisException =>
           f.delete(dataPath, true)
-          val broken = names.filter { n =>
+          val broken = expects.keys.toSeq.sorted.filter { n =>
             try { staged.select(expr(expects(n))); false }
             catch { case _: org.apache.spark.sql.AnalysisException => true }
           }
@@ -1499,10 +1566,6 @@ object VersionedTable {
               "(expectations = Map(name -> \"\")) or restore the column. " +
               s"Analysis error: ${e.getMessage.linesIterator.next()}")
       }
-    val bad = names.zipWithIndex.collect {
-      case (n, i) if row.getLong(i) > 0 =>
-        s"$n (${expects(n)}): ${row.getLong(i)} rows"
-    }
     if (bad.nonEmpty) {
       f.delete(dataPath, true)
       throw new ExpectationViolation(
@@ -1524,23 +1587,14 @@ object VersionedTable {
       schema: org.apache.spark.sql.types.StructType,
       expects: Map[String, String], context: String): Unit = {
     if (expects.isEmpty || rels.isEmpty) return
-    val rows = readFilesMasked(spark, dir, m, rels, schema)
-    val names = expects.keys.toSeq.sorted
-    val aggs = names.map(n => coalesce(
-      sum(when(!coalesce(expr(expects(n)), lit(false)), 1L).otherwise(0L)),
-      lit(0L)).as(n))
-    val row =
-      try rows.agg(aggs.head, aggs.tail: _*).head()
+    val bad =
+      try violations(readFilesMasked(spark, dir, m, rels, schema), expects)
       catch {
         case e: org.apache.spark.sql.AnalysisException =>
           throw new ExpectationViolation(s"$context — expectation does " +
             s"not resolve against the landed schema: " +
             e.getMessage.linesIterator.next())
       }
-    val bad = names.zipWithIndex.collect {
-      case (n, i) if row.getLong(i) > 0 =>
-        s"$n (${expects(n)}): ${row.getLong(i)} rows"
-    }
     if (bad.nonEmpty)
       throw new ExpectationViolation(s"$context: ${bad.mkString("; ")}")
   }
@@ -1558,14 +1612,48 @@ object VersionedTable {
         s"staging tag), got '$writerId'")
   }
 
+  // fast-path staleness check (the CAS below still decides)
   private def requireNotStale(spark: SparkSession, dir: String,
-      expectedVersion: Long): Unit = {
-    // fast-path staleness check (the CAS below still decides)
+      expectedVersion: Long): Unit =
+    planVersion(spark, dir, expectedVersion, rebaseAttempts = 0)
+
+  /** The version a planner ([[merge]], [[deleteWhere]], [[updateWhere]],
+    * [[purgeDeletes]], [[compactSmallFiles]]) plans against: the tip
+    * when it is `expectedVersion` — or, with a rebase budget, when the
+    * caller's version was superseded (the planner derives its whole
+    * read set from the table, so re-planning at the tip is exactly what
+    * "re-read, retry" would do by hand). A version behind the tip with
+    * no budget, or ahead of it, is a [[CommitConflict]]. */
+  private def planVersion(spark: SparkSession, dir: String,
+      expectedVersion: Long, rebaseAttempts: Int): Long = {
     val cur = latestVersion(spark, dir)
-    if (cur != expectedVersion)
-      throw new CommitConflict(
-        s"commit to $dir: expected version $expectedVersion but table is " +
-          s"at $cur — re-read, reconcile, retry")
+    if (cur == expectedVersion || (rebaseAttempts > 0 && cur > expectedVersion))
+      cur
+    else throw new CommitConflict(
+      s"commit to $dir: expected version $expectedVersion but table is " +
+        s"at $cur — re-read, reconcile, retry")
+  }
+
+  /** Refuse a landing schema whose columns collide on PHYSICAL name
+    * with a renamed column, or reuse a physical name `parentMeta`
+    * tombstones: feed files, replicas and retained versions keep
+    * physical names — and a dropped column's bytes — forever. */
+  private def requireFreshPhysNames(op: String,
+      schema: org.apache.spark.sql.types.StructType,
+      colmap: Map[String, String], parentMeta: Map[String, String]): Unit = {
+    val phys = schema.fieldNames.toSeq
+      .map(n => physName(colmap, n).toLowerCase(java.util.Locale.ROOT))
+    require(phys.distinct.length == phys.length,
+      s"$op: a column's name collides with the PHYSICAL name of a " +
+        "renamed column — feed/replica files keep physical names " +
+        "forever; pick a different name")
+    val tomb = parentMeta.getOrElse(DroppedPhysKey, "").split(',')
+      .map(_.trim.toLowerCase(java.util.Locale.ROOT)).filter(_.nonEmpty).toSet
+    val hit = phys.filter(tomb.contains)
+    require(hit.isEmpty,
+      s"$op: column(s) ${hit.mkString(",")} reuse a DROPPED column's " +
+        "physical name — retained versions and feed files still carry " +
+        "those bytes; pick another name")
   }
 
   /** Commit `df` as a FULL SNAPSHOT child of `expectedVersion` — every
@@ -1614,25 +1702,11 @@ object VersionedTable {
     // must not shadow a surviving column's physical name.
     val colmap = parentM.map(_.colmap).getOrElse(Map.empty[String, String])
       .filter { case (lg, _) => df.schema.fieldNames.contains(lg) }
-    locally {
-      val phys = df.schema.fieldNames.toSeq
-        .map(n => physName(colmap, n).toLowerCase(java.util.Locale.ROOT))
-      require(phys.distinct.length == phys.length,
-        s"commit to $dir: a column's name collides with the PHYSICAL " +
-          "name of a renamed column — feed/replica files keep physical " +
-          "names forever; pick a different name")
-      // tombstones are ABSOLUTE: even a snapshot rewrite drops only
-      // data files — feed files and retained old versions keep the
-      // dropped bytes under the old physical name forever
-      val tomb = parentM.map(m => m.meta.getOrElse(DroppedPhysKey, ""))
-        .getOrElse("").split(',').map(_.trim.toLowerCase(
-          java.util.Locale.ROOT)).filter(_.nonEmpty).toSet
-      val hit = phys.filter(tomb.contains)
-      require(hit.isEmpty,
-        s"commit to $dir: column(s) ${hit.mkString(",")} reuse a DROPPED " +
-          "column's physical name — retained versions and feed files " +
-          "still carry those bytes; pick another name")
-    }
+    // tombstones are ABSOLUTE: even a snapshot rewrite drops only
+    // data files — feed files and retained old versions keep the
+    // dropped bytes under the old physical name forever
+    requireFreshPhysNames(s"commit to $dir", df.schema, colmap,
+      parentM.map(_.meta).getOrElse(Map.empty))
     // clusterBy = "CREATE/REPLACE TABLE CLUSTERED BY": reshape the
     // snapshot into range-clustered sorted files, persist the
     // declaration (merge re-clusters its rewrites to keep it), and
@@ -1698,17 +1772,9 @@ object VersionedTable {
       colmap)
     val stats = collectStats(spark, dir, staged,
       resolveStatsCols(effStatsCols, parentStats, df.schema), colmap)
-    val body = manifestBody(newV, expectedVersion, writerId, df.schema,
-      Some(dataRel), staged, removed = parentLive, stats = stats,
-      meta = effMeta, tsMs = commitClock(spark), colmap = colmap)
-    if (!casManifest(spark, dir, newV, writerId, body)) {
-      f.delete(dataPath, true)
-      throw new CommitConflict(
-        s"commit to $dir: lost the race for version $newV — staged data " +
-          "removed; re-read, reconcile, retry")
-    }
-    if (effMeta.get(FeedKey).exists(_.trim.nonEmpty))
-      ensureFeed(spark, dir, writerId)
+    land(spark, dir, s"commit to $dir", expectedVersion, writerId,
+      df.schema, staged, removed = parentLive, stats = stats,
+      meta = effMeta, colmap = colmap, stagingDir = Some(dataRel))
     newV
   }
 
@@ -1816,9 +1882,8 @@ object VersionedTable {
             prev.schema.map(physShape(_, prev.colmap)) ==
               cur.schema.map(physShape(_, cur.colmap))))
         return Some(s"version $w changed the table schema")
-      def decls(m: Manifest) = m.meta.filter { case (k, _) =>
-        k.startsWith(ExpectPrefix) || k.startsWith("cluster.") || k == FeedKey }
-      if (decls(prev) != decls(cur) && !allowDeclChange)
+      if (declsOf(prev, tombstones = false) !=
+          declsOf(cur, tombstones = false) && !allowDeclChange)
         return Some(s"version $w changed table declarations " +
           "(expectations/clustering/feed)")
       val prevSet = prev.files.toSet
@@ -1868,24 +1933,11 @@ object VersionedTable {
     * MERGE/OPTIMIZE ride on: bytes written scale with the change, not
     * the table. Returns the new version + byte receipts.
     *
-    * Optimistic rebase (round 14): with `rebaseAttempts > 0`, a lost
-    * CAS (or stale `expectedVersion` at entry) runs
-    * [[rebaseConflict]] against the current tip — when every
-    * intervening winner is logically disjoint (see `readSet` /
-    * `readBounds` / `readsTable`), the already-staged files are
-    * re-stamped onto the new parent and the CAS retried, no data
-    * rewritten. Conflicting or budget-exhausted commits still throw
-    * [[CommitConflict]] with staging cleaned.
-    *
-    * Additive-schema rebase (round 17): a winner that APPENDED
-    * nullable columns (the [[addColumns]] shape) is an admissible
-    * rebase target — the migration is metadata-only and commutes with
-    * any delta that does not reference the new column, so the landing
-    * adopts the winner's EXTENDED schema and the staged files
-    * null-fill it (a landing that kept the staged receipt would
-    * silently regress the migration). At scale this is the
-    * migration-racing-a-thousand-blind-appenders case: none of them
-    * re-stage a byte. Renames, drops, and type changes still refuse. */
+    * Staleness, optimistic rebase (`rebaseAttempts`, `readSet` /
+    * `readBounds` / `readsTable` / `readScope`) and the CAS are the
+    * write path's one loop, [[landDelta]] — see docs/SCALE.md, "The
+    * write path". Conflicting or budget-exhausted commits throw
+    * [[CommitConflict]] with staging cleaned. */
   def commitDelta(spark: SparkSession, dir: String,
       adds: Option[DataFrame], removeFiles: Seq[String],
       expectedVersion: Long, writerId: String,
@@ -1901,16 +1953,129 @@ object VersionedTable {
     requireWriterId(writerId)
     require(expectedVersion >= 0,
       "commitDelta needs an existing parent version — use commit for v0")
+    val l = landDelta(spark, dir, s"commitDelta to $dir", adds, removeFiles,
+      Map.empty, Map.empty, expectedVersion, writerId, allowSchemaChange,
+      statsCols, meta, expectations, readSet, readBounds, readsTable,
+      rebaseAttempts, readScope)
     val f = fs(spark, dir)
-    // the op's full logical footprint: everything it read PLUS the
-    // files it rewrites (a winner touching either invalidates it)
-    val footprint = (readSet ++ removeFiles).toSet
+    def bytes(rels: Seq[String]): Long =
+      rels.map(rel => f.getFileStatus(
+        new org.apache.hadoop.fs.Path(s"${rootOf(dir)}/$rel")).getLen).sum
+    DeltaStats(l.version, l.staged.length.toLong, removeFiles.length.toLong,
+      l.parentLive.length.toLong, bytes(l.staged), bytes(l.parentLive))
+  }
+
+  /** What [[landDelta]] landed: the new version, its parent's live
+    * files, the files it staged and dropped, and how many files it
+    * left masked and live. */
+  private final case class Landed(version: Long, parentLive: Seq[String],
+      staged: Seq[String], removed: Seq[String], masked: Int, live: Int)
+
+  /** The write path's one CAS/rebase loop (docs/SCALE.md, "The write
+    * path"). A planner hands over its change against `expectedVersion`:
+    * `adds` to stage, `removeFiles` to drop, and `masks` — per file the
+    * deletion-vector dir holding its FULL position set and the deleted
+    * row count; a file whose mask covers its `maskRows` physical rows
+    * leaves the live set instead. The loop refuses a stale parent,
+    * stages once, and lands through [[land]].
+    *
+    * A lost CAS (or a parent superseded before staging, with
+    * `rebaseAttempts > 0`) runs [[rebaseConflict]] against the current
+    * tip — when every intervening winner is logically disjoint from the
+    * change's footprint (`readSet` plus the files it drops or masks,
+    * `readBounds`, `readsTable`, `readScope`), the already-staged
+    * files and masks are re-stamped onto the new parent and the CAS
+    * retried, no data rewritten. A change that writes masks may
+    * instead MASK-UNION ([[maskMergeOk]]): its positions merge with the
+    * tip's for files both sides masked. Anything else throws
+    * [[CommitConflict]] with everything the change staged removed.
+    *
+    * Additive-schema rebase (round 17): a winner that APPENDED
+    * nullable columns (the [[addColumns]] shape) is an admissible
+    * rebase target — the migration is metadata-only and commutes with
+    * any delta that does not reference the new column, so the landing
+    * adopts the winner's EXTENDED schema and the staged files
+    * null-fill it (a landing that kept the staged receipt would
+    * silently regress the migration). At scale this is the
+    * migration-racing-a-thousand-blind-appenders case: none of them
+    * re-stage a byte. Renames, drops, and type changes still refuse. */
+  private def landDelta(spark: SparkSession, dir: String, op: String,
+      adds: Option[DataFrame], removeFiles: Seq[String],
+      masks: Map[String, (String, Long)], maskRows: Map[String, Long],
+      expectedVersion: Long, writerId: String,
+      allowSchemaChange: Boolean = false,
+      statsCols: Option[Seq[String]] = None,
+      meta: Map[String, String] = Map.empty,
+      expectations: Map[String, String] = Map.empty,
+      readSet: Seq[String] = Seq.empty,
+      readBounds: Seq[ColBound] = Seq.empty,
+      readsTable: Boolean = false,
+      rebaseAttempts: Int = 0,
+      readScope: Option[String] = None): Landed = {
+    val f = fs(spark, dir)
+    def path(rel: String) = new org.apache.hadoop.fs.Path(s"${rootOf(dir)}/$rel")
+    def fullyMasked(rel: String, n: Long) = maskRows.get(rel).exists(n >= _)
+    // the files the change drops or masks; its full logical footprint
+    // adds everything it read (a winner touching either invalidates it)
+    val touched = (removeFiles ++ masks.keys).toSet
+    val footprint = readSet.toSet ++ touched
+    // everything this change wrote, removed when it throws
+    var ownDirs = masks.values.map(_._1).toSeq.distinct
+    def cleanup(): Unit = ownDirs.foreach(rel => f.delete(path(rel), true))
+    val tip0 =
+      try planVersion(spark, dir, expectedVersion, rebaseAttempts)
+      catch { case e: CommitConflict => cleanup(); throw e }
+    val planM = readManifest(spark, dir, expectedVersion)
     var parent = expectedVersion
     var attemptsLeft = rebaseAttempts
+    // fully-deleted files leave the live set: no husks
+    var removes = removeFiles ++ masks.collect {
+      case (rel, (_, n)) if fullyMasked(rel, n) => rel }.toSeq.sorted
+    // per masked file, the dv dir + deleted count the landing points
+    // at — re-pointed by every mask union
+    var curMasks = masks
+    // the manifest our masks were last reconciled against: starts at
+    // the PLAN parent and advances to the adopted tip after every
+    // mask-union, so a SECOND contested retry re-unions only files with
+    // genuinely new third-party masks — diffing against the original
+    // plan manifest would re-classify files whose dv we already unioned
+    // and write redundant merged sidecars each round
+    var reconciledM = planM
+    var unions = 0
+    // mask-union rebase: the winners are recorded, scope-disjoint
+    // deletes — union our positions with the tip's for files both
+    // sides masked (exact: row-disjoint predicates never mask the same
+    // position; see the scope/mask-merge section)
+    def unionMasks(tip: Long): Unit = {
+      val tipM = readManifest(spark, dir, tip)
+      val affected = curMasks.keys.toSeq.sorted.filter(rel =>
+        !removes.contains(rel) && tipM.dv.get(rel) != reconciledM.dv.get(rel))
+      if (affected.nonEmpty) {
+        unions += 1
+        val mergedRel = s"_dv/v${tip + 1}-${stageTag(dir)}$writerId-m$unions"
+        val affectedDf = spark.createDataset(affected)(
+          org.apache.spark.sql.Encoders.STRING).toDF("file")
+        val dvDirs = (affected.map(curMasks(_)._1) ++
+          affected.flatMap(r => tipM.dv.get(r).map(_._1))).distinct
+        spark.read.parquet(dvDirs.map(path(_).toString): _*)
+          .select(col("file"), col("pos"))
+          .join(broadcast(affectedDf), Seq("file"), "left_semi")
+          .distinct()
+          .coalesce(1).write.mode("overwrite").parquet(path(mergedRel).toString)
+        ownDirs :+= mergedRel
+        val counts = spark.read.parquet(path(mergedRel).toString)
+          .groupBy("file").count().collect()
+          .map(r => r.getString(0) -> r.getLong(1)).toMap
+        curMasks ++= counts.map { case (rel, c) => rel -> (mergedRel, c) }
+        removes ++= affected.filter(rel =>
+          fullyMasked(rel, counts.getOrElse(rel, 0L)))
+      }
+      reconciledM = tipM
+    }
     // shared conflict gate for both the entry staleness check and lost
-    // CASes: adopt the tip when logically disjoint, else throw —
-    // cleanup runs only on the throw path
-    def rebaseTo(cur: Long, context: String, cleanup: => Unit): Unit = {
+    // CASes: adopt the tip when logically disjoint (or, for masks,
+    // mask-union onto it), else throw with everything staged removed
+    def rebaseTo(cur: Long, context: String): Unit = {
       val why =
         if (attemptsLeft <= 0) Some("rebase budget exhausted")
         else rebaseConflict(spark, dir, parent, cur, footprint, readBounds,
@@ -1933,24 +2098,20 @@ object VersionedTable {
           allowAdditiveSchema = !allowSchemaChange)
       why match {
         case None =>
-          attemptsLeft -= 1
-          parent = cur
+        case Some(_) if attemptsLeft > 0 && masks.nonEmpty &&
+            maskMergeOk(spark, dir, parent, cur, touched, readScope) =>
+          unionMasks(cur)
         case Some(reason) =>
-          cleanup
+          cleanup()
           throw new CommitConflict(
-            s"commitDelta to $dir: $context at version ${parent + 1} and " +
-              s"cannot rebase onto $cur ($reason) — staged data removed; " +
-              "re-read, re-derive, retry")
+            s"$op: $context at version ${parent + 1} and cannot rebase " +
+              s"onto $cur ($reason) — staged data removed; re-read, " +
+              "re-derive, retry")
       }
+      attemptsLeft -= 1
+      parent = cur
     }
-    locally {
-      val cur = latestVersion(spark, dir)
-      if (cur != parent) {
-        if (rebaseAttempts > 0 && cur > parent)
-          rebaseTo(cur, "planned against a superseded version", ())
-        else requireNotStale(spark, dir, parent) // throws with the usual message
-      }
-    }
+    if (tip0 != parent) rebaseTo(tip0, "planned against a superseded version")
     // the manifest schema this commit lands under, given the (possibly
     // rebased) parent `p`: staged == parent lands the staged receipt;
     // an explicit migration (allowSchemaChange) lands the staged
@@ -1959,26 +2120,28 @@ object VersionedTable {
     // PARENT's schema (adopting it is what keeps the rebase from
     // silently regressing the migration: the staged files null-fill
     // the appended tail, the pinned-schema read contract). Anything
-    // else refuses with the guardSchema message.
-    def effSchemaFor(p: Long): org.apache.spark.sql.types.StructType =
+    // else refuses with the guardSchema message. A change that stages
+    // no rows lands the parent's schema.
+    //
+    // The appended tail is forced NULLABLE (round 18, the r17
+    // advice): the staged or kept pre-migration files null-fill the
+    // winner's column, so a non-nullable receipt on the winner's
+    // commit must not survive this landing — Spark treats
+    // non-nullable as a guarantee (IsNotNull folds to true)
+    def effSchemaFor(p: Long): org.apache.spark.sql.types.StructType = {
+      val ps = schemaOf(spark, dir, p)
       adds.map(_.schema) match {
-        case None => schemaOf(spark, dir, p)
+        case None => extendedSchema(planM.schema, Some(ps)).getOrElse(ps)
         case Some(s0) =>
-          val ps = schemaOf(spark, dir, p)
           if (schemaShape(ps) == schemaShape(s0)) s0
           else if (allowSchemaChange) s0
-          else if (additiveExtension(Some(s0), Some(ps)).isDefined)
-            // adopt with the appended tail forced NULLABLE (round 18,
-            // the r17 advice): OUR staged files null-fill the winner's
-            // column, so a non-nullable receipt on the winner's commit
-            // must not survive this landing — Spark treats
-            // non-nullable as a guarantee (IsNotNull folds to true)
-            extendedSchema(Some(s0), Some(ps)).get
-          else throw new IllegalArgumentException(
-            s"commit to $dir: schema changed (was ${ps.simpleString}, " +
-              s"committing ${s0.simpleString}) — pass " +
-              "allowSchemaChange = true to evolve the table explicitly")
+          else extendedSchema(Some(s0), Some(ps)).getOrElse(
+            throw new IllegalArgumentException(
+              s"commit to $dir: schema changed (was ${ps.simpleString}, " +
+                s"committing ${s0.simpleString}) — pass " +
+                "allowSchemaChange = true to evolve the table explicitly"))
       }
+    }
     locally {
       val parentLive = liveFiles(spark, dir, parent).toSet
       val stale = removeFiles.filterNot(parentLive)
@@ -1994,29 +2157,16 @@ object VersionedTable {
     // renamed (= changed the schema) is a refused conflict.
     val colmap = readManifest(spark, dir, parent).colmap
       .filter { case (lg, _) => schema.fieldNames.contains(lg) }
-    locally {
-      val phys = schema.fieldNames.toSeq
-        .map(n => physName(colmap, n).toLowerCase(java.util.Locale.ROOT))
-      require(phys.distinct.length == phys.length,
-        s"commitDelta to $dir: a column's name collides with the " +
-          "PHYSICAL name of a renamed column — pick a different name")
-      val tomb = readManifest(spark, dir, parent).meta
-        .getOrElse(DroppedPhysKey, "").split(',')
-        .map(_.trim.toLowerCase(java.util.Locale.ROOT))
-        .filter(_.nonEmpty).toSet
-      val hit = phys.filter(tomb.contains)
-      require(hit.isEmpty,
-        s"commitDelta to $dir: column(s) ${hit.mkString(",")} reuse a " +
-          "DROPPED column's physical name — live files still carry " +
-          "those bytes; pick another name")
-    }
+    requireFreshPhysNames(s"commitDelta to $dir", schema, colmap,
+      readManifest(spark, dir, parent).meta)
     // stage ONCE — the staged dir keeps its original version-stamped
     // name across rebases (manifest references, not names, keep it
     // alive for vacuum/expire)
     val dataRel = s"data/v${parent + 1}-${stageTag(dir)}$writerId"
-    val dataPath = new org.apache.hadoop.fs.Path(s"${rootOf(dir)}/$dataRel")
+    val dataPath = path(dataRel)
     val staged = adds match {
       case Some(df) =>
+        ownDirs :+= dataRel
         toPhysical(df, colmap).write.mode("overwrite")
           .parquet(dataPath.toString)
         listDataFiles(spark, dir, dataRel)
@@ -2036,17 +2186,15 @@ object VersionedTable {
     val stagedStats = collectStats(spark, dir, staged,
       resolveStatsCols(statsCols, readManifest(spark, dir, parent).stats,
         schema), colmap)
-    var result: Option[DeltaStats] = None
-    while (result.isEmpty) {
-      val newV = parent + 1
+    var landed: Option[Landed] = None
+    while (landed.isEmpty) {
       val parentM = readManifest(spark, dir, parent)
       val parentLive = liveFiles(spark, dir, parent)
-      val effMeta = expectMeta(spark, dir, parent, meta, expectations)
       // recompute per iteration: a lost CAS may have rebased across an
       // admitted addColumns winner, whose extended schema this landing
       // must adopt (see effSchemaFor)
       val effSchema = effSchemaFor(parent)
-      val newLive = parentLive.filterNot(removeFiles.toSet) ++ staged
+      val newLive = parentLive.filterNot(removes.toSet) ++ staged
       // kept files inherit the parent's stats verbatim (they are the
       // same immutable bytes) — EXCEPT for columns whose type changed
       // under allowSchemaChange: the encodings are domain-specific
@@ -2068,32 +2216,25 @@ object VersionedTable {
           rel -> cols.filter { case (c, _) => typeStable(c) }
       }.filter(_._2.nonEmpty) ++ stagedStats
       // kept files keep their deletion-vector masks (same immutable
-      // bytes, same positions); a REWRITTEN file is in removeFiles, so
-      // its mask is materialized-by-omission — callers that rewrite
-      // ([[merge]], [[compactSmallFiles]], [[purgeDeletes]]) read
-      // through [[readFilesMasked]], so the rewrite already dropped
-      // the masked rows
-      val dvKept = parentM.dv.filter { case (rel, _) => newLiveSet(rel) }
-      val body = manifestBody(newV, parent, writerId, effSchema,
-        adds.map(_ => dataRel), newLive, removed = removeFiles,
-        stats = stats, meta = effMeta, dv = dvKept,
-        tsMs = commitClock(spark), colmap = colmap)
-      if (casManifest(spark, dir, newV, writerId, body)) {
-        if (effMeta.get(FeedKey).exists(_.trim.nonEmpty))
-          ensureFeed(spark, dir, writerId)
-        def bytes(rels: Seq[String]): Long =
-          rels.map(rel => f.getFileStatus(
-            new org.apache.hadoop.fs.Path(s"${rootOf(dir)}/$rel")).getLen).sum
-        result = Some(DeltaStats(newV, staged.length.toLong,
-          removeFiles.length.toLong, parentLive.length.toLong,
-          bytes(staged), bytes(parentLive)))
-      } else {
-        val cur = latestVersion(spark, dir)
-        rebaseTo(math.max(cur, newV), "lost the race",
-          if (staged.nonEmpty) f.delete(dataPath, true))
-      }
+      // bytes, same positions), except where this change masks them
+      // anew; a REWRITTEN file is in removeFiles, so its mask is
+      // materialized-by-omission — callers that rewrite ([[merge]],
+      // [[compactSmallFiles]], [[purgeDeletes]]) read through
+      // [[readFilesMasked]], so the rewrite already dropped the masked
+      // rows
+      val masked = curMasks.filter { case (rel, _) => newLiveSet(rel) }
+      val dv = parentM.dv.filter { case (rel, _) => newLiveSet(rel) } ++ masked
+      if (land(spark, dir, op, parent, writerId, effSchema, newLive,
+          removed = removes, stats = stats,
+          meta = expectMeta(spark, dir, parent, meta, expectations),
+          dv = dv, colmap = colmap, stagingDir = adds.map(_ => dataRel),
+          onLost = None))
+        landed = Some(Landed(parent + 1, parentLive, staged, removes,
+          masked.size, newLive.length))
+      else rebaseTo(math.max(latestVersion(spark, dir), parent + 1),
+        "lost the race")
     }
-    result.get
+    landed.get
   }
 
   /** Sanctioned schema evolution: ADD nullable columns as a
@@ -2162,17 +2303,11 @@ object VersionedTable {
     // the parent's live set resolves legacy whole-dir manifests to
     // file granularity here, so the evolved manifest is always in the
     // modern shape regardless of the table's age
-    val live = liveFiles(spark, dir, expectedVersion)
-    val body = manifestBody(newV, expectedVersion, writerId, evolved,
-      stagingDir = None, files = live, removed = Seq.empty,
-      stats = m.stats, dv = m.dv,
+    land(spark, dir, s"addColumns on $dir", expectedVersion, writerId,
+      evolved, liveFiles(spark, dir, expectedVersion), stats = m.stats,
+      dv = m.dv,
       meta = expectMeta(spark, dir, expectedVersion, Map.empty, Map.empty),
-      tsMs = commitClock(spark), colmap = m.colmap)
-    if (!casManifest(spark, dir, newV, writerId, body))
-      throw new CommitConflict(
-        s"addColumns on $dir: lost the race for version $newV — " +
-          "re-read, reconcile, retry")
-    if (feedKeysOf(spark, dir, newV).nonEmpty) ensureFeed(spark, dir, writerId)
+      colmap = m.colmap)
     newV
   }
 
@@ -2248,16 +2383,10 @@ object VersionedTable {
     val stats = m.stats.map { case (rel, cols) =>
       rel -> cols.filter { case (c, _) => domainStable(c) }
     }.filter(_._2.nonEmpty)
-    val body = manifestBody(newV, expectedVersion, writerId, evolved,
-      stagingDir = None, files = live, removed = Seq.empty,
-      stats = stats, dv = m.dv,
+    land(spark, dir, s"widenColumns on $dir", expectedVersion, writerId,
+      evolved, live, stats = stats, dv = m.dv,
       meta = expectMeta(spark, dir, expectedVersion, Map.empty, Map.empty),
-      tsMs = commitClock(spark), colmap = m.colmap)
-    if (!casManifest(spark, dir, newV, writerId, body))
-      throw new CommitConflict(
-        s"widenColumns on $dir: lost the race for version $newV — " +
-          "re-read, reconcile, retry")
-    if (feedKeysOf(spark, dir, newV).nonEmpty) ensureFeed(spark, dir, writerId)
+      colmap = m.colmap)
     newV
   }
 
@@ -2353,16 +2482,9 @@ object VersionedTable {
           .map(c => renames.getOrElse(c, c)).mkString(",")
       case kv => kv
     }
-    val live = liveFiles(spark, dir, expectedVersion)
-    val body = manifestBody(newV, expectedVersion, writerId, evolved,
-      stagingDir = None, files = live, removed = Seq.empty,
-      stats = stats, meta = effMeta, dv = m.dv,
-      tsMs = commitClock(spark), colmap = colmap)
-    if (!casManifest(spark, dir, newV, writerId, body))
-      throw new CommitConflict(
-        s"renameColumns on $dir: lost the race for version $newV — " +
-          "re-read, reconcile, retry")
-    if (feedKeysOf(spark, dir, newV).nonEmpty) ensureFeed(spark, dir, writerId)
+    land(spark, dir, s"renameColumns on $dir", expectedVersion, writerId,
+      evolved, liveFiles(spark, dir, expectedVersion), stats = stats,
+      meta = effMeta, dv = m.dv, colmap = colmap)
     newV
   }
 
@@ -2420,12 +2542,9 @@ object VersionedTable {
     val dropSet = cols.toSet
     val inherited = expectMeta(spark, dir, expectedVersion, Map.empty,
       Map.empty)
-    def mentions(sql: String, c: String): Boolean =
-      ("(?<![A-Za-z0-9_])" + java.util.regex.Pattern.quote(c) +
-        "(?![A-Za-z0-9_])").r.findFirstIn(sql).isDefined
     inherited.foreach { case (k, v2) =>
       if (k.startsWith(ExpectPrefix))
-        cols.filter(mentions(v2, _)).foreach(c =>
+        cols.filter(mentionsColumn(v2, _)).foreach(c =>
           throw new IllegalArgumentException(
             s"dropColumns: expectation '${k.stripPrefix(ExpectPrefix)}' " +
               s"($v2) mentions '$c' — drop it first " +
@@ -2447,18 +2566,12 @@ object VersionedTable {
     val stats = m.stats.map { case (rel, cs) =>
       rel -> cs.filter { case (c, _) => !dropSet.contains(c) }
     }.filter(_._2.nonEmpty)
-    val live = liveFiles(spark, dir, expectedVersion)
-    val body = manifestBody(newV, expectedVersion, writerId, evolved,
-      stagingDir = None, files = live, removed = Seq.empty,
-      stats = stats, dv = m.dv,
+    land(spark, dir, s"dropColumns on $dir", expectedVersion, writerId,
+      evolved, liveFiles(spark, dir, expectedVersion), stats = stats,
+      dv = m.dv,
       meta = inherited + (DroppedPhysKey -> droppedPhys.toSeq.sorted
         .mkString(",")),
-      tsMs = commitClock(spark), colmap = colmap)
-    if (!casManifest(spark, dir, newV, writerId, body))
-      throw new CommitConflict(
-        s"dropColumns on $dir: lost the race for version $newV — " +
-          "re-read, reconcile, retry")
-    if (feedKeysOf(spark, dir, newV).nonEmpty) ensureFeed(spark, dir, writerId)
+      colmap = colmap)
     newV
   }
 
@@ -2519,18 +2632,11 @@ object VersionedTable {
     val metaAdj = (inheritedMeta - DroppedPhysKey) ++
       (if (tomb.isEmpty) Map.empty[String, String]
        else Map(DroppedPhysKey -> tomb.toSeq.sorted.mkString(",")))
-    val body = manifestBody(newV, expectedVersion, writerId, tgtSchema,
-      stagingDir = None, files = live,
-      removed = curLive.filterNot(liveSet),
+    land(spark, dir, s"restore on $dir", expectedVersion, writerId,
+      tgtSchema, live, removed = curLive.filterNot(liveSet),
       stats = tgt.stats.filter { case (rel, _) => liveSet(rel) },
       dv = tgt.dv.filter { case (rel, _) => liveSet(rel) },
-      meta = metaAdj,
-      tsMs = commitClock(spark), colmap = tgt.colmap)
-    if (!casManifest(spark, dir, newV, writerId, body))
-      throw new CommitConflict(
-        s"restore on $dir: lost the race for version $newV — " +
-          "re-read, reconcile, retry")
-    if (feedKeysOf(spark, dir, newV).nonEmpty) ensureFeed(spark, dir, writerId)
+      meta = metaAdj, colmap = tgt.colmap)
     newV
   }
 
@@ -2555,16 +2661,7 @@ object VersionedTable {
       expectations: Map[String, String] = Map.empty,
       rebaseAttempts: Int = 0): DeltaStats = {
     require(keys.nonEmpty, "at least one merge key")
-    // with a rebase budget, a merge called against a superseded
-    // version simply PLANS against the current tip — merge derives its
-    // whole read set from the table itself, so re-planning at latest
-    // is exactly what "re-read, retry" would do by hand
-    val planV = {
-      val cur = latestVersion(spark, dir)
-      if (cur == expectedVersion) expectedVersion
-      else if (rebaseAttempts > 0 && cur > expectedVersion) cur
-      else { requireNotStale(spark, dir, expectedVersion); expectedVersion }
-    }
+    val planV = planVersion(spark, dir, expectedVersion, rebaseAttempts)
     val parentM = readManifest(spark, dir, planV)
     val parentLive = liveFiles(spark, dir, planV)
     val schema = schemaOf(spark, dir, planV)
@@ -2622,23 +2719,10 @@ object VersionedTable {
     // pruning scan above may read them (conservative superset), but
     // the rows that survive into the rewrite go through the mask
     val touchedRows = readFilesMasked(spark, dir, parentM, touched, schema)
-    // size the rewrite to the churn: without the coalesce, the merge
-    // join's shuffle partitioning would fan a one-file rewrite into
-    // shuffle.partitions tiny files and the delta would cost a large
-    // multiple of the churn in bytes
-    val clusterCols = clusterColsOf(spark, dir, planV)
-      .filter(schema.fieldNames.contains)
-    val merged = Incremental.mergeUpsert(touchedRows, changes, keys, deleteCol)
-    val rewritten =
-      if (clusterCols.nonEmpty)
-        // restore file-local key envelopes on the rewritten subset —
-        // the merge join's hash shuffle would otherwise spread every
-        // key range across every output file and kill data skipping
-        // for all future reads (inserts land range-appropriately too)
-        clusterShape(merged, clusterCols,
-          clusterModeOf(spark, dir, planV),
-          math.max(1, touched.length))
-      else merged.coalesce(math.max(1, touched.length))
+    // re-clustered rewrites place inserts range-appropriately too
+    val rewritten = clusterRewrite(spark, dir, planV,
+      Incremental.mergeUpsert(touchedRows, changes, keys, deleteCol),
+      math.max(1, touched.length))
     // rebase footprint: the merge READ exactly `touched` (files outside
     // it provably held no matching keys at plan time — a winner's mask
     // on them only removes rows, harmless), and its row scope is the
@@ -2653,11 +2737,9 @@ object VersionedTable {
     // (carried rows are covered by the loser's readSet clash check —
     // see the rebaseConflict scaladoc)
     val myScope = encodeScopeMeta(schema, keyEnvelope.flatten.toSeq)
-    val scopedMeta = meta ++ myScope.map(sc =>
-      Map(ScopeOpKey -> "merge", ScopeBoundsKey -> sc))
-      .getOrElse(Map.empty[String, String])
     commitDelta(spark, dir, Some(rewritten), touched, planV,
-      writerId, meta = scopedMeta, expectations = expectations,
+      writerId, meta = withScope(meta, "merge", myScope),
+      expectations = expectations,
       readSet = touched, readBounds = keyEnvelope.flatten.toSeq,
       readsTable = true, rebaseAttempts = rebaseAttempts,
       readScope = myScope)
@@ -2702,7 +2784,10 @@ object VersionedTable {
 
   /** The feed declaration of version `v`, if any. */
   def feedKeysOf(spark: SparkSession, dir: String, v: Long): Seq[String] =
-    readManifest(spark, dir, v).meta.get(FeedKey)
+    feedKeys(readManifest(spark, dir, v).meta)
+
+  private def feedKeys(meta: Map[String, String]): Seq[String] =
+    meta.get(FeedKey)
       .map(_.split(',').toSeq.map(_.trim).filter(_.nonEmpty))
       .getOrElse(Seq.empty)
 
@@ -2768,16 +2853,8 @@ object VersionedTable {
           try out.write(s"version=$v\n".getBytes("UTF-8")) finally out.close()
       }
       f.mkdirs(target.getParent)
-      val won =
-        try {
-          org.apache.hadoop.fs.FileContext
-            .getFileContext(target.toUri, spark.sparkContext.hadoopConfiguration)
-            .rename(stage, target, org.apache.hadoop.fs.Options.Rename.NONE)
-          true
-        } catch {
-          case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
-          case _: java.io.IOException if f.exists(target) => false
-        }
+      val won = renameNoOverwrite(spark.sparkContext.hadoopConfiguration,
+        stage, target)
       if (!won) f.delete(stage, true)
       won
     }
@@ -2821,19 +2898,25 @@ object VersionedTable {
     * distributed metadata job, never a data scan. */
   private def footerRowCounts(spark: SparkSession, dir: String,
       rels: Seq[String]): Map[String, Long] = {
-    import scala.jdk.CollectionConverters._
     if (rels.isEmpty) return Map.empty
     val conf = new org.apache.spark.util.SerializableConfiguration(
       spark.sessionState.newHadoopConf())
     val dirStr = rootOf(dir)
     spark.sparkContext
       .parallelize(rels, math.max(1, math.min(rels.length, 64)))
-      .map { rel =>
-        val footer = org.apache.parquet.hadoop.ParquetFileReader.readFooter(
-          conf.value, new org.apache.hadoop.fs.Path(s"$dirStr/$rel"),
-          org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER)
-        rel -> footer.getBlocks.asScala.map(_.getRowCount).sum
-      }.collect().toMap
+      .map(rel => rel -> footerRows(conf.value, s"$dirStr/$rel"))
+      .collect().toMap
+  }
+
+  /** One file's physical row count, from its parquet footer (runs on
+    * executors). */
+  private def footerRows(conf: org.apache.hadoop.conf.Configuration,
+      path: String): Long = {
+    import scala.jdk.CollectionConverters._
+    org.apache.parquet.hadoop.ParquetFileReader.readFooter(
+      conf, new org.apache.hadoop.fs.Path(path),
+      org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER)
+      .getBlocks.asScala.map(_.getRowCount).sum
   }
 
   /** Conservative pruning bounds IMPLIED by a predicate: every
@@ -2896,6 +2979,12 @@ object VersionedTable {
     }.mkString(","))
   }
 
+  /** `meta` stamped with a scoped write's recorded scope, if any. */
+  private def withScope(meta: Map[String, String], op: String,
+      scope: Option[String]): Map[String, String] =
+    meta ++ scope.map(sc => Map(ScopeOpKey -> op, ScopeBoundsKey -> sc))
+      .getOrElse(Map.empty[String, String])
+
   private def decodeScopeMeta(
       s: String): Seq[(String, Char, Option[Any], Option[Any])] =
     s.split(',').toSeq.filter(_.nonEmpty).flatMap { part =>
@@ -2954,10 +3043,8 @@ object VersionedTable {
         return false
       if (prev.schema.map(schemaShape) != cur.schema.map(schemaShape))
         return false
-      def decls(m: Manifest) = m.meta.filter { case (k, _) =>
-        k.startsWith(ExpectPrefix) || k.startsWith("cluster.") ||
-          k == FeedKey }
-      if (decls(prev) != decls(cur)) return false
+      if (declsOf(prev, tombstones = false) !=
+          declsOf(cur, tombstones = false)) return false
       if (!cur.meta.get(ScopeOpKey).contains("delete")) return false
       val theirScope = cur.meta.getOrElse(ScopeBoundsKey, return false)
       if (!scopesDisjoint(mine, theirScope)) return false
@@ -3167,7 +3254,11 @@ object VersionedTable {
     * mask-applied), so `rowsDeleted` receipts are exact and masks only
     * grow. Stats stay inherited verbatim — a mask narrows a file's
     * true envelope, and a too-wide envelope only weakens pruning,
-    * never correctness. */
+    * never correctness.
+    *
+    * Staleness, rebase (`rebaseAttempts`), the mask-union of racing
+    * scope-disjoint deletes and the CAS are the write path's one loop,
+    * [[landDelta]] — see docs/SCALE.md, "The write path". */
   def deleteWhere(spark: SparkSession, dir: String, predicate: String,
       expectedVersion: Long, writerId: String,
       bounds: Seq[ColBound] = Seq.empty,
@@ -3176,14 +3267,7 @@ object VersionedTable {
     requireWriterId(writerId)
     require(expectedVersion >= 0,
       "deleteWhere needs an existing version — nothing to delete from")
-    // with a rebase budget, a stale expectedVersion re-plans at the
-    // tip (the delete derives everything from the table itself)
-    var parent = {
-      val cur = latestVersion(spark, dir)
-      if (cur == expectedVersion) expectedVersion
-      else if (rebaseAttempts > 0 && cur > expectedVersion) cur
-      else { requireNotStale(spark, dir, expectedVersion); expectedVersion }
-    }
+    val parent = planVersion(spark, dir, expectedVersion, rebaseAttempts)
     val m = readManifest(spark, dir, parent)
     require(m.legacyDataDir.isEmpty,
       s"deleteWhere: $dir version $parent is a legacy whole-dir " +
@@ -3233,18 +3317,9 @@ object VersionedTable {
           .as(org.apache.spark.sql.Encoders.tuple(
             org.apache.spark.sql.Encoders.STRING,
             org.apache.spark.sql.Encoders.scalaLong))
-          .mapPartitions { it =>
-            import scala.jdk.CollectionConverters._
-            it.map { case (rel, hits) =>
-              val footer =
-                org.apache.parquet.hadoop.ParquetFileReader.readFooter(
-                  conf.value,
-                  new org.apache.hadoop.fs.Path(s"$dirStr/$rel"),
-                  org.apache.parquet.format.converter
-                    .ParquetMetadataConverter.NO_FILTER)
-              (rel, hits, footer.getBlocks.asScala.map(_.getRowCount).sum)
-            }
-          }(org.apache.spark.sql.Encoders.tuple(
+          .mapPartitions(_.map { case (rel, hits) =>
+            (rel, hits, footerRows(conf.value, s"$dirStr/$rel"))
+          })(org.apache.spark.sql.Encoders.tuple(
             org.apache.spark.sql.Encoders.STRING,
             org.apache.spark.sql.Encoders.scalaLong,
             org.apache.spark.sql.Encoders.scalaLong))
@@ -3257,10 +3332,8 @@ object VersionedTable {
     val totals: Map[String, Long] = hitStats.map(t => t._1 -> t._3).toMap
     val afterDeleted: Map[String, Long] = touched.map(rel =>
       rel -> (m.dv.get(rel).map(_._2).getOrElse(0L) + newCounts(rel))).toMap
-    val droppedSet = touched.filter(rel =>
-      afterDeleted(rel) >= totals(rel)).toSet // fully deleted: no husks
-    val maskedFiles = touched.filterNot(droppedSet)
-    val f = fs(spark, dir)
+    // a fully deleted file leaves the live set (the loop drops it)
+    val maskedFiles = touched.filter(rel => afterDeleted(rel) < totals(rel))
     // the dv dir keeps its plan-time version stamp across rebases —
     // manifest references, not names, keep it alive for vacuum/expire
     val dvRel = s"_dv/v${parent + 1}-${stageTag(dir)}$writerId"
@@ -3284,139 +3357,24 @@ object VersionedTable {
         newCounts.values.sum / 4000000L + 1L)).toInt
       body.coalesce(parts).write.mode("overwrite").parquet(dvPath.toString)
     }
-    // CAS loop with rebase: the delete's read scope is `candidates`
-    // (conservative superset of every file that can match the
-    // predicate) bounded by effBounds — a winner that only touched
-    // files outside it, and added nothing inside the bounds, is
-    // logically disjoint: re-point the new parent's manifest at the
-    // same mask, no re-scan. When the clash is dv-only on files BOTH
-    // sides masked and both scopes are recorded and provably disjoint
-    // (two scattered deletes hitting the same hot file), the masks
-    // UNION instead of refusing — see the scope/mask-merge section.
-    var attemptsLeft = rebaseAttempts
-    val candidateSet = candidates.toSet
-    val touchedSet = touched.toSet
+    // the delete's read scope is `candidates` (conservative superset
+    // of every file that can match the predicate) bounded by effBounds;
+    // every hit file's full mask rides the write path's one loop
+    // ([[landDelta]]), which re-points a disjoint winner's manifest at
+    // the same masks, or unions them with a scope-disjoint delete's
     val myScope = encodeScopeMeta(schema, effBounds)
-    val scopedMeta = meta ++ myScope.map(sc =>
-      Map(ScopeOpKey -> "delete", ScopeBoundsKey -> sc))
-      .getOrElse(Map.empty[String, String])
-    var dvOverride: Map[String, (String, Long)] = Map.empty
-    var dropNow: Set[String] = droppedSet
-    // the manifest our current masks were last reconciled against:
-    // starts at the PLAN parent and advances to the adopted tip after
-    // every mask-union, so a SECOND contested retry re-unions only
-    // files with genuinely new third-party masks — diffing against the
-    // original plan manifest would re-classify files whose dv we
-    // already unioned and write redundant merged sidecars each round
-    var reconciledM = m
-    var mergeSeq = 0
-    val mergedPaths = scala.collection.mutable.ArrayBuffer
-      .empty[org.apache.hadoop.fs.Path]
-    var out: Option[DeleteStats] = None
-    while (out.isEmpty) {
-      val newV = parent + 1
-      val pm = readManifest(spark, dir, parent)
-      val pLive = liveFiles(spark, dir, parent)
-      val newLive = pLive.filterNot(dropNow)
-      val newLiveSet = newLive.toSet
-      val maskedNow = maskedFiles.filterNot(dropNow)
-      val stats = pm.stats.filter { case (rel, _) => newLiveSet(rel) }
-      val dvNew: Map[String, (String, Long)] =
-        pm.dv.filter { case (rel, _) =>
-          newLiveSet(rel) && !newCounts.contains(rel) } ++
-          maskedNow.map(rel =>
-            rel -> dvOverride.getOrElse(rel, (dvRel, afterDeleted(rel))))
-      val effMeta = expectMeta(spark, dir, parent, scopedMeta, Map.empty)
-      // the landing schema comes from the CURRENT parent, not the plan
-      // parent: an admitted addColumns winner (allowAdditiveSchema in
-      // the rebase below — a positional mask commutes with a
-      // metadata-only nullable append) extended it, and re-landing the
-      // plan-time receipt would silently regress the migration. The
-      // since-plan appended tail is forced NULLABLE (round 18, the r17
-      // advice): the kept pre-migration files null-fill it, so a
-      // non-nullable receipt on the winner's commit must not survive
-      // — same discipline as every other extension landing.
-      val landSchema = extendedSchema(m.schema,
-        Some(schemaOf(spark, dir, parent)))
-        .getOrElse(schemaOf(spark, dir, parent))
-      val body = manifestBody(newV, parent, writerId, landSchema,
-        stagingDir = None, files = newLive,
-        removed = dropNow.toSeq.sorted, stats = stats, meta = effMeta,
-        dv = dvNew, tsMs = commitClock(spark), colmap = pm.colmap)
-      if (casManifest(spark, dir, newV, writerId, body)) {
-        if (effMeta.get(FeedKey).exists(_.trim.nonEmpty))
-          ensureFeed(spark, dir, writerId)
-        val bytesDv =
-          if (maskedFiles.isEmpty) 0L
-          else f.getContentSummary(dvPath).getLength
-        out = Some(DeleteStats(newV, newCounts.values.sum,
-          maskedNow.length.toLong, dropNow.size.toLong,
-          newLive.length.toLong, bytesDv, candidates.length.toLong))
-      } else {
-        val cur = math.max(latestVersion(spark, dir), newV)
-        val why =
-          if (attemptsLeft <= 0) Some("rebase budget exhausted")
-          else rebaseConflict(spark, dir, parent, cur, candidateSet,
-            effBounds, readsTable = true, myScope,
-            allowAdditiveSchema = true)
-        why match {
-          case None =>
-            attemptsLeft -= 1
-            parent = cur
-          case Some(reason)
-              if attemptsLeft > 0 &&
-                maskMergeOk(spark, dir, parent, cur, touchedSet, myScope) =>
-            // mask-union rebase: winners are recorded, scope-disjoint
-            // deletes — union our positions with the tip's for files
-            // both sides masked (exact: row-disjoint predicates never
-            // mask the same position), re-stamp, retry
-            attemptsLeft -= 1
-            val tipM = readManifest(spark, dir, cur)
-            val affected = maskedFiles.filter(rel =>
-              tipM.dv.get(rel) != reconciledM.dv.get(rel))
-            if (affected.nonEmpty) {
-              mergeSeq += 1
-              val mergedRel =
-                s"_dv/v${cur + 1}-${stageTag(dir)}$writerId-m$mergeSeq"
-              val mergedPath =
-                new org.apache.hadoop.fs.Path(s"${rootOf(dir)}/$mergedRel")
-              val affectedDf = spark.createDataset(affected)(
-                org.apache.spark.sql.Encoders.STRING).toDF("file")
-              val ourDirs = affected.map(rel =>
-                dvOverride.get(rel).map(_._1).getOrElse(dvRel)).distinct
-              val theirDirs =
-                affected.flatMap(r => tipM.dv.get(r).map(_._1)).distinct
-              val union = spark.read
-                .parquet((ourDirs ++ theirDirs).distinct
-                  .map(r => s"${rootOf(dir)}/$r"): _*)
-                .select(col("file"), col("pos"))
-                .join(broadcast(affectedDf), Seq("file"), "left_semi")
-                .distinct()
-              union.coalesce(1).write.mode("overwrite")
-                .parquet(mergedPath.toString)
-              mergedPaths += mergedPath
-              val counts = spark.read.parquet(mergedPath.toString)
-                .groupBy("file").count().collect()
-                .map(r => r.getString(0) -> r.getLong(1)).toMap
-              dvOverride = dvOverride ++
-                counts.map { case (rel, c) => rel -> (mergedRel, c) }
-              // a file the union fully deletes leaves the live set
-              dropNow = dropNow ++ affected.filter(rel =>
-                counts.getOrElse(rel, 0L) >= totals(rel))
-            }
-            reconciledM = tipM
-            parent = cur
-          case Some(reason) =>
-            f.delete(dvPath, true)
-            mergedPaths.foreach(p => f.delete(p, true))
-            throw new CommitConflict(
-              s"deleteWhere on $dir: lost the race for version $newV and " +
-                s"cannot rebase onto $cur ($reason) — mask removed; " +
-                "re-read, reconcile, retry")
-        }
-      }
-    }
-    out.get
+    val l = landDelta(spark, dir, s"deleteWhere on $dir", None, Seq.empty,
+      masks = touched.map(rel => rel -> ((dvRel, afterDeleted(rel)))).toMap,
+      maskRows = totals, expectedVersion = parent, writerId = writerId,
+      meta = withScope(meta, "delete", myScope), readSet = candidates,
+      readBounds = effBounds, readsTable = true,
+      rebaseAttempts = rebaseAttempts, readScope = myScope)
+    val bytesDv =
+      if (maskedFiles.isEmpty) 0L
+      else fs(spark, dir).getContentSummary(dvPath).getLength
+    DeleteStats(l.version, newCounts.values.sum, l.masked.toLong,
+      l.removed.length.toLong, l.live.toLong, bytesDv,
+      candidates.length.toLong)
   }
 
   /** UPDATE WHERE as a file-granular commit: rewrite ONLY the files
@@ -3440,12 +3398,7 @@ object VersionedTable {
       meta: Map[String, String] = Map.empty,
       rebaseAttempts: Int = 0): Option[DeltaStats] = {
     require(sets.nonEmpty, "updateWhere: no SET columns")
-    val planV = {
-      val cur = latestVersion(spark, dir)
-      if (cur == expectedVersion) expectedVersion
-      else if (rebaseAttempts > 0 && cur > expectedVersion) cur
-      else { requireNotStale(spark, dir, expectedVersion); expectedVersion }
-    }
+    val planV = planVersion(spark, dir, expectedVersion, rebaseAttempts)
     val m = readManifest(spark, dir, planV)
     val schema = schemaOf(spark, dir, planV)
     val fieldByName = schema.fields.map(f => f.name -> f).toMap
@@ -3472,13 +3425,8 @@ object VersionedTable {
         case None => col(s"`${f.name}`")
       }
     }.toIndexedSeq: _*)
-    val clusterCols = clusterColsOf(spark, dir, planV)
-      .filter(schema.fieldNames.contains)
-    val rewritten =
-      if (clusterCols.nonEmpty)
-        clusterShape(updated, clusterCols, clusterModeOf(spark, dir, planV),
-          math.max(1, touched.length))
-      else updated.coalesce(math.max(1, touched.length))
+    val rewritten = clusterRewrite(spark, dir, planV, updated,
+      math.max(1, touched.length))
     // recorded scope (round 16): the predicate hull restricted to
     // columns this update does NOT set — a SET column's post-image can
     // leave the predicate envelope, so recording its bound would let a
@@ -3488,11 +3436,9 @@ object VersionedTable {
     // claims about every row this commit modified.
     val scopeBounds = bounds.filterNot(b => sets.exists(_._1 == b.col))
     val myScope = encodeScopeMeta(schema, scopeBounds)
-    val scopedMeta = meta ++ myScope.map(sc =>
-      Map(ScopeOpKey -> "update", ScopeBoundsKey -> sc))
-      .getOrElse(Map.empty[String, String])
     Some(commitDelta(spark, dir, Some(rewritten), touched, planV, writerId,
-      meta = scopedMeta, readSet = touched, readBounds = bounds,
+      meta = withScope(meta, "update", myScope), readSet = touched,
+      readBounds = bounds,
       rebaseAttempts = rebaseAttempts, readScope = myScope))
   }
 
@@ -3506,27 +3452,16 @@ object VersionedTable {
   def purgeDeletes(spark: SparkSession, dir: String,
       expectedVersion: Long, writerId: String,
       rebaseAttempts: Int = 0): Option[DeltaStats] = {
-    val planV = {
-      val cur = latestVersion(spark, dir)
-      if (cur == expectedVersion) expectedVersion
-      else if (rebaseAttempts > 0 && cur > expectedVersion) cur
-      else { requireNotStale(spark, dir, expectedVersion); expectedVersion }
-    }
+    val planV = planVersion(spark, dir, expectedVersion, rebaseAttempts)
     val m = readManifest(spark, dir, planV)
     val live = liveFiles(spark, dir, planV)
     val masked = live.filter(m.dv.contains)
     if (masked.isEmpty) None
     else {
-      val schema = schemaOf(spark, dir, planV)
-      val rows = readFilesMasked(spark, dir, m, masked, schema)
-      val clusterCols = clusterColsOf(spark, dir, planV)
-        .filter(schema.fieldNames.contains)
-      val rewritten =
-        if (clusterCols.nonEmpty)
-          clusterShape(rows, clusterCols,
-            clusterModeOf(spark, dir, planV),
-            math.max(1, masked.length))
-        else rows.coalesce(math.max(1, masked.length))
+      val rows = readFilesMasked(spark, dir, m, masked,
+        schemaOf(spark, dir, planV))
+      val rewritten = clusterRewrite(spark, dir, planV, rows,
+        math.max(1, masked.length))
       // content-neutral rewrite: depends only on its OWN files' bytes
       // and masks — readsTable stays false, so a racing append/merge
       // on other files rebases cleanly under it
@@ -3545,35 +3480,24 @@ object VersionedTable {
       targetFileCount: Int = 1,
       reshape: Option[DataFrame => DataFrame] = None,
       rebaseAttempts: Int = 0): Option[DeltaStats] = {
-    val planV = {
-      val cur = latestVersion(spark, dir)
-      if (cur == expectedVersion) expectedVersion
-      else if (rebaseAttempts > 0 && cur > expectedVersion) cur
-      else expectedVersion
-    }
+    val planV = planVersion(spark, dir, expectedVersion, rebaseAttempts)
     val f = fs(spark, dir)
     val small = liveFiles(spark, dir, planV).filter(rel =>
       f.getFileStatus(new org.apache.hadoop.fs.Path(s"${rootOf(dir)}/$rel"))
         .getLen < smallBytes)
     if (small.length < 2) None
     else {
-      val schema = schemaOf(spark, dir, planV)
       // masked read: bin-packing a DV-masked small file materializes
       // its mask instead of resurrecting the deleted rows
       val read = readFilesMasked(spark, dir,
-        readManifest(spark, dir, planV), small, schema)
+        readManifest(spark, dir, planV), small, schemaOf(spark, dir, planV))
       // clustering is a table property: with a declaration and no
       // caller reshape, OPTIMIZE bin-packs INTO the clustering order
       // (range + sort), so compaction tightens envelopes instead of
       // scrambling them; an explicit reshape (e.g. z-order) wins
-      val clusterCols = clusterColsOf(spark, dir, planV)
-        .filter(schema.fieldNames.contains)
       val packed = reshape match {
         case Some(r) => r(read).coalesce(targetFileCount)
-        case None if clusterCols.nonEmpty =>
-          clusterShape(read, clusterCols,
-            clusterModeOf(spark, dir, planV), targetFileCount)
-        case None => read.coalesce(targetFileCount)
+        case None => clusterRewrite(spark, dir, planV, read, targetFileCount)
       }
       // content-neutral: OPTIMIZE only repacks its own small files —
       // a concurrent append/merge/delete on OTHER files rebases under
@@ -3705,15 +3629,7 @@ object VersionedTable {
           val n = org.apache.hadoop.fs.FileUtil.copy(sf, sp, df, tmp,
             false, true, c)
           require(n, s"replicate: copy failed for $rel")
-          val won =
-            try {
-              org.apache.hadoop.fs.FileContext.getFileContext(dp.toUri, c)
-                .rename(tmp, dp, org.apache.hadoop.fs.Options.Rename.NONE)
-              true
-            } catch {
-              case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
-              case _: java.io.IOException if df.exists(dp) => false
-            }
+          val won = renameNoOverwrite(c, tmp, dp)
           if (!won) df.delete(tmp, false)
           if (won) df.getFileStatus(dp).getLen else 0L
         }.sum().toLong
@@ -3723,25 +3639,20 @@ object VersionedTable {
     // declaration keeps replica merges skipping-friendly, and stream
     // batch markers keep a streaming-merge failover to the replica
     // exactly-once (without them a replayed batch would double-apply)
-    val body = manifestBody(newV, dstV, writerId,
-      srcM.schema.getOrElse(schemaOf(spark, srcDir, srcV)),
-      stagingDir = None, files = srcLive,
+    //
+    // The replica derives its OWN feed (its version numbering) as it
+    // lands, so a changeStream at the replica works without extra
+    // wiring; cursors are deliberately NOT shipped (see the contract
+    // above)
+    land(spark, dstDir, s"replicate to $dstDir", dstV, writerId,
+      srcM.schema.getOrElse(schemaOf(spark, srcDir, srcV)), srcLive,
       removed = dstPrevLive.filterNot(srcLive.toSet), stats = srcM.stats,
       // the replica records WHICH source version this is (overwriting
       // any replica-of-replica inherited value) — snapshot identity
       // across instances for failover readers
       meta = srcM.meta + (ReplicaSrcKey -> srcV.toString),
-      dv = srcM.dv, tsMs = commitClock(spark),
-      colmap = srcM.colmap)
-    if (!casManifest(spark, dstDir, newV, writerId, body))
-      throw new CommitConflict(
-        s"replicate to $dstDir: lost the race for version $newV — a " +
-          "concurrent replicator published; re-run to converge")
-    // the replica derives its OWN feed (its version numbering) so a
-    // changeStream at the replica works without extra wiring; cursors
-    // are deliberately NOT shipped (see the contract above)
-    if (feedKeysOf(spark, dstDir, newV).nonEmpty)
-      ensureFeed(spark, dstDir, writerId)
+      dv = srcM.dv, colmap = srcM.colmap,
+      onLost = Some("a concurrent replicator published; re-run to converge"))
     advanceReplicaCursor(spark, srcDir, dstDir, srcV)
     ReplicaStats(newV, srcV, toCopy.length.toLong,
       (srcLive.length + srcDvFiles.length - toCopy.length).toLong, copied,
@@ -4457,6 +4368,47 @@ object VersionedTable {
     (files.result(), dvDirs.result())
   }
 
+  /** Stats and masks of a branch landing on mainline `pm` with live set
+    * `live`: mainline's kept files and `src`'s `adds`, each side's
+    * stats re-keyed through PHYSICAL identity to the landed names (a
+    * stale key after a one-sided rename would silently stop pruning on
+    * that column); the masks `src` carries for the files it added or
+    * re-masked (`dvChanged`) replace mainline's. */
+  private def branchLanding(pm: Manifest, src: Manifest,
+      schema: org.apache.spark.sql.types.StructType,
+      colmap: Map[String, String], live: Seq[String], adds: Seq[String],
+      removes: Seq[String], dvChanged: Seq[String])
+      : (Map[String, Map[String, (String, String)]], Map[String, (String, Long)]) = {
+    val lc = (x: String) => x.toLowerCase(java.util.Locale.ROOT)
+    val physToFinal = schema.fields
+      .map(f => lc(physName(colmap, f.name)) -> f.name).toMap
+    def rekey(cols: Map[String, (String, String)], cm: Map[String, String]) =
+      cols.flatMap { case (c, v) =>
+        physToFinal.get(lc(physName(cm, c))).map(_ -> v) }
+    val (liveSet, addSet) = (live.toSet, adds.toSet)
+    val stats = (pm.stats.collect {
+      case (rel, cols) if liveSet(rel) => rel -> rekey(cols, pm.colmap)
+    } ++ src.stats.collect {
+      case (rel, cols) if addSet(rel) => rel -> rekey(cols, src.colmap)
+    }).filter(_._2.nonEmpty)
+    val dv = (pm.dv -- removes -- dvChanged) ++
+      (dvChanged ++ adds).flatMap(r => src.dv.get(r).map(r -> _))
+    (stats, dv)
+  }
+
+  /** The branch version mainline commit `m` cherry-picked from
+    * incarnation `inc` of branch `name` — parsed from its
+    * `branch.cherryPicked` tag (`name@version#inc`). */
+  private def pickedFrom(m: Manifest, name: String, inc: Long): Option[Long] =
+    m.meta.get("branch.cherryPicked").flatMap { tag =>
+      val hash = tag.lastIndexOf('#')
+      val at = tag.lastIndexOf('@', if (hash > 0) hash else tag.length - 1)
+      if (at > 0 && hash > at && tag.substring(0, at) == name &&
+          tag.substring(hash + 1).toLongOption.contains(inc))
+        tag.substring(at + 1, hash).toLongOption
+      else None
+    }
+
   /** CHERRY-PICK: land ONE branch commit's delta (`branchVersion` vs
     * its parent) on mainline, leaving the rest of the branch unlanded
     * and the diff anchor unmoved — the selective sibling of
@@ -4510,15 +4462,10 @@ object VersionedTable {
     // not itself re-declare (expectations/clustering/feed/tombstones)
     // — declaration changes land via fastForward, which carries the
     // reconciliation + cross-enforcement a state change needs
-    locally {
-      def decls(m: Manifest) = m.meta.filter { case (k, _) =>
-        k.startsWith(ExpectPrefix) || k.startsWith("cluster.") ||
-          k == FeedKey || k == DroppedPhysKey }
-      require(decls(prevM) == decls(vM),
-        s"cherryPick '$name': v$branchVersion re-declared " +
-          "(expectations/clustering/feed/tombstones) — declaration " +
-          "changes land via fastForward of the whole branch")
-    }
+    require(declsOf(prevM) == declsOf(vM),
+      s"cherryPick '$name': v$branchVersion re-declared " +
+        "(expectations/clustering/feed/tombstones) — declaration " +
+        "changes land via fastForward of the whole branch")
     val prevSet = prevM.files.toSet
     val vSet = vM.files.toSet
     val adds = vM.files.filterNot(prevSet)
@@ -4608,21 +4555,14 @@ object VersionedTable {
           // DROP BRANCH + CREATE BRANCH with the same name, picks
           // landed from the previous incarnation carry its `#inc`
           // suffix and never exempt the new, unrelated branch.
-          skipWinner = m => m.meta.get("branch.cherryPicked").exists {
-            tag =>
-              val hash = tag.lastIndexOf('#')
-              val at = tag.lastIndexOf('@',
-                if (hash > 0) hash else tag.length - 1)
-              // inc == 0 marks a pre-round-18 BASE file: with no
-              // incarnation identity, never exempt (conservative —
-              // the gate refuses rather than trusting a tag that a
-              // same-name predecessor branch could have written)
-              inc != 0L &&
-                at > 0 && hash > at && tag.substring(0, at) == name &&
-                tag.substring(hash + 1).toLongOption.contains(inc) &&
-                tag.substring(at + 1, hash).toLongOption
-                  .exists(_ < branchVersion)
-          }).foreach { reason =>
+          //
+          // inc == 0 marks a pre-round-18 BASE file: with no
+          // incarnation identity, never exempt (conservative — the
+          // gate refuses rather than trusting a tag that a same-name
+          // predecessor branch could have written)
+          skipWinner = m => inc != 0L &&
+            pickedFrom(m, name, inc).exists(_ < branchVersion)
+          ).foreach { reason =>
           throw new CommitConflict(
             s"cherryPick '$name' v$branchVersion onto $dir: mainline " +
               s"is not logically disjoint ($reason)")
@@ -4639,38 +4579,15 @@ object VersionedTable {
       }
       val newV = parent + 1
       val newLive = (pLive.filterNot(removes.toSet) ++ adds).distinct
-      val newSet = newLive.toSet
-      val addSet = adds.toSet
-      // the picked files' stats are keyed by the BRANCH's logical
-      // names — re-key through physical identity to the landed names
-      // (a stale key after a one-sided rename would silently stop
-      // pruning on that column); mainline's kept-file stats already
-      // carry the landed names
-      val physToFinal = landSchema.fields
-        .map(f => lcp(physName(landColmap, f.name)) -> f.name).toMap
-      def rekeyPick(cols: Map[String, (String, String)],
-          cm: Map[String, String]): Map[String, (String, String)] =
-        cols.flatMap { case (c, v) =>
-          physToFinal.get(lcp(physName(cm, c))).map(_ -> v) }
-      val stats = (pm.stats.collect {
-        case (rel, cols) if newSet(rel) => rel -> rekeyPick(cols, pm.colmap)
-      } ++ vM.stats.collect {
-        case (rel, cols) if addSet(rel) => rel -> rekeyPick(cols, vM.colmap)
-      }).filter(_._2.nonEmpty)
-      val dv = (pm.dv -- removes -- dvChanged) ++
-        dvChanged.flatMap(r => vM.dv.get(r).map(r -> _)) ++
-        adds.flatMap(r => vM.dv.get(r).map(r -> _))
+      val (stats, dv) = branchLanding(pm, vM, landSchema, landColmap,
+        newLive, adds, removes, dvChanged)
       val landMeta = persistentMeta(pm.meta) ++ meta +
         ("branch.cherryPicked" -> s"$name@$branchVersion#$inc")
-      val body = manifestBody(newV, parent, writerId, landSchema,
-        stagingDir = None, files = newLive, removed = removes,
-        stats = stats, meta = landMeta, dv = dv,
-        tsMs = commitClock(spark), colmap = landColmap)
-      if (casManifest(spark, dir, newV, writerId, body)) {
-        if (landMeta.get(FeedKey).exists(_.trim.nonEmpty))
-          ensureFeed(spark, dir, writerId)
+      if (land(spark, dir, s"cherryPick '$name' onto $dir", parent,
+          writerId, landSchema, newLive, removed = removes, stats = stats,
+          meta = landMeta, dv = dv, colmap = landColmap, onLost = None))
         out = newV
-      } else {
+      else {
         attemptsLeft -= 1
         if (attemptsLeft <= 0)
           throw new CommitConflict(
@@ -4766,9 +4683,6 @@ object VersionedTable {
       tipSet(r) && baseM.dv.get(r) != tipM.dv.get(r))
     // the branch's WRITE set: what a disjoint mainline must not touch
     val touched = (removes ++ dvChanged).toSet
-    def decls(m: Manifest) = m.meta.filter { case (k, _) =>
-      k.startsWith(ExpectPrefix) || k.startsWith("cluster.") ||
-        k == FeedKey || k == DroppedPhysKey }
     def expectsOf(d: Map[String, String]) = d.collect {
       case (k, sql) if k.startsWith(ExpectPrefix) =>
         k.stripPrefix(ExpectPrefix) -> sql
@@ -4789,9 +4703,9 @@ object VersionedTable {
       // wholesale would silently drop mainline's added columns.
       val wholesale = parent == mainBase &&
         pm.schema.map(schemaShape) == baseM.schema.map(schemaShape) &&
-        pm.colmap == baseM.colmap && decls(pm) == decls(baseM)
+        pm.colmap == baseM.colmap && declsOf(pm) == declsOf(baseM)
       val (landSchemaOpt, landDecls, landColmap) =
-        if (wholesale) (tipM.schema, decls(tipM), tipM.colmap)
+        if (wholesale) (tipM.schema, declsOf(tipM), tipM.colmap)
         else {
           val mainM0 =
             if (parent == mainBase) pm
@@ -4974,8 +4888,8 @@ object VersionedTable {
           // re-declare since its own reference yields to the side that
           // did; both-changed refuses. New/changed EXPECTATIONS are
           // enforced on the other side's since-fork adds below.
-          val (dTip, dPm) = (decls(tipM), decls(pm))
-          val (dBase, dM0) = (decls(baseM), decls(mainM0))
+          val (dTip, dPm) = (declsOf(tipM), declsOf(pm))
+          val (dBase, dM0) = (declsOf(baseM), declsOf(mainM0))
           val landD =
             if (dPm == dTip) dPm
             else if (dTip != dBase && dPm == dM0) {
@@ -5099,32 +5013,13 @@ object VersionedTable {
       // branch add is by construction not a mainline live file)
       val newLiveOrdered =
         (pLive.filterNot(removes.toSet) ++ adds).distinct
-      val newLiveSet = newLiveOrdered.toSet
-      val addSet = adds.toSet
-      // stats re-key through PHYSICAL identity: each side's stats are
-      // keyed by ITS logical names, and after a rename (one-sided
-      // reconciliation, or a wholesale-landed branch rename) a stale
-      // key would silently stop pruning on the renamed column
-      val physToFinal: Map[String, String] = landSchemaOpt
-        .map(_.fields.map(f => physName(landColmap, f.name)
-          .toLowerCase(java.util.Locale.ROOT) -> f.name).toMap)
-        .getOrElse(Map.empty)
-      def rekeyStats(cols: Map[String, (String, String)],
-          cm: Map[String, String]): Map[String, (String, String)] =
-        if (physToFinal.isEmpty) cols
-        else cols.flatMap { case (c, v) =>
-          physToFinal.get(physName(cm, c)
-            .toLowerCase(java.util.Locale.ROOT)).map(_ -> v) }
-      val stats = (pm.stats.collect {
-        case (rel, cols) if newLiveSet(rel) =>
-          rel -> rekeyStats(cols, pm.colmap)
-      } ++ tipM.stats.collect {
-        case (rel, cols) if addSet(rel) =>
-          rel -> rekeyStats(cols, tipM.colmap)
-      }).filter(_._2.nonEmpty)
-      val dv = (pm.dv -- removes -- dvChanged) ++
-        dvChanged.flatMap(r => tipM.dv.get(r).map(r -> _)) ++
-        adds.flatMap(r => tipM.dv.get(r).map(r -> _))
+      val schema = landSchemaOpt
+        .getOrElse(throw new IllegalStateException(
+          s"fastForward '$name': no schema receipt on either side"))
+      // after a rename (one-sided reconciliation, or a wholesale-landed
+      // branch rename) each side's stats re-key to the landed names
+      val (stats, dv) = branchLanding(pm, tipM, schema, landColmap,
+        newLiveOrdered, adds, removes, dvChanged)
       // landing meta = persistent table state only (per-commit
       // receipts — recorded scopes, rescan receipts, stream markers —
       // describe their own commit and never ride a landing; round 16,
@@ -5132,22 +5027,13 @@ object VersionedTable {
       // reconciled set
       val landMeta =
         persistentMeta(if (wholesale) tipM.meta else pm.meta)
-          .filterNot { case (k, _) =>
-            k.startsWith(ExpectPrefix) || k.startsWith("cluster.") ||
-              k == FeedKey || k == DroppedPhysKey } ++
+          .filterNot { case (k, _) => isDeclKey(k) } ++
           landDecls ++ meta +
           ("branch.landed" -> name) + ("branch.landedTip" -> tip.toString)
-      val schema = landSchemaOpt
-        .getOrElse(throw new IllegalStateException(
-          s"fastForward '$name': no schema receipt on either side"))
-      val colmap = landColmap
-      val body = manifestBody(newV, parent, writerId, schema,
-        stagingDir = None, files = newLiveOrdered, removed = removes,
-        stats = stats, meta = landMeta, dv = dv,
-        tsMs = commitClock(spark), colmap = colmap)
-      if (casManifest(spark, dir, newV, writerId, body)) {
-        if (landMeta.get(FeedKey).exists(_.trim.nonEmpty))
-          ensureFeed(spark, dir, writerId)
+      if (land(spark, dir, s"fastForward '$name' onto $dir", parent,
+          writerId, schema, newLiveOrdered, removed = removes,
+          stats = stats, meta = landMeta, dv = dv, colmap = landColmap,
+          onLost = None)) {
         // advance the diff anchor: the NEXT landing nets tip2 vs this
         // tip and gates from this mainline version — repeated
         // stage-validate-land cycles each publish their increment,
@@ -5284,29 +5170,13 @@ object VersionedTable {
     // drop nothing — replaying a picked commit is safe, the landing
     // dedups file references, while wrongly dropping one loses rows)
     val picked: Set[Long] = if (inc == 0L) Set.empty else
-      (mainBase + 1 to mainTip).flatMap { v =>
-      readManifest(spark, dir, v).meta.get("branch.cherryPicked")
-        .flatMap { tag =>
-          val hash = tag.lastIndexOf('#')
-          val at = tag.lastIndexOf('@',
-            if (hash > 0) hash else tag.length - 1)
-          if (at > 0 && hash > at && tag.substring(0, at) == name &&
-              tag.substring(hash + 1).toLongOption.contains(inc))
-            tag.substring(at + 1, hash).toLongOption
-          else None
-        }
-    }.toSet
-    def declsOf(m: Manifest) = m.meta.filter { case (k, _) =>
-      k.startsWith(ExpectPrefix) || k.startsWith("cluster.") ||
-        k == FeedKey || k == DroppedPhysKey }
+      (mainBase + 1 to mainTip)
+        .flatMap(v => pickedFrom(readManifest(spark, dir, v), name, inc))
+        .toSet
     val mainChangedKeys: Set[String] = {
       val (a, b) = (declsOf(m0), declsOf(mT))
       (a.keySet ++ b.keySet).filter(k => a.get(k) != b.get(k))
     }
-    val persistentKey: String => Boolean = k =>
-      k.startsWith(ExpectPrefix) || k.startsWith("cluster.") ||
-        k == FeedKey || k == DroppedPhysKey ||
-        k.startsWith("view.cfg.") || k == "view.synced"
     // fold the branch's commits onto the mainline-tip state
     var curFiles = mT.files
     var curDv = mT.dv
@@ -5439,8 +5309,7 @@ object VersionedTable {
         allAdds ++= adds
         replayed += 1
         val newV = mainTip + replayed
-        val perCommit = bm.meta.filterNot { case (k, _) =>
-          persistentKey(k) }
+        val perCommit = bm.meta -- persistentMeta(bm.meta).keys
         bodies += ((newV, manifestBody(newV, newV - 1, writerId,
           curSchema, stagingDir = bm.stagingDir, files = curFiles,
           removed = removes, stats = curStats,

@@ -179,10 +179,11 @@ class PlanSpec extends SparkSpec {
     val p = planOf("q148_span_removal")
     // the rebuild is expression-level (HOF filter), never a UDF
     assert(!p.contains("ScalaUDF") && !p.contains("BatchEvalPython"), p.take(2000))
-    // r19: verbatimSpans materializes the eligible-filtered window
-    // stream (local checkpoint), so the kernel no longer shows in the
-    // FINAL plan — assert it on the window-stream path itself
-    // (verbatimHotWindows shares windowStream and is not checkpointed)
+    // the window-hash kernel runs in q148's FINAL plan: span removal
+    // keeps the window stream visible to the optimizer (no checkpoint)
+    assert(p.contains("window_hash64"), p.take(2000))
+    // and on the window-stream path itself (verbatimHotWindows shares
+    // windowStream)
     val wp = graft.operators.Dedup
       .verbatimHotWindows(tables.documents, "doc_id", "text", minLen = 8)
       .queryExecution.explainString(ExplainMode.fromString("formatted"))

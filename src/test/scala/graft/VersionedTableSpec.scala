@@ -1519,4 +1519,51 @@ class VersionedTableSpec extends SparkSpec {
     try assert(VersionedTable.readManifest(spark, dir, 0L).writer == "w2")
     finally spark.conf.unset("graft.manifest.cache")
   }
+
+  test("stale parent: every write refuses a version behind or ahead of the tip, table untouched") {
+    import org.apache.spark.sql.types._
+    val dir = java.nio.file.Files.createTempDirectory("vt-stale").toString + "/t"
+    VersionedTable.commit(spark, dir, spark.range(40).select($"id".as("k"),
+      ($"id" * 2).cast("int").as("v")).repartition(4), -1L, "loader")
+    // v1 masks rows in several files: purgeDeletes has work at the tip
+    VersionedTable.deleteWhere(spark, dir, "k < 3", 0L, "d0")
+    val tip = VersionedTable.latestVersion(spark, dir)
+    val rows = spark.range(30, 50).select($"id".as("k"),
+      lit(-1).cast("int").as("v"))
+    val writes: Seq[(String, Long => Any)] = Seq(
+      "commit" -> (ev => VersionedTable.commit(spark, dir, rows, ev, "w")),
+      "commitDelta" -> (ev => VersionedTable.commitDelta(spark, dir,
+        Some(rows), Seq.empty, ev, "w")),
+      "merge" -> (ev => VersionedTable.merge(spark, dir, rows, Seq("k"),
+        ev, "w")),
+      "deleteWhere" -> (ev => VersionedTable.deleteWhere(spark, dir,
+        "k >= 10", ev, "w")),
+      "updateWhere" -> (ev => VersionedTable.updateWhere(spark, dir,
+        "k >= 10", Seq("v" -> "v + 1"), ev, "w")),
+      "purgeDeletes" -> (ev => VersionedTable.purgeDeletes(spark, dir, ev,
+        "w")),
+      "compactSmallFiles" -> (ev => VersionedTable.compactSmallFiles(spark,
+        dir, ev, "w", smallBytes = 1L << 30)),
+      "addColumns" -> (ev => VersionedTable.addColumns(spark, dir,
+        Seq(StructField("x", DoubleType)), ev, "w")),
+      "widenColumns" -> (ev => VersionedTable.widenColumns(spark, dir,
+        Map("v" -> LongType), ev, "w")),
+      "renameColumns" -> (ev => VersionedTable.renameColumns(spark, dir,
+        Map("v" -> "v2"), ev, "w")),
+      "dropColumns" -> (ev => VersionedTable.dropColumns(spark, dir,
+        Seq("v"), ev, "w")),
+      "restore" -> (ev => VersionedTable.restore(spark, dir, 0L, ev, "w")))
+    def staged(sub: String) =
+      Option(new java.io.File(s"$dir/$sub").list()).map(_.toSet)
+        .getOrElse(Set.empty[String])
+    val (data0, dv0) = (staged("data"), staged("_dv"))
+    for ((op, write) <- writes; ev <- Seq(tip - 1, tip + 1)) {
+      val e = intercept[Throwable](write(ev))
+      assert(e.isInstanceOf[CommitConflict],
+        s"$op at expectedVersion $ev (tip $tip) must be a CommitConflict: $e")
+      assert(VersionedTable.latestVersion(spark, dir) == tip, s"$op at $ev")
+      assert(staged("data") == data0 && staged("_dv") == dv0,
+        s"$op at $ev left staged dirs behind")
+    }
+  }
 }
