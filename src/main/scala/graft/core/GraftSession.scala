@@ -965,6 +965,11 @@ object GraftSession {
     // init burns ~1 CPU-minute on first use and is slower per call; the
     // JVM fast path matches DuckDB's non-ICU lower() on our data.
     .config("spark.sql.icu.caseMappings.enabled", "false")
+    // Spark's generated-class cache (JVM-wide, LRU) keeps 100 classes by
+    // default; one pass of the 21 PigMix scripts generates ~140, so every
+    // later pass compiled most of them again with Janino. 1000 holds
+    // that working set several times over for a few MB of driver heap.
+    .config("spark.sql.codegen.cache.maxEntries", "1000")
 
   def local(cores: Int = 4): GraftSession = {
     val spark = configure(

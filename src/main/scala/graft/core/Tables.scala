@@ -5,10 +5,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Typed access to the driver-generated test tables (FIXTURES.md).
   * Every read is a plain parquet scan — filters and column pruning are
   * pushed down by Catalyst, so callers should NOT pre-select columns
-  * here; declare the full query and let the optimizer prune.
+  * here; declare the full query and let the optimizer prune. Reads
+  * carry the schema read from the table's parquet footer on the driver
+  * ([[graft.sources.ParquetFooter]]), so building a query starts no
+  * schema-inference job.
   */
 final case class Tables(spark: SparkSession, dir: String) {
-  def table(name: String): DataFrame = spark.read.parquet(s"$dir/$name.parquet")
+  def table(name: String): DataFrame =
+    graft.sources.ParquetFooter.read(spark, s"$dir/$name.parquet")
 
   def region: DataFrame    = table("region")
   def nation: DataFrame    = table("nation")

@@ -35,6 +35,12 @@ object Federation {
     * snapshot at the replica. */
   val VersionedFormat = "graft-versioned"
 
+  /** A raw format load of `loc` on `s`; parquet takes its schema from
+    * the footer on the driver ([[graft.sources.ParquetFooter]]). */
+  private def readFile(s: SparkSession, loc: TableLoc): DataFrame =
+    if (loc.format == "parquet") graft.sources.ParquetFooter.read(s, loc.uri)
+    else s.read.format(loc.format).load(loc.uri)
+
   /** An executable cluster: in production a Spark Connect endpoint per
     * physical cluster; in tests, isolated SparkSessions. `scratchUri` is
     * the cluster-local staging area for inbound transfers (the
@@ -307,7 +313,7 @@ object Federation {
     * `s` (isolated clusters) — the caller falls back to heuristics. */
   private def catalystBytes(plan: FedPlan, catalog: Catalog, s: SparkSession): Option[Long] = Try {
     def build(p: FedPlan): DataFrame = p match {
-      case FedScan(t) => val loc = catalog(t); s.read.format(loc.format).load(loc.uri)
+      case FedScan(t) => readFile(s, catalog(t))
       case FedStage(in, f, _, _) => f(build(in))
       case FedBinary(l, r, f, _) => f(build(l), build(r))
     }
@@ -560,8 +566,7 @@ object Federation {
 
     private def readLocation(s: SparkSession, t: String,
         loc: TableLoc): DataFrame =
-      if (loc.format != VersionedFormat)
-        s.read.format(loc.format).load(loc.uri)
+      if (loc.format != VersionedFormat) readFile(s, loc)
       else {
         import graft.operators.VersionedTable
         // the snapshot identity of a local version: its own number at
@@ -728,7 +733,7 @@ object Federation {
         try df.write.mode("overwrite").parquet(path)
         catch { case e: Throwable => deletePath(dest, path); throw e }
         staged.synchronized(staged += ((dest, path)))
-        dest.session.read.parquet(path)
+        graft.sources.ParquetFooter.read(dest.session, path)
       }
     }
   }

@@ -913,7 +913,8 @@ object PigCompiler {
     val raw = special.getOrElse {
       // default loader is PigStorage('\t'): delimited text, lazy-typed
       val (fmt, opts) = storageFormat(loader.orElse(Some(("pigstorage", Nil))))
-      spark.read.format(fmt).options(opts).load(path)
+      if (fmt == "parquet") graft.sources.ParquetFooter.read(spark, path)
+      else spark.read.format(fmt).options(opts).load(path)
     }
     applyAsSchema(raw, path, schema)
   }

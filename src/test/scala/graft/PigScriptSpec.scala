@@ -885,6 +885,24 @@ class PigScriptSpec extends SparkSpec {
     assert(q88.columns.toSeq == Seq("n_nationkey", "n_name_uc", "n_regionkey"))
   }
 
+  test("fixed costs per script: LOAD plans with no job, a repeated pass compiles no class") {
+    // parquet LOADs take their schema from the footer on the driver
+    val l03 = PigParser.parseScript(PigPreprocessor(
+      PigScript.resource("/pigmix/l03.pig"), Map("DIR" -> sf)))
+    val loadJobs = jobsStarted(PigCompiler.compile(spark, l03))
+    // the codegen cache holds every class one pass of the PigMix
+    // stories generates, so the next pass compiles none again
+    val stories = SparkEntry.queries.keys.filter(_.contains("_pigmix_")).toSeq.sorted
+    assert(stories.size == 21)
+    def pass(): Unit = stories.foreach(q => SparkEntry.queries(q)(spark, sf).collect())
+    val compiled = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    pass()
+    val before = compiled.getCount
+    pass()
+    val recompiled = compiled.getCount - before
+    assert((loadJobs, recompiled) == ((0, 0)))
+  }
+
   test("MAPREDUCE: external job bridges STORE -> LOAD") {
     val tmp = java.nio.file.Files.createTempDirectory("pig_mr").toString
     val df = graft.pig.PigScript.query(spark,

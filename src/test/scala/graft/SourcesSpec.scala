@@ -22,6 +22,59 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("parquet round trip (primary format / BinStorage interchange)") { roundTrip("parquet") }
+  test("parquet footer schema == Spark's inferred schema, with no job; other inputs fall back") {
+    import graft.sources.ParquetFooter
+    import scala.util.Try
+    // a Spark-written directory: several part files beside _SUCCESS and
+    // .crc files, with decimal, timestamp, array, struct and map columns
+    val rich = s"$base/footer_rich"
+    spark.range(0, 40, 1, 3).selectExpr("id",
+      "cast(id / 7 as decimal(12, 3)) as dec", "timestamp_seconds(id * 86400) as ts",
+      "array(id, id + 1) as arr", "named_struct('a', id, 'b', cast(id as string)) as st",
+      "map(cast(id as string), id) as m").write.mode("overwrite").parquet(rich)
+    val written = new java.io.File(rich).list().toSeq
+    assert(written.contains("_SUCCESS") && written.exists(_.endsWith(".crc")), written)
+    // two writes with different columns: the first data file in path
+    // order decides, as in Spark's inference without mergeSchema
+    val mixed = s"$base/footer_mixed"
+    spark.range(0, 5).selectExpr("id").write.mode("overwrite").parquet(mixed)
+    spark.range(5, 9).selectExpr("id", "id * 2 as twice").write.mode("append").parquet(mixed)
+    val footerRead = Seq(
+      "region", "nation", "customer", "supplier", "part", "orders", "lineitem",
+      "events", "documents", "embeddings").map(t => s"$sf/$t.parquet") :+ rich :+ mixed
+    footerRead.foreach { p =>
+      var got: org.apache.spark.sql.types.StructType = null
+      assert(jobsStarted { got = ParquetFooter.read(spark, p).schema } == 0, p)
+      assert(got == spark.read.parquet(p).schema, p)
+    }
+
+    // fallback inputs: the helper answers None and the read behaves
+    // exactly as Spark's inference does (same schema, or same exception)
+    val partitioned = s"$base/footer_by_k"
+    spark.range(0, 10).selectExpr("id", "id % 2 as k")
+      .write.partitionBy("k").mode("overwrite").parquet(partitioned)
+    val sink = s"$base/footer_sink"
+    spark.readStream.schema(spark.read.parquet(rich).schema).parquet(rich)
+      .writeStream.format("parquet").option("checkpointLocation", s"$base/footer_ckpt")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start(sink)
+      .awaitTermination()
+    assert(new java.io.File(s"$sink/_spark_metadata").isDirectory)
+    val empty = Files.createTempDirectory("footer_empty").toString
+    def outcome(f: => org.apache.spark.sql.DataFrame) =
+      Try(f.schema).toEither.left.map(_.getClass)
+    def fallsBack(p: String): Unit = {
+      assert(ParquetFooter.schema(spark, p).isEmpty, p)
+      assert(outcome(ParquetFooter.read(spark, p)) == outcome(spark.read.parquet(p)), p)
+    }
+    Seq(partitioned, sink, empty, s"$rich/part-*").foreach(fallsBack)
+    assert(outcome(spark.read.parquet(empty)).isLeft)
+    spark.conf.set("spark.sql.parquet.mergeSchema", "true")
+    try {
+      fallsBack(mixed)
+      assert(ParquetFooter.read(spark, mixed).columns.toSeq == Seq("id", "twice"))
+    } finally spark.conf.unset("spark.sql.parquet.mergeSchema")
+  }
+
   test("orc round trip (OrcStorage)") { roundTrip("orc") }
   test("avro round trip (AvroStorage) — explicit provider class") {
     // spark-sql ships AvroFileFormat itself; only the spark-avro module's
