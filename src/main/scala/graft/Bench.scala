@@ -10,6 +10,16 @@ import org.apache.spark.sql.SparkSession
   * timed pass per query. Headline set spans the operator families: scan,
   * agg, shuffle join, broadcast join, order/limit, rank, flatten, top-k,
   * minhash dedup, cosine top-k, fingerprint, event-time window.
+  *
+  * What is timed is `SparkEntry.timed(name)`: the query's operator
+  * story, defined once in [[SparkEntry]]. For most queries that is the
+  * correctness entry itself; where the entry adds a check (a recall
+  * harness, a law probe, `require`s around a stream), it is the run half
+  * the entry calls, without the check. Inputs a story derives from the
+  * data dir (stream sources, saved indexes and models) come from the
+  * on-disk [[Fixtures]] cache, built in the warm pass at the latest, so
+  * timed runs pay for the story, not for its fixtures. Bench itself
+  * defines no query.
   */
 object Bench {
 
@@ -278,665 +288,6 @@ object Bench {
     // RENAME through one checkpoint (sticky physical names)
     "q253_stream_across_rename")
 
-  /** The CORRECTNESS entries for approximate ops are recall HARNESSES
-    * (operator + exact ground truth + compare in one job); benching the
-    * harness would time the brute-force truth stage, not the operator,
-    * and break comparability with BASELINE's pinned per-query numbers.
-    * These overrides bench the raw operator exactly as BASELINE ran it. */
-  val benchShapes: Map[String, (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame] =
-    Map(
-      "q35_dedup_minhash" -> ((s, dir) => {
-        import org.apache.spark.sql.functions._
-        graft.operators.Dedup.fuzzyDupPairs(
-            s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text",
-            shingleN = 3, threshold = 0.8)
-          .select(col("id1"), col("id2"), round(col("jaccard"), 6).as("jaccard"))
-      }),
-      // q122's entry writes its sorted fixture per call; benching must
-      // time the index+pruned-join, not the one-time fixture write, so
-      // the fixture is created once (warm pass) and reused
-      "q122_sparse_lookup" -> ((s, dir) => {
-        import org.apache.spark.sql.functions._
-        val sorted = s"/tmp/graft_bench_sparse_${new java.io.File(dir).getName}/lineitem_sorted"
-        if (!new java.io.File(sorted).exists()) {
-          s.read.parquet(s"$dir/lineitem.parquet")
-            .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"))
-            .repartitionByRange(8, col("l_orderkey"))
-            .sortWithinPartitions("l_orderkey")
-            .write.mode("overwrite").parquet(sorted)
-        }
-        val probe = s.read.parquet(s"$dir/orders.parquet")
-          .filter(col("o_orderkey") % 997 === 0)
-          .select(col("o_orderkey"), col("o_orderpriority"))
-        graft.operators.SparseIndex
-          .lookupJoin(s, sorted, "l_orderkey", probe, "o_orderkey")
-          .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"),
-            col("o_orderpriority"))
-      }),
-      // q154's CORRECTNESS entry is a recall harness (brute-force truth
-      // + compare); the operator story the bench should time is the ANN
-      // SERVING path — routed ADC + exact refine. Model fit (coarse
-      // centroids + PQ codebooks) is one-time state like q122's sorted
-      // fixture: deterministic, so it is built once per dir (warm pass)
-      // and reused — the timed runs pay queries, not training.
-      "q154_ann_ivfpq" -> ((s, dir) => {
-        import org.apache.spark.sql.functions._
-        val (cents, pq) = pqModelCache.computeIfAbsent(dir, { d =>
-          val emb = s.read.parquet(s"$d/embeddings.parquet")
-          (graft.operators.Similarity.kMeansFit(
-              emb, "embedding", k = 16, iters = 3, init = "parallel"),
-            graft.operators.Similarity.pqTrain(
-              emb, "embedding", m = 16, nCodes = 256, iters = 3))
-        })
-        val emb = s.read.parquet(s"$dir/embeddings.parquet")
-        val qs = emb.filter(col("vec_id") % 100 === 0)
-        graft.operators.Similarity.ivfPqTopK(
-          emb, qs, "vec_id", "vec_id", "embedding", k = 5,
-          centroids = cents, pq = pq, nProbe = 12, refine = 4)
-      }),
-      // q168's CORRECTNESS entry is a harness: it computes the EXACT
-      // distinct-set overlap (two distinct()s + a join) to check the
-      // sketch against. The operator story is the sketch itself: one
-      // bounded-state aggregation per corpus group — that is what the
-      // bench times (20 per-source sketches over the 5-gram stream).
-      // q174's CORRECTNESS entry re-verifies the whitening contract with
-      // a second distributed moment pass (a harness stage); the operator
-      // story is moments -> eigensolve -> projection, which this times.
-      "q174_pca_whiten" -> ((s, dir) => {
-        import org.apache.spark.sql.functions._
-        val emb = s.read.parquet(s"$dir/embeddings.parquet")
-        val (white, _) = graft.operators.Linalg.pcaWhiten(
-          emb, "vec_id", "embedding", dim = 64, k = 16)
-        white.select(col("vec_id"), element_at(col("white"), 1).as("w0"))
-      }),
-      // q181's CORRECTNESS entry require()s the round-trip law
-      // (diff-then-APPLY-back — a harness stage that re-runs the merge
-      // join); the operator story is the one-join diff itself.
-      "q181_snapshot_diff" -> ((s, dir) => {
-        import org.apache.spark.sql.functions._
-        val cust = s.read.parquet(s"$dir/customer.parquet")
-          .select(col("c_custkey").as("k"), col("c_name").as("name"),
-            col("c_acctbal").as("bal"))
-        val target = cust.filter(col("k") % 17 =!= 0)
-          .select(col("k"),
-            when(col("k") % 7 === 0, upper(col("name"))).otherwise(col("name")).as("name"),
-            when(col("k") % 7 === 0, col("bal") + 1000).otherwise(col("bal")).as("bal"))
-          .unionByName(cust.filter(col("k") % 13 === 0)
-            .select((col("k") + 1000000).as("k"),
-              concat(lit("new_"), col("k").cast("string")).as("name"),
-              lit(0.0).as("bal")))
-        graft.operators.Incremental.snapshotDiff(cust, target, Seq("k"))
-      }),
-      "q168_kmv_overlap" -> ((s, dir) => {
-        import org.apache.spark.sql.functions._
-        val sh = s.read.parquet(s"$dir/documents.parquet")
-          .select(col("source"),
-            explode(graft.plans.TextExpressions.shingleHash64(col("text"), 5)).as("h"))
-        graft.operators.Sketches.kmvPerGroup(sh, "source", "h", 1024)
-          .select(col("source"), size(col("sketch")).as("k"))
-      }),
-      // q191's CORRECTNESS entry is a persistence harness (in-memory
-      // retrain + brute-force truth + row-exact compare); the operator
-      // story is SERVING from the stored index. The index is built and
-      // saved once per dir (the q122/q154 fixture discipline); timed
-      // runs pay manifest+model load and the probe/ADC/refine query.
-      "q191_ann_index_persist" -> ((s, dir) => {
-        import org.apache.spark.sql.functions._
-        val idx = s"/tmp/graft_bench_annidx_${new java.io.File(dir).getName}"
-        if (!new java.io.File(s"$idx/manifest").exists()) {
-          val (cents, pq) = pqModelCache.computeIfAbsent(dir, { d =>
-            val emb = s.read.parquet(s"$d/embeddings.parquet")
-            (graft.operators.Similarity.kMeansFit(
-                emb, "embedding", k = 16, iters = 3, init = "parallel"),
-              graft.operators.Similarity.pqTrain(
-                emb, "embedding", m = 16, nCodes = 256, iters = 3))
-          })
-          graft.operators.AnnIndex.save(s, idx,
-            s.read.parquet(s"$dir/embeddings.parquet"), "vec_id",
-            "embedding", cents, pq)
-        }
-        val emb = s.read.parquet(s"$dir/embeddings.parquet")
-        val loaded = graft.operators.AnnIndex.load(s, idx)
-        graft.operators.AnnIndex.topK(loaded,
-          emb.filter(col("vec_id") % 100 === 0), "vec_id", "embedding",
-          k = 5, nProbe = 12, refine = 4, exactCorpus = Some(emb))
-      }),
-      // q193's CORRECTNESS entry carries a differential probe that
-      // re-runs the per-job trainer for 8 merges; the operator story
-      // is the incremental 256-merge train itself.
-      "q193_bpe_train_fast" -> ((s, dir) => {
-        val docs = s.read.parquet(s"$dir/documents.parquet")
-        val (_, vocab, _) = graft.operators.TextAnalysis
-          .bpeTrainIncremental(docs, "text", nMerges = 256)
-        vocab
-      }),
-      // q196's CORRECTNESS entry retrains and double-encodes (serve ==
-      // memory probe); the operator story is tokenizer SERVING: load
-      // the persisted merges, encode the corpus once. The model is
-      // trained+saved once per dir (q122/q154 fixture discipline).
-      "q196_bpe_model_serve" -> ((s, dir) => {
-        import org.apache.spark.sql.functions._
-        val model = s"/tmp/graft_bench_bpe_${new java.io.File(dir).getName}"
-        if (!new java.io.File(model).exists()) {
-          val (m, _, _) = graft.operators.TextAnalysis.bpeTrainIncremental(
-            s.read.parquet(s"$dir/documents.parquet"), "text", nMerges = 64)
-          graft.operators.TextAnalysis.saveBpe(s, model, m)
-        }
-        val merges = graft.operators.TextAnalysis.loadBpe(s, model)
-        s.read.parquet(s"$dir/documents.parquet")
-          .select(col("doc_id"), size(graft.operators.TextAnalysis
-            .bpeEncode(col("text"), merges)).as("n_pieces"))
-      }),
-      // q197's CORRECTNESS entry retrains models, replays restarts,
-      // and computes brute-force truth; the operator story is
-      // INGEST+SERVE: stream the 10% delta into a copy of the
-      // prebuilt index (fresh stream dirs per run — replays stay
-      // independent), then answer the query batch over base+delta.
-      "q197_ann_stream_ingest" -> ((s, dir) => {
-        import org.apache.spark.sql.functions._
-        val emb = s.read.parquet(s"$dir/embeddings.parquet")
-        val idxBase = s"/tmp/graft_bench_annstream_${new java.io.File(dir).getName}"
-        if (!new java.io.File(s"$idxBase/manifest").exists()) {
-          val base = emb.filter(col("vec_id") % 10 =!= 0)
-          val cents = graft.operators.Similarity.kMeansFit(
-            base, "embedding", k = 16, iters = 3, init = "parallel")
-          val pq = graft.operators.Similarity.pqTrain(
-            base, "embedding", m = 16, nCodes = 256, iters = 3)
-          graft.operators.AnnIndex.save(s, idxBase, base, "vec_id",
-            "embedding", cents, pq)
-        }
-        // the delta-source bytes are fixture state too (round 19):
-        // written once per process, hard-linked per run
-        val srcFx = streamFixture(dir, "annstream_src") { root =>
-          emb.filter(col("vec_id") % 10 === 0)
-            .coalesce(1).write.mode("append").parquet(s"$root/f")
-        } + "/f"
-        val tmp = java.nio.file.Files
-          .createTempDirectory("bench_annstream_").toString
-        org.apache.commons.io.FileUtils.copyDirectory(
-          new java.io.File(idxBase), new java.io.File(s"$tmp/idx"))
-        linkParquet(srcFx, s"$tmp/src", "d_")
-        val newRows = emb.filter(col("vec_id") % 10 === 0)
-        val ss = graft.streaming.EventsStreaming.replaySession(s)
-        graft.streaming.CurationStreaming.annIngestStream(ss, s"$tmp/src",
-          s"$tmp/idx", s"$tmp/ckpt", "embedding", newRows.schema)
-        val loaded = graft.operators.AnnIndex.load(s, s"$tmp/idx")
-        graft.operators.AnnIndex.topK(loaded,
-          emb.filter(col("vec_id") % 100 === 0), "vec_id", "embedding",
-          k = 5, nProbe = 14, refine = 6, exactCorpus = Some(emb))
-      }),
-      // q158's CORRECTNESS entry recomputes the full BATCH near-dup
-      // truth and joins two equality probes (the harness); the
-      // operator story is the STREAM — one AvailableNow drain of the
-      // in-stream banding + band-owner verdict state (round 18, the
-      // q196/q197 fixture discipline applied to the stream family;
-      // round 19 moves the fixture WRITE out of the timed region too —
-      // the source bytes are per-process fixture state, hard-linked
-      // into a fresh dir per run).
-      "q158_stream_near_dup" -> ((s, dir) => {
-        import org.apache.spark.sql.functions._
-        import graft.streaming.{CurationStreaming, EventsStreaming}
-        val fx = streamFixture(dir, "docs_ts") { root =>
-          s.read.parquet(s"$dir/documents.parquet")
-            .select(col("doc_id"), col("text"))
-            .withColumn("ts", to_timestamp(lit(1700000000L) + col("doc_id")))
-            .coalesce(2).write.mode("append").parquet(s"$root/f")
-        } + "/f"
-        val tmp = java.nio.file.Files
-          .createTempDirectory("bench_q158_").toString
-        linkParquet(fx, s"$tmp/src", "d_")
-        val name = "b158_" +
-          java.util.UUID.randomUUID().toString.replace("-", "")
-        val ss = EventsStreaming.replaySession(s)
-        EventsStreaming.runAvailableNow(
-          CurationStreaming.streamNearDupVerdicts(ss, s"$tmp/src"),
-          name, org.apache.spark.sql.streaming.OutputMode.Update())
-        ss.table(name)
-      }),
-      // Stream-replay shapes (round 19, VERDICT r18 #3): identical
-      // operator stories to the CORRECTNESS entries — same streams,
-      // same drain/restart sequences, fresh checkpoints/sinks per run
-      // — minus (a) the per-run fixture WRITE (hard-linked from the
-      // per-process fixture instead) and (b) the entries' correctness
-      // probes (count/collect require()s around the streams), which
-      // the oracle still runs every round via the unchanged entries.
-      "q136_stream_interval_join" -> ((s, dir) => {
-        import org.apache.spark.sql.functions._
-        import graft.streaming.EventsStreaming
-        val fx = eventsFixture(s, dir)
-        val tmp = java.nio.file.Files.createTempDirectory("bench_q136_").toString
-        linkParquet(fx, s"$tmp/src", "ev_")
-        val ss = EventsStreaming.replaySession(s)
-        val clicks = EventsStreaming.readEvents(ss, s"$tmp/src")
-          .filter(col("event_type") === "click")
-          .select(col("event_id").as("click_id"), col("ts").as("click_ts"),
-            col("user_id").as("click_user"))
-        val buys = EventsStreaming.readEvents(ss, s"$tmp/src")
-          .filter(col("event_type") === "purchase")
-          .select(col("event_id").as("buy_id"), col("ts").as("buy_ts"),
-            col("user_id"), col("value"))
-        val q = EventsStreaming.streamIntervalJoin(
-            clicks, buys, "click_user", "user_id", "click_ts", "buy_ts",
-            within = "30 minutes")
-          .select(col("click_id"), col("buy_id"), col("user_id"),
-            expr("CAST(floor(value * 100) AS BIGINT)").as("value_cents"))
-          .writeStream.format("parquet")
-          .option("path", s"$tmp/sink").option("checkpointLocation", s"$tmp/ckpt")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        s.read.parquet(s"$tmp/sink")
-      }),
-      "q138_stream_outer_join" -> ((s, dir) =>
-        outerJoinStreamShape(s, dir, "left_outer")),
-      "q145_stream_full_outer_join" -> ((s, dir) =>
-        outerJoinStreamShape(s, dir, "full_outer")),
-      "q144_stream_right_outer_join" -> ((s, dir) => {
-        import org.apache.spark.sql.functions._
-        import graft.streaming.EventsStreaming
-        val evFx = eventsFixture(s, dir)
-        val snFx = sentinelFixture(s, dir)
-        val tmp = java.nio.file.Files.createTempDirectory("bench_q144_").toString
-        linkParquet(evFx, s"$tmp/src", "ev_")
-        linkParquet(snFx, s"$tmp/src", "sn_")
-        val ss = EventsStreaming.replaySession(s, 4)
-        val clicks = EventsStreaming.readEvents(ss, s"$tmp/src")
-          .filter(col("event_type").isin("click", "__sentinel"))
-          .select(col("event_id").as("click_id"), col("ts").as("click_ts"),
-            col("user_id").as("click_user"))
-        val buys = EventsStreaming.readEvents(ss, s"$tmp/src")
-          .filter(col("event_type").isin("purchase", "__sentinel"))
-          .select(col("event_id").as("buy_id"), col("ts").as("buy_ts"),
-            col("user_id"), col("value"))
-        val q = EventsStreaming.streamIntervalJoin(
-            clicks, buys, "click_user", "user_id", "click_ts", "buy_ts",
-            within = "30 minutes", joinType = "right_outer")
-          .select(col("click_id"), col("buy_id"), col("user_id").as("buy_user"),
-            expr("CAST(floor(value * 100) AS BIGINT)").as("value_cents"))
-          .writeStream.format("parquet")
-          .option("path", s"$tmp/sink").option("checkpointLocation", s"$tmp/ckpt")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        s.read.parquet(s"$tmp/sink")
-          .filter(!(col("click_id") <=> lit(-1L)) && !(col("buy_id") <=> lit(-1L)))
-      }),
-      "q112_stream_state" -> ((s, dir) => {
-        import org.apache.spark.sql.functions._
-        import graft.streaming.EventsStreaming
-        import s.implicits._
-        val fx = eventsFixture(s, dir)
-        val tmp = java.nio.file.Files.createTempDirectory("bench_q112_").toString
-        linkParquet(fx, s"$tmp/src", "ev_")
-        val name = "b112_" + java.util.UUID.randomUUID().toString.replace("-", "")
-        val ss = EventsStreaming.replaySession(s)
-        EventsStreaming.runAvailableNow(
-          EventsStreaming.userRunningTotals(
-            EventsStreaming.readEvents(ss, s"$tmp/src").as[EventsStreaming.Event]).toDF(),
-          name, org.apache.spark.sql.streaming.OutputMode.Update())
-        ss.table(name).groupBy(col("user_id"))
-          .agg(max(struct(col("n_events"), col("total_value"))).as("s"))
-          .select(col("user_id"), col("s.n_events").as("n_events"),
-            round(col("s.total_value"), 4).as("total_value"))
-      }),
-      "q151_stream_dedup_agg" -> ((s, dir) => {
-        import org.apache.spark.sql.functions._
-        import graft.streaming.EventsStreaming
-        val evFx = eventsFixture(s, dir)
-        val snFx = sentinelFixture(s, dir)
-        val tmp = java.nio.file.Files.createTempDirectory("bench_q151_").toString
-        // the fixture lands TWICE (every event arrives duplicated)
-        linkParquet(evFx, s"$tmp/src", "ev1_")
-        linkParquet(evFx, s"$tmp/src", "ev2_")
-        val ss = EventsStreaming.replaySession(s)
-        def run(): Unit = {
-          val q = EventsStreaming.readEvents(ss, s"$tmp/src")
-            .withWatermark("ts", "35 days")
-            .dropDuplicatesWithinWatermark("event_id")
-            .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-            .agg(count(lit(1)).as("n_events"))
-            .select(col("window.start").as("w_start"),
-              col("window.end").as("w_end"), col("event_type"), col("n_events"))
-            .writeStream.format("parquet")
-            .option("path", s"$tmp/sink").option("checkpointLocation", s"$tmp/ckpt")
-            .outputMode("append")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        }
-        run() // phase 1: real timeline, dups suppressed
-        linkParquet(snFx, s"$tmp/src", "sn_")
-        run() // phase 2: watermark passes every real window
-        s.read.parquet(s"$tmp/sink").filter(col("event_type") =!= "__sentinel")
-      }),
-      "q173_stream_export" -> ((s, dir) => {
-        import org.apache.spark.sql.functions._
-        import graft.streaming.{CurationStreaming, EventsStreaming}
-        def chunk(even: Boolean): String =
-          streamFixture(dir, if (even) "docs_even" else "docs_odd") { root =>
-            s.read.parquet(s"$dir/documents.parquet")
-              .select(col("doc_id"), col("text"),
-                to_timestamp(from_unixtime(col("doc_id"))).as("ts"))
-              .filter(if (even) col("doc_id") % 2 === 0 else col("doc_id") % 2 =!= 0)
-              .coalesce(1).write.mode("append").parquet(s"$root/f")
-          } + "/f"
-        val (c1, c2) = (chunk(even = true), chunk(even = false))
-        val tmp = java.nio.file.Files.createTempDirectory("bench_q173_").toString
-        val ss = EventsStreaming.replaySession(s)
-        linkParquet(c1, s"$tmp/src", "c1_")
-        CurationStreaming.exportStream(ss, s"$tmp/src", s"$tmp/out", s"$tmp/ckpt", nShards = 8)
-        linkParquet(c2, s"$tmp/src", "c2_")
-        CurationStreaming.exportStream(ss, s"$tmp/src", s"$tmp/out", s"$tmp/ckpt", nShards = 8)
-        // the no-new-data restart is part of the story (idempotent replay)
-        CurationStreaming.exportStream(ss, s"$tmp/src", s"$tmp/out", s"$tmp/ckpt", nShards = 8)
-        CurationStreaming.exportStreamManifest(s, s"$tmp/out")
-      }),
-      "q180_stream_scd2" -> ((s, dir) => {
-        import org.apache.spark.sql.functions._
-        import graft.streaming.{CurationStreaming, EventsStreaming}
-        val cust = graft.core.Tables(s, dir).customer
-          .select(col("c_custkey").as("k"), col("c_name").as("name"),
-            col("c_acctbal").as("bal"))
-        val ts1 = java.sql.Timestamp.valueOf("2021-06-01 00:00:00")
-        val ts2 = java.sql.Timestamp.valueOf("2022-06-01 00:00:00")
-        val ch1Fx = streamFixture(dir, "scd2_ch1") { root =>
-          cust.filter(col("k") % 7 === 0)
-            .select(col("k"), upper(col("name")).as("name"), (col("bal") + 1000).as("bal"))
-            .unionByName(cust.filter(col("k") % 5 === 0 && col("k") % 7 =!= 0))
-            .unionByName(cust.filter(col("k") % 13 === 0)
-              .select((col("k") + 1000000).as("k"),
-                concat(lit("new_"), col("k").cast("string")).as("name"),
-                lit(0.0).as("bal")))
-            .withColumn("as_of", lit(ts1))
-            .coalesce(1).write.mode("append").parquet(s"$root/f")
-        } + "/f"
-        val ch2Fx = streamFixture(dir, "scd2_ch2") { root =>
-          cust.filter(col("k") % 3 === 0)
-            .select(col("k"), concat(col("name"), lit("!")).as("name"),
-              (col("bal") - 50).as("bal"))
-            .unionByName(cust.filter(col("k") % 11 === 0 &&
-              col("k") % 3 =!= 0 && col("k") % 7 =!= 0))
-            .withColumn("as_of", lit(ts2))
-            .coalesce(1).write.mode("append").parquet(s"$root/f")
-        } + "/f"
-        val hist0 = cust
-          .withColumn("valid_from", lit(java.sql.Timestamp.valueOf("2020-01-01 00:00:00")))
-          .withColumn("valid_to", lit(null).cast("timestamp"))
-        val chSchema = s.read.parquet(ch1Fx).schema
-        val tmp = java.nio.file.Files.createTempDirectory("bench_q180_").toString
-        val ss = EventsStreaming.replaySession(s)
-        linkParquet(ch1Fx, s"$tmp/src", "c1_")
-        CurationStreaming.scd2Stream(ss, s"$tmp/src", s"$tmp/snap", s"$tmp/ckpt",
-          Seq("k"), hist0, chSchema)
-        linkParquet(ch2Fx, s"$tmp/src", "c2_")
-        CurationStreaming.scd2Stream(ss, s"$tmp/src", s"$tmp/snap", s"$tmp/ckpt",
-          Seq("k"), hist0, chSchema)
-        // no-new-data restart (idempotent replay) stays in the story
-        CurationStreaming.scd2Stream(ss, s"$tmp/src", s"$tmp/snap", s"$tmp/ckpt",
-          Seq("k"), hist0, chSchema)
-        CurationStreaming.scd2Latest(s, s"$tmp/snap")
-      }),
-      "q189_stream_dq" -> ((s, dir) => {
-        import org.apache.spark.sql.functions._
-        import graft.operators.DataQuality._
-        import graft.streaming.{CurationStreaming, EventsStreaming}
-        def chunk(even: Boolean): String =
-          streamFixture(dir, if (even) "dqdocs_even" else "dqdocs_odd") { root =>
-            s.read.parquet(s"$dir/documents.parquet")
-              .select(col("doc_id"), col("text"), col("lang"), col("source"),
-                col("n_chars"))
-              .filter(if (even) col("doc_id") % 2 === 0 else col("doc_id") % 2 =!= 0)
-              .coalesce(1).write.mode("append").parquet(s"$root/f")
-          } + "/f"
-        val (c1, c2) = (chunk(even = true), chunk(even = false))
-        val checks = Seq(
-          NotNull("doc_id"), Completeness("text", 0.99),
-          MatchesRatio("lang", "^[a-z]{2}$", 1.0),
-          MatchesRatio("source", "^src[0-4]$", 1.0),
-          InRange("n_chars", 1, 100000), MinRowCount(100L))
-        val docSchema = s.read.parquet(c1).schema
-        val tmp = java.nio.file.Files.createTempDirectory("bench_q189_").toString
-        val ss = EventsStreaming.replaySession(s)
-        linkParquet(c1, s"$tmp/src", "c1_")
-        CurationStreaming.dqStream(ss, s"$tmp/src", s"$tmp/state", s"$tmp/ckpt",
-          checks, docSchema)
-        linkParquet(c2, s"$tmp/src", "c2_")
-        CurationStreaming.dqStream(ss, s"$tmp/src", s"$tmp/state", s"$tmp/ckpt",
-          checks, docSchema)
-        // no-new-data restart (idempotent replay) stays in the story
-        CurationStreaming.dqStream(ss, s"$tmp/src", s"$tmp/state", s"$tmp/ckpt",
-          checks, docSchema)
-        CurationStreaming.dqLatestReport(s, s"$tmp/state", checks)
-      }),
-      "q235_table_change_stream" -> ((s, dir) => {
-        import org.apache.spark.sql.functions._
-        import graft.operators.VersionedTable
-        val fx = vtCustFixture(s, dir)
-        val tmp = java.nio.file.Files.createTempDirectory("bench_q235_").toString
-        val vt = s"$tmp/t"
-        org.apache.commons.io.FileUtils.copyDirectory(
-          new java.io.File(fx), new java.io.File(vt))
-        val cust = graft.core.Tables(s, dir).customer
-          .select(col("c_custkey").as("k"), col("c_name").as("name"),
-            col("c_acctbal").as("bal"))
-        val changes = cust.filter(col("k") % 7 === 0)
-            .select(col("k"), col("name"), (col("bal") + 100).as("bal"))
-          .unionByName(cust.filter(col("k") % 53 === 0)
-            .select((col("k") + 5000000L).as("k"),
-              concat(lit("n_"), col("k").cast("string")).as("name"),
-              lit(0.0).as("bal")))
-        VersionedTable.merge(s, vt, changes, Seq("k"), 0L, "merger")
-        def drain(): Unit = {
-          val q = VersionedTable.changeStream(s, vt)
-            .writeStream.format("parquet")
-            .option("path", s"$tmp/out").option("checkpointLocation", s"$tmp/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        }
-        drain() // bootstrap (v0) + merge feed (v1)
-        VersionedTable.deleteWhere(s, vt,
-          "k % 97 = 1 and k < 5000000", 1L, "gdpr")
-        drain() // restart delivers exactly the delete feed
-        s.read.parquet(s"$tmp/out")
-      }),
-      "q253_stream_across_rename" -> ((s, dir) => {
-        import org.apache.spark.sql.functions._
-        import graft.operators.VersionedTable
-        val fx = vtCustFixture(s, dir)
-        val tmp = java.nio.file.Files.createTempDirectory("bench_q253_").toString
-        val vt = s"$tmp/t"
-        org.apache.commons.io.FileUtils.copyDirectory(
-          new java.io.File(fx), new java.io.File(vt))
-        val cust = graft.core.Tables(s, dir).customer
-          .select(col("c_custkey").as("k"), col("c_name").as("name"),
-            col("c_acctbal").as("bal"))
-        VersionedTable.merge(s, vt,
-          cust.filter(col("k") % 7 === 0).select(col("k"), col("name"),
-            (col("bal") + 100).as("bal")), Seq("k"), 0L, "etl")
-        def drain(): Unit = {
-          val q = VersionedTable.changeStream(s, vt)
-            .writeStream.format("parquet")
-            .option("path", s"$tmp/out").option("checkpointLocation", s"$tmp/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        }
-        drain() // bootstrap (v0) + pre-rename churn (v1), OLD names
-        require(VersionedTable.renameColumns(s, vt,
-          Map("bal" -> "balance"), 1L, "migrator") == 2L)
-        VersionedTable.merge(s, vt,
-          cust.filter(col("k") % 53 === 0)
-            .select((col("k") + 5000000L).as("k"),
-              concat(lit("n_"), col("k").cast("string")).as("name"),
-              lit(0.0).as("balance")),
-          Seq("k"), 2L, "etl")
-        drain() // same checkpoint: only the post-rename versions feed
-        val sch = VersionedTable.schemaOf(s, vt,
-            VersionedTable.latestVersion(s, vt))
-          .add("op", org.apache.spark.sql.types.StringType)
-          .add("version", org.apache.spark.sql.types.LongType)
-        s.read.schema(sch).parquet(s"$tmp/out")
-          .filter(col("version") >= 3)
-          .select(col("k"), col("name"), col("balance"), col("op"))
-      }),
-      // q194's CORRECTNESS entry runs the embed twice (invariance
-      // probe); the operator story is one batched-inference pass.
-      "q194_multimodal_embed" -> ((s, dir) => {
-        import org.apache.spark.sql.functions._
-        val docs = s.read.parquet(s"$dir/documents.parquet")
-          .filter(col("text").isNotNull).select(col("doc_id"), col("text"))
-        val packed = graft.operators.Multimodal
-          .packMedia(docs, "text", "text/plain")
-          .select(col("doc_id"), col("blob"))
-        graft.operators.Multimodal.batchEmbed(packed, "doc_id", "blob",
-          batchSize = 32, dim = 6)
-      }))
-
-  private val pqModelCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (org.apache.spark.sql.DataFrame, graft.plans.PqCodebooks)]()
-
-  // ------------------------------------------------------------------
-  // Streaming replay fixtures (round 19, VERDICT r18 #3): the r18
-  // phase rows put 40-60% of the streaming section's wall in `floor`
-  // — session + FIXTURE WRITE + start/stop — while per-replay state/
-  // sink work is a fraction of that. A replay's SOURCE bytes are a
-  // deterministic function of the data dir, so they are built ONCE per
-  // bench process (the q122/q154/q158 fixture discipline, extended to
-  // the whole family); each timed run then populates a FRESH source
-  // dir with hard links (same /tmp filesystem, no byte copy) and gets
-  // fresh checkpoint/sink dirs — replays stay independent full replays
-  // and the state/commit/sink phases are untouched; only the fixture
-  // WRITE leaves the timed region. Phase pins are NOT re-based.
-  // ------------------------------------------------------------------
-  private def streamFixture(dir: String, name: String)(
-      build: String => Unit): String = {
-    val root = s"/tmp/graft_bench_sfx_${new java.io.File(dir).getName}/$name"
-    val done = new java.io.File(s"$root/__done")
-    if (!done.exists()) {
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-      new java.io.File(root).mkdirs()
-      build(root)
-      done.createNewFile()
-    }
-    root
-  }
-
-  /** Hard-link every parquet part file under `from` into `into`,
-    * prefixed (two fixture chunks may share part-file names). */
-  private def linkParquet(from: String, into: String, prefix: String): Unit = {
-    val d = new java.io.File(into); d.mkdirs()
-    new java.io.File(from).listFiles()
-      .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-      .sortBy(_.getName)
-      .foreach { f =>
-        java.nio.file.Files.createLink(
-          java.nio.file.Paths.get(into, prefix + f.getName), f.toPath)
-      }
-  }
-
-  /** The events-replay projection every stream fixture writes. */
-  private def eventsProjection(s: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions._
-    graft.core.Tables(s, dir).events
-      .select(col("event_id"), col("ts"), col("user_id"),
-        col("event_type"), col("value"), col("props"))
-  }
-
-  /** One events parquet file (the replay source chunk). */
-  private def eventsFixture(s: org.apache.spark.sql.SparkSession,
-      dir: String): String =
-    streamFixture(dir, "events") { root =>
-      eventsProjection(s, dir).coalesce(1).write.mode("append").parquet(s"$root/f")
-    } + "/f"
-
-  /** The far-future watermark sentinel row (q138/q144/q145/q151):
-    * max(ts) is fixture state too — computed once, baked into the file. */
-  private def sentinelFixture(s: org.apache.spark.sql.SparkSession,
-      dir: String): String =
-    streamFixture(dir, "sentinel") { root =>
-      import org.apache.spark.sql.functions._
-      val ev = eventsProjection(s, dir)
-      val maxTs = ev.agg(max(col("ts"))).collect()(0).getTimestamp(0)
-      val sentinelTs = new java.sql.Timestamp(maxTs.getTime + 365L * 86400 * 1000)
-      ev.limit(1).select(lit(-1L).as("event_id"), lit(sentinelTs).as("ts"),
-          lit(-1L).as("user_id"), lit("__sentinel").as("event_type"),
-          lit(0.0).as("value"), lit(null).cast("string").as("props"))
-        .coalesce(1).write.mode("append").parquet(s"$root/f")
-    } + "/f"
-
-  /** The q138/q145 two-phase sentinel replay (identical to the entries
-    * minus fixture writes): phase 1 drains the real timeline, the
-    * sentinel lands, phase 2 flushes the outer rows. */
-  private def outerJoinStreamShape(s: org.apache.spark.sql.SparkSession,
-      dir: String, joinType: String): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions._
-    import graft.streaming.EventsStreaming
-    val evFx = eventsFixture(s, dir)
-    val snFx = sentinelFixture(s, dir)
-    val tmp = java.nio.file.Files.createTempDirectory("bench_sojoin_").toString
-    linkParquet(evFx, s"$tmp/src", "ev_")
-    val ss = EventsStreaming.replaySession(s)
-    def run(): Unit = {
-      val clicks = EventsStreaming.readEvents(ss, s"$tmp/src")
-        .filter(col("event_type").isin("click", "__sentinel"))
-        .select(col("event_id").as("click_id"), col("ts").as("click_ts"),
-          col("user_id").as("click_user"))
-      val buys = EventsStreaming.readEvents(ss, s"$tmp/src")
-        .filter(col("event_type").isin("purchase", "__sentinel"))
-        .select(col("event_id").as("buy_id"), col("ts").as("buy_ts"),
-          col("user_id"), col("value"))
-      val joined = EventsStreaming.streamIntervalJoin(
-        clicks, buys, "click_user", "user_id", "click_ts", "buy_ts",
-        within = "30 minutes", joinType = joinType)
-      val projected =
-        if (joinType == "full_outer")
-          joined.select(col("click_id"), col("buy_id"),
-            coalesce(col("click_user"), col("user_id")).as("user_id"),
-            expr("CAST(floor(value * 100) AS BIGINT)").as("value_cents"))
-        else
-          joined.select(col("click_id"), col("buy_id"), col("click_user"),
-            expr("CAST(floor(value * 100) AS BIGINT)").as("value_cents"))
-      val q = projected
-        .writeStream.format("parquet")
-        .option("path", s"$tmp/sink").option("checkpointLocation", s"$tmp/ckpt")
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    run() // phase 1: real timeline; unmatched rows held in state
-    linkParquet(snFx, s"$tmp/src", "sn_")
-    run() // phase 2: watermark passes every interval; outer rows flush
-    if (joinType == "full_outer")
-      s.read.parquet(s"$tmp/sink")
-        .filter(!(col("click_id") <=> lit(-1L)) && !(col("buy_id") <=> lit(-1L)))
-    else
-      s.read.parquet(s"$tmp/sink").filter(col("click_id") =!= -1L)
-  }
-
-  /** Committed customer VersionedTable (v0) for the change-stream
-    * replays (q235/q253); each run works on a fresh COPY because
-    * merges/deletes/renames advance the table. */
-  private def vtCustFixture(s: org.apache.spark.sql.SparkSession,
-      dir: String): String =
-    streamFixture(dir, "vtcust") { root =>
-      import org.apache.spark.sql.functions._
-      import graft.operators.VersionedTable
-      val cust = graft.core.Tables(s, dir).customer
-        .select(col("c_custkey").as("k"), col("c_name").as("name"),
-          col("c_acctbal").as("bal"))
-      require(VersionedTable.commit(s, s"$root/t", cust, -1L, "loader",
-        clusterBy = Seq("k"), clusterFiles = 16,
-        meta = Map(VersionedTable.FeedKey -> "k")) == 0L)
-    } + "/t"
-
-  private def benchQuery(name: String): (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame =
-    benchShapes.getOrElse(name, SparkEntry.queries(name))
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -970,7 +321,7 @@ object Bench {
     qs.foreach { name =>
       System.err.println(s"[bench] warm $name")
       spark.sparkContext.setJobDescription(s"bench-warm:$name")
-      try benchQuery(name)(spark, sfDir).count()
+      try SparkEntry.timed(name)(spark, sfDir).count()
       catch { case e: Throwable => System.err.println(s"[bench] warm $name failed: ${e.getMessage}") }
     }
     spark.sparkContext.setJobDescription(null)
@@ -992,7 +343,7 @@ object Bench {
       val raw = (1 to nRuns).map { _ =>
         val t0 = System.nanoTime()
         val ok =
-          try { benchQuery(name)(spark, sfDir).count(); true }
+          try { SparkEntry.timed(name)(spark, sfDir).count(); true }
           catch { case e: Throwable =>
             System.err.println(s"[bench] $name timed run FAILED: $e"); false }
         ((System.nanoTime() - t0) / 1e9, ok)
@@ -1015,13 +366,13 @@ object Bench {
     val base12 = results.filter(r => baselineSubset.contains(r._1)).map(_._2).sum
 
     // Streaming section (round 7): end-to-end REPLAY wall-times for the
-    // streaming surface — source write + micro-batch execution +
-    // sentinel flush where the query has one. Kept OUT of the headline
-    // total: replay time is dominated by checkpoint/sink I/O round
-    // trips, a different quantity than the per-query compute the
-    // BASELINE protocol pins. 1 warm (JIT) + 3 timed, median; each run
-    // builds fresh temp source/sink/checkpoint dirs, so runs are
-    // independent full replays.
+    // streaming surface — micro-batch execution + sentinel flush where
+    // the query has one. Kept OUT of the headline total: replay time is
+    // dominated by checkpoint/sink I/O round trips, a different quantity
+    // than the per-query compute the BASELINE protocol pins. 1 warm
+    // (JIT, fixture build) + 3 timed, median; each run links the cached
+    // source fixtures into fresh temp source/sink/checkpoint dirs, so
+    // runs are independent full replays.
     val streamQs = streamingSet.filter(SparkEntry.queries.contains)
       .filter(n => only.forall(_.contains(n)))
     // Replay FLOOR (round 12, VERDICT r11 #9): the fixed cost of one
@@ -1071,14 +422,14 @@ object Bench {
     val streamResults = streamQs.flatMap { name =>
       System.err.println(s"[bench] stream warm $name")
       spark.sparkContext.setJobDescription(s"bench-stream:$name")
-      try benchQuery(name)(spark, sfDir).count()
+      try SparkEntry.timed(name)(spark, sfDir).count()
       catch { case e: Throwable => System.err.println(s"[bench] stream warm $name failed: ${e.getMessage}") }
       val raw = (1 to 3).map { _ =>
         System.gc()
         val before = graft.streaming.ReplayPhases.snapshot()
         val t0 = System.nanoTime()
         val ok =
-          try { benchQuery(name)(spark, sfDir).count(); true }
+          try { SparkEntry.timed(name)(spark, sfDir).count(); true }
           catch { case e: Throwable =>
             System.err.println(s"[bench] stream $name timed run FAILED: $e"); false }
         val wall = (System.nanoTime() - t0) / 1e9

@@ -1,12 +1,20 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Dev tool: dump formatted physical plans of the headline queries to a
   * markdown artifact (docs/PLANS.md) — reviewable evidence that filters
   * reach scans, dimensions broadcast, aggregates combine map-side, and
   * native kernels sit in the hot paths. */
 object PlanDump {
+  /** The formatted physical plan of `df`. Binary literals (e.g. a
+    * serialized bloom sketch) print raw bytes into a plan, so control
+    * chars are scrubbed and the artifact stays a text file. */
+  private def explain(df: DataFrame): String =
+    df.queryExecution.explainString(
+        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+      .replaceAll("[\\x00-\\x08\\x0B\\x0C\\x0E-\\x1F\\x7F]", "�")
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out = args.lift(1).getOrElse("docs/PLANS.md")
@@ -35,17 +43,11 @@ object PlanDump {
       // except q173, whose query RUNS its streams at construction —
       // a dumped plan would show only the read-back manifest aggregate
       .filterNot(Bench.headline.contains) // headline moves absorb extras
-    // For approximate ops whose CORRECTNESS entry is a recall HARNESS
-    // (operator + ground truth + compare), dump the raw operator plan
-    // the bench times — that is the shape a plan review must judge.
-    def planOf(name: String): String =
-      Bench.benchShapes.getOrElse(name, SparkEntry.queries(name))(spark, sfDir)
-        .queryExecution.explainString(
-          org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-        // binary literals (e.g. a serialized bloom sketch) print raw
-        // bytes into the plan — scrub control chars so the artifact
-        // stays a text file
-        .replaceAll("[\\x00-\\x08\\x0B\\x0C\\x0E-\\x1F\\x7F]", "�")
+    // Dump the story Bench times (SparkEntry.timed): where the
+    // correctness entry adds a check (a recall harness, a law probe),
+    // that is the run half without the check — the shape a plan review
+    // must judge.
+    def planOf(name: String): String = explain(SparkEntry.timed(name)(spark, sfDir))
     (Bench.headline ++ extras).foreach { name =>
       sb.append(s"\n## $name\n\n```\n${planOf(name)}```\n")
     }
@@ -84,10 +86,7 @@ object PlanDump {
         clusterBy = Seq("k"), clusterFiles = 8)
       graft.operators.VersionedTable.deleteWhere(spark, dvDir,
         "k % 1000 = 7", 0L, "w")
-      val plan = graft.operators.VersionedTable.read(spark, dvDir)
-        .queryExecution.explainString(
-          org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-        .replaceAll("[\\x00-\\x08\\x0B\\x0C\\x0E-\\x1F\\x7F]", "�")
+      val plan = explain(graft.operators.VersionedTable.read(spark, dvDir))
       sb.append(s"\n## VersionedTable.read over a masked table\n\n```\n$plan```\n")
     }
     // Round 13 (late): the z-order clustered read — a box probe on
@@ -112,11 +111,8 @@ object PlanDump {
       sb.append(s"Box probe (a,b in [0,63]) reads ${kept.length}/$total " +
         "files — the kept rectangles only; the scan below lists exactly " +
         "those and pushes the residual filter:\n")
-      val plan = graft.operators.VersionedTable.readFiltered(spark, zDir,
-          "a <= 63 AND b <= 63")
-        .queryExecution.explainString(
-          org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-        .replaceAll("[\\x00-\\x08\\x0B\\x0C\\x0E-\\x1F\\x7F]", "�")
+      val plan = explain(graft.operators.VersionedTable.readFiltered(spark, zDir,
+          "a <= 63 AND b <= 63"))
       sb.append(s"\n## readFiltered over the z-clustered table\n\n```\n$plan```\n")
     }
     sb.append("\n# Nested ORDER ... USING comparator (round 13)\n\n")
@@ -153,11 +149,18 @@ object PlanDump {
           Some(0L), Some(9999L))))
       sb.append(s"\nRange probe on the RENAMED key reads ${kept.length}/" +
         s"$total files.\n")
-      val plan = graft.operators.VersionedTable.read(spark, rnDir)
-        .queryExecution.explainString(
-          org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-        .replaceAll("[\\x00-\\x08\\x0B\\x0C\\x0E-\\x1F\\x7F]", "�")
+      val plan = explain(graft.operators.VersionedTable.read(spark, rnDir))
       sb.append(s"\n## VersionedTable.read after a 2-column rename\n\n```\n$plan```\n")
+    }
+    // A table (k, w) of 100k rows clustered on k into 8 files, with a
+    // branch "dev": where the round 16-18 landings below start.
+    def branched(prefix: String): (String, String) = {
+      import graft.operators.VersionedTable
+      val dir = java.nio.file.Files.createTempDirectory(prefix).toString + "/t"
+      VersionedTable.commit(spark, dir, spark.range(100000).selectExpr("id as k",
+        "cast(id % 97 as double) as w"), -1L, "w", clusterBy = Seq("k"), clusterFiles = 8)
+      VersionedTable.createBranch(spark, dir, "dev")
+      (dir, VersionedTable.branchRef(dir, "dev"))
     }
     // Round 15: the mainline read AFTER a branch fastForward — the
     // landing is manifest-only, so the plan must be ONE scan whose
@@ -185,10 +188,7 @@ object PlanDump {
         Some(spark.range(100).selectExpr("id + 1000000 as k",
           "cast(-1.0 as double) as score")), Seq.empty, 1L, "wb")
       VersionedTable.fastForward(spark, brDir, "dev", "w")
-      val plan = VersionedTable.read(spark, brDir)
-        .queryExecution.explainString(
-          org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-        .replaceAll("[\\x00-\\x08\\x0B\\x0C\\x0E-\\x1F\\x7F]", "�")
+      val plan = explain(VersionedTable.read(spark, brDir))
       sb.append(s"\n## VersionedTable.read after the landing\n\n```\n$plan```\n")
     }
     // Round 16: the mainline read after a RECONCILED landing — the
@@ -207,14 +207,7 @@ object PlanDump {
     sb.append("ReadSchema, old files null-fill it inside the scan.\n")
     locally {
       import graft.operators.VersionedTable
-      val brDir = java.nio.file.Files.createTempDirectory("plans_brx_")
-        .toString + "/t"
-      val base = spark.range(100000).selectExpr("id as k",
-        "cast(id % 97 as double) as w")
-      VersionedTable.commit(spark, brDir, base, -1L, "w",
-        clusterBy = Seq("k"), clusterFiles = 8)
-      VersionedTable.createBranch(spark, brDir, "dev")
-      val ref = VersionedTable.branchRef(brDir, "dev")
+      val (brDir, ref) = branched("plans_brx_")
       VersionedTable.addColumns(spark, ref, Seq(
         org.apache.spark.sql.types.StructField("score",
           org.apache.spark.sql.types.DoubleType, nullable = true)), 0L, "wb")
@@ -225,10 +218,7 @@ object PlanDump {
         meta = Map(VersionedTable.FeedKey -> "k"))
       VersionedTable.deleteWhere(spark, brDir, "k = 7", 0L, "w")
       VersionedTable.fastForward(spark, brDir, "dev", "w")
-      val plan = VersionedTable.read(spark, brDir)
-        .queryExecution.explainString(
-          org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-        .replaceAll("[\\x00-\\x08\\x0B\\x0C\\x0E-\\x1F\\x7F]", "�")
+      val plan = explain(VersionedTable.read(spark, brDir))
       sb.append(s"\n## VersionedTable.read after the reconciled landing\n\n```\n$plan```\n")
     }
     // Round 17: the mainline read after a TWO-SIDED DISJOINT landing —
@@ -246,14 +236,7 @@ object PlanDump {
     sb.append("ReadSchema carries BOTH appended columns.\n")
     locally {
       import graft.operators.VersionedTable
-      val brDir = java.nio.file.Files.createTempDirectory("plans_br2_")
-        .toString + "/t"
-      val base = spark.range(100000).selectExpr("id as k",
-        "cast(id % 97 as double) as w")
-      VersionedTable.commit(spark, brDir, base, -1L, "w",
-        clusterBy = Seq("k"), clusterFiles = 8)
-      VersionedTable.createBranch(spark, brDir, "dev")
-      val ref = VersionedTable.branchRef(brDir, "dev")
+      val (brDir, ref) = branched("plans_br2_")
       VersionedTable.addColumns(spark, ref, Seq(
         org.apache.spark.sql.types.StructField("score",
           org.apache.spark.sql.types.DoubleType, nullable = true)), 0L, "wb")
@@ -270,10 +253,7 @@ object PlanDump {
         Seq.empty, 1L, "w")
       VersionedTable.fastForward(spark, brDir, "dev", "w",
         readsTable = false)
-      val plan = VersionedTable.read(spark, brDir)
-        .queryExecution.explainString(
-          org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-        .replaceAll("[\\x00-\\x08\\x0B\\x0C\\x0E-\\x1F\\x7F]", "�")
+      val plan = explain(VersionedTable.read(spark, brDir))
       sb.append(s"\n## VersionedTable.read after the two-sided landing\n\n```\n$plan```\n")
     }
     // Round 18: the read after a ONE-SIDED RENAME reconciliation —
@@ -291,14 +271,7 @@ object PlanDump {
     sb.append("reads the physical schema once and aliases to logical.\n")
     locally {
       import graft.operators.VersionedTable
-      val brDir = java.nio.file.Files.createTempDirectory("plans_ren_")
-        .toString + "/t"
-      val base = spark.range(100000).selectExpr("id as k",
-        "cast(id % 97 as double) as w")
-      VersionedTable.commit(spark, brDir, base, -1L, "w",
-        clusterBy = Seq("k"), clusterFiles = 8)
-      VersionedTable.createBranch(spark, brDir, "dev")
-      val ref = VersionedTable.branchRef(brDir, "dev")
+      val (brDir, ref) = branched("plans_ren_")
       VersionedTable.addColumns(spark, ref, Seq(
         org.apache.spark.sql.types.StructField("score",
           org.apache.spark.sql.types.DoubleType, nullable = true)), 0L, "wb")
@@ -310,11 +283,8 @@ object PlanDump {
         0L, "w")
       VersionedTable.fastForward(spark, brDir, "dev", "w",
         readsTable = false)
-      val plan = VersionedTable.read(spark, brDir)
-        .filter("weight > 90.0").selectExpr("k", "weight", "score")
-        .queryExecution.explainString(
-          org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-        .replaceAll("[\\x00-\\x08\\x0B\\x0C\\x0E-\\x1F\\x7F]", "�")
+      val plan = explain(VersionedTable.read(spark, brDir)
+        .filter("weight > 90.0").selectExpr("k", "weight", "score"))
       sb.append(s"\n## filtered read after the rename-reconciled landing\n\n```\n$plan```\n")
     }
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out).getParent)

@@ -7,7 +7,8 @@ import org.apache.spark.sql.SparkSession
   * before/after plan evidence the optimization deliverable commits.
   *
   * Usage: runMain graft.PlanFiles <outDir> <tag> <q1,q2,...> [sfDir]
-  * Bench-shape overrides apply (the plan reviewed is the plan timed).
+  * Dumps `SparkEntry.timed(name)`: the plan reviewed is the plan Bench
+  * times.
   */
 object PlanFiles {
   def main(args: Array[String]): Unit = {
@@ -22,7 +23,7 @@ object PlanFiles {
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { name =>
-      val plan = Bench.benchShapes.getOrElse(name, SparkEntry.queries(name))(spark, sfDir)
+      val plan = SparkEntry.timed(name)(spark, sfDir)
         .queryExecution.explainString(
           org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
         .replaceAll("[\\x00-\\x08\\x0B\\x0C\\x0E-\\x1F\\x7F]", "�")

@@ -5,16 +5,18 @@ import org.apache.spark.sql.functions._
 
 /** q154 serve ATTRIBUTION probe (round 19, VERDICT r18 #6): q154 is the
   * slowest batch query after PageRank and the r18 LUT fix helped q191
-  * far more. This splits one q154 bench-shape run into its phases so
-  * the residual localizes:
+  * far more. This splits one run of q154's timed story
+  * (`SparkEntry.timed`) into its phases so the residual localizes:
   *
   *   encode  — corpus route+quantize scan (ivfPqEncode), noop-sunk;
   *   adc     — probes join + pq_adc_query scoring + bounded top-k
   *             (refine=0 serve), noop-sunk;
-  *   full    — the exact bench shape (ADC shortlist + exact refine).
+  *   full    — the timed story's serve (ADC shortlist + exact refine).
   *
-  * Median of 5 per phase, warm pass first; model fit cached per dir
-  * exactly like the bench. Findings go to OPTIMIZATION_r19.md. */
+  * Median of 5 per phase, warm pass first; the model is fit once,
+  * outside the timed phases, as the bench keeps fitting out of its timed
+  * runs (the story serves under a cached index's model). Findings go to
+  * OPTIMIZATION_r19.md. */
 object AnnServePhases {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

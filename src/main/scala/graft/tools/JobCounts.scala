@@ -4,10 +4,11 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
 import org.apache.spark.sql.SparkSession
 
 /** Job/stage-count receipts (round 19, VERDICT r18 #4/#8): a
-  * SparkListener counts the jobs and stages one query execution
-  * submits — the "how many passes does this operator make" receipt the
-  * r18 verdict asked for on the q149/q152 MG fold, and the audit tool
-  * for the redundant-pass hunt (q100/q107/q146). Counting from the
+  * SparkListener counts the jobs and stages one run of a query's timed
+  * story (`SparkEntry.timed`, what Bench times) submits — the "how
+  * many passes does this operator make" receipt the r18 verdict asked
+  * for on the q149/q152 MG fold, and the audit tool for the
+  * redundant-pass hunt (q100/q107/q146). Counting from the
   * scheduler (not the event log) keeps the receipt one `runMain` with
   * no sandbox history files.
   *
@@ -54,8 +55,8 @@ object JobCounts {
     }
 
     names.foreach { name =>
-      val q = graft.Bench.benchShapes.getOrElse(name, graft.SparkEntry.queries(name))
-      // warm pass: JIT + page cache + one-time fixtures (q154's model)
+      val q = graft.SparkEntry.timed(name)
+      // warm pass: JIT + page cache + one-time fixtures (graft.Fixtures)
       q(spark, sfDir).count()
       jobs.set(0); stages.set(0); scanStages.set(0); stageNames.clear()
       spark.sparkContext.addSparkListener(lis)

@@ -395,4 +395,33 @@ class PlanSpec extends SparkSpec {
     assert(os.subsetOf(qs), s"orphan oracles: ${os.diff(qs)}")
     assert(qs.forall(_.matches("q[0-9]{2,3}_[a-z0-9_]+")))
   }
+
+  // The 23 stories Bench times (SparkEntry.timed) each run at sf0.001.
+  // `same` marks the stories whose entry returns the story's own output
+  // (no check, or checks that only require()); their timed rows must
+  // equal the entry's rows. The other entries derive a recall, law or
+  // truth row from the story's output.
+  private val timedStories: Seq[(String, Boolean)] = Seq(
+    "q35_dedup_minhash" -> false, "q112_stream_state" -> true,
+    "q122_sparse_lookup" -> true, "q136_stream_interval_join" -> true,
+    "q138_stream_outer_join" -> true, "q144_stream_right_outer_join" -> true,
+    "q145_stream_full_outer_join" -> true, "q151_stream_dedup_agg" -> true,
+    "q154_ann_ivfpq" -> false, "q158_stream_near_dup" -> false,
+    "q168_kmv_overlap" -> false, "q173_stream_export" -> true,
+    "q174_pca_whiten" -> false, "q180_stream_scd2" -> true,
+    "q181_snapshot_diff" -> true, "q189_stream_dq" -> true,
+    "q191_ann_index_persist" -> false, "q193_bpe_train_fast" -> false,
+    "q194_multimodal_embed" -> false, "q196_bpe_model_serve" -> false,
+    "q197_ann_stream_ingest" -> false, "q235_table_change_stream" -> true,
+    "q253_stream_across_rename" -> true)
+
+  timedStories.foreach { case (name, same) =>
+    test(s"timed story $name runs" + (if (same) " and equals its entry" else "")) {
+      def rows(f: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame) =
+        f(spark, sf).collect().map(_.toString).sorted.toSeq
+      val timed = rows(SparkEntry.timed(name))
+      assert(timed.nonEmpty, s"$name: the timed story returned no rows")
+      if (same) assert(timed == rows(SparkEntry.queries(name)))
+    }
+  }
 }

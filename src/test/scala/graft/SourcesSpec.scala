@@ -150,4 +150,77 @@ class SourcesSpec extends SparkSpec {
     assert(pos.select(sum($"_c0".cast("long"))).as[Long].head() ==
       orig.select(sum($"o_orderkey")).as[Long].head())
   }
+
+  // The story fixture cache (graft.Fixtures): one case per guarantee.
+  // Each case gets a fresh data dir holding one source table `t` (a
+  // directory of parquet files) and a counting build that copies it.
+  private val fixtureCases: Seq[(String, (String, () => Int, () => String) => Unit)] = Seq(
+    "appending one parquet file to the source rebuilds the fixture" -> {
+      (data, builds, fixture) =>
+        assert(spark.read.parquet(fixture()).count() == 10 && builds() == 1)
+        assert(spark.read.parquet(fixture()).count() == 10 && builds() == 1) // warm
+        spark.range(10, 15).coalesce(1).write.mode("append").parquet(s"$data/t.parquet")
+        assert(spark.read.parquet(fixture()).count() == 15 && builds() == 2)
+    },
+    "a fixture without its marker, or with a stale one, is rebuilt" -> {
+      (data, builds, fixture) =>
+        val root = new java.io.File(fixture()).getParent
+        Files.delete(java.nio.file.Paths.get(root, Fixtures.Marker))
+        fixture()
+        assert(builds() == 2)
+        Files.writeString(java.nio.file.Paths.get(root, Fixtures.Marker), "t.parquet files=0 bytes=0\n")
+        assert(spark.read.parquet(fixture()).count() == 10 && builds() == 3)
+    },
+    "a fixture built by other code is rebuilt" -> {
+      (_, builds, fixture) =>
+        val marker = java.nio.file.Paths.get(
+          new java.io.File(fixture()).getParent, Fixtures.Marker)
+        val done = Files.readString(marker)
+        assert(done.startsWith("code=") && builds() == 1, done)
+        Files.writeString(marker, done.replaceFirst("code=[0-9a-f]+", "code=0"))
+        assert(spark.read.parquet(fixture()).count() == 10 && builds() == 2)
+        assert(Files.readString(marker) == done)
+    },
+    "three threads asking for one fixture build it once and all see it whole" -> {
+      (_, builds, fixture) =>
+        import scala.concurrent.{Await, Future, ExecutionContext}
+        val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
+        implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+        try {
+          val seen = Await.result(Future.sequence((1 to 3).map(_ => Future {
+            val f = fixture()
+            new java.io.File(f).list().count(_.endsWith(".parquet")) ->
+              spark.read.parquet(f).count()
+          })), scala.concurrent.duration.Duration(120, "s"))
+          assert(builds() == 1)
+          assert(seen.forall(_ == (3 -> 10L)), seen)
+        } finally pool.shutdown()
+    },
+    "the cache is keyed by the data dir's absolute path, not its name" -> {
+      (data, _, _) =>
+        val twin = Files.createTempDirectory("fixture_twin").toString + "/" +
+          new java.io.File(data).getName
+        assert(Fixtures.dirOf(twin) != Fixtures.dirOf(data))
+        val rel = java.nio.file.Paths.get("").toAbsolutePath.relativize(
+          java.nio.file.Paths.get(data)).toString
+        assert(Fixtures.dirOf(rel) == Fixtures.dirOf(data))
+    })
+
+  fixtureCases.foreach { case (name, check) =>
+    test(s"fixture cache: $name") {
+      val data = Files.createTempDirectory("fixture_src").toString + "/sf"
+      spark.range(0, 10, 1, 1).write.parquet(s"$data/t.parquet")
+      val builds = new java.util.concurrent.atomic.AtomicInteger
+      // a slow three-file build, so concurrent callers overlap it
+      def fixture(): String = Fixtures.cached(data, "copy", "t") { root =>
+        builds.incrementAndGet()
+        spark.read.parquet(s"$data/t.parquet").repartition(3)
+          .write.parquet(s"$root/f")
+        Thread.sleep(300)
+      } + "/f"
+      try check(data, () => builds.get, () => fixture())
+      finally org.apache.commons.io.FileUtils.deleteQuietly(
+        new java.io.File(Fixtures.dirOf(data)))
+    }
+  }
 }
