@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import graft.Fixtures.workDir
 
 /** Benchmark contract: runs headline queries on
   * `sys.env("SPARK_GRAFT_SF_DIR")` and prints ONE JSON line
@@ -20,6 +21,10 @@ import org.apache.spark.sql.SparkSession
   * on-disk [[Fixtures]] cache, built in the warm pass at the latest, so
   * timed runs pay for the story, not for its fixtures. Bench itself
   * defines no query.
+  *
+  * Every timed run is profiled ([[QueryProfile]]); the median run's
+  * profile of each query goes to `bench/results.json` as
+  * `profiles.<query>`.
   */
 object Bench {
 
@@ -288,6 +293,12 @@ object Bench {
     // RENAME through one checkpoint (sticky physical names)
     "q253_stream_across_rename")
 
+  /** A replay's floor: its wall time outside every micro-batch
+    * (session setup, fixture links, query start and stop, gaps between
+    * batches). */
+  private def floorOf(wall: Double, p: QueryProfile): Double =
+    math.max(0.0, wall - p.triggerMs / 1e3)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -326,6 +337,20 @@ object Bench {
     }
     spark.sparkContext.setJobDescription(null)
 
+    // One profiled timed run: (wall seconds, ok, profile). The clock
+    // stops inside the profiled body, before the listener bus drains.
+    def timedRun(name: String, tag: String): (Double, Boolean, QueryProfile) = {
+      val ((wall, ok), prof) = QueryProfile.measure(spark) {
+        val t0 = System.nanoTime()
+        val ok =
+          try { SparkEntry.timed(name)(spark, sfDir).count(); true }
+          catch { case e: Throwable =>
+            System.err.println(s"[bench] $tag$name timed run FAILED: $e"); false }
+        ((System.nanoTime() - t0) / 1e9, ok)
+      }
+      (wall, ok, prof)
+    }
+
     // Median of 5 timed runs per query: the sandbox host stalls for
     // 10–25 s at random (round-1 recorded a 19 s median on a 1 s query
     // when 2 of 3 runs landed in one stall); 5 runs need 3 poisoned
@@ -340,25 +365,18 @@ object Bench {
     val results = qs.flatMap { name =>
       System.gc()
       spark.sparkContext.setJobDescription(s"bench:$name")
-      val raw = (1 to nRuns).map { _ =>
-        val t0 = System.nanoTime()
-        val ok =
-          try { SparkEntry.timed(name)(spark, sfDir).count(); true }
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] $name timed run FAILED: $e"); false }
-        ((System.nanoTime() - t0) / 1e9, ok)
-      }
+      val raw = (1 to nRuns).map(_ => timedRun(name, ""))
       spark.sparkContext.setJobDescription(null)
       // raw (temporal) order exposes within-session drift; sorted order
       // is what the median is read from
       System.err.println(f"[bench] $name raw=${raw.map(t => f"${t._1}%.2f" + (if (t._2) "" else "!")).mkString(",")}")
-      val times = raw.filter(_._2).map(_._1).sorted
-      System.err.println(f"[bench] $name times=${times.map(t => f"$t%.2f").mkString(",")}")
-      if (times.isEmpty) { failedQueries += name; None }
-      else Some(name -> times(times.length / 2))
+      val good = raw.filter(_._2).sortBy(_._1)
+      System.err.println(f"[bench] $name times=${good.map(t => f"${t._1}%.2f").mkString(",")}")
+      if (good.isEmpty) { failedQueries += name; None }
+      else { val (wall, _, p) = good(good.length / 2); Some((name, wall, p)) }
     }
     logLoad("end")
-    val qjson = results.map { case (k, v) => "\"" + k + f"\":$v%.3f" }
+    val qjson = results.map { case (k, v, _) => "\"" + k + f"\":$v%.3f" }
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum
     // both sums pinned as fields: the BASELINE-comparable 12-query
@@ -387,7 +405,7 @@ object Bench {
     // streaming section runs.
     val streamFloor: Double = if (streamQs.isEmpty) -1.0 else {
       def oneFloor(): Double = {
-        val tmp = java.nio.file.Files.createTempDirectory("bench_floor_").toString
+        val tmp = workDir("bench_floor_")
         val t0 = System.nanoTime()
         val ss = graft.streaming.EventsStreaming.replaySession(spark)
         import org.apache.spark.sql.types._
@@ -408,43 +426,28 @@ object Bench {
       System.err.println(f"[bench] stream floor times=${fs.map(t => f"$t%.2f").mkString(",")}")
       fs(fs.length / 2)
     }
-    // Per-replay PHASE SPLIT (round 17, VERDICT r16 #1/#7): every
-    // timed run's micro-batch progress is accumulated by
-    // graft.streaming.ReplayPhases and diffed around the run; the
-    // median-wall run's split rides into bench/results.json as
+    // Per-replay PHASE SPLIT (round 17, VERDICT r16 #1/#7): the
+    // median-wall run's profile rides into bench/results.json as
     // streaming_phases so a q138-shaped drift is attributable from
     // the artifact alone — floor (wall − Σ triggerExecution: session +
     // fixture + start/stop), commit (offset/commit-log I/O), state
     // (task-summed store time), sink (Σ addBatch: execution incl. the
     // sink write), batches.
-    graft.streaming.ReplayPhases.enabled = true
-    graft.streaming.ReplayPhases.attach(spark) // q235/q253 stream on it
     val streamResults = streamQs.flatMap { name =>
       System.err.println(s"[bench] stream warm $name")
       spark.sparkContext.setJobDescription(s"bench-stream:$name")
       try SparkEntry.timed(name)(spark, sfDir).count()
       catch { case e: Throwable => System.err.println(s"[bench] stream warm $name failed: ${e.getMessage}") }
-      val raw = (1 to 3).map { _ =>
-        System.gc()
-        val before = graft.streaming.ReplayPhases.snapshot()
-        val t0 = System.nanoTime()
-        val ok =
-          try { SparkEntry.timed(name)(spark, sfDir).count(); true }
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] stream $name timed run FAILED: $e"); false }
-        val wall = (System.nanoTime() - t0) / 1e9
-        (wall, ok, graft.streaming.ReplayPhases.snapshot() - before)
-      }
+      val raw = (1 to 3).map { _ => System.gc(); timedRun(name, "stream ") }
       System.err.println(f"[bench] stream $name raw=${raw.map(t => f"${t._1}%.2f" + (if (t._2) "" else "!")).mkString(",")}")
       val good = raw.filter(_._2).sortBy(_._1)
       if (good.isEmpty) { failedQueries += name; None }
       else {
         val (wall, _, ph) = good(good.length / 2)
-        val floor = math.max(0.0, wall - ph.trigger / 1e3)
         System.err.println(
-          f"[bench] stream $name phases floor=$floor%.2f commit=${ph.commit / 1e3}%.2f " +
-            f"state=${ph.state / 1e3}%.2f sink=${ph.sink / 1e3}%.2f batches=${ph.batches}")
-        Some((name, wall, (floor, ph)))
+          f"[bench] stream $name phases floor=${floorOf(wall, ph)}%.2f commit=${ph.commitMs / 1e3}%.2f " +
+            f"state=${ph.stateMs / 1e3}%.2f sink=${ph.addBatchMs / 1e3}%.2f batches=${ph.batches}")
+        Some((name, wall, ph))
       }
     }
     // clear the last stream query's label (batch loops clear per-query;
@@ -452,11 +455,13 @@ object Bench {
     spark.sparkContext.setJobDescription(null)
     val sjson = streamResults.map { case (k, v, _) => "\"" + k + f"\":$v%.3f" }
       .mkString("{", ",", "}")
-    val sphjson = streamResults.map { case (k, wall, (floor, ph)) =>
+    val sphjson = streamResults.map { case (k, wall, ph) =>
       "\"" + k + "\":{" +
-        f""""wall":$wall%.3f,"floor":$floor%.3f,"commit":${ph.commit / 1e3}%.3f,""" +
-        f""""state":${ph.state / 1e3}%.3f,"sink":${ph.sink / 1e3}%.3f,"batches":${ph.batches}%d}"""
+        f""""wall":$wall%.3f,"floor":${floorOf(wall, ph)}%.3f,"commit":${ph.commitMs / 1e3}%.3f,""" +
+        f""""state":${ph.stateMs / 1e3}%.3f,"sink":${ph.addBatchMs / 1e3}%.3f,"batches":${ph.batches}%d}"""
     }.mkString("{", ",", "}")
+    val pjson = (results ++ streamResults).map { case (k, _, p) => "\"" + k + "\":" + p.json }
+      .mkString("{", ",", "}")
     val stotal = streamResults.map(_._2).sum
     val fjson = failedQueries.map("\"" + _ + "\"").mkString("[", ",", "]")
     // A failed member query must make its aggregate UNMISTAKABLY
@@ -479,14 +484,14 @@ object Bench {
       if (sfDir.contains("sf0.1")) streamPhasePinsSf01
       else Map.empty[String, Double]
     val regressed = results.collect {
-      case (k, v) if pinned.get(k).exists(p => v > 2 * p) => k
+      case (k, v, _) if pinned.get(k).exists(p => v > 2 * p) => k
     } ++ streamResults.collect {
       case (k, v, _) if sPinned.get(k).exists(p => v > 2 * p) => k
     } ++ streamResults.collect {
       // the PHASE gate (round 18, VERDICT r17 #2): a commit+sink
       // per-batch breach trips even when wall stays inside its gate
-      case (k, _, (_, ph)) if ph.batches > 0 && sPhasePinned.get(k)
-          .exists(p => (ph.commit + ph.sink) / 1e3 / ph.batches > 2 * p) =>
+      case (k, _, ph) if ph.batches > 0 && sPhasePinned.get(k)
+          .exists(p => (ph.commitMs + ph.addBatchMs) / 1e3 / ph.batches > 2 * p) =>
         s"$k(phase)"
     }
     val rjson = regressed.map("\"" + _ + "\"").mkString("[", ",", "]")
@@ -514,7 +519,7 @@ object Bench {
     val perReplayOut =
       if (streamingBroken || streamResults.isEmpty) -1.0
       else stotal / streamResults.size
-    val line = f"""{"metric":"total","value":$totalOut%.3f,"unit":"sec","baseline12_sec":$base12Out%.3f,"headline_sec":$totalOut%.3f,"queries":$qjson,"streaming_sec":$stotalOut%.3f,"streaming_per_replay_sec":$perReplayOut%.3f,"streaming_floor_sec":$streamFloor%.3f,"streaming":$sjson,"streaming_phases":$sphjson,"failed":$fjson,"regressed":$rjson,"unpinned":$ujson,"loadavg":"$loadavg","sf":"$sfDir"}"""
+    val line = f"""{"metric":"total","value":$totalOut%.3f,"unit":"sec","baseline12_sec":$base12Out%.3f,"headline_sec":$totalOut%.3f,"queries":$qjson,"streaming_sec":$stotalOut%.3f,"streaming_per_replay_sec":$perReplayOut%.3f,"streaming_floor_sec":$streamFloor%.3f,"streaming":$sjson,"streaming_phases":$sphjson,"profiles":$pjson,"failed":$fjson,"regressed":$rjson,"unpinned":$ujson,"loadavg":"$loadavg","sf":"$sfDir"}"""
     // The PRINTED line must survive the driver's bounded tail capture
     // (every BENCH_r{1..14}.json arrived parsed=null: the line carried
     // an sbt "[info] " prefix and/or overflowed the ~2000-char tail

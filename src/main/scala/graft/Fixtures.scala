@@ -112,6 +112,16 @@ object Fixtures {
       .foreach(f => Files.createLink(Paths.get(into, prefix + f.getName), f.toPath))
   }
 
+  /** A fresh temp dir named `prefix…` for one call's outputs (a stream's
+    * source, checkpoint and sink, a scratch VersionedTable), unlike a
+    * fixture not kept: Spark's shutdown hook deletes it when the JVM
+    * exits, after the SparkContext has stopped. */
+  def workDir(prefix: String): String = {
+    val d = Files.createTempDirectory(prefix).toFile
+    org.apache.spark.sql.GraftSqlBridge.deleteOnShutdown(d)
+    d.toString
+  }
+
   /** The events-replay projection the events stream stories read. */
   private def eventsProjection(s: SparkSession, dir: String): DataFrame =
     graft.core.Tables(s, dir).events

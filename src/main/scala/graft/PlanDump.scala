@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.Fixtures.workDir
 
 /** Dev tool: dump formatted physical plans of the headline queries to a
   * markdown artifact (docs/PLANS.md) — reviewable evidence that filters
@@ -78,8 +79,7 @@ object PlanDump {
     sb.append("the data scan keeps its ReadSchema/pushdown, the mask joins\n")
     sb.append("as BroadcastHashJoin LeftAnti — reads stay one-pass.\n")
     locally {
-      val dvDir = java.nio.file.Files.createTempDirectory("plans_dv_")
-        .toString + "/t"
+      val dvDir = workDir("plans_dv_") + "/t"
       val base = spark.range(100000).selectExpr("id as k",
         "cast(id % 100 as double) as x")
       graft.operators.VersionedTable.commit(spark, dvDir, base, -1L, "w",
@@ -97,8 +97,7 @@ object PlanDump {
     // aggregate pair, no per-group shuffle or sort operator.
     sb.append("\n# Z-order clustered read (round 13)\n\n")
     locally {
-      val zDir = java.nio.file.Files.createTempDirectory("plans_z_")
-        .toString + "/t"
+      val zDir = workDir("plans_z_") + "/t"
       val grid = spark.range(65536).selectExpr("id % 256 as a",
         "cast(id / 256 as long) as b", "id as v")
       graft.operators.VersionedTable.commit(spark, zDir, grid, -1L, "w",
@@ -135,8 +134,7 @@ object PlanDump {
     sb.append("survives (stats re-keyed): the pruned probe below reads a\n")
     sb.append("strict file subset through the renamed column.\n")
     locally {
-      val rnDir = java.nio.file.Files.createTempDirectory("plans_rn_")
-        .toString + "/t"
+      val rnDir = workDir("plans_rn_") + "/t"
       val base = spark.range(100000).selectExpr("id as k",
         "cast(id % 97 as double) as score")
       graft.operators.VersionedTable.commit(spark, rnDir, base, -1L, "w",
@@ -156,7 +154,7 @@ object PlanDump {
     // branch "dev": where the round 16-18 landings below start.
     def branched(prefix: String): (String, String) = {
       import graft.operators.VersionedTable
-      val dir = java.nio.file.Files.createTempDirectory(prefix).toString + "/t"
+      val dir = workDir(prefix) + "/t"
       VersionedTable.commit(spark, dir, spark.range(100000).selectExpr("id as k",
         "cast(id % 97 as double) as w"), -1L, "w", clusterBy = Seq("k"), clusterFiles = 8)
       VersionedTable.createBranch(spark, dir, "dev")
@@ -175,8 +173,7 @@ object PlanDump {
     sb.append("union operator, no rewrite, no second pass.\n")
     locally {
       import graft.operators.VersionedTable
-      val brDir = java.nio.file.Files.createTempDirectory("plans_br_")
-        .toString + "/t"
+      val brDir = workDir("plans_br_") + "/t"
       val base = spark.range(100000).selectExpr("id as k",
         "cast(id % 97 as double) as score")
       VersionedTable.commit(spark, brDir, base, -1L, "w",

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.Fixtures.workDir
 
 /** Scale soak (dev tool, not a driver contract): runs the curation
   * kernels over a DSv2-generated synthetic corpus far larger than the
@@ -98,7 +99,7 @@ object Soak {
       // r9 export manifest: one repartition + partitioned write +
       // read-back agg; uses a bounded slice so the soak's disk budget
       // holds (the dataflow shape is rows-linear either way)
-      val out = java.nio.file.Files.createTempDirectory("soak_export_").toString
+      val out = workDir("soak_export_")
       val slice = docs.limit(math.min(rows, 1000000L).toInt)
       val m = graft.operators.TrainingPipeline.exportShards(
         slice, "doc_id", "text", 8, s"$out/shards")
@@ -366,7 +367,7 @@ object Soak {
       val zr = math.min(rows, 1000000L)
       val slice = docs.filter(col("doc_id") < zr)
         .select(col("doc_id"), pmod(xxhash64(col("text")), lit(65536L)).as("k2"))
-      val out = java.nio.file.Files.createTempDirectory("soak_zorder_").toString
+      val out = workDir("soak_zorder_")
       graft.operators.Layout.zorderWriteNormalized(slice, "doc_id", "k2", out, nFiles = 16)
       val n = spark.read.parquet(out).count()
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(out))
@@ -486,7 +487,7 @@ object Soak {
         corpus, "vec_id", "embedding", 64)
       val pq = graft.operators.Similarity.pqTrain(
         corpus, "embedding", m = 16, nCodes = 256, iters = 2)
-      val idx = java.nio.file.Files.createTempDirectory("soak_annidx_").toString
+      val idx = workDir("soak_annidx_")
       time(s"ann_index_save_$annRows") {
         graft.operators.AnnIndex.save(spark, idx, corpus, "vec_id",
           "embedding", cents, pq)
@@ -504,7 +505,7 @@ object Soak {
     // versioned-table commit: stage-all + manifest CAS at corpus
     // scale — v0 full load, v1 a 1%-churn MERGE, read through the log
     time(s"versioned_commit_$rows") {
-      val vt = java.nio.file.Files.createTempDirectory("soak_vt_").toString + "/t"
+      val vt = workDir("soak_vt_") + "/t"
       val base = docs.select(col("doc_id"), col("lang"))
       graft.operators.VersionedTable.commit(spark, vt, base, -1L, "soak")
       val ch = base.filter(col("doc_id") % 100 === 0)
@@ -523,7 +524,7 @@ object Soak {
     // bytes vs table bytes, files kept vs live, replication bytes.
     if (only.forall(_.exists("lakehouse".startsWith))) {
       import graft.operators.VersionedTable
-      val root = java.nio.file.Files.createTempDirectory("soak_lake_").toString
+      val root = workDir("soak_lake_")
       val vt = s"$root/t"
       val base = docs.select(col("doc_id").as("k"), col("lang"),
         length(col("text")).cast("long").as("len"))

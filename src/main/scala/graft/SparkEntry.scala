@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.Fixtures.workDir
 import graft.core.Tables
 import graft.core.GraftSession.Materialize
 import graft.functions.PigFunctions._
@@ -966,7 +967,7 @@ object SparkEntry {
     //     SQL in DuckDB. ---
     "q105_federated_join" -> ((s, dir) => {
       import graft.fed.Federation._
-      val scratch = java.nio.file.Files.createTempDirectory("graft_fed_q105_").toString
+      val scratch = workDir("graft_fed_q105_")
       val clusters = Map(
         "A" -> Cluster("A", s.newSession(), s"$scratch/A"),
         "B" -> Cluster("B", s.newSession(), s"$scratch/B"))
@@ -998,7 +999,7 @@ object SparkEntry {
       import graft.fed.Federation
       import graft.fed.Federation._
       val port = Federation.ensureConnectServer(s)
-      val scratch = java.nio.file.Files.createTempDirectory("graft_fed_q157_").toString
+      val scratch = workDir("graft_fed_q157_")
       val clusters = Map(
         "A" -> Federation.connectCluster("A", s"sc://localhost:$port", s"$scratch/A"),
         "B" -> Federation.connectCluster("B", s"sc://localhost:$port", s"$scratch/B"))
@@ -1038,7 +1039,7 @@ object SparkEntry {
     //     placement shape (multi-cluster, ≥1 transfer). ---
     "q130_federated_3way" -> ((s, dir) => {
       import graft.fed.Federation._
-      val scratch = java.nio.file.Files.createTempDirectory("graft_fed_q130_").toString
+      val scratch = workDir("graft_fed_q130_")
       val clusters = Map(
         "A" -> Cluster("A", s.newSession(), s"$scratch/A"),
         "B" -> Cluster("B", s.newSession(), s"$scratch/B"),
@@ -1351,7 +1352,8 @@ object SparkEntry {
     //     (ADC) instead of vectors — the corpus-sized shuffle moves
     //     code bytes, not embeddings — then the bounded refine re-ranks
     //     the ADC shortlist exactly. Recall-invariant oracle like q54:
-    //     RecallProbe r9 measured this operating point (m16/c256,
+    //     RecallProbe r9 (a probe main deleted after commit 71395f2)
+    //     measured this operating point (m16/c256,
     //     nProbe 12/16, refine 4) at 1.00 / 1.00 / 0.94 recall on
     //     sf0.001 / sf0.01 / sf0.1; pinned ≥0.9. Every stage is
     //     deterministic (hash-ordered samples, lowest-index ties), so
@@ -1475,7 +1477,7 @@ object SparkEntry {
     //     a hash match proves the export is complete (no doc lost or
     //     duplicated, every doc in its assigned shard). ---
     "q162_export_manifest" -> ((s, dir) => {
-      val out = java.nio.file.Files.createTempDirectory("graft_export_q162_").toString
+      val out = workDir("graft_export_q162_")
       graft.operators.TrainingPipeline.exportShards(
         t(s, dir).documents, "doc_id", "text", nShards = 8, outDir = s"$out/shards")
     }),
@@ -1499,7 +1501,7 @@ object SparkEntry {
       val budgeted = graft.operators.TrainingPipeline.tokenBudgetSample(
         kept, "lang", "doc_id", "text",
         budgets = Map("en" -> 5000L), defaultBudget = 2500L)
-      val out = java.nio.file.Files.createTempDirectory("graft_mix_q164_").toString
+      val out = workDir("graft_mix_q164_")
       graft.operators.TrainingPipeline.exportShards(
         budgeted.select(col("doc_id")).join(docs, Seq("doc_id"))
           .select(col("doc_id"), col("text")),
@@ -1690,8 +1692,7 @@ object SparkEntry {
     //     replays update+insert then delete over the raw table. ---
     "q198_file_granular_merge" -> ((s, dir) => {
       import graft.operators.VersionedTable
-      val vt = java.nio.file.Files.createTempDirectory("graft_fgm_q198_")
-        .toString + "/t"
+      val vt = workDir("graft_fgm_q198_") + "/t"
       // per-order rollup (synthetic lineitem has no unique natural
       // key), range-clustered on k1 so keyed churn is file-local —
       // the layout any lakehouse table carries for merge-heavy use
@@ -1856,8 +1857,7 @@ object SparkEntry {
         .limit(1).count()
       require(bad == 0L, "q200: byte-mode encode must round-trip losslessly")
       // the mode persists with the model
-      val tmp = java.nio.file.Files.createTempDirectory("graft_bpe_q200_")
-        .toString + "/m"
+      val tmp = workDir("graft_bpe_q200_") + "/m"
       TextAnalysis.saveBpe(s, tmp, mB, byteLevel = true)
       val (mLoaded, loadedMode) = TextAnalysis.loadBpeWithMode(s, tmp)
       require(mLoaded == mB && loadedMode,
@@ -1923,8 +1923,7 @@ object SparkEntry {
     // three STOREs pay ~one scan of events. The entry executes the
     // stores for real and answers from the read-back sinks.
     "q230_pigmix_l12_multistore" -> ((s, dir) => {
-      val out = java.nio.file.Files.createTempDirectory("graft_mqo_q230_")
-        .toString
+      val out = workDir("graft_mqo_q230_")
       val script = graft.pig.PigScript.resource("/pigmix/l12multi.pig")
       // the policy must pick the unsplit point — pinned here so a
       // regression in the frontier computation fails the query, not
@@ -1945,7 +1944,7 @@ object SparkEntry {
     // (the q122/q123 fixture discipline), then the script joins them
     // USING 'merge'
     "q215_pigmix_l14" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_pigmix_merge_").toString
+      val tmp = workDir("graft_pigmix_merge_")
       val so = s"$tmp/orders_sorted"; val sl = s"$tmp/lineitem_sorted"
       t(s, dir).orders.select(col("o_orderkey"), col("o_orderstatus"))
         .repartitionByRange(8, col("o_orderkey"))
@@ -1982,8 +1981,7 @@ object SparkEntry {
     //     read's filter (skipping must never change an answer). ---
     "q219_data_skipping" -> ((s, dir) => {
       import graft.operators.VersionedTable
-      val vt = java.nio.file.Files.createTempDirectory("graft_skip_q219_")
-        .toString + "/t"
+      val vt = workDir("graft_skip_q219_") + "/t"
       val ord = t(s, dir).orders.select(col("o_orderkey").as("k"),
           col("o_orderpriority").as("pr"), col("o_totalprice").as("price"))
       require(VersionedTable.commit(s, vt, ord, -1L, "loader",
@@ -2017,8 +2015,7 @@ object SparkEntry {
     //     Layout.zorderWriteNormalized's rankBy path). ---
     "q221_zorder_skipping" -> ((s, dir) => {
       import graft.operators.{Layout, VersionedTable}
-      val vt = java.nio.file.Files.createTempDirectory("graft_zskip_q221_")
-        .toString + "/t"
+      val vt = workDir("graft_zskip_q221_") + "/t"
       val o = t(s, dir).orders.select(col("o_orderkey").as("k1"),
         col("o_custkey").as("k2"), col("o_totalprice").as("price"))
       val Array(max1, max2) = o.agg(max(col("k1")), max(col("k2")))
@@ -2064,8 +2061,7 @@ object SparkEntry {
     //     full snapshot diff row for row. ---
     "q220_table_cdf" -> ((s, dir) => {
       import graft.operators.VersionedTable
-      val vt = java.nio.file.Files.createTempDirectory("graft_cdf_q220_")
-        .toString + "/t"
+      val vt = workDir("graft_cdf_q220_") + "/t"
       val cust = t(s, dir).customer.select(col("c_custkey").as("k"),
           col("c_name").as("name"), col("c_acctbal").as("bal"))
         .repartitionByRange(32, col("k")).sortWithinPartitions("k")
@@ -2118,8 +2114,7 @@ object SparkEntry {
     //     feed is complete AND minimal). ---
     "q222_cursor_cdc" -> ((s, dir) => {
       import graft.operators.{Incremental, VersionedTable}
-      val vt = java.nio.file.Files.createTempDirectory("graft_cur_q222_")
-        .toString + "/t"
+      val vt = workDir("graft_cur_q222_") + "/t"
       val cust = t(s, dir).customer.select(col("c_custkey").as("k"),
           col("c_name").as("name"), col("c_acctbal").as("bal"))
         .repartitionByRange(32, col("k")).sortWithinPartitions("k")
@@ -2185,8 +2180,7 @@ object SparkEntry {
     //     is a version-less no-op. Result read FROM THE REPLICA. ---
     "q223_table_replication" -> ((s, dir) => {
       import graft.operators.VersionedTable
-      val root = java.nio.file.Files.createTempDirectory("graft_repl_q223_")
-        .toString
+      val root = workDir("graft_repl_q223_")
       val src = s"$root/src"; val dst = s"$root/dst"
       val cust = t(s, dir).customer.select(col("c_custkey").as("k"),
           col("c_name").as("name"), col("c_acctbal").as("bal"))
@@ -2242,8 +2236,7 @@ object SparkEntry {
     //     double-apply a naive foreachBatch MERGE would make). ---
     "q224_stream_table_merge" -> ((s, dir) => {
       import graft.operators.VersionedTable
-      val tmp = java.nio.file.Files.createTempDirectory("graft_stm_q224_")
-        .toString
+      val tmp = workDir("graft_stm_q224_")
       val src = s"$tmp/src"; val vt = s"$tmp/t"; val ckpt = s"$tmp/ckpt"
       val cust = t(s, dir).customer.select(col("c_custkey").as("k"),
           col("c_name").as("name"), col("c_acctbal").as("bal"))
@@ -2307,8 +2300,7 @@ object SparkEntry {
     //     and the quarantined merge lands exactly the clean rows. ---
     "q225_commit_expectations" -> ((s, dir) => {
       import graft.operators.VersionedTable
-      val vt = java.nio.file.Files.createTempDirectory("graft_exp_q225_")
-        .toString + "/t"
+      val vt = workDir("graft_exp_q225_") + "/t"
       val cust = t(s, dir).customer.select(col("c_custkey").as("k"),
           col("c_name").as("name"), col("c_acctbal").as("bal"))
         .repartitionByRange(32, col("k")).sortWithinPartitions("k")
@@ -2351,8 +2343,7 @@ object SparkEntry {
     //     never sees Avro, so a hash match proves the interchange is
     //     value-exact for long/int/double/string columns. ---
     "q229_avro_roundtrip" -> ((s, dir) => {
-      val out = java.nio.file.Files.createTempDirectory("graft_avro_q229_")
-        .toString + "/supplier_avro"
+      val out = workDir("graft_avro_q229_") + "/supplier_avro"
       val src = t(s, dir).supplier
       src.write.format(graft.Engine.AvroFormat).save(out)
       val back = s.read.format(graft.Engine.AvroFormat).load(out)
@@ -2375,8 +2366,7 @@ object SparkEntry {
     //     table answers exactly the oracle's anti-filter. ---
     "q231_dv_delete" -> ((s, dir) => {
       import graft.operators.VersionedTable
-      val vt = java.nio.file.Files.createTempDirectory("graft_dv_q231_")
-        .toString + "/t"
+      val vt = workDir("graft_dv_q231_") + "/t"
       val ord = t(s, dir).orders.select(col("o_orderkey").as("k"),
         col("o_orderpriority").as("pr"), col("o_totalprice").as("price"))
       require(VersionedTable.commit(s, vt, ord, -1L, "loader",
@@ -2401,8 +2391,7 @@ object SparkEntry {
     //     not the table's). Cursor CDC rides the same feed. ---
     "q232_dv_cdf" -> ((s, dir) => {
       import graft.operators.VersionedTable
-      val vt = java.nio.file.Files.createTempDirectory("graft_dv_q232_")
-        .toString + "/t"
+      val vt = workDir("graft_dv_q232_") + "/t"
       val ord = t(s, dir).orders.select(col("o_orderkey").as("k"),
         col("o_orderpriority").as("pr"), col("o_totalprice").as("price"))
       require(VersionedTable.commit(s, vt, ord, -1L, "loader",
@@ -2429,8 +2418,7 @@ object SparkEntry {
     //     lifecycle relationally. ---
     "q233_dv_merge_purge" -> ((s, dir) => {
       import graft.operators.VersionedTable
-      val vt = java.nio.file.Files.createTempDirectory("graft_dv_q233_")
-        .toString + "/t"
+      val vt = workDir("graft_dv_q233_") + "/t"
       val ord = t(s, dir).orders.select(col("o_orderkey").as("k"),
         col("o_orderpriority").as("pr"), col("o_totalprice").as("price"))
       require(VersionedTable.commit(s, vt, ord, -1L, "loader",
@@ -2467,8 +2455,7 @@ object SparkEntry {
     "q226_add_column_evolution" -> ((s, dir) => {
       import graft.operators.VersionedTable
       import org.apache.spark.sql.types.{StructField, DoubleType}
-      val vt = java.nio.file.Files.createTempDirectory("graft_evo_q226_")
-        .toString + "/t"
+      val vt = workDir("graft_evo_q226_") + "/t"
       val ord = t(s, dir).orders.select(col("o_orderkey").as("k"),
         col("o_orderpriority").as("pr"))
       require(VersionedTable.commit(s, vt, ord, -1L, "loader",
@@ -2505,8 +2492,7 @@ object SparkEntry {
     //     zero API code. v1 overwrites with scaled prices; the entry
     //     reads VERSION AS OF 0 back through the script path. ---
     "q242_pig_versioned_store" -> ((s, dir) => {
-      val vt = java.nio.file.Files.createTempDirectory("graft_pigvs_q242_")
-        .toString + "/t"
+      val vt = workDir("graft_pigvs_q242_") + "/t"
       graft.pig.PigScript.run(s,
         s"""O = LOAD '$dir/orders.parquet' USING parquet;
             A = FOREACH O GENERATE o_orderkey AS k, o_orderpriority AS pr,
@@ -2538,8 +2524,7 @@ object SparkEntry {
     //     idempotent no-op. ---
     "q247_forget" -> ((s, dir) => {
       import graft.operators.VersionedTable
-      val vt = java.nio.file.Files.createTempDirectory("graft_fgt_q247_")
-        .toString + "/t"
+      val vt = workDir("graft_fgt_q247_") + "/t"
       val cust = t(s, dir).customer.select(col("c_custkey").as("k"),
         col("c_name").as("name"), col("c_acctbal").as("bal"))
       require(VersionedTable.commit(s, vt, cust, -1L, "loader",
@@ -2574,8 +2559,7 @@ object SparkEntry {
     //     snapshots to report per-segment balance drift. ---
     "q246_sql_versioned" -> ((s, dir) => {
       import graft.operators.VersionedTable
-      val vt = java.nio.file.Files.createTempDirectory("graft_sqlv_q246_")
-        .toString + "/t"
+      val vt = workDir("graft_sqlv_q246_") + "/t"
       val cust = t(s, dir).customer.select(col("c_custkey").as("k"),
         col("c_mktsegment").as("seg"), col("c_acctbal").as("bal"))
       require(VersionedTable.commit(s, vt, cust, -1L, "loader") == 0L)
@@ -2614,8 +2598,7 @@ object SparkEntry {
     "q245_widen_columns" -> ((s, dir) => {
       import graft.operators.VersionedTable
       import org.apache.spark.sql.types.{LongType, DoubleType}
-      val vt = java.nio.file.Files.createTempDirectory("graft_wid_q245_")
-        .toString + "/t"
+      val vt = workDir("graft_wid_q245_") + "/t"
       val base = t(s, dir).orders.selectExpr(
         "CAST(o_orderkey AS INT) AS k",
         "CAST(o_totalprice AS FLOAT) AS price")
@@ -2646,8 +2629,7 @@ object SparkEntry {
     //     clustering could only prune the leading column. ---
     "q244_zorder_table" -> ((s, dir) => {
       import graft.operators.VersionedTable
-      val vt = java.nio.file.Files.createTempDirectory("graft_zc_q244_")
-        .toString + "/t"
+      val vt = workDir("graft_zc_q244_") + "/t"
       val li = t(s, dir).lineitem.select(col("l_suppkey").as("sk"),
         col("l_partkey").as("pk"), col("l_quantity").as("qty"))
       require(VersionedTable.commit(s, vt, li, -1L, "loader",
@@ -2686,8 +2668,7 @@ object SparkEntry {
     //     serial result. ---
     "q252_rebase_commit" -> ((s, dir) => {
       import graft.operators.VersionedTable
-      val vt = java.nio.file.Files.createTempDirectory("graft_rb_q252_")
-        .toString + "/t"
+      val vt = workDir("graft_rb_q252_") + "/t"
       val ord = t(s, dir).orders.select(col("o_orderkey").as("k"),
         col("o_orderpriority").as("pr"), col("o_totalprice").as("price"))
       require(VersionedTable.commit(s, vt, ord, -1L, "loader",
@@ -2740,8 +2721,7 @@ object SparkEntry {
     //     replays the cross-rename CDF in DuckDB. ---
     "q248_rename_column" -> ((s, dir) => {
       import graft.operators.VersionedTable
-      val vt = java.nio.file.Files.createTempDirectory("graft_ren_q248_")
-        .toString + "/t"
+      val vt = workDir("graft_ren_q248_") + "/t"
       val cust = t(s, dir).customer.select(col("c_custkey").as("k"),
         col("c_name").as("name"), col("c_acctbal").as("bal"))
       require(VersionedTable.commit(s, vt, cust, -1L, "loader",
@@ -2783,8 +2763,7 @@ object SparkEntry {
 
     "q243_restore" -> ((s, dir) => {
       import graft.operators.VersionedTable
-      val vt = java.nio.file.Files.createTempDirectory("graft_rst_q243_")
-        .toString + "/t"
+      val vt = workDir("graft_rst_q243_") + "/t"
       val base = t(s, dir).orders.select(col("o_orderkey").as("k"),
         col("o_orderpriority").as("pr"), col("o_totalprice").as("price"))
       require(VersionedTable.commit(s, vt, base, -1L, "loader",
@@ -2817,8 +2796,7 @@ object SparkEntry {
     //     (require()'d). The oracle replays v0's content. ---
     "q241_timestamp_as_of" -> ((s, dir) => {
       import graft.operators.VersionedTable
-      val vt = java.nio.file.Files.createTempDirectory("graft_asof_q241_")
-        .toString + "/t"
+      val vt = workDir("graft_asof_q241_") + "/t"
       val cust = t(s, dir).customer.select(col("c_custkey").as("k"),
         col("c_acctbal").as("bal"))
       // pin the in-manifest commit instants (ts= lines — authoritative
@@ -2851,8 +2829,7 @@ object SparkEntry {
     //     changes still refuse loudly (require()'d in-entry). ---
     "q234_cdf_schema_add" -> ((s, dir) => {
       import graft.operators.VersionedTable
-      val vt = java.nio.file.Files.createTempDirectory("graft_dv_q234_")
-        .toString + "/t"
+      val vt = workDir("graft_dv_q234_") + "/t"
       val ord = t(s, dir).orders
       val v0 = ord.select(col("o_orderkey").as("k"),
         col("o_orderpriority").as("pr"))
@@ -2934,8 +2911,7 @@ object SparkEntry {
     //     the replayed final table directly. ---
     "q236_incremental_agg_view" -> ((s, dir) => {
       import graft.operators.{AggView, VersionedTable}
-      val root = java.nio.file.Files.createTempDirectory("graft_aggv_q236_")
-        .toString
+      val root = workDir("graft_aggv_q236_")
       val src = s"$root/src"; val view = s"$root/view"
       val ord = t(s, dir).orders.select(col("o_orderkey").as("k"),
         col("o_orderpriority").as("grp"), col("o_totalprice").as("price"))
@@ -2976,8 +2952,7 @@ object SparkEntry {
     //     oracle aggregates the replayed final table directly. ---
     "q249_aggview_minmax" -> ((s, dir) => {
       import graft.operators.{AggView, VersionedTable}
-      val root = java.nio.file.Files.createTempDirectory("graft_aggx_q249_")
-        .toString
+      val root = workDir("graft_aggx_q249_")
       val src = s"$root/src"; val view = s"$root/view"
       val ord = t(s, dir).orders.select(col("o_orderkey").as("k"),
         col("o_orderpriority").as("grp"), col("o_totalprice").as("price"))
@@ -3034,8 +3009,7 @@ object SparkEntry {
     //     oracle aggregates the replayed final table. ---
     "q256_aggview_rename" -> ((s, dir) => {
       import graft.operators.{AggView, VersionedTable}
-      val root = java.nio.file.Files.createTempDirectory("graft_aggr_q256_")
-        .toString
+      val root = workDir("graft_aggr_q256_")
       val src = s"$root/src"; val view = s"$root/view"
       val ord = t(s, dir).orders.select(col("o_orderkey").as("k"),
         col("o_orderpriority").as("grp"), col("o_totalprice").as("price"))
@@ -3089,8 +3063,7 @@ object SparkEntry {
     //     combined effect in DuckDB. ---
     "q250_sql_dml" -> ((s, dir) => {
       import graft.operators.VersionedTable
-      val vt = java.nio.file.Files.createTempDirectory("graft_dml_q250_")
-        .toString + "/t"
+      val vt = workDir("graft_dml_q250_") + "/t"
       val base = t(s, dir).orders.select(col("o_orderkey").as("k"),
         col("o_orderpriority").as("pr"), col("o_totalprice").as("price"))
       require(VersionedTable.commit(s, vt, base, -1L, "loader",
@@ -3131,8 +3104,7 @@ object SparkEntry {
     //     ride in-entry: keyword-routed statements that miss their
     //     grammar refuse loudly instead of leaking into Spark. ---
     "q257_sql_lifecycle" -> ((s, dir) => {
-      val vt = java.nio.file.Files.createTempDirectory("graft_lc_q257_")
-        .toString + "/t"
+      val vt = workDir("graft_lc_q257_") + "/t"
       val gs = new graft.core.GraftSession(s)
       gs.register("orders_raw", t(s, dir).orders)
       val rs = gs.runScript(
@@ -3195,8 +3167,7 @@ object SparkEntry {
     //     oracle replays the projection + churn. ---
     "q254_drop_column" -> ((s, dir) => {
       import graft.operators.VersionedTable
-      val vt = java.nio.file.Files.createTempDirectory("graft_drop_q254_")
-        .toString + "/t"
+      val vt = workDir("graft_drop_q254_") + "/t"
       val base = t(s, dir).orders.select(col("o_orderkey").as("k"),
         col("o_orderpriority").as("pr"), col("o_orderstatus").as("secret"),
         col("o_totalprice").as("price"))
@@ -3242,8 +3213,7 @@ object SparkEntry {
     //     untouched; the clustered stats index prunes a key range. ---
     "q251_pig_versioned_decls" -> ((s, dir) => {
       import graft.operators.VersionedTable
-      val vt = java.nio.file.Files.createTempDirectory("graft_pvd_q251_")
-        .toString + "/t"
+      val vt = workDir("graft_pvd_q251_") + "/t"
       graft.pig.PigScript.run(s,
         s"""O = LOAD '$dir/orders.parquet' USING parquet;
             A = FOREACH O GENERATE o_orderkey AS k, o_orderpriority AS pr,
@@ -3303,8 +3273,7 @@ object SparkEntry {
     //     bounds prune, and the answer equals the unpruned filter. ---
     "q237_pruned_predicate_read" -> ((s, dir) => {
       import graft.operators.VersionedTable
-      val vt = java.nio.file.Files.createTempDirectory("graft_rf_q237_")
-        .toString + "/t"
+      val vt = workDir("graft_rf_q237_") + "/t"
       val ord = t(s, dir).orders.select(col("o_orderkey").as("k"),
         col("o_orderpriority").as("pr"), col("o_totalprice").as("price"))
       require(VersionedTable.commit(s, vt, ord, -1L, "loader",
@@ -3338,8 +3307,7 @@ object SparkEntry {
     //     replays both merges over the raw table. ---
     "q192_versioned_table" -> ((s, dir) => {
       import graft.operators.{Incremental, VersionedTable}
-      val vt = java.nio.file.Files.createTempDirectory("graft_vt_q192_")
-        .toString + "/t"
+      val vt = workDir("graft_vt_q192_") + "/t"
       val base = t(s, dir).customer.select(col("c_custkey").as("k"),
         col("c_name").as("name"), col("c_acctbal").as("bal"))
       require(VersionedTable.commit(s, vt, base, -1L, "loader") == 0L)
@@ -3385,8 +3353,7 @@ object SparkEntry {
     //     drops exactly v0 and leaves the log at {1,2}. ---
     "q195_lakehouse_maintain" -> ((s, dir) => {
       import graft.operators.{Incremental, Layout, VersionedTable}
-      val vt = java.nio.file.Files.createTempDirectory("graft_lake_q195_")
-        .toString + "/t"
+      val vt = workDir("graft_lake_q195_") + "/t"
       // per-order rollup as the table: the synthetic lineitem has no
       // unique natural key (dup (orderkey, linenumber) rows), and a
       // MERGE target needs one — k1 is unique by construction here
@@ -3704,7 +3671,7 @@ object SparkEntry {
     //     SOURCE — a hash match proves the rewrite lost/duplicated
     //     nothing (q173's require-plus-content-oracle pattern). ---
     "q179_compaction" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_compact_q179_").toString
+      val tmp = workDir("graft_compact_q179_")
       val frag = s"$tmp/frag"; val opt = s"$tmp/opt"
       t(s, dir).documents.repartition(64).write.mode("overwrite").parquet(frag)
       val filesBefore = new java.io.File(frag).listFiles()
@@ -3900,7 +3867,8 @@ object SparkEntry {
     //     reduces to k=1024 longs (one combiner-friendly aggregation,
     //     k-element states on the shuffle), then distinct counts AND
     //     Jaccard overlap are driver arithmetic on 2k values. The
-    //     bounds are MEASURED on this deterministic pipeline (KmvProbe:
+    //     bounds are MEASURED on this deterministic pipeline (KmvProbe,
+    //     a probe main deleted after commit 71395f2:
     //     distinct err <= 5.2%, |J_est - J| <= 0.0035 across SFs) and
     //     pinned with margin; exact counts come back as columns the
     //     oracle recomputes from scratch. Merge law (sketch(A ∪ B) ==
@@ -4370,7 +4338,7 @@ object SparkEntry {
     //     write+read path loses nothing. ---
     "q117_seqfile_roundtrip" -> ((s, dir) => {
       import graft.sources.Piggybank
-      val tmp = java.nio.file.Files.createTempDirectory("graft_pb_seq_").toString
+      val tmp = workDir("graft_pb_seq_")
       val path = s"$tmp/nation_seq"
       val kv = t(s, dir).nation.select(
         col("n_nationkey").cast("string").as("k"),
@@ -4388,7 +4356,7 @@ object SparkEntry {
     //     so equality proves parse(format(x)) == x field-for-field. ---
     "q118_log_parse" -> ((s, dir) => {
       import graft.sources.Piggybank
-      val tmp = java.nio.file.Files.createTempDirectory("graft_pb_log_").toString
+      val tmp = workDir("graft_pb_log_")
       val logs = s"$tmp/access_log"
       val o = t(s, dir).orders.filter(col("o_orderkey") < 4000)
       val line = concat(
@@ -4416,7 +4384,7 @@ object SparkEntry {
     //     read back one row per element, fields re-extracted. ---
     "q119_xml_extract" -> ((s, dir) => {
       import graft.sources.Piggybank
-      val tmp = java.nio.file.Files.createTempDirectory("graft_pb_xml_").toString
+      val tmp = workDir("graft_pb_xml_")
       val xml = s"$tmp/parts_xml"
       t(s, dir).part.filter(col("p_partkey") % 3 === 0)
         .select(concat(
@@ -4436,7 +4404,7 @@ object SparkEntry {
     //     plain PigStorage cannot express). ---
     "q120_csv_excel" -> ((s, dir) => {
       import graft.sources.Piggybank
-      val tmp = java.nio.file.Files.createTempDirectory("graft_pb_csv_").toString
+      val tmp = workDir("graft_pb_csv_")
       val csvp = s"$tmp/tricky_csv"
       val n = t(s, dir).nation
       Piggybank.writeCsvExcel(
@@ -4511,7 +4479,7 @@ object SparkEntry {
     //     projection. DuckDB recomputes from the customer source. ---
     "q126_kv_store" -> ((s, dir) => {
       import graft.sources.KeyValueStore
-      val tmp = java.nio.file.Files.createTempDirectory("graft_kv_").toString
+      val tmp = workDir("graft_kv_")
       val kv = s"$tmp/customer_kv"
       KeyValueStore.write(t(s, dir).customer, "c_custkey",
         Seq("c_name", "c_nationkey", "c_acctbal"), kv, nFiles = 8)
@@ -4528,7 +4496,7 @@ object SparkEntry {
     //     recomputes the same aggregates from the source table. ---
     "q163_kv_agg_pushdown" -> ((s, dir) => {
       import graft.sources.KeyValueStore
-      val tmp = java.nio.file.Files.createTempDirectory("graft_kv_agg_").toString
+      val tmp = workDir("graft_kv_agg_")
       val kvp = s"$tmp/customer_kv"
       KeyValueStore.write(t(s, dir).customer, "c_custkey",
         Seq("c_name"), kvp, nFiles = 8)
@@ -4546,7 +4514,7 @@ object SparkEntry {
     //     '-loadKey true') ---
     "q127_pig_hbase" -> ((s, dir) => {
       import graft.sources.KeyValueStore
-      val tmp = java.nio.file.Files.createTempDirectory("graft_kv_pig_").toString
+      val tmp = workDir("graft_kv_pig_")
       val kv = s"$tmp/customer_kv"
       KeyValueStore.write(t(s, dir).customer, "c_custkey",
         Seq("c_name", "c_nationkey", "c_acctbal"), kv, nFiles = 8)
@@ -4564,7 +4532,7 @@ object SparkEntry {
     //     client-side submission boundary is the same) → LOAD. The
     //     job's awk filter is recomputed by DuckDB. ---
     "q128_pig_mapreduce" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_mr_").toString
+      val tmp = workDir("graft_mr_")
       val job = s"$tmp/job.sh"
       java.nio.file.Files.writeString(java.nio.file.Paths.get(job),
         """#!/bin/sh
@@ -4589,8 +4557,7 @@ object SparkEntry {
     //     oracle recomputes the landed table from raw parquet. ---
     "q255_branch_fast_forward" -> ((s, dir) => {
       import graft.operators.VersionedTable
-      val vt = java.nio.file.Files.createTempDirectory("graft_br_q255_")
-        .toString + "/t"
+      val vt = workDir("graft_br_q255_") + "/t"
       val cust = t(s, dir).customer.select(col("c_custkey").as("k"),
         col("c_name").as("name"), col("c_acctbal").as("bal"))
       require(VersionedTable.commit(s, vt, cust, -1L, "loader",
@@ -4655,8 +4622,7 @@ object SparkEntry {
     //     The order-dependence refusal is probed in-entry. ---
     "q258_branch_cherry_pick" -> ((s, dir) => {
       import graft.operators.VersionedTable
-      val vt = java.nio.file.Files.createTempDirectory("graft_cp_q258_")
-        .toString + "/t"
+      val vt = workDir("graft_cp_q258_") + "/t"
       val base = t(s, dir).orders.select(col("o_orderkey").as("k"),
         col("o_orderpriority").as("pr"), col("o_totalprice").as("price"))
       require(VersionedTable.commit(s, vt, base, -1L, "loader",
@@ -4719,8 +4685,7 @@ object SparkEntry {
     //     the oracle hash covers BOTH surfaces. ---
     "q259_ff_reconcile" -> ((s, dir) => {
       import graft.operators.VersionedTable
-      val vt = java.nio.file.Files.createTempDirectory("graft_ffr_q259_")
-        .toString + "/t"
+      val vt = workDir("graft_ffr_q259_") + "/t"
       val cust = t(s, dir).customer.select(col("c_custkey").as("k"),
         col("c_name").as("name"), col("c_acctbal").as("bal"))
       require(VersionedTable.commit(s, vt, cust, -1L, "loader",
@@ -4777,8 +4742,7 @@ object SparkEntry {
     //     on a missing branch, non-numeric version). ---
     "q260_sql_cherry_pick" -> ((s, dir) => {
       import graft.operators.VersionedTable
-      val vt = java.nio.file.Files.createTempDirectory("graft_cp_q260_")
-        .toString + "/t"
+      val vt = workDir("graft_cp_q260_") + "/t"
       val base = t(s, dir).orders.select(col("o_orderkey").as("k"),
         col("o_orderpriority").as("pr"), col("o_totalprice").as("price"))
       require(VersionedTable.commit(s, vt, base, -1L, "loader",
@@ -4822,8 +4786,7 @@ object SparkEntry {
     //     on the other side's since-fork adds before the CAS. ---
     "q261_ff_two_sided" -> ((s, dir) => {
       import graft.operators.VersionedTable
-      val vt = java.nio.file.Files.createTempDirectory("graft_ff2_q261_")
-        .toString + "/t"
+      val vt = workDir("graft_ff2_q261_") + "/t"
       val cust = t(s, dir).customer.select(col("c_custkey").as("k"),
         col("c_name").as("name"), col("c_acctbal").as("bal"))
       require(VersionedTable.commit(s, vt, cust, -1L, "loader",
@@ -4886,8 +4849,7 @@ object SparkEntry {
     //     unlanded, and picking the migration commit itself refuses. ---
     "q262_cherry_pick_additive" -> ((s, dir) => {
       import graft.operators.VersionedTable
-      val vt = java.nio.file.Files.createTempDirectory("graft_cpa_q262_")
-        .toString + "/t"
+      val vt = workDir("graft_cpa_q262_") + "/t"
       val base = t(s, dir).orders.select(col("o_orderkey").as("k"),
         col("o_orderpriority").as("pr"), col("o_totalprice").as("price"))
       require(VersionedTable.commit(s, vt, base, -1L, "loader",
@@ -4932,8 +4894,7 @@ object SparkEntry {
     //     landed prefix and names the resume point). ---
     "q263_sql_cherry_pick_range" -> ((s, dir) => {
       import graft.operators.VersionedTable
-      val vt = java.nio.file.Files.createTempDirectory("graft_cpr_q263_")
-        .toString + "/t"
+      val vt = workDir("graft_cpr_q263_") + "/t"
       val base = t(s, dir).orders.select(col("o_orderkey").as("k"),
         col("o_orderpriority").as("pr"), col("o_totalprice").as("price"))
       require(VersionedTable.commit(s, vt, base, -1L, "loader",
@@ -4991,8 +4952,7 @@ object SparkEntry {
     //     old rows null-filled. ---
     "q264_sql_ff_content_local" -> ((s, dir) => {
       import graft.operators.VersionedTable
-      val vt = java.nio.file.Files.createTempDirectory("graft_ffc_q264_")
-        .toString + "/t"
+      val vt = workDir("graft_ffc_q264_") + "/t"
       val base = t(s, dir).orders.select(col("o_orderkey").as("k"),
         col("o_orderpriority").as("pr"), col("o_totalprice").as("price"))
       require(VersionedTable.commit(s, vt, base, -1L, "loader",
@@ -5031,8 +4991,7 @@ object SparkEntry {
     //     null-filled. ---
     "q265_additive_rebase" -> ((s, dir) => {
       import graft.operators.VersionedTable
-      val vt = java.nio.file.Files.createTempDirectory("graft_arb_q265_")
-        .toString + "/t"
+      val vt = workDir("graft_arb_q265_") + "/t"
       val base = t(s, dir).customer.select(col("c_custkey").as("k"),
         col("c_name").as("name"), col("c_acctbal").as("bal"))
       require(VersionedTable.commit(s, vt, base, -1L, "loader",
@@ -5074,8 +5033,7 @@ object SparkEntry {
     //     live-file gate survives the attestation (probe). ---
     "q266_sql_pick_content_local" -> ((s, dir) => {
       import graft.operators.VersionedTable
-      val vt = java.nio.file.Files.createTempDirectory("graft_pcl_q266_")
-        .toString + "/t"
+      val vt = workDir("graft_pcl_q266_") + "/t"
       val base = t(s, dir).orders.select(col("o_orderkey").as("k"),
         col("o_orderpriority").as("pr"), col("o_totalprice").as("price"))
       require(VersionedTable.commit(s, vt, base, -1L, "loader",
@@ -5122,8 +5080,7 @@ object SparkEntry {
     //     fastForward lands; every branch row exactly once. ---
     "q267_rebase_branch" -> ((s, dir) => {
       import graft.operators.VersionedTable
-      val vt = java.nio.file.Files.createTempDirectory("graft_rbb_q267_")
-        .toString + "/t"
+      val vt = workDir("graft_rbb_q267_") + "/t"
       val base = t(s, dir).customer.select(col("c_custkey").as("k"),
         col("c_name").as("name"), col("c_acctbal").as("bal"))
       require(VersionedTable.commit(s, vt, base, -1L, "loader",
@@ -5163,8 +5120,7 @@ object SparkEntry {
     //     both sides' files read through the landed colmap. ---
     "q268_rename_reconcile" -> ((s, dir) => {
       import graft.operators.VersionedTable
-      val vt = java.nio.file.Files.createTempDirectory("graft_rrc_q268_")
-        .toString + "/t"
+      val vt = workDir("graft_rrc_q268_") + "/t"
       val base = t(s, dir).part.select(col("p_partkey").as("k"),
         col("p_name").as("pname"),
         col("p_retailprice").cast("double").as("price"))
@@ -5202,8 +5158,7 @@ object SparkEntry {
     //     content, never of naming). ---
     "q269_pick_across_rename" -> ((s, dir) => {
       import graft.operators.VersionedTable
-      val vt = java.nio.file.Files.createTempDirectory("graft_par_q269_")
-        .toString + "/t"
+      val vt = workDir("graft_par_q269_") + "/t"
       val base = t(s, dir).customer.select(col("c_custkey").as("k"),
         col("c_name").as("name"), col("c_acctbal").as("bal"))
       require(VersionedTable.commit(s, vt, base, -1L, "loader",
@@ -5247,8 +5202,8 @@ object SparkEntry {
 
   // ---------------- timed stories ----------------
 
-  /** The operator story Bench times for `name`, and the plan PlanFiles,
-    * PlanDump and JobCounts dump. For most queries that is the entry
+  /** The operator story Bench times and profiles for `name`, and the
+    * plan PlanFiles and PlanDump dump. For most queries that is the entry
     * itself. An entry that checks its story (a recall harness, a law
     * probe, `require`s around a stream) calls the story's run half
     * below and adds its check after it; `timed` returns the run half
@@ -5281,9 +5236,6 @@ object SparkEntry {
     "q235_table_change_stream" -> ((s, dir) => tableChangeStream(s, dir)),
     "q253_stream_across_rename" -> ((s, dir) =>
       renameStream(s, dir, workDir("graft_srn_q253_"))))
-
-  private def workDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
 
   /** The recall row of the ANN stories: the number of true
     * (query_id, neighbor_id) pairs, and whether `found` holds at least

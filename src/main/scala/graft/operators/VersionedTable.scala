@@ -369,8 +369,9 @@ object VersionedTable {
   def readManifest(spark: SparkSession, dir: String, v: Long): Manifest = {
     val f = fs(spark, dir)
     val p = manifestPath(dir, v)
-    // session kill-switch (and the A/B lever for the attribution
-    // probe, tools/CacheProbe): graft.manifest.cache=false reads every
+    // session kill-switch (and the A/B lever of the attribution probe
+    // behind docs/SCALE.md's manifest-cache receipt, a main deleted
+    // after commit 71395f2): graft.manifest.cache=false reads every
     // manifest from disk, bypassing the LRU entirely — reads AND the
     // put below, so a probe's OFF leg never warms the ON leg
     val cacheOn = spark.conf.getOption("graft.manifest.cache")

@@ -98,7 +98,7 @@ object CurationStreaming {
     * reference — the SAME native kernels as the batch dedup pipeline
     * (the codegen'd shingle-hash path; the HOF formulation measured
     * 52 s vs ~2 s for 5000 docs — interpreted lambdas again, the
-    * KMeansSoak lesson). */
+    * lesson of the KMeansSoak probe, deleted after commit 71395f2). */
   def bandRows(docs: DataFrame, numHashes: Int, bands: Int): DataFrame = {
     val hashes = graft.plans.TextExpressions.shingleHash64(col("text"), 3)
     val sig = graft.operators.Dedup.minhashSig(hashes, numHashes)

@@ -74,7 +74,6 @@ object EventsStreaming {
       s2.conf.set("spark.sql.streaming.stateStore.rocksdb." +
         "changelogCheckpointing.enabled", "true")
     }
-    ReplayPhases.attach(s2) // no-op unless the bench enabled phase capture
     s2
   }
 

@@ -7,7 +7,8 @@ import org.apache.spark.sql.catalyst.expressions.Expression
   * technique for Spark extension libraries that define native Catalyst
   * expressions: the bytecode is public, only the Scala signature is
   * package-private, so a one-file shim inside the package restores
-  * access without reflection. */
+  * access without reflection. The same holds for the `private[spark]`
+  * listener bus and shutdown-hook manager below. */
 object GraftSqlBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
@@ -19,4 +20,14 @@ object GraftSqlBridge {
   def connectSession(client: org.apache.spark.sql.connect.client.SparkConnectClient)
       : org.apache.spark.sql.connect.SparkSession =
     org.apache.spark.sql.connect.SparkSession.builder().client(client).create()
+
+  /** Block until every listener has been handed every event posted so
+    * far (`SparkContext.listenerBus` is `private[spark]`). */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
+
+  /** Have Spark's own shutdown hook delete `dir`; it runs after the
+    * SparkContext's (`ShutdownHookManager` is `private[spark]`). */
+  def deleteOnShutdown(dir: java.io.File): Unit =
+    org.apache.spark.util.ShutdownHookManager.registerShutdownDeleteDir(dir)
 }

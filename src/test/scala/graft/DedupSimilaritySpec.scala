@@ -1025,13 +1025,14 @@ class DedupSimilaritySpec extends SparkSpec {
     // VERDICT r8 #9: a spec-pinned recall bound on REAL data at the
     // driver's bench SF, so an operator regression (routing, fit, or
     // probe selection) trips a test instead of silently degrading
-    // quality. RecallProbe r9 measured, at sf0.1 (2000 vectors, 20
+    // quality. RecallProbe r9 (a probe main deleted after commit
+    // 71395f2, which still holds it) measured, at sf0.1 (2000 vectors, 20
     // queries = vec_id % 100 == 0), fitted 16 centroids / nProbe 8:
     //   topK=256 -> recall 0.674   (pin >= 0.65)
     //   topK=5   -> recall 0.830   (pin >= 0.80)
     // (A 256-CENTROID config at this corpus size measured 0.36 — an
     // undersized operating point: 8 vectors/cell with 8/256 cells
-    // probed; documented in RecallProbe, deliberately not pinned.)
+    // probed; documented in that probe, deliberately not pinned.)
     // Every stage is deterministic (md5/xxhash sampling, kernel
     // argmax), so the floors hold exactly, not probabilistically.
     val emb = spark.read.parquet("/root/testdata/sf0.1/embeddings.parquet")
