@@ -168,7 +168,7 @@ object Fixtures {
   def annIndex(s: SparkSession, dir: String): String =
     cached(dir, "ann_index", "embeddings") { root =>
       import graft.operators.{AnnIndex, Similarity}
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = graft.core.Tables(s, dir).embeddings
       AnnIndex.save(s, s"$root/idx", emb, "vec_id", "embedding",
         Similarity.kMeansFit(emb, "embedding", k = 16, iters = 3, init = "parallel"),
         Similarity.pqTrain(emb, "embedding", m = 16, nCodes = 256, iters = 3))

@@ -2345,8 +2345,8 @@ object SparkEntry {
     "q229_avro_roundtrip" -> ((s, dir) => {
       val out = workDir("graft_avro_q229_") + "/supplier_avro"
       val src = t(s, dir).supplier
-      src.write.format(graft.Engine.AvroFormat).save(out)
-      val back = s.read.format(graft.Engine.AvroFormat).load(out)
+      src.write.format(graft.pig.PigCompiler.AvroFormat).save(out)
+      val back = s.read.format(graft.pig.PigCompiler.AvroFormat).load(out)
       require(back.schema.fieldNames.sorted.sameElements(
         src.schema.fieldNames.sorted), "q229: avro must keep the schema")
       back.groupBy(col("s_nationkey").cast("int").as("nationkey"))
@@ -4423,7 +4423,7 @@ object SparkEntry {
     //     DuckDB recomputes; pruning is plan-asserted in
     //     SparseIndexSpec. ---
     "q122_sparse_lookup" -> ((s, dir) => {
-      val probe = s.read.parquet(s"$dir/orders.parquet")
+      val probe = t(s, dir).orders
         .filter(col("o_orderkey") % 997 === 0)
         .select(col("o_orderkey"), col("o_orderpriority"))
       graft.operators.SparseIndex
@@ -5258,14 +5258,14 @@ object SparkEntry {
 
   /** q35: MinHash-LSH candidate pairs, verified by exact Jaccard. */
   private def minhashPairs(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Dedup.fuzzyDupPairs(s.read.parquet(s"$dir/documents.parquet"),
+    graft.operators.Dedup.fuzzyDupPairs(t(s, dir).documents,
       "doc_id", "text", shingleN = 3, threshold = 0.8)
 
   /** q122's and q123's footer-indexed side: lineitem's key columns
     * range-partitioned into 8 files, each sorted by l_orderkey. */
   private def sortedLineitem(s: SparkSession, dir: String): String =
     Fixtures.cached(dir, "lineitem_sorted", "lineitem") { root =>
-      s.read.parquet(s"$dir/lineitem.parquet")
+      t(s, dir).lineitem
         .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"))
         .repartitionByRange(8, col("l_orderkey"))
         .sortWithinPartitions("l_orderkey")
@@ -5278,7 +5278,7 @@ object SparkEntry {
     * for training. */
   private def annServe(s: SparkSession, dir: String): DataFrame = {
     val (cents, pq) = Fixtures.annModel(s, dir)
-    val emb = s.read.parquet(s"$dir/embeddings.parquet")
+    val emb = t(s, dir).embeddings
     graft.operators.Similarity.ivfPqTopK(
       emb, emb.filter(col("vec_id") % 100 === 0), "vec_id", "vec_id", "embedding",
       k = 5, centroids = centroidsDf(s, cents), pq = pq, nProbe = 12, refine = 4)
@@ -5288,7 +5288,7 @@ object SparkEntry {
     * load, then probe, ADC and refine). */
   private def annIndexServe(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.AnnIndex
-    val emb = s.read.parquet(s"$dir/embeddings.parquet")
+    val emb = t(s, dir).embeddings
     AnnIndex.topK(AnnIndex.load(s, Fixtures.annIndex(s, dir)),
       emb.filter(col("vec_id") % 100 === 0), "vec_id", "embedding",
       k = 5, nProbe = 12, refine = 4, exactCorpus = Some(emb))
@@ -5300,7 +5300,7 @@ object SparkEntry {
   private def annBaseIndex(s: SparkSession, dir: String): String =
     Fixtures.cached(dir, "annstream", "embeddings") { root =>
       import graft.operators.{AnnIndex, Similarity}
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = t(s, dir).embeddings
       val base = emb.filter(col("vec_id") % 10 =!= 0)
       AnnIndex.save(s, s"$root/idx", base, "vec_id", "embedding",
         Similarity.kMeansFit(base, "embedding", k = 16, iters = 3, init = "parallel"),
@@ -5316,7 +5316,7 @@ object SparkEntry {
   private def annIngestSetup(s: SparkSession, dir: String,
       tmp: String): (String, () => Unit) = {
     val fx = annBaseIndex(s, dir)
-    val emb = s.read.parquet(s"$dir/embeddings.parquet")
+    val emb = t(s, dir).embeddings
     org.apache.commons.io.FileUtils.copyDirectory(
       new java.io.File(s"$fx/idx"), new java.io.File(s"$tmp/idx"))
     val ss = graft.streaming.EventsStreaming.replaySession(s)
@@ -5333,7 +5333,7 @@ object SparkEntry {
     val (delta, ingest) = annIngestSetup(s, dir, tmp)
     Fixtures.linkParquet(delta, s"$tmp/src", "d_")
     ingest()
-    val emb = s.read.parquet(s"$dir/embeddings.parquet")
+    val emb = t(s, dir).embeddings
     annIngestTopK(AnnIndex.load(s, s"$tmp/idx"), emb)
   }
 
@@ -5356,7 +5356,7 @@ object SparkEntry {
   private def nearDupStream(s: SparkSession, dir: String): DataFrame = {
     import graft.streaming.{CurationStreaming, EventsStreaming}
     val fx = Fixtures.cached(dir, "docs_ts", "documents") { root =>
-      s.read.parquet(s"$dir/documents.parquet")
+      t(s, dir).documents
         .select(col("doc_id"), col("text"))
         .withColumn("ts", to_timestamp(lit(1700000000L) + col("doc_id")))
         .coalesce(2).write.mode("append").parquet(s"$root/f")
@@ -5462,7 +5462,7 @@ object SparkEntry {
       cols: Column*): (String, String) = {
     def chunk(even: Boolean): String =
       Fixtures.cached(dir, name + (if (even) "_even" else "_odd"), "documents") { root =>
-        s.read.parquet(s"$dir/documents.parquet").select(cols: _*)
+        t(s, dir).documents.select(cols: _*)
           .filter(if (even) col("doc_id") % 2 === 0 else col("doc_id") % 2 =!= 0)
           .coalesce(1).write.mode("append").parquet(s"$root/f")
       } + "/f"
@@ -5652,7 +5652,7 @@ object SparkEntry {
     * stream. Returns the (source, h) stream and the (source, sketch)
     * rows. */
   private def kmvStory(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val hs = s.read.parquet(s"$dir/documents.parquet")
+    val hs = t(s, dir).documents
       .select(col("source"),
         explode(graft.plans.TextExpressions.shingleHash64(col("text"), 5)).as("h"))
     (hs, graft.operators.Sketches.kmvPerGroup(hs, "source", "h", 1024))
@@ -5663,7 +5663,7 @@ object SparkEntry {
     * eigenvalues. */
   private def pcaStory(s: SparkSession, dir: String) = {
     import graft.operators.Linalg
-    val emb = s.read.parquet(s"$dir/embeddings.parquet")
+    val emb = t(s, dir).embeddings
     val moments @ (n, sums, prods) = Linalg.secondMoments(emb, "embedding", 64)
     val (white, vals) =
       Linalg.pcaWhitenFromMoments(emb, "vec_id", "embedding", n, sums, prods, 16)
@@ -5675,7 +5675,7 @@ object SparkEntry {
     * re-keyed as new). Returns (base, target, diff). */
   private def snapshotDiffStory(s: SparkSession,
       dir: String): (DataFrame, DataFrame, DataFrame) = {
-    val cust = s.read.parquet(s"$dir/customer.parquet")
+    val cust = t(s, dir).customer
       .select(col("c_custkey").as("k"), col("c_name").as("name"),
         col("c_acctbal").as("bal"))
     val target = cust.filter(col("k") % 17 =!= 0)
@@ -5693,13 +5693,13 @@ object SparkEntry {
     * the word vocab and the pruning receipt. */
   private def bpeTrainFast(s: SparkSession, dir: String) =
     graft.operators.TextAnalysis.bpeTrainIncremental(
-      s.read.parquet(s"$dir/documents.parquet"), "text", nMerges = 256)
+      t(s, dir).documents, "text", nMerges = 256)
 
   /** q194: the documents packed into opaque blobs, and one batched
     * embed pass over them (batches of 32, dim 6). */
   private def batchEmbedStory(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     import graft.operators.Multimodal
-    val docs = s.read.parquet(s"$dir/documents.parquet")
+    val docs = t(s, dir).documents
       .filter(col("text").isNotNull).select(col("doc_id"), col("text"))
     val packed = Multimodal.packMedia(docs, "text", "text/plain")
       .select(col("doc_id"), col("blob"))
@@ -5713,11 +5713,11 @@ object SparkEntry {
     import graft.operators.TextAnalysis
     val model = Fixtures.cached(dir, "bpe_model", "documents") { root =>
       val (m, _, _) = TextAnalysis.bpeTrainIncremental(
-        s.read.parquet(s"$dir/documents.parquet"), "text", nMerges = 64)
+        t(s, dir).documents, "text", nMerges = 64)
       TextAnalysis.saveBpe(s, s"$root/bpe", m)
     } + "/bpe"
     val merges = TextAnalysis.loadBpe(s, model)
-    val docs = s.read.parquet(s"$dir/documents.parquet")
+    val docs = t(s, dir).documents
     (merges, docs,
       docs.select(col("doc_id"), TextAnalysis.bpeEncode(col("text"), merges).as("p")))
   }

@@ -66,8 +66,7 @@ object Layout {
     * positions 0,3,6,…, b one left, c two left. Same out-of-range
     * refusal as [[zValue2]]: masking would silently co-locate far
     * rows. 21 bits per dimension is Delta's practical arity-3 budget;
-    * wider keys go through [[zorderWriteNormalized]]-style ranking
-    * first. */
+    * wider keys go through [[withRankZKey]]'s ranking first. */
   def zValue3(a: Column, b: Column, c: Column): Column = {
     val lim = lit(2097152L) // 2^21
     def checked(x: Column, name: String): Column =
@@ -79,65 +78,62 @@ object Layout {
       .bitwiseOR(shiftleft(spread3(checked(c, "c")), 2))
   }
 
-  /** 3-column [[zorderWrite]]: one repartitionByRange on the zValue3
+  /** 3-column z-order write: one repartitionByRange on the zValue3
     * key + in-partition sort — every file becomes a small BOX in
     * (a, b, c) space, so a selective predicate on ANY of the three
     * dimensions skips files (receipt measured in LayoutSpec). */
   def zorderWrite3(df: DataFrame, a: String, b: String, c: String,
-      outDir: String, nFiles: Int = 8): Unit = {
-    val keyed = df.withColumn("__z", zValue3(col(a), col(b), col(c)))
-    keyed.repartitionByRange(nFiles, col("__z"))
-      .sortWithinPartitions("__z")
-      .drop("__z")
-      .write.mode("overwrite").parquet(outDir)
-  }
-
-  /** Rewrite `df` into `nFiles` z-clustered parquet files: range-
-    * partition on the interleaved key (sampling gives equal-sized
-    * files), sort within each partition so row groups are rectangles
-    * too. ONE shuffle, then a scan-shaped write. */
-  def zorderWrite(df: DataFrame, a: String, b: String, outDir: String,
-      nFiles: Int = 8): Unit = {
-    val keyed = df.withColumn("__z", zValue2(col(a), col(b)))
-    keyed.repartitionByRange(nFiles, col("__z"))
-      .sortWithinPartitions("__z")
-      .drop("__z")
-      .write.mode("overwrite").parquet(outDir)
-  }
+      outDir: String, nFiles: Int = 8): Unit =
+    writeZOrdered(df.withColumn("__z", zValue3(col(a), col(b), col(c))),
+      outDir, nFiles)
 
   /** Rank-normalized z-order write — the range-based variant behind
     * Delta's OPTIMIZE ZORDER, REQUIRED when the two dimensions span
     * different ranges: raw interleave lets the wider dimension's high
     * bits dominate the key prefix and the narrow dimension never gets
-    * to split files. Each dimension is first mapped to its
-    * equal-frequency bucket id ((denseRank-1) * 2^bits div nDistinct,
-    * via the scalable two-pass [[Relational.rankBy]] — no
-    * single-partition window), then the BUCKET ids interleave.
-    * Cost: per dim, a distinct + rank of the distinct VALUES (far
-    * smaller than the data) and one map-side join back; then the same
-    * single repartitionByRange as [[zorderWrite]]. */
+    * to split files. Keyed by [[withRankZKey]]; ONE range shuffle on
+    * the key, then a scan-shaped write. */
   def zorderWriteNormalized(df: DataFrame, a: String, b: String,
-      outDir: String, nFiles: Int = 8, bits: Int = 16): Unit = {
-    require(bits >= 1 && bits <= 32, "bits in [1,32]")
-    def bucketMap(c: String, out: String): (DataFrame, Long) = {
-      val distinctVals = df.select(col(c).as("v")).na.drop().distinct()
-      val ranked = Relational.rankBy(distinctVals, Seq("v"))
-        .select(col("v").as(c), (col("dense_rank") - 1).as(s"__r$out"))
-      (ranked, ranked.count())
-    }
-    val (ra, na) = bucketMap(a, "a")
-    val (rb, nb) = bucketMap(b, "b")
-    val scale = 1L << bits
-    // LEFT joins: a null key has no rank row; it buckets to 0 rather
-    // than silently dropping the row from the rewritten table
-    val keyed = df.join(ra, Seq(a), "left").join(rb, Seq(b), "left")
-      .withColumn("__z", zValue2(
-        coalesce(expr(s"(__ra * ${scale}L) div ${na}L"), lit(0L)),
-        coalesce(expr(s"(__rb * ${scale}L) div ${nb}L"), lit(0L))))
+      outDir: String, nFiles: Int = 8, bits: Int = 16): Unit =
+    writeZOrdered(withRankZKey(df, Seq(a, b), bits), outDir, nFiles)
+
+  /** Range-partition on `__z` (sampling gives equal-sized files), sort
+    * within each partition so row groups are boxes too, drop the key
+    * and write `nFiles` parquet files. */
+  private def writeZOrdered(keyed: DataFrame, outDir: String,
+      nFiles: Int): Unit =
     keyed.repartitionByRange(nFiles, col("__z"))
       .sortWithinPartitions("__z")
-      .drop("__z", "__ra", "__rb")
+      .drop("__z")
       .write.mode("overwrite").parquet(outDir)
+
+  /** `df` plus a rank-normalized Morton key `__z` over 2 or 3 columns:
+    * each dimension maps to its equal-frequency bucket id
+    * ((denseRank-1) * 2^bits div nDistinct, via the scalable two-pass
+    * [[Relational.rankBy]] over the distinct VALUES — never a
+    * single-partition window; the rank table is far smaller than the
+    * data), left-joined back, then the bucket ids interleave. NULLs
+    * bucket to 0 rather than dropping rows. The joins move the key
+    * columns to the front of the schema. */
+  private[operators] def withRankZKey(df: DataFrame, cols: Seq[String],
+      bits: Int = 16): DataFrame = {
+    require(cols.length == 2 || cols.length == 3,
+      s"zorder clustering needs 2 or 3 columns, got ${cols.length}")
+    require(bits >= 1 && bits <= 32, "bits in [1,32]")
+    val scale = 1L << bits
+    var out = df
+    val bucketCols = cols.zipWithIndex.map { case (c, i) =>
+      val ranked = Relational.rankBy(
+          df.select(col(c).as("v")).na.drop().distinct(), Seq("v"))
+        .select(col("v").as(c), (col("dense_rank") - 1).as(s"__r$i"))
+      val n = math.max(1L, ranked.count())
+      out = out.join(ranked, Seq(c), "left")
+      coalesce(expr(s"(__r$i * ${scale}L) div ${n}L"), lit(0L))
+    }
+    val z =
+      if (cols.length == 2) zValue2(bucketCols(0), bucketCols(1))
+      else zValue3(bucketCols(0), bucketCols(1), bucketCols(2))
+    out.withColumn("__z", z).drop(cols.indices.map(i => s"__r$i"): _*)
   }
 
   /** OPTIMIZE-style small-file compaction — the bin-packing rewrite

@@ -97,7 +97,6 @@ object VersionedTable {
       stagingDir: Option[String],
       files: Seq[String],
       removed: Seq[String],
-      legacyDataDir: Option[String],
       stats: Map[String, Map[String, (String, String)]] = Map.empty,
       meta: Map[String, String] = Map.empty,
       dv: Map[String, (String, Long)] = Map.empty,
@@ -213,7 +212,6 @@ object VersionedTable {
   //     mtime on child create (object stores with synthesized
   //     directory statuses report mtime 0, which the `mt > 0` guard
   //     excludes from caching entirely) surfaces a new commit.
-  // Kill-switch: graft.listing.cache=false (reads and puts).
   //
   // Eviction is WEIGHTED by listing length (round 17, VERDICT r16 #4
   // — the manifest LRU's discipline at [[manifestCache]]): each entry
@@ -270,18 +268,14 @@ object VersionedTable {
     val key = logDir(dir)
     val p = new org.apache.hadoop.fs.Path(key)
     val f = fs(spark, dir)
-    val cacheOn = spark.conf.getOption("graft.listing.cache")
-      .forall(_ != "false")
     val st =
       try f.getFileStatus(p)
       catch { case _: java.io.FileNotFoundException => return Seq.empty }
-    if (cacheOn) {
-      listingCache.get(key).foreach {
-        case (mt, vs) =>
-          if (mt == st.getModificationTime &&
-              !f.exists(manifestPath(dir, vs.lastOption.getOrElse(-1L) + 1)))
-            return vs
-      }
+    listingCache.get(key).foreach {
+      case (mt, vs) =>
+        if (mt == st.getModificationTime &&
+            !f.exists(manifestPath(dir, vs.lastOption.getOrElse(-1L) + 1)))
+          return vs
     }
     val listed = f.listStatus(p).toSeq
       .map(_.getPath.getName)
@@ -289,8 +283,7 @@ object VersionedTable {
       .map(_.stripSuffix(".manifest").toLong)
       .sorted
     val mt = st.getModificationTime
-    if (cacheOn && mt > 0 &&
-        mt + cacheGraceMs(spark) <= System.currentTimeMillis())
+    if (mt > 0 && mt + cacheGraceMs(spark) <= System.currentTimeMillis())
       listingCache.put(key, (mt, listed))
     listed
   }
@@ -369,23 +362,15 @@ object VersionedTable {
   def readManifest(spark: SparkSession, dir: String, v: Long): Manifest = {
     val f = fs(spark, dir)
     val p = manifestPath(dir, v)
-    // session kill-switch (and the A/B lever of the attribution probe
-    // behind docs/SCALE.md's manifest-cache receipt, a main deleted
-    // after commit 71395f2): graft.manifest.cache=false reads every
-    // manifest from disk, bypassing the LRU entirely — reads AND the
-    // put below, so a probe's OFF leg never warms the ON leg
-    val cacheOn = spark.conf.getOption("graft.manifest.cache")
-      .forall(_ != "false")
     val st = f.getFileStatus(p) // throws FileNotFoundException like open
     val key = p.toString
-    if (cacheOn)
-      manifestCache.get(key).foreach {
-        case (mt, len, m) =>
-          // (mtime, length) suffices: the put below only caches parses
-          // taken safely past the mtime tick, so a matching mtime
-          // proves no mutation since the cached parse
-          if (mt == st.getModificationTime && len == st.getLen) return m
-      }
+    manifestCache.get(key).foreach {
+      case (mt, len, m) =>
+        // (mtime, length) suffices: the put below only caches parses
+        // taken safely past the mtime tick, so a matching mtime
+        // proves no mutation since the cached parse
+        if (mt == st.getModificationTime && len == st.getLen) return m
+    }
     val in = f.open(p)
     val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
     finally in.close()
@@ -395,6 +380,13 @@ object VersionedTable {
       }.toSeq
     def one(k: String) = kvs.collectFirst { case (`k`, x) => x }
     def all(k: String) = kvs.collect { case (`k`, x) => x }
+    // the pre-file-granular format named one whole data dir (`data=`)
+    // instead of `datadir=` + `file=` lines; reading it as file-granular
+    // would silently serve an empty table
+    if (one("data").isDefined)
+      throw new IllegalStateException(
+        s"version $v of $dir: whole-dir manifest format is no longer " +
+          "read; recommit the table")
     val parsed = Manifest(
       version = one("version").map(_.toLong).getOrElse(v),
       parent = one("parent").map(_.toLong).getOrElse(v - 1),
@@ -407,7 +399,6 @@ object VersionedTable {
       stagingDir = one("datadir"),
       files = all("file"),
       removed = all("removed"),
-      legacyDataDir = one("data"),
       stats = all("stats").flatMap { line =>
         line.split('\t') match {
           case Array(rel, c, mn, mx) => Some((rel, c, mn, mx))
@@ -435,8 +426,7 @@ object VersionedTable {
           case _             => None
         }
       }.toMap)
-    if (cacheOn &&
-        st.getModificationTime + cacheGraceMs(spark) <=
+    if (st.getModificationTime + cacheGraceMs(spark) <=
           System.currentTimeMillis())
       manifestCache.put(key, (st.getModificationTime, st.getLen, parsed))
     parsed
@@ -502,15 +492,9 @@ object VersionedTable {
       .map(s => s"$rel/${s.getPath.getName}").sorted
   }
 
-  /** A committed version's live file set (dir-relative). Legacy
-    * whole-dir manifests resolve by listing their data dir. */
-  def liveFiles(spark: SparkSession, dir: String, v: Long): Seq[String] = {
-    val m = readManifest(spark, dir, v)
-    m.legacyDataDir match {
-      case Some(rel) => listDataFiles(spark, dir, rel)
-      case None      => m.files
-    }
-  }
+  /** A committed version's live file set (dir-relative). */
+  def liveFiles(spark: SparkSession, dir: String, v: Long): Seq[String] =
+    readManifest(spark, dir, v).files
 
   /** The table at a specific committed version (time travel). An
     * all-rows-deleted version (zero live files) reads as an empty
@@ -518,23 +502,19 @@ object VersionedTable {
     * applied — a DV-deleted row is invisible to every read path. */
   def readVersion(spark: SparkSession, dir: String, v: Long): DataFrame = {
     val m = readManifest(spark, dir, v)
-    m.legacyDataDir match {
-      case Some(rel) => spark.read.parquet(s"${rootOf(dir)}/$rel")
-      case None =>
-        (m.files, m.schema) match {
-          case (Nil, Some(sch)) =>
-            spark.createDataFrame(spark.sparkContext
-              .emptyRDD[org.apache.spark.sql.Row], sch)
-          case (Nil, None) =>
-            throw new IllegalStateException(
-              s"version $v of $dir has no files and no schema receipt")
-          case (rels, sch) =>
-            // pin the manifest schema so a version reads identically
-            // even if parquet-footer inference would widen/reorder
-            readFilesMasked(spark, dir, m, rels,
-              sch.getOrElse(spark.read.parquet(
-                rels.map(r => s"${rootOf(dir)}/$r"): _*).schema))
-        }
+    (m.files, m.schema) match {
+      case (Nil, Some(sch)) =>
+        spark.createDataFrame(spark.sparkContext
+          .emptyRDD[org.apache.spark.sql.Row], sch)
+      case (Nil, None) =>
+        throw new IllegalStateException(
+          s"version $v of $dir has no files and no schema receipt")
+      case (rels, sch) =>
+        // pin the manifest schema so a version reads identically
+        // even if parquet-footer inference would widen/reorder
+        readFilesMasked(spark, dir, m, rels,
+          sch.getOrElse(spark.read.parquet(
+            rels.map(r => s"${rootOf(dir)}/$r"): _*).schema))
     }
   }
 
@@ -640,7 +620,7 @@ object VersionedTable {
     * where a caller points [[Layout.fileEnvelopes]] at. */
   def dataDir(spark: SparkSession, dir: String, v: Long): String = {
     val m = readManifest(spark, dir, v)
-    val rel = m.stagingDir.orElse(m.legacyDataDir).getOrElse(
+    val rel = m.stagingDir.getOrElse(
       throw new IllegalStateException(s"version $v of $dir staged no files"))
     s"${rootOf(dir)}/$rel"
   }
@@ -1380,31 +1360,6 @@ object VersionedTable {
   def clusterModeOf(spark: SparkSession, dir: String, v: Long): String =
     readManifest(spark, dir, v).meta.getOrElse(ClusterModeKey, "range")
 
-  /** Rank-normalized z-key: each dimension maps to its equal-frequency
-    * bucket id via a distinct+rank of the VALUES (scalable — never a
-    * single-partition window; the rank table is far smaller than the
-    * data), then the bucket ids Morton-interleave. NULLs bucket to 0
-    * rather than dropping rows. */
-  private def withZKey(df: DataFrame, cols: Seq[String],
-      bits: Int = 16): DataFrame = {
-    require(cols.length == 2 || cols.length == 3,
-      s"zorder clustering needs 2 or 3 columns, got ${cols.length}")
-    val scale = 1L << bits
-    var out = df
-    val bucketCols = cols.zipWithIndex.map { case (c, i) =>
-      val ranked = Relational.rankBy(
-          df.select(col(c).as("v")).na.drop().distinct(), Seq("v"))
-        .select(col("v").as(c), (col("dense_rank") - 1).as(s"__r$i"))
-      val n = math.max(1L, ranked.count())
-      out = out.join(ranked, Seq(c), "left")
-      coalesce(expr(s"(__r$i * ${scale}L) div ${n}L"), lit(0L))
-    }
-    val z =
-      if (cols.length == 2) Layout.zValue2(bucketCols(0), bucketCols(1))
-      else Layout.zValue3(bucketCols(0), bucketCols(1), bucketCols(2))
-    out.withColumn("__z", z).drop(cols.indices.map(i => s"__r$i"): _*)
-  }
-
   /** Reshape `df` into the table's declared clustering: range =
     * repartitionByRange + sort on the columns; zorder = the same on
     * the rank-normalized Morton key. nParts <= 0 lets AQE size the
@@ -1418,7 +1373,7 @@ object VersionedTable {
          else df.repartitionByRange(cols.map(col): _*))
           .sortWithinPartitions(cols.map(col): _*)
       case "zorder" =>
-        val keyed = withZKey(df, cols)
+        val keyed = Layout.withRankZKey(df, cols)
         (if (nParts > 0) keyed.repartitionByRange(nParts, col("__z"))
          else keyed.repartitionByRange(col("__z")))
           .sortWithinPartitions("__z").drop("__z")
@@ -1863,8 +1818,6 @@ object VersionedTable {
       // winner's diff is computed against the true predecessor.
       if (skipWinner(cur)) { prev = cur; w += 1 }
       else {
-      if (prev.legacyDataDir.nonEmpty || cur.legacyDataDir.nonEmpty)
-        return Some(s"version $w range includes legacy whole-dir commits")
       // allowAdditiveSchema (round 16, fastForward reconciliation):
       // the caller has already verified the OVERALL change is a pure
       // nullable-append and takes the extended schema — a winner that
@@ -2301,11 +2254,8 @@ object VersionedTable {
     }
     val evolved = org.apache.spark.sql.types.StructType(
       prev.fields ++ newCols)
-    // the parent's live set resolves legacy whole-dir manifests to
-    // file granularity here, so the evolved manifest is always in the
-    // modern shape regardless of the table's age
     land(spark, dir, s"addColumns on $dir", expectedVersion, writerId,
-      evolved, liveFiles(spark, dir, expectedVersion), stats = m.stats,
+      evolved, m.files, stats = m.stats,
       dv = m.dv,
       meta = expectMeta(spark, dir, expectedVersion, Map.empty, Map.empty),
       colmap = m.colmap)
@@ -2429,9 +2379,6 @@ object VersionedTable {
     val newV = expectedVersion + 1
     requireNotStale(spark, dir, expectedVersion)
     val m = readManifest(spark, dir, expectedVersion)
-    require(m.legacyDataDir.isEmpty,
-      s"renameColumns: $dir version $expectedVersion is a legacy " +
-        "whole-dir commit — recommit file-granular first")
     val prev = schemaOf(spark, dir, expectedVersion)
     val prevNames = prev.fieldNames.toSet
     renames.foreach { case (from, to) =>
@@ -2531,9 +2478,6 @@ object VersionedTable {
     val newV = expectedVersion + 1
     requireNotStale(spark, dir, expectedVersion)
     val m = readManifest(spark, dir, expectedVersion)
-    require(m.legacyDataDir.isEmpty,
-      s"dropColumns: $dir version $expectedVersion is a legacy " +
-        "whole-dir commit — recommit file-granular first")
     val prev = schemaOf(spark, dir, expectedVersion)
     val prevNames = prev.fieldNames.toSet
     cols.foreach(c => require(prevNames.contains(c),
@@ -3040,8 +2984,6 @@ object VersionedTable {
     var w = fromV + 1
     while (w <= tipV) {
       val cur = readManifest(spark, dir, w)
-      if (prev.legacyDataDir.nonEmpty || cur.legacyDataDir.nonEmpty)
-        return false
       if (prev.schema.map(schemaShape) != cur.schema.map(schemaShape))
         return false
       if (declsOf(prev, tombstones = false) !=
@@ -3270,9 +3212,6 @@ object VersionedTable {
       "deleteWhere needs an existing version — nothing to delete from")
     val parent = planVersion(spark, dir, expectedVersion, rebaseAttempts)
     val m = readManifest(spark, dir, parent)
-    require(m.legacyDataDir.isEmpty,
-      s"deleteWhere: $dir version $parent is a legacy whole-dir " +
-        "commit — recommit file-granular first")
     val live = liveFiles(spark, dir, parent)
     val schema = schemaOf(spark, dir, parent)
     // candidate pruning: per-disjunct union ([[impliedAlternatives]] —
@@ -3866,8 +3805,6 @@ object VersionedTable {
     val retainedFiles =
       retained.flatMap(liveFiles(spark, dir, _)).toSet ++ branchFiles
     val victimFiles = victims.flatMap(liveFiles(spark, dir, _)).distinct
-    val victimLegacyDirs = victims.flatMap(v =>
-      readManifest(spark, dir, v).legacyDataDir)
     // deletion-vector dirs follow the same reference discipline: a dv
     // dir dies with the last version whose manifest points at it
     val retainedDvDirs = retained.flatMap(v =>
@@ -3886,13 +3823,8 @@ object VersionedTable {
     // the same contract as a lagging cursor without a shield
     victims.foreach(v =>
       f.delete(new org.apache.hadoop.fs.Path(s"${rootOf(dir)}/${feedDirRel(v)}"), true))
-    // legacy whole-dir versions: the dir goes when nothing retained
-    // points into it; file-granular staging dirs are left for vacuum
-    // once empty (cheap, and never racing a concurrent reader)
-    victimLegacyDirs.distinct.foreach { rel =>
-      if (!retainedFiles.exists(_.startsWith(rel + "/")))
-        f.delete(new org.apache.hadoop.fs.Path(s"${rootOf(dir)}/$rel"), true)
-    }
+    // staging dirs are left for vacuum once empty (cheap, and never
+    // racing a concurrent reader)
     victims
   }
 
@@ -4113,8 +4045,8 @@ object VersionedTable {
   }
 
   /** Sweep orphan staging dirs (crashed or superseded writers): any
-    * `data/v*` dir that (a) no manifest references (neither as a file
-    * container nor a legacy data dir), (b) belongs to a version
+    * `data/v*` dir that (a) no manifest references as a file
+    * container, (b) belongs to a version
     * number <= the latest committed one — a dir named for a FUTURE
     * version is a concurrent writer's in-flight staging, and deleting
     * it would let that writer commit a manifest pointing at vanished
@@ -4132,7 +4064,7 @@ object VersionedTable {
     val (branchFiles, branchDvDirs) = branchReferenced(spark, dir)
     val referencedDirs: Set[String] = vs.flatMap { v =>
       val m = readManifest(spark, dir, v)
-      m.legacyDataDir.toSeq ++ m.stagingDir.toSeq ++
+      m.stagingDir.toSeq ++
         m.dv.valuesIterator.map(_._1).toSeq ++
         liveFiles(spark, dir, v).map(rel =>
           rel.substring(0, rel.lastIndexOf('/')))
@@ -4453,8 +4385,6 @@ object VersionedTable {
         "must be retained on the branch")
     val prevM = readManifest(spark, ref, branchVersion - 1)
     val vM = readManifest(spark, ref, branchVersion)
-    require(prevM.legacyDataDir.isEmpty && vM.legacyDataDir.isEmpty,
-      "cherryPick: legacy whole-dir commits cannot land")
     require(prevM.schema.map(schemaShape) == vM.schema.map(schemaShape) &&
         prevM.colmap == vM.colmap,
       s"cherryPick '$name': v$branchVersion changed the schema/mapping " +
@@ -4671,9 +4601,6 @@ object VersionedTable {
     val f = fs(spark, dir)
     val baseM = readManifest(spark, ref, base)
     val tipM = readManifest(spark, ref, tip)
-    require(baseM.legacyDataDir.isEmpty && tipM.legacyDataDir.isEmpty,
-      s"fastForward: legacy whole-dir commits cannot merge — recommit " +
-        "file-granular first")
     val baseLive = baseM.files
     val baseSet = baseLive.toSet
     val tipLive = tipM.files
@@ -5135,8 +5062,6 @@ object VersionedTable {
     val mT = readManifest(spark, dir, mainTip)
     val m0 = readManifest(spark, dir, mainBase)
     val baseM = readManifest(spark, ref, base)
-    require(mT.legacyDataDir.isEmpty && baseM.legacyDataDir.isEmpty,
-      s"rebaseBranch '$name': legacy whole-dir commits cannot rebase")
     val lc = (s: String) => s.toLowerCase(java.util.Locale.ROOT)
     val tS = mT.schema.getOrElse(throw new IllegalStateException(
       s"rebaseBranch '$name': no schema receipt on mainline $dir"))
@@ -5195,8 +5120,6 @@ object VersionedTable {
       else s"commits ${base + 1}..${v - 1} are"
     for (v <- base + 1 to tip) {
       val bm = readManifest(spark, ref, v)
-      require(bm.legacyDataDir.isEmpty,
-        s"rebaseBranch '$name': branch version $v is a legacy commit")
       if (prevB.colmap != bm.colmap)
         throw new CommitConflict(
           s"rebaseBranch '$name' onto $dir: branch version $v renamed " +

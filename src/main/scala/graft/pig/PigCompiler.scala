@@ -788,6 +788,12 @@ object PigCompiler {
     VStoreDecl(cluster, mode, files, feed, expects.toMap)
   }
 
+  /** AvroStorage (SURVEY §2.1): the Avro reader/writer is compiled into
+    * spark-sql itself; deployments without the separate spark-avro
+    * module lack only the service registration that resolves the bare
+    * name "avro" — this explicit provider class is the same format. */
+  val AvroFormat = "org.apache.spark.sql.avro.AvroFileFormat"
+
   private def storageFormat(spec: Option[(String, Seq[String])]): (String, Map[String, String]) =
     spec match {
       case None => ("parquet", Map.empty) // engine-native interchange
@@ -807,7 +813,7 @@ object PigCompiler {
         case "jsonloader" | "jsonstorage" | "json" => ("json", Map.empty)
         case "orcstorage" | "orc" => ("orc", Map.empty)
         case "textloader" | "text" => ("text", Map.empty)
-        case "avrostorage" | "avro" => (graft.Engine.AvroFormat, Map.empty)
+        case "avrostorage" | "avro" => (AvroFormat, Map.empty)
         case other => (other, Map.empty) // raw Spark format passthrough
       }
     }

@@ -4,6 +4,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.core.GraftSession
 import graft.functions.PigFunctions
+import graft.operators.{Dedup, Similarity, TextAnalysis, TrainingPipeline}
 
 class EngineSpec extends SparkSpec {
   import spark.implicits._
@@ -23,16 +24,25 @@ class EngineSpec extends SparkSpec {
   }
 
   test("multiStore writes all sinks from one persisted scan") {
+    // a Pig script with three STOREs over one LOAD: the shared-scan
+    // multi-STORE path (PigCompiler.sharedScanAliases) persists `E`
+    // once and serves all three sinks from it
     val tmp = Files.createTempDirectory("multistore").toString
-    Engine.multiStore(tables.events,
-      (df => df.filter($"event_type" === "click"), s"$tmp/clicks"),
-      (df => df.filter($"event_type" === "error"), s"$tmp/errors"),
-      (df => df.groupBy($"event_type").count(), s"$tmp/counts"))
+    graft.pig.PigScript.run(spark,
+      s"""E = LOAD '$sf/events.parquet' USING parquet;
+          CLICKS = FILTER E BY event_type == 'click';
+          ERRORS = FILTER E BY event_type == 'error';
+          G = GROUP E BY event_type;
+          COUNTS = FOREACH G GENERATE group AS event_type, COUNT(E) AS n;
+          STORE CLICKS INTO '$tmp/clicks' USING parquet;
+          STORE ERRORS INTO '$tmp/errors' USING parquet;
+          STORE COUNTS INTO '$tmp/counts' USING parquet;""",
+      executeStores = true)
     val clicks = spark.read.parquet(s"$tmp/clicks").count()
     val errors = spark.read.parquet(s"$tmp/errors").count()
     val counts = spark.read.parquet(s"$tmp/counts")
     assert(clicks > 0 && errors > 0)
-    assert(counts.filter($"event_type" === "click").select($"count")
+    assert(counts.filter($"event_type" === "click").select($"n")
       .as[Long].head() == clicks)
   }
 
@@ -65,63 +75,63 @@ class EngineSpec extends SparkSpec {
     assert(keysOrdered)
   }
 
-  test("Engine facade round-6 surface: every delegation produces sane output") {
+  test("round-6 operator surface: every operator produces sane output") {
     val docs = tables.documents.limit(200)
     val embs = tables.embeddings.limit(200)
-    assert(Engine.repetitionSignals(docs, "text")
+    assert(docs.withColumn("repetition", TextAnalysis.repetitionFeatures($"text", 2))
       .select($"repetition.n_ngrams").as[Long].head() >= 0)
-    assert(Engine.classifierScore(docs, "text")
+    assert(docs.withColumn("cls", TextAnalysis.hashClassifierScore($"text"))
       .select($"cls.score_ppm").as[Long].collect().forall(p => p >= 0 && p <= 1000000))
-    assert(Engine.crossDocRepeats(docs, "doc_id", "text").count() == 200)
-    assert(Engine.bpePairCounts(docs, "text", topK = 5).count() == 5)
-    val idx = Engine.invertedIndex(docs, "doc_id", "text", k = 3)
+    assert(TextAnalysis.crossDocRepeats(docs, "doc_id", "text").count() == 200)
+    assert(TextAnalysis.bpePairCounts(docs, "text", topK = 5).count() == 5)
+    val idx = TextAnalysis.invertedIndex(docs, "doc_id", "text", k = 3)
     assert(idx.count() > 0 &&
       idx.select(size(split($"postings", ",")) <= 3).as[Boolean].collect().forall(identity))
-    assert(Engine.dedupSemantic(embs, "vec_id", "embedding", k = 4).count() == 200)
-    assert(Engine.quantizeEmbeddings(embs, "embedding")
+    assert(Similarity.semDedup(embs, "vec_id", "embedding", k = 4).count() == 200)
+    assert(embs.withColumn("q8", Similarity.quantizeInt8($"embedding"))
       .select($"q8.codes").count() == 200)
   }
 
-  test("Engine facade round-7 surface: every delegation produces sane output") {
+  test("round-7 operator surface: every operator produces sane output") {
     val docs = tables.documents.limit(100)
     val embs = tables.embeddings.limit(100)
-    assert(Engine.dedupSemanticLsh(embs, "vec_id", "embedding", k = 4).count() == 100)
-    val cents = Engine.fitCentroids(embs, "embedding", k = 4, iters = 2)
+    assert(Similarity.semDedupLsh(embs, "vec_id", "embedding", k = 4).count() == 100)
+    val cents = Similarity.kMeansFit(embs, "embedding", k = 4, iters = 2)
     assert(cents.count() == 4)
-    val asg = Engine.assignClusters(embs, "vec_id", "embedding", cents)
+    val asg = Similarity.assignByCentroidTable(embs, "vec_id", "embedding", cents)
     assert(asg.select($"cluster").distinct().count() <= 4 && asg.count() == 100)
-    // `>= 0` would be vacuous (the hotNgrams lesson): pin the facade
-    // to the operator it delegates to instead
-    assert(Engine.verbatimSpans(docs, "doc_id", "text", minLen = 8).count() ==
-      graft.operators.Dedup.verbatimSpans(docs, "doc_id", "text", minLen = 8).count())
-    val (merges, vocab) = Engine.bpeTrain(docs, "text", nMerges = 3)
+    // every span pairs two distinct docs in id order and covers at
+    // least one whole minLen window (`count() >= 0` would be vacuous)
+    val spans = Dedup.verbatimSpans(docs, "doc_id", "text", minLen = 8)
+    assert(spans.filter($"id1" >= $"id2" || $"len_tokens" < 8).isEmpty)
+    val (merges, vocab, _) = TextAnalysis.bpeTrainIncremental(docs, "text", nMerges = 3)
     assert(merges.length == 3 && vocab.count() > 0)
   }
 
-  test("Engine facade round-8 surface: every delegation produces sane output") {
+  test("round-8 operator surface: every operator produces sane output") {
     val docs = tables.documents.limit(100)
-    assert(Engine.removeVerbatimSpans(docs, "doc_id", "text", minLen = 8)
+    assert(Dedup.removeVerbatimSpans(docs, "doc_id", "text", minLen = 8)
       .count() == 100)
-    val (merges, _) = Engine.bpeTrain(docs, "text", nMerges = 3)
-    val enc = Engine.bpeEncode(docs, "text", merges)
+    val (merges, _, _) = TextAnalysis.bpeTrainIncremental(docs, "text", nMerges = 3)
+    val enc = docs.withColumn("bpe", TextAnalysis.bpeEncode($"text", merges))
     assert(enc.filter(size($"bpe") > 0).count() == 100)
-    assert(Engine.heavyHitters(docs, "text", minCount = 50L, capacity = 1024)
+    assert(TextAnalysis.heavyHitters(docs, "text", minCount = 50L, capacity = 1024)
       .count() > 0)
-    val tb = Engine.tokenBudgetSample(docs, "lang", "doc_id", "text",
+    val tb = TrainingPipeline.tokenBudgetSample(docs, "lang", "doc_id", "text",
       Map("en" -> 200L), defaultBudget = 100L)
     assert(tb.count() > 0)
     val embs = tables.embeddings.limit(100)
     // minCount=2 3-grams are non-empty on the 100-doc fixture (the
     // r8 `>= 0` form was vacuous — count can never be negative)
-    assert(Engine.hotNgrams(docs, "text", n = 3, minCount = 2L).count() > 0)
-    val cents = Engine.fitCentroids(embs, "embedding", k = 4, iters = 1)
-    assert(Engine.annTopKFitted(embs, embs.limit(5), "vec_id", "vec_id",
+    assert(TextAnalysis.hotNgrams(docs, "text", n = 3, minCount = 2L).count() > 0)
+    val cents = Similarity.kMeansFit(embs, "embedding", k = 4, iters = 1)
+    assert(Similarity.ivfTopKWithCentroids(embs, embs.limit(5), "vec_id", "vec_id",
       "embedding", k = 3, centroids = cents).count() > 0)
-    val pq = Engine.pqTrain(embs, "embedding", m = 8, nCodes = 16, iters = 1)
-    assert(Engine.annTopKPq(embs, embs.limit(5), "vec_id", "vec_id",
+    val pq = Similarity.pqTrain(embs, "embedding", m = 8, nCodes = 16, iters = 1)
+    assert(Similarity.ivfPqTopK(embs, embs.limit(5), "vec_id", "vec_id",
       "embedding", k = 3, centroids = cents, pq = pq, nProbe = 2,
       refine = 2).count() > 0)
-    val iw = Engine.importanceWeights(docs, docs.limit(10), "doc_id", "text")
+    val iw = TrainingPipeline.importanceWeights(docs, docs.limit(10), "doc_id", "text")
     assert(iw.count() == 100 && iw.filter($"iw" > 0).count() > 0)
   }
 

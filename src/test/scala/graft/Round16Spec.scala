@@ -434,13 +434,7 @@ class Round16Spec extends SparkSpec {
       java.nio.file.Files.delete(
         new java.io.File(s"$dir/_log/0.manifest").toPath)
       assert(VersionedTable.versions(spark, dir) == Seq(1L, 2L))
-      // kill-switch honored
-      spark.conf.set("graft.listing.cache", "false")
-      assert(VersionedTable.versions(spark, dir) == Seq(1L, 2L))
-    } finally {
-      spark.conf.unset("graft.manifest.cache.graceMs")
-      spark.conf.unset("graft.listing.cache")
-    }
+    } finally spark.conf.unset("graft.manifest.cache.graceMs")
   }
 
   // ───────────── SQL routing: CHERRY PICK + ALTER fallthrough ─────────────

@@ -81,7 +81,7 @@ class SourcesSpec extends SparkSpec {
     // META-INF service registration (which makes the bare name "avro"
     // resolvable) is absent in this image. The explicit provider class is
     // the documented fallback — same format, same files.
-    roundTrip(graft.Engine.AvroFormat)
+    roundTrip(graft.pig.PigCompiler.AvroFormat)
   }
   test("json round trip (JsonLoader/JsonStorage)") { roundTrip("json") }
   test("csv round trip with delimiter (PigStorage)") {
@@ -144,7 +144,7 @@ class SourcesSpec extends SparkSpec {
   test("delimited text with positional columns (schema-less PigStorage load)") {
     val path = s"$base/pigstorage"
     orig.write.option("delimiter", "\t").mode("overwrite").csv(path)
-    val pos = Engine.loadDelimited(spark, path, "\t") // _c0, _c1, ... all strings
+    val pos = spark.read.option("delimiter", "\t").csv(path) // _c0, _c1, ... all strings
     assert(pos.columns.toSeq == Seq("_c0", "_c1", "_c2", "_c3"))
     // lazy typing: cast at use site (SURVEY §1.3)
     assert(pos.select(sum($"_c0".cast("long"))).as[Long].head() ==

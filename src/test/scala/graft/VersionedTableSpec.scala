@@ -1514,10 +1514,30 @@ class VersionedTableSpec extends SparkSpec {
     assert(VersionedTable.readManifest(spark, dir, 0L).writer == "w2")
     assert(VersionedTable.read(spark, dir).select($"v").distinct()
       .as[String].head() == "new")
-    // the kill-switch path answers identically
-    spark.conf.set("graft.manifest.cache", "false")
-    try assert(VersionedTable.readManifest(spark, dir, 0L).writer == "w2")
-    finally spark.conf.unset("graft.manifest.cache")
+  }
+
+  test("manifest format: a whole-dir `data=` manifest refuses to read, never reads as empty") {
+    val src = java.nio.file.Files.createTempDirectory("vt-wholedir").toString + "/t"
+    VersionedTable.commit(spark, src, df("a", 5), -1L, "w")
+    // a copy, so the manifest cache of the source table plays no part
+    val dir = java.nio.file.Files.createTempDirectory("vt-wholedir").toString + "/t"
+    org.apache.commons.io.FileUtils.copyDirectory(
+      new java.io.File(src), new java.io.File(dir))
+    val m0 = java.nio.file.Paths.get(s"$dir/_log/0.manifest")
+    val body = new String(java.nio.file.Files.readAllBytes(m0), "UTF-8")
+    val dataDir = VersionedTable.readManifest(spark, src, 0L).stagingDir.get
+    java.nio.file.Files.write(m0,
+      (body.stripSuffix("\n") + s"\ndata=$dataDir\n").getBytes("UTF-8"))
+    def refuses(read: => Any): Unit = {
+      val e = intercept[IllegalStateException](read)
+      assert(e.getMessage.contains(
+        "whole-dir manifest format is no longer read; recommit the table") &&
+        e.getMessage.contains("version 0") && e.getMessage.contains(dir),
+        e.getMessage)
+    }
+    refuses(VersionedTable.readManifest(spark, dir, 0L))
+    refuses(VersionedTable.liveFiles(spark, dir, 0L))
+    refuses(VersionedTable.read(spark, dir))
   }
 
   test("stale parent: every write refuses a version behind or ahead of the tip, table untouched") {
