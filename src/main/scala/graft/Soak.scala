@@ -712,11 +712,10 @@ object Soak {
           f"job $jobSec%.2fs")
         nFiles.toLong
       }
-      // round 14: deleteWhere's hit counts past the crossover — a
-      // REAL many-file table (2048 files), scattered delete, the
-      // crossover forced so counts + footer totals aggregate in ONE
-      // distributed job (branch parity is DeletionVectorSpec-pinned;
-      // this is the scale/shape receipt)
+      // round 14: deleteWhere's hit counts at scale — a REAL many-file
+      // table (2048 files), scattered delete; counts + footer totals
+      // aggregate in ONE distributed job (the job count is
+      // DeletionVectorSpec-pinned; this is the scale/shape receipt)
       time("lakehouse_dv_distributed_counts") {
         val vt2 = s"$root/dvsoak"
         val n = 2000000L
@@ -724,11 +723,8 @@ object Soak {
           spark.range(n).select(col("id").as("k"),
             (col("id") % 997).as("w")),
           -1L, "soak", clusterBy = Seq("k"), clusterFiles = 2048)
-        spark.conf.set("graft.prune.driverFiles", "0")
-        val st =
-          try VersionedTable.deleteWhere(spark, vt2, "k % 4001 = 7",
-            0L, "soak")
-          finally spark.conf.unset("graft.prune.driverFiles")
+        val st = VersionedTable.deleteWhere(spark, vt2, "k % 4001 = 7",
+          0L, "soak")
         require(st.rowsDeleted == 500L,
           s"scattered delete must hit exactly 500 rows: $st")
         require(st.filesMasked > 300L,

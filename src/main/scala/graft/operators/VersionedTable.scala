@@ -359,6 +359,14 @@ object VersionedTable {
     spark.conf.getOption("graft.manifest.cache.graceMs")
       .flatMap(_.toLongOption).getOrElse(2000L)
 
+  /** A small metadata file's text (manifest, cursor, BASE marker). */
+  private def readText(f: org.apache.hadoop.fs.FileSystem,
+      p: org.apache.hadoop.fs.Path): String = {
+    val in = f.open(p)
+    try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+    finally in.close()
+  }
+
   def readManifest(spark: SparkSession, dir: String, v: Long): Manifest = {
     val f = fs(spark, dir)
     val p = manifestPath(dir, v)
@@ -371,9 +379,7 @@ object VersionedTable {
         // proves no mutation since the cached parse
         if (mt == st.getModificationTime && len == st.getLen) return m
     }
-    val in = f.open(p)
-    val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
+    val body = readText(f, p)
     val kvs: Seq[(String, String)] =
       body.linesIterator.filter(_.contains("=")).map { l =>
         val i = l.indexOf('='); (l.substring(0, i), l.substring(i + 1))
@@ -451,6 +457,9 @@ object VersionedTable {
 
   private def physName(colmap: Map[String, String], logical: String): String =
     colmap.getOrElse(logical, logical)
+
+  /** Column names resolve case-insensitively: the comparison key. */
+  private def lc(name: String): String = name.toLowerCase(java.util.Locale.ROOT)
 
   /** The schema as stored in the parquet files: logical fields renamed
     * to their physical names. */
@@ -938,9 +947,9 @@ object VersionedTable {
 
   /** Threshold above which [[prunedFiles]] distributes its filter —
     * below it, a driver loop over the decoded manifest is faster than
-    * a job launch. Tunable per session
-    * (`graft.prune.driverFiles`) so parity of the two branches is
-    * testable without synthesizing 200k manifest lines. */
+    * a job launch. Tunable per session (`graft.prune.driverFiles`) so
+    * parity of the two branches is testable without synthesizing 200k
+    * manifest lines; the key governs only [[prunedFiles]]. */
   private def driverPruneFiles(spark: SparkSession): Int =
     spark.conf.getOption("graft.prune.driverFiles")
       .flatMap(_.toIntOption).getOrElse(200000)
@@ -1112,8 +1121,7 @@ object VersionedTable {
     * the columns are currently CALLED. */
   private def physShape(s: org.apache.spark.sql.types.StructType,
       colmap: Map[String, String]) =
-    s.fields.map(f => (physName(colmap, f.name)
-      .toLowerCase(java.util.Locale.ROOT), f.dataType)).toSeq
+    s.fields.map(f => (lc(physName(colmap, f.name)), f.dataType)).toSeq
 
   /** Whole-word SQL mention of column `c` (identifier-boundary
     * match) — free-form expectation SQL cannot be rewritten soundly
@@ -1597,14 +1605,12 @@ object VersionedTable {
   private def requireFreshPhysNames(op: String,
       schema: org.apache.spark.sql.types.StructType,
       colmap: Map[String, String], parentMeta: Map[String, String]): Unit = {
-    val phys = schema.fieldNames.toSeq
-      .map(n => physName(colmap, n).toLowerCase(java.util.Locale.ROOT))
+    val phys = schema.fieldNames.toSeq.map(n => lc(physName(colmap, n)))
     require(phys.distinct.length == phys.length,
       s"$op: a column's name collides with the PHYSICAL name of a " +
         "renamed column — feed/replica files keep physical names " +
         "forever; pick a different name")
-    val tomb = parentMeta.getOrElse(DroppedPhysKey, "").split(',')
-      .map(_.trim.toLowerCase(java.util.Locale.ROOT)).filter(_.nonEmpty).toSet
+    val tomb = tombstones(parentMeta).map(lc)
     val hit = phys.filter(tomb.contains)
     require(hit.isEmpty,
       s"$op: column(s) ${hit.mkString(",")} reuse a DROPPED column's " +
@@ -1769,6 +1775,24 @@ object VersionedTable {
   // safe for keyed ops — a mask only REMOVES rows, and a file outside
   // the read scope provably contained no matching row at plan time.
 
+  /** What changed from manifest `a` to manifest `b`: the files `b`
+    * adds, the files it removes, and every file whose deletion mask
+    * differs (added and removed ones included; [[keptRemasked]] keeps
+    * only the files both sides hold). */
+  private final case class ManifestDiff(adds: Seq[String],
+      removes: Seq[String], remasked: Seq[String]) {
+    def keptRemasked: Seq[String] = {
+      val moved = (adds ++ removes).toSet
+      remasked.filterNot(moved)
+    }
+  }
+
+  private def diffManifests(a: Manifest, b: Manifest): ManifestDiff = {
+    val (aSet, bSet) = (a.files.toSet, b.files.toSet)
+    ManifestDiff(b.files.filterNot(aSet), a.files.filterNot(bSet),
+      (a.files ++ b.files).distinct.filter(r => a.dv.get(r) != b.dv.get(r)))
+  }
+
   /** Why the staged commit planned at `fromV` cannot be re-stamped
     * onto `tipV` — None = logically disjoint from every intervening
     * winner, safe to rebase. `readSet` = files the op read or
@@ -1840,22 +1864,17 @@ object VersionedTable {
           declsOf(cur, tombstones = false) && !allowDeclChange)
         return Some(s"version $w changed table declarations " +
           "(expectations/clustering/feed)")
-      val prevSet = prev.files.toSet
-      val curSet = cur.files.toSet
-      val removedByW = prev.files.filterNot(curSet)
-      val dvChangedByW = (prev.files ++ cur.files).distinct
-        .filter(r => prev.dv.get(r) != cur.dv.get(r))
-      val clash = (removedByW ++ dvChangedByW).distinct.filter(readSet)
+      val byW = diffManifests(prev, cur)
+      val clash = (byW.removes ++ byW.remasked).distinct.filter(readSet)
       if (clash.nonEmpty)
         return Some(s"version $w removed/rewrote/re-masked files this " +
           s"commit read or rewrites (${clash.take(3).mkString(", ")}" +
           s"${if (clash.length > 3) "…" else ""})")
       if (readsTable) {
-        val addedByW = cur.files.filterNot(prevSet)
         val enc = encodeBounds(cur.schema, readBounds)
         val risky =
-          if (readBounds.isEmpty || enc.isEmpty) addedByW
-          else addedByW.filter(rel =>
+          if (readBounds.isEmpty || enc.isEmpty) byW.adds
+          else byW.adds.filter(rel =>
             envelopeMatches(enc, cur.stats.getOrElse(rel, Map.empty)))
         // recorded-scope admit (round 16): the winner's own manifest
         // proves its adds hold only rows outside our scope — see the
@@ -2229,25 +2248,22 @@ object VersionedTable {
     requireNotStale(spark, dir, expectedVersion)
     val prev = schemaOf(spark, dir, expectedVersion)
     val m = readManifest(spark, dir, expectedVersion)
-    val taken = scala.collection.mutable.Set(
-      prev.fieldNames.map(_.toLowerCase(java.util.Locale.ROOT)).toSeq: _*)
+    val taken = scala.collection.mutable.Set(prev.fieldNames.map(lc).toSeq: _*)
     // physical names too: a new column's physical name IS its logical
     // name — shadowing a renamed column's physical name would make old
     // files' parquet column (the renamed one's bytes) read as the new
     // column's values
     val takenPhys = scala.collection.mutable.Set(
-      (prev.fieldNames.map(n =>
-        physName(m.colmap, n).toLowerCase(java.util.Locale.ROOT)).toSeq ++
-        droppedPhysOf(spark, dir, expectedVersion)
-          .map(_.toLowerCase(java.util.Locale.ROOT))): _*)
+      (prev.fieldNames.map(n => lc(physName(m.colmap, n))).toSeq ++
+        tombstones(m.meta).map(lc)): _*)
     newCols.foreach { fld =>
       require(fld.nullable,
         s"addColumns: '${fld.name}' must be nullable — existing rows " +
           "null-fill it; backfill values with a merge afterwards")
-      require(taken.add(fld.name.toLowerCase(java.util.Locale.ROOT)),
+      require(taken.add(lc(fld.name)),
         s"addColumns: column '${fld.name}' already exists (column names " +
           "resolve case-insensitively)")
-      require(takenPhys.add(fld.name.toLowerCase(java.util.Locale.ROOT)),
+      require(takenPhys.add(lc(fld.name)),
         s"addColumns: '${fld.name}' collides with the PHYSICAL name of " +
           "a renamed or DROPPED column — old files' parquet bytes still " +
           "carry that name; pick a different one")
@@ -2390,7 +2406,7 @@ object VersionedTable {
         s"renameColumns: '$to' is not a plain column token")
     }
     val newNames = prev.fieldNames.map(n => renames.getOrElse(n, n))
-    val lower = newNames.map(_.toLowerCase(java.util.Locale.ROOT)).toSeq
+    val lower = newNames.map(lc).toSeq
     require(lower.distinct.length == lower.length,
       s"renameColumns: resulting names collide case-insensitively " +
         s"(${newNames.mkString(",")}) — column names resolve " +
@@ -2411,30 +2427,40 @@ object VersionedTable {
     val stats = m.stats.map { case (rel, cols) =>
       rel -> cols.map { case (c, mm) => renames.getOrElse(c, c) -> mm }
     }
-    val inherited = expectMeta(spark, dir, expectedVersion, Map.empty,
-      Map.empty)
-    inherited.foreach { case (k, sql) =>
-      if (k.startsWith(ExpectPrefix))
-        renames.keys.filter(mentionsColumn(sql, _)).foreach(c =>
-          throw new IllegalArgumentException(
-            s"renameColumns: expectation '${k.stripPrefix(ExpectPrefix)}' " +
-              s"($sql) mentions renamed column '$c' — free-form SQL " +
-              "cannot be rewritten soundly; drop it via " +
-              "expectations = Map(name -> \"\") and re-declare under " +
-              "the new name"))
-    }
-    // declared column LISTS rename through (they are plain tokens)
-    val effMeta = inherited.map {
-      case (k, v2) if k == ClusterKey || k == FeedKey =>
-        k -> v2.split(',').toSeq.map(_.trim).filter(_.nonEmpty)
-          .map(c => renames.getOrElse(c, c)).mkString(",")
-      case kv => kv
+    val effMeta = renameDecls(
+      expectMeta(spark, dir, expectedVersion, Map.empty, Map.empty),
+      renames) { (n, sql, c) =>
+      throw new IllegalArgumentException(
+        s"renameColumns: expectation '$n' ($sql) mentions renamed column " +
+          s"'$c' — free-form SQL cannot be rewritten soundly; drop it via " +
+          "expectations = Map(name -> \"\") and re-declare under the new name")
     }
     land(spark, dir, s"renameColumns on $dir", expectedVersion, writerId,
       evolved, liveFiles(spark, dir, expectedVersion), stats = stats,
       meta = effMeta, dv = m.dv, colmap = colmap)
     newV
   }
+
+  /** Declarations carried through column renames `renamed` (old
+    * logical name → new): the plain-token lists (clustering, feed
+    * keys) rename through; an expectation whose free-form SQL mentions
+    * an old name cannot be rewritten soundly, so it calls
+    * `refuse(expectation, sql, oldName)`. Other keys pass unchanged.
+    * Shared by [[renameColumns]], [[fastForward]] and [[rebaseBranch]]. */
+  private def renameDecls(decls: Map[String, String],
+      renamed: Map[String, String])(
+      refuse: (String, String, String) => Nothing): Map[String, String] =
+    if (renamed.isEmpty) decls
+    else decls.map {
+      case (k, v) if k == ClusterKey || k == FeedKey =>
+        k -> v.split(',').toSeq.map(_.trim).filter(_.nonEmpty)
+          .map(c => renamed.getOrElse(c, c)).mkString(",")
+      case (k, v) =>
+        if (k.startsWith(ExpectPrefix))
+          renamed.keys.find(mentionsColumn(v, _))
+            .foreach(refuse(k.stripPrefix(ExpectPrefix), v, _))
+        k -> v
+    }
 
   /** Meta key accumulating the PHYSICAL names of dropped columns
     * (comma-joined, inherited through every commit): old files still
@@ -2443,11 +2469,14 @@ object VersionedTable {
     * as the new column's values. */
   val DroppedPhysKey = "colmap.dropped"
 
+  /** The dropped-physical-name tombstones a manifest's meta carries. */
+  private def tombstones(meta: Map[String, String]): Set[String] =
+    meta.getOrElse(DroppedPhysKey, "").split(',').map(_.trim)
+      .filter(_.nonEmpty).toSet
+
   /** The dropped-physical-name tombstones of version `v`. */
   def droppedPhysOf(spark: SparkSession, dir: String, v: Long): Set[String] =
-    readManifest(spark, dir, v).meta.get(DroppedPhysKey)
-      .map(_.split(',').toSet.map((s: String) => s.trim).filter(_.nonEmpty))
-      .getOrElse(Set.empty)
+    tombstones(readManifest(spark, dir, v).meta)
 
   /** Sanctioned schema evolution #4: DROP columns as a METADATA-ONLY
     * commit (the Delta column-mapping drop shape). No data file is
@@ -2572,8 +2601,7 @@ object VersionedTable {
       sch.fieldNames.map(n => physName(cm, n)).toSet
     val tgtPhys = physNames(tgtSchema, tgt.colmap)
     val removedPhys = physNames(curSchema, curM.colmap) -- tgtPhys
-    val tomb = (inheritedMeta.getOrElse(DroppedPhysKey, "").split(',')
-      .map(_.trim).filter(_.nonEmpty).toSet ++ removedPhys) -- tgtPhys
+    val tomb = (tombstones(inheritedMeta) ++ removedPhys) -- tgtPhys
     val metaAdj = (inheritedMeta - DroppedPhysKey) ++
       (if (tomb.isEmpty) Map.empty[String, String]
        else Map(DroppedPhysKey -> tomb.toSeq.sorted.mkString(",")))
@@ -2994,9 +3022,8 @@ object VersionedTable {
       // a delete only masks or fully-drops; a drop of a file WE mask
       // would mean a shared row (contradicting disjointness) on the
       // real rows, but our candidate superset can be wrong — refuse
-      val curSet = cur.files.toSet
-      if (prev.files.exists(r => !curSet(r) && touched(r))) return false
-      if (cur.files.exists(r => !prev.files.contains(r))) return false
+      val byW = diffManifests(prev, cur)
+      if (byW.removes.exists(touched) || byW.adds.nonEmpty) return false
       prev = cur
       w += 1
     }
@@ -3229,42 +3256,28 @@ object VersionedTable {
     val matched = readFilesWithRowId(spark, dir, m, candidates, schema)
       .where(expr(predicate))
       .select(col("__graft_rel").as("file"), col("__graft_pos").as("pos"))
-    // Per-file (fresh hits, physical rows): below the crossover, the
-    // count collect + a footer metadata job (two small driver maps);
-    // past it (graft.prune.driverFiles — the prunedFiles discipline),
-    // ONE distributed job aggregates counts AND reads each touched
-    // file's footer next to its count, so a scattered delete over a
-    // 10^7-file table collects exactly one manifest-receipt-sized
-    // list and no intermediate driver map. (The FINAL per-masked-file
-    // receipt is irreducible: the manifest itself carries one dv line
-    // per masked file — bounded driver metadata by design.)
+    // Per touched file (fresh hits, physical rows) from ONE distributed
+    // job: hits aggregate per file and each file's footer is read next
+    // to its count, so a scattered delete over a 10^7-file table
+    // collects exactly one manifest-receipt-sized list and no
+    // intermediate driver map. (The FINAL per-masked-file receipt is
+    // irreducible: the manifest itself carries one dv line per masked
+    // file — bounded driver metadata by design.)
     val hitStats: Array[(String, Long, Long)] = {
-      val counts = matched.groupBy("file").count()
-      if (candidates.length <= driverPruneFiles(spark)) {
-        val cmap = counts.collect()
-          .map(r => r.getString(0) -> r.getLong(1)).toMap
-        if (cmap.isEmpty) Array.empty
-        else {
-          val totals = footerRowCounts(spark, dir, cmap.keys.toSeq.sorted)
-          cmap.toSeq.sortBy(_._1)
-            .map { case (rel, h) => (rel, h, totals(rel)) }.toArray
-        }
-      } else {
-        val conf = new org.apache.spark.util.SerializableConfiguration(
-          spark.sessionState.newHadoopConf())
-        val dirStr = rootOf(dir)
-        counts.select(col("file"), col("count"))
-          .as(org.apache.spark.sql.Encoders.tuple(
-            org.apache.spark.sql.Encoders.STRING,
-            org.apache.spark.sql.Encoders.scalaLong))
-          .mapPartitions(_.map { case (rel, hits) =>
-            (rel, hits, footerRows(conf.value, s"$dirStr/$rel"))
-          })(org.apache.spark.sql.Encoders.tuple(
-            org.apache.spark.sql.Encoders.STRING,
-            org.apache.spark.sql.Encoders.scalaLong,
-            org.apache.spark.sql.Encoders.scalaLong))
-          .collect().sortBy(_._1)
-      }
+      val conf = new org.apache.spark.util.SerializableConfiguration(
+        spark.sessionState.newHadoopConf())
+      val dirStr = rootOf(dir)
+      matched.groupBy("file").count()
+        .as(org.apache.spark.sql.Encoders.tuple(
+          org.apache.spark.sql.Encoders.STRING,
+          org.apache.spark.sql.Encoders.scalaLong))
+        .mapPartitions(_.map { case (rel, hits) =>
+          (rel, hits, footerRows(conf.value, s"$dirStr/$rel"))
+        })(org.apache.spark.sql.Encoders.tuple(
+          org.apache.spark.sql.Encoders.STRING,
+          org.apache.spark.sql.Encoders.scalaLong,
+          org.apache.spark.sql.Encoders.scalaLong))
+        .collect().sortBy(_._1)
     }
     val newCounts: Map[String, Long] = hitStats.map(t => t._1 -> t._2).toMap
     if (newCounts.isEmpty) return noOp
@@ -3669,10 +3682,8 @@ object VersionedTable {
     if (ids.isEmpty) None
     else {
       val n = ids.max
-      val in = f.open(new org.apache.hadoop.fs.Path(s"${cursorDir(dir, consumer)}/$n.cursor"))
-      val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-      body.linesIterator.collectFirst {
+      readText(f, new org.apache.hadoop.fs.Path(
+        s"${cursorDir(dir, consumer)}/$n.cursor")).linesIterator.collectFirst {
         case l if l.startsWith("version=") => l.stripPrefix("version=").toLong
       }
     }
@@ -4161,12 +4172,7 @@ object VersionedTable {
     require(base >= 0L, s"createBranch: no committed versions under $root")
     require(versions(spark, dir).contains(base),
       s"createBranch: version $base of $root is not retained")
-    val f = fs(spark, dir)
-    val baseBody = {
-      val in = f.open(manifestPath(dir, base))
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    }
+    val baseBody = readText(fs(spark, dir), manifestPath(dir, base))
     val bdir = branchLogDirOf(root, name)
     // BASE is the existence CAS (exactly one creator); the fork
     // manifest copy lands after — identical bytes for any racer, so a
@@ -4184,7 +4190,7 @@ object VersionedTable {
       new org.apache.hadoop.fs.Path(s"$bdir/BASE"),
       new org.apache.hadoop.fs.Path(s"$bdir/.tmp-base-${
         java.util.UUID.randomUUID()}"),
-      s"base=$base\nmainBase=$base\nts=$createdTs\ninc=$createdTs\n")
+      BranchState(base, base, createdTs).marker(createdTs))
     if (!won) throw new CommitConflict(
       s"createBranch: branch '$name' already exists under $root")
     casCreate(spark,
@@ -4216,35 +4222,33 @@ object VersionedTable {
     * ADVANCES to the landed tip on every landing, so repeated
     * stage-validate-land cycles each publish only their increment. */
   def branchBase(spark: SparkSession, dir: String, name: String): Long =
-    readBranchBase(spark, dir, name)._1
+    readBranchState(spark, dir, name).base
 
-  /** (diff anchor in the branch log, mainline version the landing
-    * gate walks from). Equal at fork; a landing advances both. */
-  private def readBranchBase(spark: SparkSession, dir: String,
-      name: String): (Long, Long) = {
-    val (b, mb, _) = readBranchState(spark, dir, name)
-    (b, mb)
+  /** A branch's `BASE` marker: the diff anchor in the branch log, the
+    * mainline version the landing gate walks from (equal at fork; a
+    * landing advances both) and the incarnation id stamped at
+    * [[createBranch]], which survives every landing's rewrite — 0 for
+    * pre-round-18 markers. */
+  private final case class BranchState(base: Long, mainBase: Long,
+      inc: Long) {
+    def marker(ts: Long): String =
+      s"base=$base\nmainBase=$mainBase\nts=$ts\ninc=$inc\n"
   }
 
-  /** (diff anchor, mainline walk base, incarnation id). The
-    * incarnation id is stamped at [[createBranch]] and survives every
-    * landing's BASE rewrite — 0 for pre-round-18 markers. */
   private def readBranchState(spark: SparkSession, dir: String,
-      name: String): (Long, Long, Long) = {
+      name: String): BranchState = {
     requireBranchName(name)
     val f = fs(spark, dir)
     val p = new org.apache.hadoop.fs.Path(
       s"${branchLogDirOf(rootOf(dir), name)}/BASE")
     require(f.exists(p), s"no branch '$name' under ${rootOf(dir)}")
-    val in = f.open(p)
-    val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
+    val body = readText(f, p)
     def one(k: String) = body.linesIterator.collectFirst {
       case l if l.startsWith(s"$k=") => l.stripPrefix(s"$k=").toLong
     }
     val base = one("base").getOrElse(throw new IllegalStateException(
       s"branch '$name': malformed BASE marker"))
-    (base, one("mainBase").getOrElse(base), one("inc").getOrElse(0L))
+    BranchState(base, one("mainBase").getOrElse(base), one("inc").getOrElse(0L))
   }
 
   /** Branch retention: drop all but the newest `keep` BRANCH manifests
@@ -4312,7 +4316,6 @@ object VersionedTable {
       colmap: Map[String, String], live: Seq[String], adds: Seq[String],
       removes: Seq[String], dvChanged: Seq[String])
       : (Map[String, Map[String, (String, String)]], Map[String, (String, Long)]) = {
-    val lc = (x: String) => x.toLowerCase(java.util.Locale.ROOT)
     val physToFinal = schema.fields
       .map(f => lc(physName(colmap, f.name)) -> f.name).toMap
     def rekey(cols: Map[String, (String, String)], cm: Map[String, String]) =
@@ -4327,6 +4330,121 @@ object VersionedTable {
     val dv = (pm.dv -- removes -- dvChanged) ++
       (dvChanged ++ adds).flatMap(r => src.dv.get(r).map(r -> _))
     (stats, dv)
+  }
+
+  /** Physical id → (name in `a`, name in `b`) for every column both
+    * manifests carry under different logical names. */
+  private def renamesBetween(a: Manifest,
+      b: Manifest): Map[String, (String, String)] = {
+    def byPhys(m: Manifest) = m.schema.toSeq.flatMap(_.fields)
+      .map(f => lc(physName(m.colmap, f.name)) -> f.name).toMap
+    val (pa, pb) = (byPhys(a), byPhys(b))
+    pa.collect { case (p, n) if pb.get(p).exists(_ != n) => p -> (n, pb(p)) }
+  }
+
+  /** Old logical name → new for the renames of [[renamesBetween]] that
+    * change more than case. */
+  private def renamedNames(
+      ren: Map[String, (String, String)]): Map[String, String] =
+    ren.values.collect { case (o, n) if lc(o) != lc(n) => o -> n }.toMap
+
+  /** The ways [[landingSchema]] refuses a landing. */
+  private object Refusal extends Enumeration {
+    val BeyondAppend, MainlineLacks, TypeClash, NameClash, Shadows,
+      Collides, NoReceipt = Value
+  }
+
+  /** The schema and colmap a branch landing lands under: the one
+    * column-identity rule of [[cherryPick]], [[fastForward]] and
+    * [[rebaseBranch]]. `main` is the state the landing goes onto,
+    * `anchor` the branch state `tip` diverged from, and `renamed` maps
+    * the physical id of an anchor column to the name the landing gives
+    * it (the renaming side's, when one side renamed). Renames are
+    * metadata-only with sticky physical names ([[renameColumns]]), so
+    * columns match by PHYSICAL identity throughout.
+    *
+    * Equal shapes under equal mappings land as `main`. Otherwise the
+    * landing is well-defined iff
+    *   (a) `tip` only APPENDED columns to `anchor` (a drop, type change
+    *       or reorder refuses; a rename keeps the physical prefix);
+    *   (b) every anchor column is still in `main` at the same type;
+    *   (c) each appended column is new to `main` — and then must not
+    *       shadow a physical name `main`'s files or tombstones still
+    *       carry — or present there at the same type under the same
+    *       name (convergent evolution).
+    * The landing is `main`'s fields in committed order, renamed
+    * through `renamed`, then the new tail; a field one side's files
+    * lack is NULLABLE (those files null-fill it), and landed names
+    * must stay distinct. A refusal calls `refuse` with its kind and the
+    * column at fault; each op words its own message. */
+  private def landingSchema(main: Manifest, anchor: Manifest, tip: Manifest,
+      renamed: Map[String, String])(
+      refuse: (Refusal.Value, String) => Nothing)
+      : (org.apache.spark.sql.types.StructType, Map[String, String]) =
+    (anchor.schema, tip.schema, main.schema) match {
+      case (_, Some(tipS), Some(mainS)) if main.colmap == tip.colmap &&
+          schemaShape(mainS) == schemaShape(tipS) =>
+        (mainS, main.colmap)
+      case (Some(anchorS), Some(tipS), Some(mainS)) =>
+        def ph(m: Manifest, c: String) = lc(physName(m.colmap, c))
+        val anchorPhys = physShape(anchorS, anchor.colmap)
+        val tipPhys = physShape(tipS, tip.colmap)
+        if (tipPhys.take(anchorPhys.length) != anchorPhys)
+          refuse(Refusal.BeyondAppend, "")
+        val mainByPhys = mainS.fields.map(f => ph(main, f.name) -> f).toMap
+        anchorS.fields.foreach { f =>
+          if (!mainByPhys.get(ph(anchor, f.name))
+              .exists(_.dataType == f.dataType))
+            refuse(Refusal.MainlineLacks, f.name)
+        }
+        val (carried, fresh) = tipS.fields.drop(anchorS.fields.length).toSeq
+          .partition(f => mainByPhys.contains(ph(tip, f.name)))
+        carried.foreach { f =>
+          val cur = mainByPhys(ph(tip, f.name))
+          if (cur.dataType != f.dataType) refuse(Refusal.TypeClash, f.name)
+          if (lc(cur.name) != lc(f.name)) refuse(Refusal.NameClash, f.name)
+        }
+        val taken = mainS.fieldNames.map(ph(main, _)).toSet ++
+          tombstones(main.meta).map(lc)
+        fresh.find(f => taken(ph(tip, f.name)))
+          .foreach(f => refuse(Refusal.Shadows, f.name))
+        val tipTyped = tipPhys.toMap
+        val mainFields = mainS.fields.toSeq.map { f =>
+          val p = ph(main, f.name)
+          val nf = f.copy(name = renamed.getOrElse(p, f.name))
+          if (tipTyped.get(p).contains(f.dataType)) nf
+          else nf.copy(nullable = true)
+        }
+        val landed = mainFields ++ fresh.map(_.copy(nullable = true))
+        val names = landed.map(f => lc(f.name))
+        names.diff(names.distinct).headOption
+          .foreach(c => refuse(Refusal.Collides, c))
+        // each landed field keeps its side's sticky physical name
+        val colmap = (mainFields zip mainS.fields).map { case (nf, f) =>
+          nf.name -> physName(main.colmap, f.name)
+        } ++ fresh.map(f => f.name -> physName(tip.colmap, f.name))
+        (org.apache.spark.sql.types.StructType(landed),
+          colmap.filter { case (l, p) => l != p }.toMap)
+      case _ => refuse(Refusal.NoReceipt, "")
+    }
+
+  /** The CAS loop of the branch landings ([[cherryPick]],
+    * [[fastForward]]): `landAt(parent)` gates and lands one attempt on
+    * mainline version `parent`, true when its CAS won; a lost race
+    * re-reads the tip and retries until `attempts` are spent. Returns
+    * the landed version. */
+  private def landBranch(spark: SparkSession, dir: String, op: String,
+      attempts: Int)(landAt: Long => Boolean): Long = {
+    var parent = latestVersion(spark, dir)
+    var left = math.max(1, attempts)
+    while (!landAt(parent)) {
+      left -= 1
+      if (left <= 0) throw new CommitConflict(
+        s"$op: lost the race for version ${parent + 1} and the retry " +
+          "budget is exhausted — retry")
+      parent = latestVersion(spark, dir)
+    }
+    parent + 1
   }
 
   /** The branch version mainline commit `m` cherry-picked from
@@ -4353,24 +4471,16 @@ object VersionedTable {
     * masks a file mainline no longer has) refuses loudly, exactly
     * git's cherry-pick-conflict shape.
     *
-    * Schema admit (round 17, VERDICT r16 #3): a pick whose branch
-    * schema ADDITIVELY extends mainline's (an earlier unlanded
-    * ADD COLUMNS) lands under the union schema — mainline's fields
-    * plus the branch's nullable tail — so the hotfix-branch flow
-    * (branch adds a column and fixes one bad commit; only the fix
-    * should land) works without landing the whole branch. The picked
-    * commit itself must still be migration-free: a pick that IS the
-    * schema change, or that re-declares table state
+    * The picked commit itself must be migration-free: a pick that IS a
+    * schema change or a rename, or that re-declares table state
     * (expectations/clustering/feed/tombstones), refuses — a pick is a
-    * delta, not a state landing; state lands via [[fastForward]].
-    *
-    * Renames (round 18 — the fastForward parity): the admit matches
-    * columns by PHYSICAL identity, so a metadata-only rename on
-    * either side since the fork no longer bricks the pick — the
-    * landing always carries MAINLINE's current names and colmap (a
-    * pick is a delta of content, never of naming), and the picked
-    * files' stats re-key through the physical identity so pruning
-    * survives. Returns the new mainline version. */
+    * delta of content, never of naming or state; those land via
+    * [[fastForward]]. The landing schema is [[landingSchema]] anchored
+    * at the mainline parent: mainline's CURRENT names and colmap
+    * always win (a one-sided rename since the fork does not brick the
+    * pick), and a branch whose schema additively extends mainline's
+    * (an earlier unlanded ADD COLUMNS — the hotfix-branch flow) lands
+    * under the union. Returns the new mainline version. */
   def cherryPick(spark: SparkSession, dir: String, name: String,
       branchVersion: Long, writerId: String,
       readsTable: Boolean = true, rebaseAttempts: Int = 1,
@@ -4378,7 +4488,7 @@ object VersionedTable {
     requireMainline(dir, "cherryPick")
     requireWriterId(writerId)
     val ref = branchRef(dir, name)
-    val (_, mainBase, inc) = readBranchState(spark, dir, name)
+    val BranchState(_, mainBase, inc) = readBranchState(spark, dir, name)
     require(versions(spark, ref).contains(branchVersion) &&
         versions(spark, ref).contains(branchVersion - 1),
       s"cherryPick '$name': version $branchVersion (and its parent) " +
@@ -4389,108 +4499,47 @@ object VersionedTable {
         prevM.colmap == vM.colmap,
       s"cherryPick '$name': v$branchVersion changed the schema/mapping " +
         "— schema migrations land via fastForward of the whole branch")
-    // a pick is a DELTA, not a state landing: the picked commit must
-    // not itself re-declare (expectations/clustering/feed/tombstones)
-    // — declaration changes land via fastForward, which carries the
-    // reconciliation + cross-enforcement a state change needs
     require(declsOf(prevM) == declsOf(vM),
       s"cherryPick '$name': v$branchVersion re-declared " +
         "(expectations/clustering/feed/tombstones) — declaration " +
         "changes land via fastForward of the whole branch")
-    val prevSet = prevM.files.toSet
-    val vSet = vM.files.toSet
-    val adds = vM.files.filterNot(prevSet)
-    val removes = prevM.files.filterNot(vSet)
-    val dvChanged = prevM.files.filter(r =>
-      vSet(r) && prevM.dv.get(r) != vM.dv.get(r))
-    val touched = (removes ++ dvChanged).toSet
-    var parent = latestVersion(spark, dir)
-    var attemptsLeft = math.max(1, rebaseAttempts)
-    var out = -1L
-    while (out < 0) {
+    val d = diffManifests(prevM, vM)
+    val touched = d.removes ++ d.keptRemasked
+    val op = s"cherryPick '$name' onto $dir"
+    landBranch(spark, dir, op, rebaseAttempts) { parent =>
       val pm = readManifest(spark, dir, parent)
-      // the picked delta must be schema-compatible with MAINLINE,
-      // matched by PHYSICAL column identity (round 18 — renames on
-      // either side since the fork are metadata-only with sticky
-      // physical names, so they no longer brick picks; the pick OF
-      // the rename commit itself stays refused above — a pick is a
-      // delta of CONTENT, never of naming, so mainline's CURRENT
-      // names always win the landing): physically-equal shapes land
-      // under mainline's schema/colmap; a branch whose physical
-      // shape ADDITIVELY extends mainline's (an earlier unlanded
-      // ADD COLUMNS — round 17, VERDICT r16 #3: the hotfix-branch
-      // flow) lands under the union — mainline's fields, then the
-      // branch tail nullable, the picked files physically carrying
-      // the appended columns and mainline's files null-filling them.
-      // Anything else (a drop, type change, or a mainline-only
-      // extension the branch lacks) refuses: those desync the shapes
-      // and land via fastForward.
-      val lcp = (x: String) => x.toLowerCase(java.util.Locale.ROOT)
-      val pmPhys = pm.schema.map(physShape(_, pm.colmap))
-      val vPhys = vM.schema.map(physShape(_, vM.colmap))
-      val (landSchema, landColmap) =
-        if (pmPhys == vPhys)
-          (pm.schema.getOrElse(throw new IllegalStateException(
-            s"cherryPick: no schema receipt on mainline $dir")),
-            pm.colmap)
-        else (pm.schema, vM.schema) match {
-          case (Some(pmS), Some(vS))
-              if vS.fields.length > pmS.fields.length &&
-                physShape(vS, vM.colmap).take(pmS.fields.length) ==
-                  physShape(pmS, pm.colmap) =>
-            val tail = vS.fields.drop(pmS.fields.length).toSeq
-            val takenPhys = pmS.fieldNames.toSeq
-              .map(n => lcp(physName(pm.colmap, n))).toSet ++
-              pm.meta.getOrElse(DroppedPhysKey, "").split(',')
-                .map(n => lcp(n.trim)).filter(_.nonEmpty)
-            tail.foreach(fld => require(
-              !takenPhys(lcp(physName(vM.colmap, fld.name))),
-              s"cherryPick '$name': branch-added column '${fld.name}' " +
-                "collides with a physical name mainline files still " +
-                "carry — rename it on the branch"))
-            locally { // e.g. mainline renamed k→score × branch added score
-              val names =
-                (pmS.fieldNames.toSeq ++ tail.map(_.name)).map(lcp)
-              require(names.distinct.length == names.length,
-                s"cherryPick '$name': a branch-added column's name " +
-                  "collides with a mainline column — rename it on " +
-                  "the branch, or fastForward")
-            }
-            (org.apache.spark.sql.types.StructType(
-              pmS.fields ++ tail.map(_.copy(nullable = true))),
-              pm.colmap ++ tail.flatMap { f =>
-                val ph = physName(vM.colmap, f.name)
-                if (f.name == ph) None else Some(f.name -> ph)
-              })
-          case _ => throw new IllegalArgumentException(
-            s"cherryPick '$name' v$branchVersion: branch and mainline " +
-              "schemas diverged beyond a branch-side nullable append " +
-              "— fastForward the whole branch")
-        }
+      val (landSchema, landColmap) = landingSchema(pm, pm, vM, Map.empty) {
+        case (Refusal.Shadows, c) => throw new IllegalArgumentException(
+          s"cherryPick '$name': branch-added column '$c' collides with a " +
+            "physical name mainline files still carry — rename it on the " +
+            "branch")
+        case (Refusal.Collides, _) => throw new IllegalArgumentException(
+          s"cherryPick '$name': a branch-added column's name collides " +
+            "with a mainline column — rename it on the branch, or " +
+            "fastForward")
+        case _ => throw new IllegalArgumentException(
+          s"cherryPick '$name' v$branchVersion: branch and mainline " +
+            "schemas diverged beyond a branch-side nullable append " +
+            "— fastForward the whole branch")
+      }
       if (parent != mainBase)
-        rebaseConflict(spark, dir, mainBase, parent, touched,
+        rebaseConflict(spark, dir, mainBase, parent, touched.toSet,
           Seq.empty, readsTable,
           // a pure-relabel winner (physical shape unchanged — a
           // metadata-only RENAME) always commutes with a content
-          // delta: the landing above takes mainline's CURRENT names
-          // by physical identity, so naming changes mid-walk are
-          // admissible for any pick (round 18)
+          // delta: the landing takes mainline's CURRENT names by
+          // physical identity (round 18)
           allowRename = true,
           // a mainline winner that is itself a pick of an EARLIER
-          // commit of THIS branch is exempt: the branch history
-          // already serialized this commit after it (consecutive
-          // range picks would otherwise refuse on their own landed
-          // prefix); the live-file gate below still refuses any real
-          // dependency on files mainline does not hold. The tag is
-          // INCARNATION-specific (round 18, the r17 advice): after
-          // DROP BRANCH + CREATE BRANCH with the same name, picks
-          // landed from the previous incarnation carry its `#inc`
-          // suffix and never exempt the new, unrelated branch.
-          //
-          // inc == 0 marks a pre-round-18 BASE file: with no
-          // incarnation identity, never exempt (conservative — the
-          // gate refuses rather than trusting a tag that a same-name
-          // predecessor branch could have written)
+          // commit of THIS branch incarnation is exempt: the branch
+          // history already serialized this commit after it
+          // (consecutive range picks would otherwise refuse on their
+          // own landed prefix); the live-file gate below still refuses
+          // any real dependency on files mainline does not hold. The
+          // `#inc` tag (round 18, the r17 advice) keeps picks landed
+          // from a dropped same-name predecessor from exempting the
+          // new branch; inc == 0 (a pre-round-18 BASE marker) never
+          // exempts.
           skipWinner = m => inc != 0L &&
             pickedFrom(m, name, inc).exists(_ < branchVersion)
           ).foreach { reason =>
@@ -4498,36 +4547,21 @@ object VersionedTable {
             s"cherryPick '$name' v$branchVersion onto $dir: mainline " +
               s"is not logically disjoint ($reason)")
         }
-      val pLive = liveFiles(spark, dir, parent)
-      val pSet = pLive.toSet
-      locally {
-        val gone = (removes ++ dvChanged).filterNot(pSet)
-        require(gone.isEmpty,
-          s"cherryPick '$name' v$branchVersion: its delta touches files " +
-            s"mainline does not hold (${gone.take(3).mkString(", ")}) — " +
-            "it depends on earlier unlanded branch work; fastForward " +
-            "the branch, or pick in order")
-      }
-      val newV = parent + 1
-      val newLive = (pLive.filterNot(removes.toSet) ++ adds).distinct
+      val gone = touched.filterNot(pm.files.toSet)
+      require(gone.isEmpty,
+        s"cherryPick '$name' v$branchVersion: its delta touches files " +
+          s"mainline does not hold (${gone.take(3).mkString(", ")}) — " +
+          "it depends on earlier unlanded branch work; fastForward " +
+          "the branch, or pick in order")
+      val newLive = (pm.files.filterNot(d.removes.toSet) ++ d.adds).distinct
       val (stats, dv) = branchLanding(pm, vM, landSchema, landColmap,
-        newLive, adds, removes, dvChanged)
+        newLive, d.adds, d.removes, d.keptRemasked)
       val landMeta = persistentMeta(pm.meta) ++ meta +
         ("branch.cherryPicked" -> s"$name@$branchVersion#$inc")
-      if (land(spark, dir, s"cherryPick '$name' onto $dir", parent,
-          writerId, landSchema, newLive, removed = removes, stats = stats,
-          meta = landMeta, dv = dv, colmap = landColmap, onLost = None))
-        out = newV
-      else {
-        attemptsLeft -= 1
-        if (attemptsLeft <= 0)
-          throw new CommitConflict(
-            s"cherryPick '$name' onto $dir: lost the race for version " +
-              s"$newV and the retry budget is exhausted — retry")
-        parent = latestVersion(spark, dir)
-      }
+      land(spark, dir, op, parent, writerId, landSchema, newLive,
+        removed = d.removes, stats = stats, meta = landMeta, dv = dv,
+        colmap = landColmap, onLost = None)
     }
-    out
   }
 
   /** Land branch `name`'s NET effect (its tip vs its fork point) on
@@ -4549,41 +4583,25 @@ object VersionedTable {
     * rewrites), which admits mainline appends/deletes on untouched
     * files.
     *
-    * Divergence reconciliation (round 16 — VERDICT r15 #2): two
-    * one-sided divergences are well-defined and land automatically
-    * instead of refusing:
-    *   - SCHEMA: one side appended nullable columns (the
-    *     [[addColumns]] shape) while the other side's shape is
-    *     unchanged — the landing takes the extended schema and the
-    *     un-extended side's files null-fill (the pinned-schema read
-    *     contract, the exact mechanics addColumns already relies on);
+    * Divergence reconciliation (rounds 16–18): when mainline moved,
+    *   - SCHEMA: the landing schema is [[landingSchema]] — nullable
+    *     appends on either or both sides land as mainline's fields
+    *     then the branch's tail (same-name same-type appends converge),
+    *     and a rename on ONE side since the fork lands under the
+    *     renaming side's names; two-sided renames refuse;
     *   - DECLARATIONS (expectations / clustering / feed / tombstones):
-    *     changed on one side only — the landing takes the changed
-    *     side's set. New or tightened EXPECTATIONS are enforced
-    *     against the other side's since-fork added rows before the
-    *     CAS (one churn-sized aggregation), so a landing can never
-    *     admit rows a serialized declare-then-write would have
-    *     refused; existing pre-declaration rows are grandfathered,
-    *     the same contract as declaring on a live table.
-    * Two-sided DISJOINT changes also land (round 17, VERDICT r16 #2):
-    *   - both sides appended nullable columns with DISJOINT name sets
-    *     → the landing schema is mainline's fields (committed order)
-    *     followed by the branch's tail, both tails nullable — the
-    *     documented order rule;
-    *   - both sides re-declared DISJOINT keys (branch declared
-    *     `expect.a`, mainline `expect.b`) → union, each side's new
-    *     expectations cross-enforced on the other side's since-fork
-    *     adds exactly as in the one-sided case.
-    * One-sided RENAMES also land (round 18, VERDICT r17 missing #3):
-    * renames are metadata-only here ([[renameColumns]] — sticky
-    * physical names), so when only ONE side renamed columns since the
-    * fork, the landing matches columns by PHYSICAL identity and takes
-    * the renaming side's logical names and colmap; the other side's
-    * files carry the same bytes either way. Declared plain-token
-    * column lists (clustering, feed keys) rename through; an
-    * expectation whose free-form SQL mentions the old name refuses.
-    * Same-name/same-key two-sided changes, two-sided renames, and any
-    * drop/type change still refuse loudly: no automatic resolution.
+    *     a side that did not re-declare yields to the side that did;
+    *     both sides re-declaring DISJOINT keys land the union. New or
+    *     changed EXPECTATIONS are enforced against the other side's
+    *     since-fork added rows before the CAS (one churn-sized
+    *     aggregation; existing pre-declaration rows are grandfathered,
+    *     the same contract as declaring on a live table). Token lists
+    *     rename through a one-sided rename ([[renameDecls]]); an
+    *     expectation whose SQL mentions a renamed-away name refuses.
+    * Same-key two-sided re-declarations and anything the schema rule
+    * refuses still refuse loudly: no automatic resolution. On a quiet,
+    * state-identical mainline the branch lands wholesale (any
+    * migration, as its own snapshot rewrite did).
     *
     * Returns None when the branch has no commits past its fork point.
     * The branch itself is left in place (delete it after landing, or
@@ -4595,32 +4613,24 @@ object VersionedTable {
     requireMainline(dir, "fastForward")
     requireWriterId(writerId)
     val ref = branchRef(dir, name)
-    val (base, mainBase, brInc) = readBranchState(spark, dir, name)
+    val state = readBranchState(spark, dir, name)
+    val BranchState(base, mainBase, _) = state
     val tip = latestVersion(spark, ref)
     if (tip <= base) return None // nothing past the diff anchor
     val f = fs(spark, dir)
     val baseM = readManifest(spark, ref, base)
     val tipM = readManifest(spark, ref, tip)
-    val baseLive = baseM.files
-    val baseSet = baseLive.toSet
-    val tipLive = tipM.files
-    val tipSet = tipLive.toSet
-    val adds = tipLive.filterNot(baseSet)
-    val removes = baseLive.filterNot(tipSet)
-    val dvChanged = baseLive.filter(r =>
-      tipSet(r) && baseM.dv.get(r) != tipM.dv.get(r))
+    val d = diffManifests(baseM, tipM)
+    val (adds, removes) = (d.adds, d.removes)
     // the branch's WRITE set: what a disjoint mainline must not touch
-    val touched = (removes ++ dvChanged).toSet
-    def expectsOf(d: Map[String, String]) = d.collect {
+    val touched = (removes ++ d.keptRemasked).toSet
+    def expectsOf(decls: Map[String, String]) = decls.collect {
       case (k, sql) if k.startsWith(ExpectPrefix) =>
         k.stripPrefix(ExpectPrefix) -> sql
     }
-    var parent = latestVersion(spark, dir)
-    var attemptsLeft = math.max(1, rebaseAttempts)
-    var out: Option[Long] = None
-    while (out.isEmpty) {
+    val op = s"fastForward '$name' onto $dir"
+    Some(landBranch(spark, dir, op, rebaseAttempts) { parent =>
       val pm = readManifest(spark, dir, parent)
-      // ── reconcile the landing's schema + declarations (see scaladoc)
       // Wholesale adoption (the r15 behavior) applies only when
       // mainline is BOTH commit-quiet (parent == mainBase) and
       // state-identical to what the branch diverged from — then the
@@ -4632,322 +4642,145 @@ object VersionedTable {
       val wholesale = parent == mainBase &&
         pm.schema.map(schemaShape) == baseM.schema.map(schemaShape) &&
         pm.colmap == baseM.colmap && declsOf(pm) == declsOf(baseM)
-      val (landSchemaOpt, landDecls, landColmap) =
-        if (wholesale) (tipM.schema, declsOf(tipM), tipM.colmap)
+      val (landSchema, landDecls, landColmap) =
+        if (wholesale)
+          (tipM.schema.getOrElse(throw new IllegalStateException(
+            s"fastForward '$name': no schema receipt on the branch tip")),
+            declsOf(tipM), tipM.colmap)
         else {
           val mainM0 =
             if (parent == mainBase) pm
             else readManifest(spark, dir, mainBase)
-          val (sTip, sPm) =
-            (tipM.schema.map(schemaShape), pm.schema.map(schemaShape))
-          val sM0 = mainM0.schema.map(schemaShape)
-          val lc = (s: String) => s.toLowerCase(java.util.Locale.ROOT)
-          // ── one-sided RENAME reconciliation (round 18, VERDICT r17
-          // missing #3). Renames are metadata-only in this design —
-          // [[renameColumns]] keeps the PHYSICAL name the parquet
-          // bytes were written with — so the whole rule below matches
-          // columns by PHYSICAL identity: a rename on ONE side since
-          // the fork has a well-defined landing (take the renaming
-          // side's logical names for the shared columns), because the
-          // other side's files carry the same physical bytes either
-          // way and never wrote the old name anywhere durable.
-          // TWO-sided renames still refuse — even disjoint ones
-          // compose into a naming neither side declared, and no
-          // serialization order prefers one composition.
-          def p2l(s: Option[org.apache.spark.sql.types.StructType],
-              cm: Map[String, String]): Map[String, String] =
-            s.map(_.fields.map(f =>
-              lc(physName(cm, f.name)) -> f.name).toMap)
-              .getOrElse(Map.empty)
-          val baseP2L = p2l(baseM.schema, baseM.colmap)
-          def renamesOf(now: Map[String, String]): Map[String, String] =
-            baseP2L.keySet.intersect(now.keySet)
-              .filter(k => baseP2L(k) != now(k))
-              .map(k => k -> now(k)).toMap
-          val branchRen = renamesOf(p2l(tipM.schema, tipM.colmap))
-          val mainRen = renamesOf(p2l(pm.schema, pm.colmap))
-          if (branchRen.nonEmpty && mainRen.nonEmpty)
+          // TWO-sided renames refuse — even disjoint ones compose into
+          // a naming neither side declared
+          val branchRen = renamesBetween(baseM, tipM)
+          val mainRen = renamesBetween(baseM, pm)
+          if (branchRen.nonEmpty && mainRen.nonEmpty) {
+            def newNames(r: Map[String, (String, String)]) =
+              r.values.map(_._2).toSeq.sorted.take(3).mkString(", ")
             throw new CommitConflict(
-              s"fastForward '$name' onto $dir: both sides renamed " +
-                "columns since the fork (branch: " +
-                s"${branchRen.values.toSeq.sorted.take(3).mkString(", ")}" +
-                "; mainline: " +
-                s"${mainRen.values.toSeq.sorted.take(3).mkString(", ")}" +
-                ") — two-sided renames have no automatic resolution; " +
+              s"$op: both sides renamed columns since the fork (branch: " +
+                s"${newNames(branchRen)}; mainline: ${newNames(mainRen)}) " +
+                "— two-sided renames have no automatic resolution; " +
                 "reconcile by hand")
-          // phys → landed logical for fork-present columns (at most
-          // one side's map is non-empty past the guard above)
-          val renamed = branchRen ++ mainRen
-          // old logical → new logical, for the declaration fix-up
-          val renamedOld: Map[String, String] = renamed.collect {
-            case (ph, nw) if lc(baseP2L(ph)) != lc(nw) =>
-              baseP2L(ph) -> nw
           }
-          // schema: equal shapes with equal mappings land as-is;
-          // everything else runs ONE general additive rule (round 17,
-          // VERDICT r16 #2; physical-identity matching since round
-          // 18): the landing is well-defined iff
-          //   (a) the branch only APPENDED columns since its own diff
-          //       anchor, under physical identity (a branch drop,
-          //       type change, or reorder refuses; a branch RENAME of
-          //       an anchor column is fine — the physical prefix is
-          //       unchanged), and
-          //   (b) every column of that anchor still exists in
-          //       mainline's CURRENT schema at the same type — by
-          //       physical id, so a mainline rename doesn't hide it —
-          //       (a mainline drop or type change refuses; mainline
-          //       may itself have appended columns since ITS anchor,
-          //       including the carryover state after a previous
-          //       two-sided landing), and
-          //   (c) a branch-appended column's physical id is either
-          //       new to mainline, or present at the SAME type AND
-          //       the same logical name (convergent evolution); a
-          //       same-name type clash, or the same physical id under
-          //       different names, has no union.
-          // Landing order rule (documented contract): MAINLINE's
-          // fields first, in their committed order — renamed through
-          // the renaming side's map — then the branch's still-new
-          // tail. Every field one side's files lack is forced
-          // NULLABLE (those files null-fill it on read, the
-          // pinned-schema contract addColumns already relies on).
-          // A fresh branch column must never shadow a PHYSICAL name
-          // mainline files still carry, and the final logical names
-          // must stay distinct (a rename colliding with the other
-          // side's append refuses).
-          val landing: Option[(org.apache.spark.sql.types.StructType,
-              Map[String, String])] =
-            if (sPm == sTip && pm.colmap == tipM.colmap)
-              pm.schema.map(s => (s, pm.colmap))
-            else (baseM.schema, tipM.schema, pm.schema) match {
-              case (Some(baseS), Some(tipS), Some(pmS)) =>
-                val basePhys = physShape(baseS, baseM.colmap)
-                val tipPhys = physShape(tipS, tipM.colmap)
-                if (!(tipS.fields.length >= baseS.fields.length &&
-                    tipPhys.take(basePhys.length) == basePhys))
-                  throw new CommitConflict(
-                    s"fastForward '$name' onto $dir: the branch " +
-                      "changed its schema beyond a nullable append or " +
-                      "rename (a drop, type change, or reorder) while " +
-                      "mainline also moved — reconcile by hand")
-                val branchTail =
-                  tipS.fields.drop(baseS.fields.length).toSeq
-                val pmByPhys = pmS.fields
-                  .map(f => lc(physName(pm.colmap, f.name)) -> f).toMap
-                baseS.fields.foreach { f =>
-                  val ph = lc(physName(baseM.colmap, f.name))
-                  if (!pmByPhys.get(ph).exists(_.dataType == f.dataType))
-                    throw new CommitConflict(
-                      s"fastForward '$name' onto $dir: mainline no " +
-                        s"longer carries column '${f.name}' at the " +
-                        "branch's type — schemas diverged beyond " +
-                        "nullable appends; reconcile by hand")
-                }
-                // branch-appended columns: fresh, convergent, or clash
-                val (carried, fresh) = branchTail.partition(f =>
-                  pmByPhys.contains(lc(physName(tipM.colmap, f.name))))
-                carried.foreach { f =>
-                  val cur = pmByPhys(lc(physName(tipM.colmap, f.name)))
-                  if (cur.dataType != f.dataType)
-                    throw new CommitConflict(
-                      s"fastForward '$name' onto $dir: both sides " +
-                        s"appended column '${f.name}' at DIFFERENT " +
-                        "types — a same-name type clash has no union; " +
-                        "reconcile by hand")
-                  if (lc(cur.name) != lc(f.name))
-                    throw new CommitConflict(
-                      s"fastForward '$name' onto $dir: both sides " +
-                        "appended the same physical column " +
-                        s"('${f.name}') under DIFFERENT names — " +
-                        "reconcile by hand")
-                }
-                val takenPhys = pmS.fieldNames.toSeq
-                  .map(n => lc(physName(pm.colmap, n))).toSet ++
-                  pm.meta.getOrElse(DroppedPhysKey, "").split(',')
-                    .map(n => lc(n.trim)).filter(_.nonEmpty)
-                fresh.foreach(fld => require(
-                  !takenPhys(lc(physName(tipM.colmap, fld.name))),
-                  s"fastForward '$name': branch-added column " +
-                    s"'${fld.name}' collides with a physical name " +
-                    "mainline files still carry — rename it on the " +
-                    "branch"))
-                val tipTyped = tipPhys.toMap
-                val mainFields = pmS.fields.map { f =>
-                  val ph = lc(physName(pm.colmap, f.name))
-                  val nf = f.copy(name = renamed.getOrElse(ph, f.name))
-                  if (tipTyped.get(ph).contains(f.dataType)) nf
-                  else nf.copy(nullable = true)
-                }
-                val landFields =
-                  mainFields ++ fresh.map(_.copy(nullable = true))
-                locally {
-                  val names = landFields.map(f => lc(f.name)).toSeq
-                  if (names.distinct.length != names.length)
-                    throw new CommitConflict(
-                      s"fastForward '$name' onto $dir: a renamed or " +
-                        "appended column name collides with another " +
-                        "landed column — the landing has no union; " +
-                        "reconcile by hand")
-                }
-                // the landing colmap: each landed field keeps its
-                // side's sticky physical name (identity entries drop)
-                val cmap = (mainFields.toSeq zip pmS.fields.toSeq)
-                  .flatMap { case (nf, f) =>
-                    val ph = physName(pm.colmap, f.name)
-                    if (nf.name == ph) None else Some(nf.name -> ph)
-                  } ++ fresh.flatMap { f =>
-                    val ph = physName(tipM.colmap, f.name)
-                    if (f.name == ph) None else Some(f.name -> ph)
-                  }
-                Some((org.apache.spark.sql.types.StructType(landFields),
-                  cmap.toMap))
-              case _ => throw new CommitConflict(
-                s"fastForward '$name' onto $dir: schemas diverged and " +
-                  "a side is missing its schema receipt — reconcile " +
-                  "by hand")
-            }
-          val landSchema = landing.map(_._1)
-          val landCm = landing.map(_._2).getOrElse(pm.colmap)
+          val renamed = branchRen ++ mainRen
+          val (landSchema, landCm) = landingSchema(pm, baseM, tipM,
+              renamed.map { case (p, (_, n)) => p -> n }) { (r, c) =>
+            if (r == Refusal.Shadows) throw new IllegalArgumentException(
+              s"fastForward '$name': branch-added column '$c' collides " +
+                "with a physical name mainline files still carry — " +
+                "rename it on the branch")
+            throw new CommitConflict(s"$op: " + (r match {
+              case Refusal.BeyondAppend => "the branch changed its schema " +
+                "beyond a nullable append or rename (a drop, type change, " +
+                "or reorder) while mainline also moved"
+              case Refusal.MainlineLacks => s"mainline no longer carries " +
+                s"column '$c' at the branch's type — schemas diverged " +
+                "beyond nullable appends"
+              case Refusal.TypeClash => s"both sides appended column '$c' " +
+                "at DIFFERENT types — a same-name type clash has no union"
+              case Refusal.NameClash => "both sides appended the same " +
+                s"physical column ('$c') under DIFFERENT names"
+              case Refusal.Collides => s"a renamed or appended column name " +
+                s"('$c') collides with another landed column — the " +
+                "landing has no union"
+              case _ => "schemas diverged and a side is missing its " +
+                "schema receipt"
+            }) + " — reconcile by hand")
+          }
           // the colmap-aware read view of each side's files under the
           // LANDING schema — physical identity resolves a renamed
           // column to the same bytes on both sides' files
           val pmRead = pm.copy(colmap = landCm)
           val tipRead = tipM.copy(colmap = landCm)
+          def mainRowsHold(expects: Map[String, String]): Unit =
+            requireExpectationsHold(spark, dir, pmRead,
+              pm.files.filterNot(mainM0.files.toSet), landSchema, expects,
+              s"fastForward '$name': mainline rows added since the " +
+                "fork violate the branch's re-declared expectations")
+          def branchRowsHold(expects: Map[String, String]): Unit =
+            requireExpectationsHold(spark, ref, tipRead, adds, landSchema,
+              expects, s"fastForward '$name': branch rows violate " +
+                "mainline's re-declared expectations")
           // declarations: unchanged-side rule. A side that did not
           // re-declare since its own reference yields to the side that
-          // did; both-changed refuses. New/changed EXPECTATIONS are
-          // enforced on the other side's since-fork adds below.
+          // did; both-changed lands the union of DISJOINT changed keys
+          // (round 17) — each key takes the value of the one side that
+          // changed it, starting from MAINLINE's current set (it
+          // carries any previously-landed reconciliation). New/changed
+          // EXPECTATIONS are enforced on the other side's since-fork
+          // adds — a serialized declare-then-write on either side
+          // would have refused those rows.
           val (dTip, dPm) = (declsOf(tipM), declsOf(pm))
           val (dBase, dM0) = (declsOf(baseM), declsOf(mainM0))
+          def changedKeys(now: Map[String, String],
+              was: Map[String, String]): Set[String] =
+            (now.keySet ++ was.keySet).filter(k => now.get(k) != was.get(k))
+          def newExpects(src: Map[String, String], other: Map[String, String],
+              keys: String => Boolean) = expectsOf(src).filter {
+            case (n, sql) => keys(ExpectPrefix + n) &&
+              !expectsOf(other).get(n).contains(sql)
+          }
           val landD =
             if (dPm == dTip) dPm
             else if (dTip != dBase && dPm == dM0) {
-              // branch re-declared: its new expectations must hold on
-              // the rows mainline added since the walk base
-              val toCheck = expectsOf(dTip).filter { case (n, sql) =>
-                !expectsOf(dPm).get(n).contains(sql) }
-              val mainAdds = pm.files.filterNot(mainM0.files.toSet)
-              landSchema.foreach(sch => requireExpectationsHold(spark,
-                dir, pmRead, mainAdds, sch, toCheck,
-                s"fastForward '$name': mainline rows added since the " +
-                  "fork violate the branch's re-declared expectations"))
+              mainRowsHold(newExpects(dTip, dPm, _ => true))
               dTip
             } else if (dTip == dBase) {
-              // mainline re-declared (now or at an earlier landing):
-              // its expectations must hold on the branch's adds
-              val toCheck = expectsOf(dPm).filter { case (n, sql) =>
-                !expectsOf(dTip).get(n).contains(sql) }
-              landSchema.foreach(sch => requireExpectationsHold(spark,
-                ref, tipRead, adds, sch, toCheck,
-                s"fastForward '$name': branch rows violate mainline's " +
-                  "re-declared expectations"))
+              branchRowsHold(newExpects(dPm, dTip, _ => true))
               dPm
             } else {
-              // BOTH sides re-declared (round 17, VERDICT r16 #2):
-              // when the CHANGED KEY sets are disjoint — branch
-              // declared `expect.score_ok`, mainline independently
-              // declared `expect.region_ok` — the union is as
-              // well-defined as the one-sided case: each key was
-              // changed by exactly one side, so take that side's
-              // value. The landing starts from MAINLINE's current set
-              // (it carries any previously-landed reconciliation) and
-              // applies the branch's changed keys — adds, updates, and
-              // removals alike. Same-key changes on both sides still
-              // have no automatic resolution and refuse.
-              def changedKeys(now: Map[String, String],
-                  was: Map[String, String]): Set[String] =
-                (now.keySet ++ was.keySet).filter(k =>
-                  now.get(k) != was.get(k))
               val cTip = changedKeys(dTip, dBase)
               val cPm = changedKeys(dPm, dM0)
               val clash = cTip.intersect(cPm)
               if (clash.nonEmpty) throw new CommitConflict(
-                s"fastForward '$name' onto $dir: branch AND mainline " +
-                  "both re-declared the same keys " +
-                  s"(${clash.toSeq.sorted.take(3).mkString(", ")}) — " +
-                  "same-key declaration changes have no automatic " +
+                s"$op: branch AND mainline both re-declared the same " +
+                  s"keys (${clash.toSeq.sorted.take(3).mkString(", ")}) " +
+                  "— same-key declaration changes have no automatic " +
                   "resolution; re-declare on one side first")
-              // cross-enforcement, both directions: each side's new or
-              // changed EXPECTATIONS must hold on the OTHER side's
-              // since-reference adds — a serialized declare-then-write
-              // on either side would have refused those rows
-              val tipNewExpects = expectsOf(dTip).filter { case (n, sql) =>
-                cTip(ExpectPrefix + n) &&
-                  !expectsOf(dPm).get(n).contains(sql) }
-              val mainAdds = pm.files.filterNot(mainM0.files.toSet)
-              landSchema.foreach(sch => requireExpectationsHold(spark,
-                dir, pmRead, mainAdds, sch, tipNewExpects,
-                s"fastForward '$name': mainline rows added since the " +
-                  "fork violate the branch's re-declared expectations"))
-              val pmNewExpects = expectsOf(dPm).filter { case (n, sql) =>
-                cPm(ExpectPrefix + n) &&
-                  !expectsOf(dTip).get(n).contains(sql) }
-              landSchema.foreach(sch => requireExpectationsHold(spark,
-                ref, tipRead, adds, sch, pmNewExpects,
-                s"fastForward '$name': branch rows violate mainline's " +
-                  "re-declared expectations"))
-              (dPm -- cTip) ++
-                cTip.flatMap(k => dTip.get(k).map(k -> _))
+              mainRowsHold(newExpects(dTip, dPm, cTip))
+              branchRowsHold(newExpects(dPm, dTip, cPm))
+              (dPm -- cTip) ++ cTip.flatMap(k => dTip.get(k).map(k -> _))
             }
           // the landed declarations may not reference a renamed-away
-          // name: plain-token lists (clustering, feed keys) rename
-          // through exactly as [[renameColumns]] does on its own side;
-          // free-form expectation SQL cannot be rewritten soundly and
-          // refuses loudly (this also covers the no-adds case where
+          // name (this also covers the no-adds case where
           // cross-enforcement above had nothing to read)
-          val landD2 =
-            if (renamedOld.isEmpty) landD
-            else landD.map {
-              case (k, v) if k == ClusterKey || k == FeedKey =>
-                k -> v.split(',').toSeq.map(_.trim).filter(_.nonEmpty)
-                  .map(c => renamedOld.getOrElse(c, c)).mkString(",")
-              case (k, v) =>
-                if (k.startsWith(ExpectPrefix))
-                  renamedOld.keys.find(mentionsColumn(v, _)).foreach(c =>
-                    throw new CommitConflict(
-                      s"fastForward '$name' onto $dir: expectation " +
-                        s"'${k.stripPrefix(ExpectPrefix)}' ($v) " +
-                        s"mentions renamed column '$c' — free-form " +
-                        "SQL cannot be rewritten through a rename; " +
-                        "drop it and re-declare under the new name"))
-                k -> v
-            }
+          val landD2 = renameDecls(landD, renamedNames(renamed)) {
+            (n, sql, c) => throw new CommitConflict(
+              s"$op: expectation '$n' ($sql) mentions renamed column " +
+                s"'$c' — free-form SQL cannot be rewritten through a " +
+                "rename; drop it and re-declare under the new name")
+          }
           if (parent != mainBase)
             rebaseConflict(spark, dir, mainBase, parent, touched,
               Seq.empty, readsTable,
-              allowAdditiveSchema = sPm != sM0,
+              allowAdditiveSchema = pm.schema.map(schemaShape) !=
+                mainM0.schema.map(schemaShape),
               allowDeclChange = dPm != dM0,
               // a mainline winner that only re-labeled columns
               // (physical shape unchanged) is admissible when the
               // landing reconciles by physical identity (round 18)
               allowRename = mainRen.nonEmpty).foreach { reason =>
               throw new CommitConflict(
-                s"fastForward '$name' onto $dir: mainline advanced past " +
-                  s"the fork point and is not logically disjoint ($reason) " +
-                  "— re-fork, replay the branch work, or reconcile by hand")
+                s"$op: mainline advanced past the fork point and is not " +
+                  s"logically disjoint ($reason) — re-fork, replay the " +
+                  "branch work, or reconcile by hand")
             }
           (landSchema, landD2, landCm)
         }
-      val newV = parent + 1
-      val pLive = liveFiles(spark, dir, parent)
-      locally {
-        val pSet = pLive.toSet
-        val gone = removes.filterNot(pSet)
-        require(gone.isEmpty, // unreachable past the gate; belt anyway
-          s"fastForward '$name': mainline no longer holds " +
-            s"${gone.take(3).mkString(", ")}")
-      }
+      val gone = removes.filterNot(pm.files.toSet)
+      require(gone.isEmpty, // unreachable past the gate; belt anyway
+        s"fastForward '$name': mainline no longer holds " +
+          s"${gone.take(3).mkString(", ")}")
       // kept mainline files (minus the branch's removes) first, then
       // the branch's added files — deterministic order, no dupes (a
       // branch add is by construction not a mainline live file)
-      val newLiveOrdered =
-        (pLive.filterNot(removes.toSet) ++ adds).distinct
-      val schema = landSchemaOpt
-        .getOrElse(throw new IllegalStateException(
-          s"fastForward '$name': no schema receipt on either side"))
+      val newLive = (pm.files.filterNot(removes.toSet) ++ adds).distinct
       // after a rename (one-sided reconciliation, or a wholesale-landed
       // branch rename) each side's stats re-key to the landed names
-      val (stats, dv) = branchLanding(pm, tipM, schema, landColmap,
-        newLiveOrdered, adds, removes, dvChanged)
+      val (stats, dv) = branchLanding(pm, tipM, landSchema, landColmap,
+        newLive, adds, removes, d.keptRemasked)
       // landing meta = persistent table state only (per-commit
       // receipts — recorded scopes, rescan receipts, stream markers —
       // describe their own commit and never ride a landing; round 16,
@@ -4958,10 +4791,10 @@ object VersionedTable {
           .filterNot { case (k, _) => isDeclKey(k) } ++
           landDecls ++ meta +
           ("branch.landed" -> name) + ("branch.landedTip" -> tip.toString)
-      if (land(spark, dir, s"fastForward '$name' onto $dir", parent,
-          writerId, schema, newLiveOrdered, removed = removes,
-          stats = stats, meta = landMeta, dv = dv, colmap = landColmap,
-          onLost = None)) {
+      val won = land(spark, dir, op, parent, writerId, landSchema, newLive,
+        removed = removes, stats = stats, meta = landMeta, dv = dv,
+        colmap = landColmap, onLost = None)
+      if (won) {
         // advance the diff anchor: the NEXT landing nets tip2 vs this
         // tip and gates from this mainline version — repeated
         // stage-validate-land cycles each publish their increment,
@@ -4969,23 +4802,14 @@ object VersionedTable {
         // tip <= base check. Plain overwrite: any racer that got here
         // landed the SAME tip (the mainline CAS decided), identical
         // content either way.
-        val basePath = new org.apache.hadoop.fs.Path(
-          s"${branchLogDirOf(rootOf(dir), name)}/BASE")
-        val outS = f.create(basePath, true)
-        try outS.write(s"base=$tip\nmainBase=$newV\nts=${
-          commitClock(spark)}\ninc=$brInc\n".getBytes("UTF-8"))
-        finally outS.close()
-        out = Some(newV)
-      } else {
-        attemptsLeft -= 1
-        if (attemptsLeft <= 0)
-          throw new CommitConflict(
-            s"fastForward '$name' onto $dir: lost the race for version " +
-              s"$newV and the retry budget is exhausted — retry")
-        parent = latestVersion(spark, dir)
+        val out = f.create(new org.apache.hadoop.fs.Path(
+          s"${branchLogDirOf(rootOf(dir), name)}/BASE"), true)
+        try out.write(state.copy(base = tip, mainBase = parent + 1)
+          .marker(commitClock(spark)).getBytes("UTF-8"))
+        finally out.close()
       }
-    }
-    out
+      won
+    })
   }
 
   /** Receipt of a [[rebaseBranch]]: the branch's new diff anchor (=
@@ -5009,8 +4833,11 @@ object VersionedTable {
     *   - pure delta commits (appends, file rewrites, DV masks) whose
     *     rewritten/re-masked files mainline still holds as the branch
     *     left them;
-    *   - additive schema extensions (the addColumns shape), including
-    *     convergent same-name/same-type appends mainline made too;
+    *   - schema changes [[landingSchema]] admits, anchored at the
+    *     branch predecessor and landing on the rebased state — the
+    *     rule [[fastForward]] lands by, so a rebase refuses exactly
+    *     what the landing would (e.g. a branch append whose name a
+    *     mainline rename took);
     *   - declaration changes (expectations/clustering/feed) whose
     *     changed keys mainline did not also change — plain-token
     *     lists rename through a mainline rename, free-form
@@ -5018,7 +4845,7 @@ object VersionedTable {
     * What refuses (ALL-OR-NOTHING: the branch is untouched, and the
     * error names the first conflicting branch commit and the cleanly
     * replayable prefix, the q263 partial-contract shape):
-    *   - a branch rename/drop/type change (re-fork and re-derive);
+    *   - a branch rename, or a schema change the rule refuses;
     *   - a delta touching files mainline no longer holds, or holds
     *     under a different deletion mask (a REAL conflict);
     *   - same-key declaration changes on both sides;
@@ -5049,7 +4876,8 @@ object VersionedTable {
     requireMainline(dir, "rebaseBranch")
     requireWriterId(writerId)
     val ref = branchRef(dir, name)
-    val (base, mainBase, inc) = readBranchState(spark, dir, name)
+    val state = readBranchState(spark, dir, name)
+    val BranchState(base, mainBase, inc) = state
     val tip = latestVersion(spark, ref)
     val root = rootOf(dir)
     val f = fs(spark, dir)
@@ -5062,35 +4890,22 @@ object VersionedTable {
     val mT = readManifest(spark, dir, mainTip)
     val m0 = readManifest(spark, dir, mainBase)
     val baseM = readManifest(spark, ref, base)
-    val lc = (s: String) => s.toLowerCase(java.util.Locale.ROOT)
-    val tS = mT.schema.getOrElse(throw new IllegalStateException(
-      s"rebaseBranch '$name': no schema receipt on mainline $dir"))
-    val tByPhys = tS.fields
-      .map(x => lc(physName(mT.colmap, x.name)) -> x).toMap
-    baseM.schema.getOrElse(throw new IllegalStateException(
-      s"rebaseBranch '$name': no schema receipt on the branch anchor"))
-      .fields.foreach { fld =>
-        val ph = lc(physName(baseM.colmap, fld.name))
-        if (!tByPhys.get(ph).exists(_.dataType == fld.dataType))
-          throw new CommitConflict(
-            s"rebaseBranch '$name' onto $dir: mainline no longer " +
-              s"carries column '${fld.name}' at the branch's type — " +
-              "schemas diverged beyond renames/appends; re-fork")
-      }
+    // the rebased state starts at mainline's tip, which must still
+    // carry every fork-anchor column at the branch's type (the shared
+    // rule with no branch tail to land)
+    val (s0, cm0) = landingSchema(mT, baseM, baseM, Map.empty) {
+      case (Refusal.MainlineLacks, c) => throw new CommitConflict(
+        s"rebaseBranch '$name' onto $dir: mainline no longer carries " +
+          s"column '$c' at the branch's type — schemas diverged beyond " +
+          "renames/appends; re-fork")
+      case _ => throw new IllegalStateException(
+        s"rebaseBranch '$name': no schema receipt on mainline $dir or " +
+          "on the branch anchor")
+    }
     // mainline renames since the old fork: old logical → new logical
     // (plain-token decl lists from the branch rename through; SQL
     // mentions refuse below)
-    val renamedOld: Map[String, String] = {
-      def p2l(s: Option[org.apache.spark.sql.types.StructType],
-          cm: Map[String, String]): Map[String, String] =
-        s.map(_.fields.map(x =>
-          lc(physName(cm, x.name)) -> x.name).toMap).getOrElse(Map.empty)
-      val was = p2l(m0.schema, m0.colmap)
-      val now = p2l(mT.schema, mT.colmap)
-      was.keySet.intersect(now.keySet)
-        .filter(k => lc(was(k)) != lc(now(k)))
-        .map(k => was(k) -> now(k)).toMap
-    }
+    val renamedOld = renamedNames(renamesBetween(m0, mT))
     // picks of THIS incarnation already on mainline drop from replay
     // (inc == 0 = pre-round-18 marker with no incarnation identity:
     // drop nothing — replaying a picked commit is safe, the landing
@@ -5104,56 +4919,42 @@ object VersionedTable {
       (a.keySet ++ b.keySet).filter(k => a.get(k) != b.get(k))
     }
     // fold the branch's commits onto the mainline-tip state
-    var curFiles = mT.files
-    var curDv = mT.dv
-    var curStats = mT.stats
-    var curMeta = persistentMeta(mT.meta)
-    var curSchema = tS
+    var cur = mT.copy(schema = Some(s0), colmap = cm0,
+      meta = persistentMeta(mT.meta))
+    def curSchema = cur.schema.get
     var prevB = baseM
     var replayed = 0L
     var skipped = 0L
     val allAdds = scala.collection.mutable.ArrayBuffer.empty[String]
     val bodies =
       scala.collection.mutable.ArrayBuffer.empty[(Long, String)]
-    def prefixNote(v: Long) =
-      if (v == base + 1) "no commits are"
-      else s"commits ${base + 1}..${v - 1} are"
     for (v <- base + 1 to tip) {
       val bm = readManifest(spark, ref, v)
+      def refuse(why: String, next: String): Nothing = {
+        val prefix =
+          if (v == base + 1) "no commits are"
+          else s"commits ${base + 1}..${v - 1} are"
+        throw new CommitConflict(s"rebaseBranch '$name' onto $dir: " +
+          s"branch version $v $why — $prefix cleanly replayable; $next")
+      }
       if (prevB.colmap != bm.colmap)
-        throw new CommitConflict(
-          s"rebaseBranch '$name' onto $dir: branch version $v renamed " +
-            s"columns — ${prefixNote(v)} cleanly replayable; re-fork " +
-            "and re-derive from there")
+        refuse("renamed columns", "re-fork and re-derive from there")
       if (prevB.schema.map(schemaShape) != bm.schema.map(schemaShape)) {
-        val tailF = additiveExtension(prevB.schema, bm.schema)
-          .getOrElse(throw new CommitConflict(
-            s"rebaseBranch '$name' onto $dir: branch version $v " +
-              s"changed the schema beyond a nullable append — " +
-              s"${prefixNote(v)} cleanly replayable; re-fork and " +
-              "re-derive from there"))
-        tailF.foreach { fld =>
-          curSchema.fields.find(x => lc(x.name) == lc(fld.name)) match {
-            case Some(x) if x.dataType == fld.dataType => () // convergent
-            case Some(_) => throw new CommitConflict(
-              s"rebaseBranch '$name' onto $dir: branch version $v " +
-                s"appends column '${fld.name}' at a type mainline " +
-                s"already carries differently — ${prefixNote(v)} " +
-                "cleanly replayable; re-derive from there")
-            case None =>
-              val taken = curSchema.fieldNames.toSeq
-                .map(n => lc(physName(mT.colmap, n))).toSet ++
-                curMeta.getOrElse(DroppedPhysKey, "").split(',')
-                  .map(n => lc(n.trim)).filter(_.nonEmpty)
-              if (taken(lc(fld.name))) throw new CommitConflict(
-                s"rebaseBranch '$name' onto $dir: branch version $v " +
-                  s"appends column '${fld.name}' shadowing a physical " +
-                  s"name mainline files still carry — ${prefixNote(v)} " +
-                  "cleanly replayable; rename it and re-derive")
-              curSchema = org.apache.spark.sql.types.StructType(
-                curSchema.fields :+ fld.copy(nullable = true))
-          }
+        val (s, cm) = landingSchema(cur, prevB, bm, Map.empty) { (r, c) =>
+          refuse(r match {
+            case Refusal.TypeClash =>
+              s"appends column '$c' at a type mainline already carries " +
+                "differently"
+            case Refusal.NameClash =>
+              s"appends column '$c' that mainline carries under another name"
+            case Refusal.Shadows => s"appends column '$c' shadowing a " +
+              "physical name mainline files still carry"
+            case Refusal.Collides =>
+              s"appends column '$c' whose name a mainline column holds"
+            case _ => "changed the schema beyond a nullable append"
+          }, "re-fork and re-derive from there")
         }
+        cur = cur.copy(schema = Some(s), colmap = cm)
       }
       locally { // declaration changes: apply the branch's changed keys
         val (dp, dc) = (declsOf(prevB), declsOf(bm))
@@ -5161,84 +4962,46 @@ object VersionedTable {
           val changed =
             (dp.keySet ++ dc.keySet).filter(k => dp.get(k) != dc.get(k))
           val clash = changed.intersect(mainChangedKeys)
-          if (clash.nonEmpty) throw new CommitConflict(
-            s"rebaseBranch '$name' onto $dir: branch version $v and " +
-              "mainline both re-declared " +
-              s"(${clash.toSeq.sorted.take(3).mkString(", ")}) — " +
-              s"${prefixNote(v)} cleanly replayable; re-declare on " +
-              "one side and re-derive from there")
-          val applied = changed.toSeq.flatMap { k =>
-            dc.get(k).map { value =>
-              val v2 =
-                if ((k == ClusterKey || k == FeedKey) &&
-                    renamedOld.nonEmpty)
-                  value.split(',').toSeq.map(_.trim).filter(_.nonEmpty)
-                    .map(c => renamedOld.getOrElse(c, c)).mkString(",")
-                else value
-              if (k.startsWith(ExpectPrefix))
-                renamedOld.keys.find(mentionsColumn(v2, _)).foreach(c =>
-                  throw new CommitConflict(
-                    s"rebaseBranch '$name' onto $dir: branch version " +
-                      s"$v declares expectation '$v2' mentioning " +
-                      s"renamed column '$c' — re-declare under the " +
-                      "new name and re-derive"))
-              k -> v2
-            }
+          if (clash.nonEmpty) refuse("and mainline both re-declared " +
+            s"(${clash.toSeq.sorted.take(3).mkString(", ")})",
+            "re-declare on one side and re-derive from there")
+          val applied = renameDecls(dc.filter { case (k, _) => changed(k) },
+              renamedOld) { (_, sql, c) =>
+            refuse(s"declares expectation '$sql' mentioning renamed " +
+              s"column '$c'", "re-declare under the new name and re-derive")
           }
-          curMeta = (curMeta -- changed) ++ applied
+          cur = cur.copy(meta = (cur.meta -- changed) ++ applied)
         }
       }
-      val pSet = prevB.files.toSet
-      val cSet = bm.files.toSet
-      val adds = bm.files.filterNot(pSet)
-      val removes = prevB.files.filterNot(cSet)
-      val dvChanged = (prevB.files ++ bm.files).distinct
-        .filter(r => prevB.dv.get(r) != bm.dv.get(r))
+      val d = diffManifests(prevB, bm)
       if (picked(v)) skipped += 1
       else {
-        val curSet = curFiles.toSet
+        val (pSet, curSet) = (prevB.files.toSet, cur.files.toSet)
         // the REAL conflict class: a rewritten/re-masked file must
         // still be live in the rebased predecessor state, under the
         // exact mask the branch's own predecessor carried
-        val conflict = (removes ++ dvChanged).distinct.filter(r =>
-          pSet(r) && (!curSet(r) || curDv.get(r) != prevB.dv.get(r)))
-        if (conflict.nonEmpty) throw new CommitConflict(
-          s"rebaseBranch '$name' onto $dir: branch version $v " +
-            "rewrites/re-masks files mainline no longer holds as the " +
-            s"branch left them (${conflict.take(3).mkString(", ")}" +
-            s"${if (conflict.length > 3) "…" else ""}) — " +
-            s"${prefixNote(v)} cleanly replayable; drop or re-derive " +
-            "this commit, then retry")
-        curFiles = curFiles.filterNot(removes.toSet) ++ adds
-        val curSet2 = curFiles.toSet
-        curDv = (curDv -- removes -- dvChanged) ++
-          dvChanged.filter(curSet2).flatMap(r =>
-            bm.dv.get(r).map(r -> _)) ++
-          adds.flatMap(r => bm.dv.get(r).map(r -> _))
-        // branch stats re-key through physical identity to mainline's
-        // current names (branch tail columns keep their own names)
-        val addSet = adds.toSet
-        val addStats = bm.stats.collect {
-          case (rel, cols) if addSet(rel) =>
-            rel -> cols.flatMap { case (c, vv) =>
-              val ph = lc(physName(bm.colmap, c))
-              tByPhys.get(ph).map(_.name -> vv).orElse(
-                if (curSchema.fieldNames.contains(c)) Some(c -> vv)
-                else None)
-            }
-        }.filter(_._2.nonEmpty)
-        curStats = curStats.collect {
-          case (rel, cols) if curSet2(rel) => rel -> cols
-        } ++ addStats
-        allAdds ++= adds
+        val conflict = (d.removes ++ d.remasked).distinct.filter(r =>
+          pSet(r) && (!curSet(r) || cur.dv.get(r) != prevB.dv.get(r)))
+        if (conflict.nonEmpty) refuse("rewrites/re-masks files mainline " +
+          "no longer holds as the branch left them (" +
+          s"${conflict.take(3).mkString(", ")}" +
+          s"${if (conflict.length > 3) "…" else ""})",
+          "drop or re-derive this commit, then retry")
+        // branch stats re-key through physical identity to the rebased
+        // names; the branch's masks replace the state's for its files
+        val files = cur.files.filterNot(d.removes.toSet) ++ d.adds
+        val (stats, dv) = branchLanding(cur, bm, curSchema, cur.colmap,
+          files, d.adds, d.removes, d.remasked)
+        cur = cur.copy(files = files, stats = stats, dv = dv)
+        allAdds ++= d.adds
         replayed += 1
         val newV = mainTip + replayed
         val perCommit = bm.meta -- persistentMeta(bm.meta).keys
         bodies += ((newV, manifestBody(newV, newV - 1, writerId,
-          curSchema, stagingDir = bm.stagingDir, files = curFiles,
-          removed = removes, stats = curStats,
-          meta = curMeta ++ perCommit, dv = curDv,
-          tsMs = commitClock(spark), colmap = mT.colmap)))
+          curSchema, stagingDir = bm.stagingDir, files = files,
+          removed = d.removes, stats = stats,
+          meta = cur.meta ++ perCommit, dv = dv,
+          tsMs = commitClock(spark), colmap = cur.colmap)))
       }
       prevB = bm
     }
@@ -5254,8 +5017,7 @@ object VersionedTable {
           k.stripPrefix(ExpectPrefix) -> sql
       }
       if (toCheck.nonEmpty && allAdds.nonEmpty)
-        requireExpectationsHold(spark, dir,
-          mT.copy(dv = curDv, colmap = mT.colmap), allAdds.toSeq,
+        requireExpectationsHold(spark, dir, cur, allAdds.toSeq,
           curSchema, toCheck,
           s"rebaseBranch '$name': branch rows violate mainline's " +
             "re-declared expectations")
@@ -5268,25 +5030,20 @@ object VersionedTable {
         java.util.UUID.randomUUID().toString.take(8)}")
     f.mkdirs(tmpDir)
     try {
-      val forkBody = { // the fork manifest is mainline@tip, verbatim
-        val in = f.open(manifestPath(dir, mainTip))
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      }
       def writeFile(nm: String, body: String): Unit = {
         val outS = f.create(
           new org.apache.hadoop.fs.Path(s"$tmpDir/$nm"), true)
         try outS.write(body.getBytes("UTF-8")) finally outS.close()
       }
-      writeFile(s"$mainTip.manifest", forkBody)
+      // the fork manifest is mainline@tip, verbatim
+      writeFile(s"$mainTip.manifest",
+        readText(f, manifestPath(dir, mainTip)))
       bodies.foreach { case (v, body) =>
         writeFile(s"$v.manifest", body) }
-      writeFile("BASE", s"base=$mainTip\nmainBase=$mainTip\n" +
-        s"ts=$stamp\ninc=$stamp\n")
+      writeFile("BASE", BranchState(mainTip, mainTip, stamp).marker(stamp))
       // quiescence CAS: the branch must not have moved during the
       // replay — a concurrent commit would be silently dropped
-      val (b2, mb2, inc2) = readBranchState(spark, dir, name)
-      if (b2 != base || mb2 != mainBase || inc2 != inc ||
+      if (readBranchState(spark, dir, name) != state ||
           latestVersion(spark, ref) != tip)
         throw new CommitConflict(
           s"rebaseBranch '$name': the branch moved during the rebase " +

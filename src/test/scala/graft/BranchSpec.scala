@@ -358,4 +358,67 @@ class BranchSpec extends SparkSpec {
       readsTable = false)
     assert(rows(VersionedTable.read(spark, dir)).contains((500L, "w1x")))
   }
+
+  test("branch landing verdicts agree: fastForward vs rebaseBranch then fastForward") {
+    // fastForward, cherryPick and rebaseBranch share ONE column-identity
+    // rule, so landing directly and landing after a rebase reach the
+    // same verdict on every divergence shape. Each shape: the branch
+    // appends its own `score` column and the row [9, d, S]; mainline
+    // diverges as named.
+    val score = Seq(org.apache.spark.sql.types.StructField("score",
+      org.apache.spark.sql.types.StringType, nullable = true))
+    val shapes: Seq[(String, String => Unit, Boolean)] = Seq(
+      ("mainline rename v -> score x same-name same-type branch append",
+        d => VersionedTable.renameColumns(spark, d, Map("v" -> "score"),
+          0L, "w"), false),
+      ("both sides append the same name and type", { d =>
+        VersionedTable.addColumns(spark, d, score, 0L, "w")
+        VersionedTable.commitDelta(spark, d,
+          Some(spark.range(1).coalesce(1).select(lit(50L).as("k"),
+            lit("m").as("v"), lit("M").as("score"))), Seq.empty, 1L, "w")
+      }, true),
+      ("branch-only fresh append", d => VersionedTable.commitDelta(spark, d,
+        Some(df("m", 1, 50).coalesce(1)), Seq.empty, 0L, "w"), true))
+    def setup(tag: String, mainline: String => Unit): String = {
+      val dir = tmp(tag)
+      VersionedTable.commit(spark, dir, df("a", 4), -1L, "w")
+      VersionedTable.createBranch(spark, dir, "dev")
+      val ref = VersionedTable.branchRef(dir, "dev")
+      VersionedTable.addColumns(spark, ref, score, 0L, "wb")
+      VersionedTable.commitDelta(spark, ref,
+        Some(spark.range(1).coalesce(1).select(lit(9L).as("k"),
+          lit("d").as("v"), lit("S").as("score"))), Seq.empty, 1L, "wb")
+      mainline(dir)
+      dir
+    }
+    // the landed branch row's non-key values, or None when refused
+    def verdict(dir: String, rebaseFirst: Boolean): Option[Seq[String]] =
+      try {
+        if (rebaseFirst) VersionedTable.rebaseBranch(spark, dir, "dev", "w")
+        VersionedTable.fastForward(spark, dir, "dev", "w",
+          readsTable = false)
+        Some(VersionedTable.read(spark, dir).where($"k" === 9L).head()
+          .toSeq.drop(1).map(String.valueOf))
+      } catch { case _: CommitConflict => None }
+    for ((shape, mainline, lands) <- shapes) {
+      val direct = verdict(setup("br-dir", mainline), rebaseFirst = false)
+      val rebased = verdict(setup("br-reb", mainline), rebaseFirst = true)
+      assert(direct == rebased,
+        s"$shape: fastForward $direct vs rebase + fastForward $rebased")
+      assert(direct == (if (lands) Some(Seq("d", "S")) else None),
+        s"$shape: the landing must read back the branch's own values")
+    }
+    // the refused rebase names the first conflicting branch commit and
+    // leaves the branch chain untouched
+    val dir = setup("br-ren", shapes.head._2)
+    val ref = VersionedTable.branchRef(dir, "dev")
+    val before = VersionedTable.versions(spark, ref)
+    val e = intercept[CommitConflict] {
+      VersionedTable.rebaseBranch(spark, dir, "dev", "w")
+    }
+    assert(e.getMessage.contains("branch version 1"), e.getMessage)
+    assert(VersionedTable.versions(spark, ref) == before &&
+      VersionedTable.branchBase(spark, dir, "dev") == 0L,
+      "all-or-nothing: the branch chain must be untouched")
+  }
 }

@@ -57,16 +57,34 @@ class DedupSimilaritySpec extends SparkSpec {
   }
 
   test("simhash block counts that don't divide 64 keep the pigeonhole contract") {
-    // blocks=12,14,15 give the last block a PAST-THE-END bit range
-    // ((blocks-1)*ceil(64/blocks) >= 64); it must degrade to an empty
-    // block that trivially agrees — a wrapped negative shift would
-    // silently drop true near-dup pairs
-    val corpus = tables.documents
-    def pairs(blocks: Int) =
-      Dedup.simhashPairs(corpus, "doc_id", "text", maxHamming = 3, blocks = blocks)
+    // blocks=12,14,15 give the trailing block(s) a PAST-THE-END bit
+    // range ((blocks-1)*ceil(64/blocks) >= 64); they must degrade to
+    // empty blocks that trivially agree — a wrapped negative shift
+    // would silently drop true near-dup pairs. Planted fingerprints:
+    // each true pair differs in 3 bits lying in 3 different real
+    // blocks at every block count, so it agrees on exactly
+    // blocks - 3 blocks only when the empty blocks count as agreeing;
+    // the decoys sit at hamming 4 and must fail the verify.
+    val rnd = new scala.util.Random(64)
+    def flip(fp: Long, bits: Int*) = bits.foldLeft(fp)((x, b) => x ^ (1L << b))
+    val (a, b, c, d) = (rnd.nextLong(), rnd.nextLong(), rnd.nextLong(),
+      rnd.nextLong())
+    val fps = Seq(
+      1L -> a, 2L -> flip(a, 10, 30, 50),
+      3L -> b, 4L -> flip(b, 3, 27, 61),
+      5L -> c, 6L -> flip(c, 7, 44, 58),
+      7L -> d, 8L -> flip(d, 12, 33, 47, 62),   // hamming-4 decoy
+      9L -> flip(a, 5, 15, 25, 35))             // hamming 4 from id 1
+    val truth = (for ((i, x) <- fps; (j, y) <- fps
+      if i < j && java.lang.Long.bitCount(x ^ y) <= 3) yield (i, j)).toSet
+    assert(truth == Set((1L, 2L), (3L, 4L), (5L, 6L)), s"planted: $truth")
+    val fp = fps.toDF("doc_id", "fp")
+    for (blocks <- Seq(12, 14, 15)) {
+      val got = Dedup.simhashPairsFromFingerprints(fp, "doc_id",
+        maxHamming = 3, blocks = blocks)
         .select($"id1", $"id2").as[(Long, Long)].collect().toSet
-    val reference = pairs(4) // divides 64 exactly; pigeonhole-exact
-    for (b <- Seq(12, 14, 15)) assert(pairs(b) == reference, s"blocks=$b")
+      assert(got == truth, s"blocks=$blocks")
+    }
   }
 
   test("native langId kernel equals the HOF argmax formulation on the corpus") {

@@ -460,34 +460,29 @@ class DeletionVectorSpec extends SparkSpec {
     }
   }
 
-  test("distributed hit-count branch: parity with the driver loop past the crossover") {
-    // r13 blemish: deleteWhere's per-file hit counts collected to a
-    // driver map regardless of scale. Past graft.prune.driverFiles the
-    // counts now aggregate in ONE distributed job (footer read next to
-    // each count); this pins branch parity — same receipts, same
-    // masks, same surviving rows — on identical twin tables.
-    val a = tmp("dv-branch-a"); val b = tmp("dv-branch-b")
-    Seq(a, b).foreach(mkTable)
+  test("deleteWhere finds its hit stats in one distributed job") {
+    // hits aggregate per file with each file's footer read next to its
+    // count in ONE distributed job at every scale: no driver-side count
+    // map, no second footer metadata job
+    val dir = tmp("dv-onejob")
+    mkTable(dir)
     val pred = "k % 7 = 2 or k >= 95"
-    val driverSt = VersionedTable.deleteWhere(spark, a, pred, 0L, "w")
-    spark.conf.set("graft.prune.driverFiles", "0") // force the job branch
-    val jobSt =
-      try VersionedTable.deleteWhere(spark, b, pred, 0L, "w")
-      finally spark.conf.unset("graft.prune.driverFiles")
-    assert(driverSt.rowsDeleted == jobSt.rowsDeleted &&
-      driverSt.filesMasked == jobSt.filesMasked &&
-      driverSt.filesDropped == jobSt.filesDropped &&
-      driverSt.filesTotal == jobSt.filesTotal,
-      s"branch receipts diverged: $driverSt vs $jobSt")
-    val ra = VersionedTable.read(spark, a).as[(Long, String)].collect().toSet
-    val rb = VersionedTable.read(spark, b).as[(Long, String)].collect().toSet
-    assert(ra == rb, "branch parity broken: surviving rows differ")
-    // twin tables differ only in part-file UUIDs — compare by index
-    def byPart(dir: String) = VersionedTable.readManifest(spark, dir, 1L)
-      .dv.map { case (rel, (_, n)) =>
-        "part-\\d+".r.findFirstIn(rel).get -> n }
-    assert(byPart(a) == byPart(b),
-      s"per-file mask counts diverged: ${byPart(a)} vs ${byPart(b)}")
+    var st: VersionedTable.DeleteStats = null
+    val jobs = jobsStarted {
+      st = VersionedTable.deleteWhere(spark, dir, pred, 0L, "w")
+    }
+    // the delete's whole job footprint on this 4-file table
+    assert(jobs == 4, s"deleteWhere started $jobs jobs")
+    val hit = (0L until 100L).filter(k => k % 7 == 2 || k >= 95)
+    assert(st.rowsDeleted == hit.length.toLong && st.filesMasked == 4L &&
+      st.filesDropped == 0L && st.filesTotal == 4L, s"receipt: $st")
+    val survivors = VersionedTable.read(spark, dir).as[(Long, String)]
+      .collect().toSet
+    assert(survivors == (0L until 100L).filterNot(hit.contains)
+      .map(k => (k, s"r$k")).toSet, "surviving rows")
+    val masks = VersionedTable.readManifest(spark, dir, 1L).dv
+    assert(masks.size == 4 && masks.values.map(_._2).sum == hit.length,
+      s"per-file mask counts: $masks")
   }
 }
 
