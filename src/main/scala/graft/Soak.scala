@@ -116,9 +116,12 @@ object Soak {
     import graft.operators.Dedup
     val shh = docs.select(col("doc_id"),
       graft.plans.TextExpressions.shingleHash64(col("text"), 3).as("shh"))
-    def bucketStats(name: String, keyed: org.apache.spark.sql.DataFrame,
-        keys: Seq[String]): Long = {
-      val r = keyed.groupBy(keys.map(col): _*).count()
+    // bucket stats over the operator's own key column (the array<struct>
+    // its candidate self-join explodes): max bucket and Σc²/2, the
+    // candidate-pair upper bound summed over every band
+    def bucketStats(name: String, df: org.apache.spark.sql.DataFrame,
+        keys: org.apache.spark.sql.Column): Long = {
+      val r = df.select(explode(keys).as("__key")).groupBy(col("__key")).count()
         .agg(max(col("count")).as("mx"),
           sum(col("count") * col("count")).as("sq"),
           count(lit(1)).as("nb")).collect()(0)
@@ -126,18 +129,18 @@ object Soak {
       println(f"[soak] $name buckets=$nb maxBucket=$mx pairUpperBound=${sq / 2}")
       sq / 2
     }
-    val mhBanded = Dedup.minhashBanded(shh, "doc_id", "shh", 128, 16)
-    val mhPairsUB = bucketStats("minhash_buckets", mhBanded, Seq("band", "sig"))
+    val mhPairsUB = bucketStats("minhash_buckets",
+      shh.withColumn("__sig", Dedup.minhashSig(col("shh"), 128)),
+      Dedup.lshBands(col("__sig"), 16, 8))
     if (mhPairsUB <= 3_000_000_000L)
       time("minhash_candidates")(
         Dedup.minhashCandidates(shh, "doc_id", "shh", 128, 16).count())
     else println(s"[soak] minhash_candidates SKIPPED: corpus true-dup density " +
       s"puts the candidate set at ~$mhPairsUB pairs (bucket skew itself is " +
       "bounded — see maxBucket above)")
-    val simKeyed = Dedup.simhashKeyed(
-      Dedup.simhashFingerprints(docs, "doc_id", "text"), "doc_id",
-      maxHamming = 3, blocks = 6)
-    val simPairsUB = bucketStats("simhash6_buckets", simKeyed, Seq("combo", "ck"))
+    val simPairsUB = bucketStats("simhash6_buckets",
+      Dedup.simhashFingerprints(docs, "doc_id", "text"),
+      Dedup.simhashKeys(col("fp"), maxHamming = 3, blocks = 6))
     if (simPairsUB <= 3_000_000_000L)
       time("simhash_pairs_6block")(
         Dedup.simhashPairs(docs, "doc_id", "text", maxHamming = 3, blocks = 6).count())
@@ -187,13 +190,11 @@ object Soak {
         emb, emb.filter(col("vec_id") % math.max(1L, nVec / 100) === 0),
         "vec_id", "vec_id", "embedding", k = 5, nCentroids = 16, nProbe = 3).count())
     // multi-band pair generation — same guard discipline as the text
-    // banded joins: measure bucket skew on one band first, scale by
-    // bands for the pair upper bound
+    // banded joins: bucket skew over all 4 bands' keys first
     val nPair = math.min(nVec, 200000L)
     val embSlice = emb.limit(nPair.toInt)
-    val cosUB = bucketStats("cosine_band0_buckets",
-      embSlice.select(graft.operators.Similarity.rpLshBucket(
-        col("embedding"), 12).as("b")), Seq("b")) * 4
+    val cosUB = bucketStats("cosine_4band_buckets", embSlice,
+      graft.operators.Similarity.rpLshKeys(col("embedding"), 12, 4))
     if (cosUB <= 3_000_000_000L)
       time("cosine_dup_pairs_4band")(
         graft.operators.Similarity.cosineDupPairs(
@@ -240,8 +241,8 @@ object Soak {
     val sdSlice = emb.filter(col("vec_id") < sdRows)
     val sdK = math.max(8, (sdRows / 2000).toInt)
     val sdUB = bucketStats("semdedup_cells",
-      graft.operators.Similarity.semDedupAssign(sdSlice, "vec_id", "embedding", sdK)
-        .select(col("cluster")), Seq("cluster"))
+      graft.operators.Similarity.semDedupAssign(sdSlice, "vec_id", "embedding", sdK),
+      array(col("cluster")))
     if (sdUB <= 1_000_000_000L)
       time(s"semdedup_${sdRows}_k$sdK")(
         graft.operators.Similarity.semDedup(

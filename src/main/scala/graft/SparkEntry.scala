@@ -409,21 +409,7 @@ object SparkEntry {
     //     chunks), so banded output must EQUAL the brute-force all-pairs
     //     hamming scan — asserted here, with n_docs as the
     //     oracle-recomputed anchor ---
-    "q36_dedup_simhash" -> ((s, dir) => {
-      val docs = t(s, dir).documents
-      val banded = graft.operators.Dedup.simhashPairs(docs, "doc_id", "text",
-          maxHamming = 3).select(col("id1"), col("id2"))
-      val fp = graft.operators.Dedup.simhashFingerprints(docs, "doc_id", "text")
-      val brute = fp.as("a").join(fp.as("b"), col("a.doc_id") < col("b.doc_id"))
-        .filter(graft.operators.Dedup.hamming64(col("a.fp"), col("b.fp")) <= 3)
-        .select(col("a.doc_id").as("id1"), col("b.doc_id").as("id2"))
-      val diff = brute.withColumn("in_b", lit(1))
-        .join(banded.withColumn("in_l", lit(1)), Seq("id1", "id2"), "full_outer")
-        .agg(
-          coalesce(sum(when(col("in_l").isNull, 1)), lit(0)).cast("long").as("n_missed"),
-          coalesce(sum(when(col("in_b").isNull, 1)), lit(0)).cast("long").as("n_extra"))
-      docs.agg(count(lit(1)).cast("long").as("n_docs")).crossJoin(diff)
-    }),
+    "q36_dedup_simhash" -> ((s, dir) => simhashVsBrute(s, dir, blocks = 4)),
 
     // --- EXACT n-gram Jaccard pairs via inverted shingle index ---
     "q37_jaccard_exact" -> ((s, dir) =>
@@ -3993,21 +3979,7 @@ object SparkEntry {
     //     blocks, ~32-bit keys — buckets stay O(1) at 50M+ docs where
     //     the 4×16-bit default floods): pigeonhole-EXACT for hamming≤3
     //     like q36, so banded must equal brute force pair-for-pair. ---
-    "q132_simhash_6block" -> ((s, dir) => {
-      val docs = t(s, dir).documents
-      val banded = graft.operators.Dedup.simhashPairs(docs, "doc_id", "text",
-          maxHamming = 3, blocks = 6).select(col("id1"), col("id2"))
-      val fp = graft.operators.Dedup.simhashFingerprints(docs, "doc_id", "text")
-      val brute = fp.as("a").join(fp.as("b"), col("a.doc_id") < col("b.doc_id"))
-        .filter(graft.operators.Dedup.hamming64(col("a.fp"), col("b.fp")) <= 3)
-        .select(col("a.doc_id").as("id1"), col("b.doc_id").as("id2"))
-      val diff = brute.withColumn("in_b", lit(1))
-        .join(banded.withColumn("in_l", lit(1)), Seq("id1", "id2"), "full_outer")
-        .agg(
-          coalesce(sum(when(col("in_l").isNull, 1)), lit(0)).cast("long").as("n_missed"),
-          coalesce(sum(when(col("in_b").isNull, 1)), lit(0)).cast("long").as("n_extra"))
-      docs.agg(count(lit(1)).cast("long").as("n_docs")).crossJoin(diff)
-    }),
+    "q132_simhash_6block" -> ((s, dir) => simhashVsBrute(s, dir, blocks = 6)),
 
     // --- streaming replay through the real engine (watermark + window
     //     + append-mode parquet sink, Trigger.AvailableNow, checkpoint
@@ -5254,6 +5226,26 @@ object SparkEntry {
   private def centroidsDf(s: SparkSession, cents: Seq[Seq[Double]]): DataFrame = {
     import s.implicits._
     cents.zipWithIndex.map { case (c, i) => (i.toLong, c) }.toDF("cid", "cv")
+  }
+
+  /** q36 and q132: banded SimHash pairs (hamming ≤ 3) against the
+    * brute-force all-pairs hamming scan — the block scheme is
+    * pigeonhole-exact, so n_missed and n_extra must both be 0 — with
+    * n_docs as the oracle-recomputed anchor. */
+  private def simhashVsBrute(s: SparkSession, dir: String, blocks: Int): DataFrame = {
+    val docs = t(s, dir).documents
+    val banded = graft.operators.Dedup.simhashPairs(docs, "doc_id", "text",
+        maxHamming = 3, blocks = blocks).select(col("id1"), col("id2"))
+    val fp = graft.operators.Dedup.simhashFingerprints(docs, "doc_id", "text")
+    val brute = fp.as("a").join(fp.as("b"), col("a.doc_id") < col("b.doc_id"))
+      .filter(graft.operators.Dedup.hamming64(col("a.fp"), col("b.fp")) <= 3)
+      .select(col("a.doc_id").as("id1"), col("b.doc_id").as("id2"))
+    val diff = brute.withColumn("in_b", lit(1))
+      .join(banded.withColumn("in_l", lit(1)), Seq("id1", "id2"), "full_outer")
+      .agg(
+        coalesce(sum(when(col("in_l").isNull, 1)), lit(0)).cast("long").as("n_missed"),
+        coalesce(sum(when(col("in_b").isNull, 1)), lit(0)).cast("long").as("n_extra"))
+    docs.agg(count(lit(1)).cast("long").as("n_docs")).crossJoin(diff)
   }
 
   /** q35: MinHash-LSH candidate pairs, verified by exact Jaccard. */

@@ -70,43 +70,34 @@ object Dedup {
     transform(sequence(lit(0), lit(bands - 1)),
       b => struct(b.as("band"), xxhash64(b, slice(sig, b * rowsPerBand + 1, lit(rowsPerBand))).as("sig")))
 
-  /** Candidate pairs (id1 < id2) from MinHash LSH banding.
-    * `hashCol` holds the doc's array<long> of shingle hashes. */
-  /** The banded key stream (id, band, sig) that [[minhashCandidates]]
-    * self-joins — exposed so scale soaks can measure bucket skew
-    * (max / Σc² over buckets) BEFORE paying for the join. */
-  private[graft] def minhashBanded(
-      df: DataFrame, idCol: String, hashCol: String,
-      numHashes: Int, bands: Int): DataFrame = {
-    require(numHashes % bands == 0, "numHashes must divide into bands")
-    df.withColumn("__sig", minhashSig(col(hashCol), numHashes))
-      .select(col(idCol), explode(lshBands(col("__sig"), bands, numHashes / bands)).as("b"))
-      .select(col(idCol), col("b.band").as("band"), col("b.sig").as("sig"))
-  }
-
-  def minhashCandidates(
-      df: DataFrame, idCol: String, hashCol: String,
-      numHashes: Int = 128, bands: Int = 16): DataFrame = {
-    val banded = minhashBanded(df, idCol, hashCol, numHashes, bands)
-    banded.as("a")
-      .join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.sig") === col("b.sig") &&
-          col(s"a.$idCol") < col(s"b.$idCol"))
+  /** Candidate pairs (id1 < id2) of rows sharing at least one key —
+    * the one candidate stage of the LSH family (MinHash bands, SimHash
+    * block combos, [[Similarity]]'s RP-LSH bands). `keys` is an
+    * array<struct> column over `df`; it is exploded once and the rows
+    * self-join once on the whole key struct, so the plan is one shuffle
+    * keyed by (band, key) however many bands there are. A pair sharing
+    * several keys meets once per key; the distinct collapses them.
+    * `keys` must read per-row work from columns of `df`, not recompute
+    * it: an expression inside a `transform` lambda runs once per
+    * element. */
+  private[operators] def bandedPairs(df: DataFrame, idCol: String,
+      keys: Column): DataFrame = {
+    val keyed = df.select(col(idCol), explode(keys).as("__key"))
+    keyed.as("a")
+      .join(keyed.as("b"),
+        col("a.__key") === col("b.__key") && col(s"a.$idCol") < col(s"b.$idCol"))
       .select(col(s"a.$idCol").as("id1"), col(s"b.$idCol").as("id2"))
       .distinct()
   }
 
-  /** Source tables are often few large parquet files -> few input
-    * partitions; per-row compute-heavy ops (k×m hashing) must fan out
-    * first or one task does all the work. Cheap shuffle vs serial scan. */
-  // spread a SMALL scan (1-2 local splits) before the expensive per-row
-  // kernels; at corpus scale the scan already has plenty of splits and
-  // an unconditional repartition would be a wasted full shuffle of the
-  // text (r19, guide §2.4 — the secondMoments rule applied here)
-  private def fanOut(df: DataFrame): DataFrame = {
-    val para = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < math.max(2, para / 2)) df.repartition(para)
-    else df
+  /** Candidate pairs (id1 < id2) from MinHash LSH banding.
+    * `hashCol` holds the doc's array<long> of shingle hashes. */
+  def minhashCandidates(
+      df: DataFrame, idCol: String, hashCol: String,
+      numHashes: Int = 128, bands: Int = 16): DataFrame = {
+    require(numHashes % bands == 0, "numHashes must divide into bands")
+    bandedPairs(df.withColumn("__sig", minhashSig(col(hashCol), numHashes)),
+      idCol, lshBands(col("__sig"), bands, numHashes / bands))
   }
 
   /** Full fuzzy-dedup pipeline: LSH candidates -> exact Jaccard verify.
@@ -121,7 +112,7 @@ object Dedup {
       df: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, threshold: Double = 0.8,
       numHashes: Int = 128, bands: Int = 16): DataFrame = {
-    val shh = fanOut(df)
+    val shh = Relational.fanOut(df)
       .select(col(idCol),
         graft.plans.TextExpressions.shingleHash64(col(textCol), shingleN).as("shh"))
     val cands = minhashCandidates(shh, idCol, "shh", numHashes, bands)
@@ -151,7 +142,7 @@ object Dedup {
       df: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, threshold: Double = 0.5,
       maxDocFreq: Int = Int.MaxValue): DataFrame = {
-    val sh = fanOut(df).select(col(idCol),
+    val sh = Relational.fanOut(df).select(col(idCol),
       wordShingles(tokens(col(textCol)), shingleN).as("sh"))
       .withColumn("n_sh", size(col("sh")))
     val inv0 = sh.select(col(idCol), col("n_sh"), explode(col("sh")).as("s"))
@@ -177,6 +168,32 @@ object Dedup {
   }
 
   // ---------------- exact-substring (verbatim-span) dedup ----------------
+
+  /** The (id, pos, h) window-fingerprint stream behind
+    * [[verbatimSpans]] — native kernel: tokens byte-hashed once,
+    * windows chain-mixed, O(T) string work per doc (a slice+concat
+    * formulation rebuilds every window string, O(T·minLen) —
+    * measured 3.2× slower at minLen=8). */
+  private def windowStream(df: DataFrame, idCol: String, textCol: String,
+      minLen: Int): DataFrame =
+    Relational.fanOut(df)
+      .select(col(idCol),
+        posexplode(graft.plans.TextExpressions.windowHash64(
+          col(textCol), minLen)).as(Seq("__p", "h")))
+      .select(col(idCol), (col("__p") + 1).as("pos"), col("h"))
+
+  /** The audit surface for [[verbatimSpans]]' doc-frequency guard: the
+    * window fingerprints it DROPPED (doc frequency > `maxDocFreq`),
+    * with their frequencies, hottest first — vocabulary-sized output.
+    * A license-header boilerplate corpus shows up here, not as a
+    * silently missing span. */
+  def verbatimHotWindows(df: DataFrame, idCol: String, textCol: String,
+      minLen: Int = 20, maxDocFreq: Int = 50): DataFrame =
+    windowStream(df, idCol, textCol, minLen)
+      .groupBy(col("h"))
+      .agg(countDistinct(col(idCol)).as("doc_freq"))
+      .filter(col("doc_freq") > maxDocFreq)
+      .orderBy(col("doc_freq").desc, col("h").asc)
 
   /** All maximal token-aligned verbatim overlaps of ≥ `minLen` tokens
     * between document pairs, as concrete SPANS
@@ -210,32 +227,6 @@ object Dedup {
     * diagonal adjacency). The hash never leaves the engine: the output
     * spans are hash-free positions+lengths, so a SQL oracle replays
     * them by joining the window STRINGS instead. */
-  /** The (id, pos, h) window-fingerprint stream behind
-    * [[verbatimSpans]] — native kernel: tokens byte-hashed once,
-    * windows chain-mixed, O(T) string work per doc (a slice+concat
-    * formulation rebuilds every window string, O(T·minLen) —
-    * measured 3.2× slower at minLen=8). */
-  private def windowStream(df: DataFrame, idCol: String, textCol: String,
-      minLen: Int): DataFrame =
-    fanOut(df)
-      .select(col(idCol),
-        posexplode(graft.plans.TextExpressions.windowHash64(
-          col(textCol), minLen)).as(Seq("__p", "h")))
-      .select(col(idCol), (col("__p") + 1).as("pos"), col("h"))
-
-  /** The audit surface for [[verbatimSpans]]' doc-frequency guard: the
-    * window fingerprints it DROPPED (doc frequency > `maxDocFreq`),
-    * with their frequencies, hottest first — vocabulary-sized output.
-    * A license-header boilerplate corpus shows up here, not as a
-    * silently missing span. */
-  def verbatimHotWindows(df: DataFrame, idCol: String, textCol: String,
-      minLen: Int = 20, maxDocFreq: Int = 50): DataFrame =
-    windowStream(df, idCol, textCol, minLen)
-      .groupBy(col("h"))
-      .agg(countDistinct(col(idCol)).as("doc_freq"))
-      .filter(col("doc_freq") > maxDocFreq)
-      .orderBy(col("doc_freq").desc, col("h").asc)
-
   def verbatimSpans(df: DataFrame, idCol: String, textCol: String,
       minLen: Int = 20, maxDocFreq: Int = 50): DataFrame =
     verbatimSpansImpl(df, idCol, textCol, minLen, maxDocFreq,
@@ -412,14 +403,14 @@ object Dedup {
     * per-row expression, so fingerprinting needs NO shuffle at all.
     * Docs with zero tokens get fingerprint 0. */
   def simhashFingerprints(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    fanOut(df).select(col(idCol),
+    Relational.fanOut(df).select(col(idCol),
       graft.plans.TextExpressions.simhash64(col(textCol)).as("fp"))
 
   /** Dataflow formulation (explode tokens → 64 bit-vote sum aggregates
     * in one groupBy): one shuffle of every token's votes. Kept for the
     * kernel equality spec. */
   def simhashFingerprintsAgg(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val tok = fanOut(df)
+    val tok = Relational.fanOut(df)
       .select(col(idCol), explode_outer(tokens(col(textCol))).as("__t"))
       .select(col(idCol), when(col("__t").isNotNull, xxhash64(col("__t"))).as("__h"))
     val voteExprs = (0 until 64).map { i =>
@@ -436,6 +427,34 @@ object Dedup {
 
   /** Hamming distance between two 64-bit fingerprints. */
   def hamming64(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
+
+  /** SimHash block-LSH keys of one fingerprint: one (combo, ck) struct
+    * per C(blocks, blocks − maxHamming) combination of blocks, `ck`
+    * hashing the fingerprint's bits in those blocks. A constant-size
+    * expression: the combos are one literal table walked by `transform`,
+    * so the plan does not grow with the combo count (455 at blocks = 15). */
+  private[graft] def simhashKeys(fp: Column, maxHamming: Int, blocks: Int): Column = {
+    require(blocks > maxHamming, s"need blocks > maxHamming for pigeonhole")
+    require(blocks <= 16, s"blocks=$blocks: keys would be too narrow to prune")
+    // block i covers bits [i*w, (i+1)*w) (last block takes the remainder),
+    // kept as an in-place mask: two fingerprints agree on block i iff
+    // their masked bits are equal. Blocks that don't divide 64 can leave
+    // trailing blocks empty (e.g. blocks=12 → w=6 → block 11 starts past
+    // bit 63); mask 0 makes an empty block trivially agree for every
+    // pair, which preserves the pigeonhole recall contract — a mask
+    // built from a negative length would instead silently drop true
+    // near-dup pairs.
+    val w = (64 + blocks - 1) / blocks
+    val masks = typedLit((0 until blocks).map { i =>
+      val len = math.min(w, 64 - i * w)
+      if (len <= 0) 0L
+      else (if (len >= 64) -1L else (1L << len) - 1) << (i * w)
+    })
+    val combos = typedLit(
+      (0 until blocks).combinations(blocks - maxHamming).map(_.toSeq).toSeq)
+    transform(combos, (combo, ci) => struct(ci.as("combo"),
+      xxhash64(transform(combo, i => fp.bitwiseAND(masks(i)))).as("ck")))
+  }
 
   /** SimHash near-dup pairs: block LSH + exact hamming verify.
     *
@@ -456,34 +475,6 @@ object Dedup {
     * 100M+ docs — shuffle scales linearly, verify stays proportional to
     * true near-dups. That trade is the point: more tables, empty
     * buckets. */
-  /** The combo-keyed stream (id, fp, combo, ck) that [[simhashPairs]]
-    * self-joins — exposed for bucket-skew soaks. */
-  private[graft] def simhashKeyed(
-      fp: DataFrame, idCol: String, maxHamming: Int, blocks: Int): DataFrame = {
-    require(blocks > maxHamming, s"need blocks > maxHamming for pigeonhole")
-    require(blocks <= 16, s"blocks=$blocks: keys would be too narrow to prune")
-    // block i covers bits [i*w, (i+1)*w) (last block takes the remainder)
-    val w = (64 + blocks - 1) / blocks
-    def blockVal(i: Int): Column = {
-      val len = math.min(w, 64 - i * w)
-      // blocks that don't divide 64 can leave trailing blocks empty
-      // (e.g. blocks=12 → w=6 → block 11 starts past bit 63); an empty
-      // block trivially agrees for every pair, which preserves the
-      // pigeonhole recall contract — a negative shift would instead wrap
-      // mod 64 and silently drop true near-dup pairs.
-      if (len <= 0) lit(0L)
-      else {
-        val mask = if (len >= 64) -1L else (1L << len) - 1
-        shiftrightunsigned(col("fp"), i * w).bitwiseAND(lit(mask))
-      }
-    }
-    val combos = (0 until blocks).combinations(blocks - maxHamming).toSeq
-    combos.zipWithIndex.map { case (combo, ci) =>
-      fp.select(col(idCol), col("fp"), lit(ci).as("combo"),
-        xxhash64(combo.map(blockVal): _*).as("ck"))
-    }.reduce(_ unionByName _)
-  }
-
   def simhashPairs(
       df: DataFrame, idCol: String, textCol: String, maxHamming: Int = 3,
       blocks: Int = 4): DataFrame =
@@ -497,14 +488,12 @@ object Dedup {
   def simhashPairsFromFingerprints(
       fp: DataFrame, idCol: String, maxHamming: Int = 3,
       blocks: Int = 4): DataFrame = {
-    val keyed = simhashKeyed(fp, idCol, maxHamming, blocks)
-    keyed.as("a")
-      .join(keyed.as("b"),
-        col("a.combo") === col("b.combo") && col("a.ck") === col("b.ck") &&
-          col(s"a.$idCol") < col(s"b.$idCol"))
-      .select(col(s"a.$idCol").as("id1"), col(s"b.$idCol").as("id2"),
-        hamming64(col("a.fp"), col("b.fp")).as("hamming"))
-      .distinct()
+    val fps = fp.select(col(idCol), col("fp"))
+    bandedPairs(fps, idCol, simhashKeys(col("fp"), maxHamming, blocks))
+      .join(fps.select(col(idCol).as("id1"), col("fp").as("fp1")), "id1")
+      .join(fps.select(col(idCol).as("id2"), col("fp").as("fp2")), "id2")
+      .select(col("id1"), col("id2"),
+        hamming64(col("fp1"), col("fp2")).as("hamming"))
       .filter(col("hamming") <= maxHamming)
   }
 

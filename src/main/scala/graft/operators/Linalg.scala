@@ -43,12 +43,8 @@ object Linalg {
       (Long, Array[java.math.BigDecimal], Array[Array[java.math.BigDecimal]]) = {
     require(dim >= 1 && dim <= 128, "dim in [1,128]")
     // a small-file input arrives as one split, serializing the ×2145
-    // explode into a single task; spread it first. At corpus scale the
-    // scan has plenty of splits and this branch never fires (no extra
-    // shuffle where it matters).
-    val para = df.sparkSession.sparkContext.defaultParallelism
-    val src = if (df.rdd.getNumPartitions < math.max(2, para / 2))
-      df.repartition(para) else df
+    // explode into a single task; spread it first
+    val src = Relational.fanOut(df)
     // ONE corpus pass (r19, guide §1.2): the old count/min/max-size
     // pre-agg scanned the corpus once just to guard dims and fetch n.
     // The dim guard now lives in the kernel (fails loudly per row; a

@@ -259,6 +259,18 @@ object Relational {
       .withColumnRenamed("__rn", "rn")
   }
 
+  /** Spread a SMALL scan (fewer splits than half the default
+    * parallelism — a small-file input arrives as 1-2 splits) before
+    * expensive per-row kernel work, or one task does all of it. At
+    * corpus scale the scan already has plenty of splits and an
+    * unconditional repartition would be a wasted full shuffle (r19,
+    * guide §2.4). */
+  private[operators] def fanOut(df: DataFrame): DataFrame = {
+    val para = df.sparkSession.sparkContext.defaultParallelism
+    if (df.rdd.getNumPartitions < math.max(2, para / 2)) df.repartition(para)
+    else df
+  }
+
   // ------------------------------------------------------------------
   // Salted two-phase aggregation — hot-key defense beyond AQE.
   // ------------------------------------------------------------------

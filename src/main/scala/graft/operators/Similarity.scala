@@ -49,16 +49,6 @@ object Similarity {
     * doc ids etc.) transparently fall back to the id-type-generic
     * window formulation ([[Relational.topPerGroup]]) — same result,
     * shuffles scored rows instead of k-element states. */
-  /** Spread a SMALL scan (1-2 local splits) before expensive per-row
-    * kernel work; at corpus scale the scan already has plenty of splits
-    * and an unconditional repartition is a wasted full shuffle of the
-    * vectors (r19, guide §2.4 — the secondMoments/fanOut rule). */
-  private def fanOutSmall(df: DataFrame): DataFrame = {
-    val para = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < math.max(2, para / 2)) df.repartition(para)
-    else df
-  }
-
   private[operators] def boundedTopK(scored: DataFrame, idCol: String, k: Int): DataFrame = {
     val integral = scored.schema(idCol).dataType match {
       case org.apache.spark.sql.types.LongType | org.apache.spark.sql.types.IntegerType |
@@ -97,7 +87,7 @@ object Similarity {
       corpusId: String, queryId: String, vecCol: String,
       k: Int): DataFrame = {
     val q = queries.select(col(queryId).as("query_id"), asDouble(col(vecCol)).as("__qvec"))
-    val scored = fanOutSmall(corpus)
+    val scored = Relational.fanOut(corpus)
       .select(col(corpusId), asDouble(col(vecCol)).as("__cvec"))
       .join(broadcast(q), col(corpusId) =!= col("query_id")) // exclude self-match
       .withColumn("score", cosineFast(col("__cvec"), col("__qvec")))
@@ -129,9 +119,17 @@ object Similarity {
     }.reduce(_ bitwiseOR _)
   }
 
+  /** RP-LSH keys of one vector: `bands` (band, bucket) structs, band b
+    * bucketing by its own seeded plane set (seed 42 + b). The one key
+    * column of [[lshTopK]], [[cosineDupPairs]] and [[semDedupLsh]]. */
+  private[graft] def rpLshKeys(vec: Column, planes: Int, bands: Int): Column =
+    array((0 until bands).map(b => struct(lit(b).as("band"),
+      graft.plans.VectorExpressions.rpLshBucket(vec, planes, seed = 42L + b)
+        .as("bucket"))): _*)
+
   /** ANN top-k via LSH buckets: corpus and queries are bucketed by the
     * same planes; candidates = same bucket; exact cosine + top-k within.
-    * One shuffle per band on bucket id; recall traded for never
+    * One shuffle keyed by (band, bucket id); recall traded for never
     * broadcasting or cross-joining the corpus.
     *
     * BUILDING BLOCK, not the recommended ANN path: [[ivfTopK]] beats it
@@ -142,7 +140,7 @@ object Similarity {
     * streaming candidate generation); raise `bands`, never lower
     * `planes`, when recall is short.
     *
-    * Multi-band OR-amplification (same shape as [[cosineDupPairs]]):
+    * Multi-band OR-amplification (same keys as [[cosineDupPairs]]):
     * one band of p planes finds a θ-neighbor with probability
     * (1 − θ/π)^p — a coin-flip with no second chance; `bands`
     * independent seeded plane sets drive candidate recall to
@@ -156,17 +154,14 @@ object Similarity {
       k: Int, planes: Int = 12, bands: Int = 4): DataFrame = {
     val c = corpus.repartition(corpus.sparkSession.sparkContext.defaultParallelism)
       .select(col(corpusId), asDouble(col(vecCol)).as("__cvec"))
+      .withColumn("__key", explode(rpLshKeys(col("__cvec"), planes, bands)))
     val q = queries.select(col(queryId).as("query_id"), asDouble(col(vecCol)).as("__qvec"))
-    val scored = (0 until bands).map { band =>
-      val cb = c.withColumn("__bucket",
-        graft.plans.VectorExpressions.rpLshBucket(col("__cvec"), planes, seed = 42L + band))
-      val qb = q.withColumn("__bucket",
-        graft.plans.VectorExpressions.rpLshBucket(col("__qvec"), planes, seed = 42L + band))
-      cb.join(qb, Seq("__bucket"))
-        .filter(col(corpusId) =!= col("query_id"))
-        .select(col("query_id"), col(corpusId),
-          cosineFast(col("__cvec"), col("__qvec")).as("score"))
-    }.reduce(_ unionAll _).distinct()
+      .withColumn("__key", explode(rpLshKeys(col("__qvec"), planes, bands)))
+    val scored = c.join(q, Seq("__key"))
+      .filter(col(corpusId) =!= col("query_id"))
+      .select(col("query_id"), col(corpusId),
+        cosineFast(col("__cvec"), col("__qvec")).as("score"))
+      .distinct()
     boundedTopK(scored, corpusId, k)
   }
 
@@ -643,20 +638,6 @@ object Similarity {
     boundedTopK(scored.select(col("query_id"), col(corpusId), col("score")), corpusId, k)
   }
 
-  /** Embedding-cosine near-duplicate pairs (id1 < id2, cosine >= tau) —
-    * the embedding analogue of fuzzy text dedup, with the SAME
-    * multi-band OR-amplification shape as the MinHash path
-    * ([[Dedup]] lshBands): `bands` independent seeded plane sets, a
-    * bucket self-join per band, candidate union + distinct, then the
-    * exact cosine verify.
-    *
-    * One band is a coin-flip at moderate similarity — P(collide) =
-    * (1 − θ/π)^planes with no second chance — and a single hot bucket
-    * (real embedding corpora cluster) makes the self-join quadratic
-    * with no other key to split on. N bands drive recall to
-    * 1 − (1−p^planes)^N while each band's buckets stay small and
-    * differently partitioned, so no single bucket carries the whole
-    * hot cluster across every band. */
   /** Per-vector affine int8 quantization — the standard vector-store
     * compression step before ANN at scale (4× memory vs float32, 8×
     * vs the double working form): code_i = floor((x_i − mn)·255 /
@@ -813,7 +794,7 @@ object Similarity {
       k: Int, centroids: DataFrame, pq: graft.plans.PqCodebooks,
       nProbe: Int = 4, refine: Int = 0): DataFrame = {
     val cents = collectCentroids(centroids, "ivfPqTopK")
-    val assigned = ivfPqEncode(fanOutSmall(corpus), corpusId, vecCol, cents, pq)
+    val assigned = ivfPqEncode(Relational.fanOut(corpus), corpusId, vecCol, cents, pq)
     ivfPqServe(assigned, queries, corpusId, queryId, vecCol, k, cents, pq,
       nProbe, refine, exactCorpus = Some(corpus))
   }
@@ -909,32 +890,6 @@ object Similarity {
     }
   }
 
-  /** SemDeDup (Abbas et al. 2023, arXiv:2303.09540): cluster the
-    * embedding space, then prune semantic near-duplicates WITHIN each
-    * cluster, keeping one representative per near-dup set — the
-    * "semantic" tier above exact/MinHash/SimHash text dedup.
-    *
-    * Deterministic formulation (so an external oracle can replay it):
-    * centroids are the `k` lowest-id vectors (k-means-refined centroids
-    * drop in without changing the dataflow); a row is assigned to the
-    * max-cosine centroid (ties → lowest centroid id); a row is PRUNED
-    * iff some lower-id row in its cluster has cosine ≥ `tau` —
-    * representative = lowest id, the same keeper rule as exact dedup.
-    *
-    * Scale: up to [[LiteralBudgetDoubles]] (k×dim) the centroid table
-    * is inlined as plan literals and assignment is a pure per-row
-    * projection — zero shuffle, the IVF discipline. Past the budget
-    * (the paper's k ≈ 10k–50k clusters) assignment switches to a
-    * broadcast centroid-table join + partial-agg argmin
-    * ([[assignByCentroidTable]]) — constant-size plan, k×dim bytes per
-    * executor, one corpus-sized shuffle. The within-cluster pair join
-    * is the scale knob: one shuffle on cluster id, O(Σ cell²) compare
-    * work.
-    * At 100 TB-scale cluster counts that quadratic is the bound to
-    * manage: raise k so cells stay bounded, or swap the exact pair
-    * join for [[cosineDupPairs]]' banded RP-LSH *within* each cluster
-    * (bucket key = (cluster, band bucket)) — same tau semantics at
-    * LSH recall, and the hot-cell blowup disappears. */
   /** The assignment stage of [[semDedup]], exposed so callers (and the
     * soak's skew-first guard) can inspect cluster sizes without paying
     * for the within-cluster pair join: (id, __v, cluster), a pure
@@ -985,6 +940,32 @@ object Similarity {
       assignByCentroidTable(df.filter(col(vecCol).isNotNull), idCol, vecCol,
         centroidTable(df.filter(col(vecCol).isNotNull), idCol, vecCol, k))
 
+  /** SemDeDup (Abbas et al. 2023, arXiv:2303.09540): cluster the
+    * embedding space, then prune semantic near-duplicates WITHIN each
+    * cluster, keeping one representative per near-dup set — the
+    * "semantic" tier above exact/MinHash/SimHash text dedup.
+    *
+    * Deterministic formulation (so an external oracle can replay it):
+    * centroids are the `k` lowest-id vectors (k-means-refined centroids
+    * drop in without changing the dataflow); a row is assigned to the
+    * max-cosine centroid (ties → lowest centroid id); a row is PRUNED
+    * iff some lower-id row in its cluster has cosine ≥ `tau` —
+    * representative = lowest id, the same keeper rule as exact dedup.
+    *
+    * Scale: up to [[LiteralBudgetDoubles]] (k×dim) the centroid table
+    * is inlined as plan literals and assignment is a pure per-row
+    * projection — zero shuffle, the IVF discipline. Past the budget
+    * (the paper's k ≈ 10k–50k clusters) assignment switches to a
+    * broadcast centroid-table join + partial-agg argmin
+    * ([[assignByCentroidTable]]) — constant-size plan, k×dim bytes per
+    * executor, one corpus-sized shuffle. The within-cluster pair join
+    * is the scale knob: one shuffle on cluster id, O(Σ cell²) compare
+    * work.
+    * At 100 TB-scale cluster counts that quadratic is the bound to
+    * manage: raise k so cells stay bounded, or use [[semDedupLsh]]
+    * (banded RP-LSH *within* each cluster, key = (cluster, band,
+    * bucket)) — same tau semantics at LSH recall, and the hot-cell
+    * blowup disappears. */
   def semDedup(df: DataFrame, idCol: String, vecCol: String,
       k: Int = 8, tau: Double = 0.9,
       literalBudgetDoubles: Int = LiteralBudgetDoubles): DataFrame = {
@@ -1026,21 +1007,16 @@ object Similarity {
   def semDedupLsh(df: DataFrame, idCol: String, vecCol: String,
       k: Int = 8, tau: Double = 0.9, planes: Int = 10, bands: Int = 4,
       literalBudgetDoubles: Int = LiteralBudgetDoubles): DataFrame = {
-    // bands+2 consumers of the assignment — same materialization
-    // decision as semDedup (see there)
+    // the keyed self-join, both verify joins and the verdict join read
+    // the assignment — same materialization decision as semDedup (see
+    // there)
     val literal = useLiteralPath(df, vecCol, k, literalBudgetDoubles)
     val assignedRaw = semDedupAssignImpl(df, idCol, vecCol, k, literal)
     val assigned = if (literal) assignedRaw else assignedRaw.materialized()
-    val candidates = (0 until bands).map { band =>
-      val b = assigned.select(col(idCol), col("cluster"),
-        graft.plans.VectorExpressions.rpLshBucket(
-          col("__v"), planes, seed = 42L + band).as("__bucket"))
-      b.as("a").join(b.as("b"),
-          col("a.cluster") === col("b.cluster") &&
-            col("a.__bucket") === col("b.__bucket") &&
-            col(s"a.$idCol") < col(s"b.$idCol"))
-        .select(col(s"a.$idCol").as("id1"), col(s"b.$idCol").as("id2"))
-    }.reduce(_ unionAll _).distinct()
+    // the cluster stays in the key: pairs never meet across clusters
+    val candidates = Dedup.bandedPairs(assigned, idCol,
+      transform(rpLshKeys(col("__v"), planes, bands),
+        _.withField("cluster", col("cluster"))))
     val pruned = candidates
       .join(assigned.select(col(idCol).as("id1"), col("__v").as("__v1")), Seq("id1"))
       .join(assigned.select(col(idCol).as("id2"), col("__v").as("__v2")), Seq("id2"))
@@ -1051,21 +1027,26 @@ object Similarity {
         when(col("__pruned").isNull, 1L).otherwise(0L).as("kept"))
   }
 
+  /** Embedding-cosine near-duplicate pairs (id1 < id2, cosine >= tau) —
+    * the embedding analogue of fuzzy text dedup, with the SAME
+    * multi-band OR-amplification shape as the MinHash path
+    * ([[Dedup]] lshBands): `bands` independent seeded plane sets, one
+    * self-join keyed by (band, bucket), distinct, then the exact cosine
+    * verify.
+    *
+    * One band is a coin-flip at moderate similarity — P(collide) =
+    * (1 − θ/π)^planes with no second chance — and a single hot bucket
+    * (real embedding corpora cluster) makes the self-join quadratic
+    * with no other key to split on. N bands drive recall to
+    * 1 − (1−p^planes)^N while each band's buckets stay small and
+    * differently partitioned, so no single bucket carries the whole
+    * hot cluster across every band. */
   def cosineDupPairs(
       df: DataFrame, idCol: String, vecCol: String,
       tau: Double, planes: Int = 10, bands: Int = 4): DataFrame = {
     val base = df.repartition(df.sparkSession.sparkContext.defaultParallelism)
       .select(col(idCol), asDouble(col(vecCol)).as("__v"))
-    val candidates = (0 until bands).map { band =>
-      val b = base.select(col(idCol),
-        graft.plans.VectorExpressions.rpLshBucket(
-          col("__v"), planes, seed = 42L + band).as("__bucket"))
-      b.as("a").join(b.as("b"),
-          col("a.__bucket") === col("b.__bucket") &&
-            col(s"a.$idCol") < col(s"b.$idCol"))
-        .select(col(s"a.$idCol").as("id1"), col(s"b.$idCol").as("id2"))
-    }.reduce(_ unionAll _).distinct()
-    candidates
+    Dedup.bandedPairs(base, idCol, rpLshKeys(col("__v"), planes, bands))
       .join(base.select(col(idCol).as("id1"), col("__v").as("__v1")), Seq("id1"))
       .join(base.select(col(idCol).as("id2"), col("__v").as("__v2")), Seq("id2"))
       .withColumn("cosine", cosineFast(col("__v1"), col("__v2")))

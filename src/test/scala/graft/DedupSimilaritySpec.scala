@@ -87,6 +87,33 @@ class DedupSimilaritySpec extends SparkSpec {
     }
   }
 
+  test("LSH candidate stage: one keyed self-join, no per-band union") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Generate, Join, LogicalPlan, Union}
+    // the candidate join is the one where exploded keys meet exploded
+    // keys; the verify and verdict joins read one keyed side at most
+    def keyed(p: LogicalPlan) = p.find(_.isInstanceOf[Generate]).isDefined
+    val fp = Seq(1L -> 0L, 2L -> 7L, 3L -> -1L).toDF("doc_id", "fp")
+    val emb = tables.embeddings
+    val queries = emb.filter($"vec_id" % 250 === 0)
+    val cases = Seq(4, 6, 15).map(b => s"simhash blocks=$b" ->
+        Dedup.simhashPairsFromFingerprints(fp, "doc_id", maxHamming = 3, blocks = b)) ++
+      Seq(
+        "cosineDupPairs bands=6" -> Similarity.cosineDupPairs(emb, "vec_id",
+          "embedding", tau = 0.9, planes = 8, bands = 6),
+        "lshTopK bands=4" -> Similarity.lshTopK(emb, queries, "vec_id",
+          "vec_id", "embedding", 5, planes = 6, bands = 4),
+        "semDedupLsh bands=4" -> Similarity.semDedupLsh(emb, "vec_id",
+          "embedding", k = 8, tau = 0.9, planes = 10, bands = 4))
+    for ((name, df) <- cases) {
+      val plan = df.queryExecution.optimizedPlan
+      assert(plan.collect { case u: Union => u }.isEmpty, s"$name: union in\n$plan")
+      val candidateJoins = plan.collect {
+        case j: Join if keyed(j.left) && keyed(j.right) => j
+      }
+      assert(candidateJoins.size == 1, s"$name: ${candidateJoins.size} keyed joins in\n$plan")
+    }
+  }
+
   test("native langId kernel equals the HOF argmax formulation on the corpus") {
     val diff = tables.documents
       .select(graft.operators.TextAnalysis.langId($"text").as("native"),
