@@ -195,16 +195,16 @@ object Bench {
     // this rerun.
     // RocksDB A/B receipt (round 18, VERDICT r17 #1 — the probe that
     // turns the r17 "environment price" into an engineering answer):
-    // the family ran under RocksDB + changelog checkpointing
-    // (EventsStreaming.replaySession's SPARK_GRAFT_STREAM_STORE
-    // lever) vs the HDFS default, sf0.1, 2 bracketed pairs. NO GAIN —
+    // the family ran under RocksDB + changelog checkpointing (set
+    // through Spark's spark.sql.streaming.stateStore.providerClass)
+    // vs the HDFS default, sf0.1, 2 bracketed pairs. NO GAIN —
     // RocksDB was 5-15% SLOWER (family 23.3→26.8 s; q138 6.25→6.91,
     // q144 2.94→3.71, q151 5.99→6.48; state task-sum ROSE, q138
     // 21.6→25.0 s): at local-fs checkpoint latency the JNI boundary +
     // changelog round trips cost more than the small-state snapshots
     // they replace. The pins stay; the provider stays HDFS for the
-    // harness and RocksDB remains the documented remote-checkpoint
-    // answer (SCALE.md).
+    // harness, and a remote-checkpoint deployment sets that Spark
+    // key itself (SCALE.md).
     "q138_stream_outer_join" -> 6.740,
     "q144_stream_right_outer_join" -> 2.740,
     // q145 re-based the same round for the same measured cause: the
@@ -300,6 +300,16 @@ object Bench {
     math.max(0.0, wall - p.triggerMs / 1e3)
 
   def main(args: Array[String]): Unit = {
+    // SPARK_GRAFT_BENCH_ONLY=q39_cosine_topk,q35_dedup_minhash narrows the
+    // set for profiling a single query without touching the contract.
+    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
+    // a name outside both benched sets would be dropped without a word
+    val unknown = only.toSeq.flatten.filterNot((headline ++ streamingSet).contains).sorted
+    if (unknown.nonEmpty) {
+      System.err.println("[bench] SPARK_GRAFT_BENCH_ONLY names queries the " +
+        s"bench does not run: ${unknown.mkString(",")}")
+      sys.exit(2)
+    }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = graft.core.GraftSession.configure(
@@ -310,9 +320,6 @@ object Bench {
     ).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    // SPARK_GRAFT_BENCH_ONLY=q39_cosine_topk,q35_dedup_minhash narrows the
-    // set for profiling a single query without touching the contract.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
     val qs = headline.filter(SparkEntry.queries.contains)
       .filter(n => only.forall(_.contains(n)))
 

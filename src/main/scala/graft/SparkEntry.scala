@@ -5484,7 +5484,7 @@ object SparkEntry {
   /** q180: two CDC chunks of the customer dimension (as_of 2021-06-01,
     * then 2022-06-01) fold into an SCD2 history by stream, with a
     * RESTART between them, then a no-new-data restart. Returns a reader
-    * of the latest history snapshot and a rerun of the stream. */
+    * of the history table's head and a rerun of the stream. */
   private def scd2Replay(s: SparkSession, dir: String): (() => DataFrame, () => Unit) = {
     import graft.streaming.{CurationStreaming, EventsStreaming}
     val tmp = workDir("graft_stream_q180_")
@@ -5519,13 +5519,13 @@ object SparkEntry {
     val chSchema = s.read.parquet(ch1).schema
     val ss = EventsStreaming.replaySession(s)
     def apply(): Unit = CurationStreaming.scd2Stream(ss, s"$tmp/src",
-      s"$tmp/snap", s"$tmp/ckpt", Seq("k"), hist0, chSchema)
+      s"$tmp/hist", s"$tmp/ckpt", Seq("k"), hist0, chSchema)
     Fixtures.linkParquet(ch1, s"$tmp/src", "c1_")
     apply()
     Fixtures.linkParquet(ch2, s"$tmp/src", "c2_")
     apply()
     apply()
-    (() => CurationStreaming.scd2Latest(s, s"$tmp/snap"), () => apply())
+    (() => CurationStreaming.scd2Latest(s, s"$tmp/hist"), () => apply())
   }
 
   /** q189: the documents stream through a six-check DQ suite whose

@@ -51,9 +51,10 @@ import org.apache.spark.sql.functions._
   * MERGE rewrites the files whose key envelopes intersect the change
   * set and nothing else. Expired versions drop manifests plus the
   * files no retained version still references ([[expire]]) —
-  * newest-first retention, same discipline as
-  * [[graft.streaming.CurationStreaming.scd2Expire]] including its
-  * keep >= 2 floor.
+  * newest-first retention with a keep >= 2 floor, which is also the
+  * streaming sinks' retention
+  * ([[graft.streaming.CurationStreaming.scd2Stream]] and its siblings
+  * commit each micro-batch here).
   *
   * Round 12 additions, all riding the same manifest + CAS (no second
   * log format): per-file column min/max stats (footer-derived,
@@ -3794,10 +3795,11 @@ object VersionedTable {
   /** Retention: drop all but the newest `keep` versions — manifests
     * first (the versions disappear atomically one by one), then every
     * data file no RETAINED version still references (file-sharing
-    * means an old file can outlive its own version). keep >= 2 for
-    * the same uncommitted-window reason as scd2Expire: a reader that
-    * resolved version N must not lose N's data while a writer is
-    * mid-commit on N+1. Returns dropped versions. */
+    * means an old file can outlive its own version). keep >= 2 covers
+    * the uncommitted window: a reader that resolved version N must not
+    * lose N's data while a writer is mid-commit on N+1, and a stream
+    * sink's newest batch marker — its replay high-water — stays
+    * retained. Returns dropped versions. */
   def expire(spark: SparkSession, dir: String, keep: Int): Seq[Long] = {
     requireMainline(dir, "expire")
     require(keep >= 2, s"keep must be >= 2, got $keep")

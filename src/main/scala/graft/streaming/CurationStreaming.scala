@@ -158,6 +158,31 @@ object CurationStreaming {
       .select(col("doc_id"), (col("d") === 1).as("is_dup"))
   }
 
+  // ------------- file-source micro-batch runner -------------
+
+  /** One staged file per micro-batch: a replay from a fresh checkpoint
+    * regroups the same files into the same batches, and a CDC sink
+    * sees one consistent cut per batch. */
+  private val MaxFilesPerTrigger = 1
+
+  /** Drain the parquet files staged under `stagedDir` through `sink`:
+    * one AvailableNow run from checkpoint `ckpt`. The foreachBatch
+    * contract is what every sink below builds its exactly-once rule
+    * on: the checkpoint names which source files belong to each
+    * batchId, so a restarted or retried batch replays the same rows. */
+  private def drainStaged(spark: SparkSession, stagedDir: String,
+      schema: StructType, ckpt: String)(sink: (DataFrame, Long) => Unit): Unit =
+    spark.readStream
+      .schema(schema)
+      .option("maxFilesPerTrigger", MaxFilesPerTrigger)
+      .parquet(stagedDir)
+      .writeStream
+      .foreachBatch(sink)
+      .option("checkpointLocation", ckpt)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
+
   // ------------- exactly-once streaming shard export (round 10) -------------
 
   /** Streaming counterpart of
@@ -179,29 +204,19 @@ object CurationStreaming {
     * write — identical to the batch exporter, amortized over arrivals;
     * state is only the checkpoint's file log. */
   def exportStream(spark: SparkSession, stagedDir: String, outDir: String,
-      ckpt: String, nShards: Int, maxFilesPerTrigger: Int = 1): Unit = {
+      ckpt: String, nShards: Int): Unit = {
     require(nShards >= 1 && nShards <= 16, "md5-nibble rule: nShards <= 16")
-    val stream = spark.readStream
-      .schema(docSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(stagedDir)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch
-          .withColumn("__h", md5(col("doc_id").cast("string")))
-          .withColumn("shard",
-            (expr("position(substring(__h, 1, 1) IN '0123456789abcdef')")
-              .cast("long") - 1L).mod(lit(nShards.toLong)))
-          .drop("__h")
-          .repartition(col("shard"))
-          .write.mode("overwrite").partitionBy("shard")
-          .parquet(s"$outDir/batch=$batchId")
-        ()
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drainStaged(spark, stagedDir, docSchema, ckpt) { (batch, batchId) =>
+      batch
+        .withColumn("__h", md5(col("doc_id").cast("string")))
+        .withColumn("shard",
+          (expr("position(substring(__h, 1, 1) IN '0123456789abcdef')")
+            .cast("long") - 1L).mod(lit(nShards.toLong)))
+        .drop("__h")
+        .repartition(col("shard"))
+        .write.mode("overwrite").partitionBy("shard")
+        .parquet(s"$outDir/batch=$batchId")
+    }
   }
 
   /** Streaming ANN-index ingest (round 11): newly arrived vectors are
@@ -219,8 +234,7 @@ object CurationStreaming {
     * Scale shape: per batch, one batch-sized encode pass (per-row
     * codegen kernels, zero shuffles) + one batch-sized write. */
   def annIngestStream(spark: SparkSession, stagedDir: String, idxDir: String,
-      ckpt: String, vecCol: String,
-      srcSchema: StructType, maxFilesPerTrigger: Int = 1): Unit = {
+      ckpt: String, vecCol: String, srcSchema: StructType): Unit = {
     // `idxDir` may be a flat index or a savePublished root; the model
     // is loaded ONCE (frozen), each batch re-resolves the ACTIVE
     // generation so deltas land where serving looks. A compaction
@@ -231,298 +245,230 @@ object CurationStreaming {
       .generations(spark, idxDir).lastOption.getOrElse(-1L)
     val loaded = graft.operators.AnnIndex.load(spark, idxDir,
       includeDeltas = false)
-    val stream = spark.readStream
-      .schema(srcSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(stagedDir)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.AnnIndex.requireModelStable(spark, idxDir, startGen)
-        val dir = graft.operators.AnnIndex.activeDir(spark, idxDir)
-        graft.operators.Similarity
-          .ivfPqEncode(batch, loaded.idCol, vecCol, loaded.cents, loaded.pq)
-          .write.mode("overwrite")
-          .parquet(s"$dir/codes_delta/batch=$batchId")
-        ()
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
-
-  // ------------- streaming SCD2 snapshot maintenance (round 10) -------------
-
-  /** Streaming counterpart of
-    * [[graft.operators.Incremental.scd2Apply]]: CDC change batches
-    * arrive as staged files (each carrying ONE `as_of` timestamp) and
-    * fold into a versioned dimension history EXACTLY ONCE across
-    * micro-batches, restarts, and batch retries.
-    *
-    * Snapshot discipline (the foreachBatch exactly-once contract,
-    * same as [[exportStream]]): batch `id` reads the LATEST snapshot
-    * with id' < id (or `init` if none), applies scd2Apply, and writes
-    * `snapDir/snap=<id>` in OVERWRITE mode. A retried batch re-reads
-    * the same predecessor and rewrites its OWN directory — it cannot
-    * double-apply; a restart replays the checkpoint's batch→file
-    * mapping against snapshots that already exist, landing in the
-    * same directories with the same content.
-    *
-    * Scale shape: per batch, one outer join of the snapshot's CURRENT
-    * slice against the (small) change batch — scd2Apply's contract
-    * that closed history is never joined holds here too; the write is
-    * snapshot-sized. Production would compact/expire old `snap=` dirs
-    * (retention), which is [[graft.operators.Layout.compact]]'s job.
-    * A batch mixing multiple as_of timestamps is REFUSED (bounded
-    * 2-row probe): fold order inside one batch would be ambiguous —
-    * stage chunks so a trigger sees one consistent CDC cut
-    * (maxFilesPerTrigger=1 enforces that for file sources). */
-  def scd2Stream(spark: SparkSession, stagedDir: String, snapDir: String,
-      ckpt: String, keys: Seq[String], init: DataFrame,
-      chgSchema: StructType, maxFilesPerTrigger: Int = 1): Unit = {
-    require(chgSchema.fieldNames.contains("as_of"),
-      "change schema must carry as_of TIMESTAMP")
-    val initCols = init.columns.toSeq
-    val stream = spark.readStream
-      .schema(chgSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(stagedDir)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val asOfs = batch.select(col("as_of")).distinct().limit(2).collect()
-        if (asOfs.nonEmpty) {
-          require(asOfs.length == 1,
-            s"scd2Stream: batch $batchId mixes as_of timestamps")
-          val asOf = asOfs(0).getTimestamp(0)
-          val predId = snapshotIds(spark, snapDir).filter(_ < batchId)
-            .maxOption
-          val hist = latestSnapshot(spark, snapDir, batchId)
-            .map(_.select(initCols.map(col): _*)).getOrElse(init)
-          graft.operators.Incremental
-            .scd2Apply(hist, batch.drop("as_of"), keys, asOf)
-            .write.mode("overwrite").parquet(s"$snapDir/snap=$batchId")
-          writePredMarker(spark, snapDir, batchId, predId)
-        }
-        ()
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
-
-  private def snapshotIds(spark: SparkSession, snapDir: String): Seq[Long] = {
-    val p = new org.apache.hadoop.fs.Path(snapDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("snap="))
-      .map(_.getPath.getName.stripPrefix("snap=").toLong)
-  }
-
-  /** Each snapshot carries a `_pred` sidecar naming the snapshot it
-    * was folded from (`init` for a true first fold). Underscore
-    * prefix = invisible to the parquet scan; written AFTER the data
-    * so a sidecar implies a complete snapshot. This is what lets a
-    * replay distinguish "I never had a predecessor" (legal init
-    * fold) from "my predecessor was expired under me" (torn chain). */
-  private def writePredMarker(spark: SparkSession, snapDir: String,
-      id: Long, pred: Option[Long]): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$snapDir/snap=$id/_pred")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(pred.map(_.toString).getOrElse("init").getBytes("UTF-8"))
-    finally out.close()
-  }
-
-  private def readPredMarker(spark: SparkSession, snapDir: String,
-      id: Long): Option[String] = {
-    val p = new org.apache.hadoop.fs.Path(s"$snapDir/snap=$id/_pred")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim)
-      finally in.close()
+    drainStaged(spark, stagedDir, srcSchema, ckpt) { (batch, batchId) =>
+      graft.operators.AnnIndex.requireModelStable(spark, idxDir, startGen)
+      val dir = graft.operators.AnnIndex.activeDir(spark, idxDir)
+      graft.operators.Similarity
+        .ivfPqEncode(batch, loaded.idCol, vecCol, loaded.cents, loaded.pq)
+        .write.mode("overwrite")
+        .parquet(s"$dir/codes_delta/batch=$batchId")
     }
   }
 
-  /** Latest snapshot strictly BEFORE `beforeId` — a retried batch must
-    * see its original predecessor, never its own partial output.
-    *
-    * Corruption guard: no predecessor on disk is only legal when this
-    * batch never HAD one. Two tells that it did: (a) any LATER
-    * snapshot exists, or (b) the batch's own snapshot (a replay's
-    * partial output, snap=beforeId) exists and its `_pred` sidecar
-    * names a predecessor — that predecessor was expired while this
-    * batch was uncommitted, and falling back to `init` would silently
-    * rebuild the history from scratch. Refuse both instead.
-    * [[scd2Expire]]'s keep >= 2 floor makes this unreachable under
-    * the documented discipline; the throw is the belt to that
-    * suspender. A replayed snapshot whose sidecar says `init` (the
-    * stream's true first fold, possibly after empty batches) is the
-    * one case that legitimately proceeds from `init`. */
-  private def latestSnapshot(spark: SparkSession, snapDir: String,
-      beforeId: Long): Option[DataFrame] = {
-    val ids = snapshotIds(spark, snapDir)
-    val pred = ids.filter(_ < beforeId).maxOption
-    if (pred.isEmpty) {
-      val ownPred =
-        if (ids.contains(beforeId))
-          // missing sidecar = pre-upgrade or torn write; conservative
-          Some(readPredMarker(spark, snapDir, beforeId).getOrElse("unknown"))
-        else None
-      val torn = ids.exists(_ > beforeId) || ownPred.exists(_ != "init")
-      if (torn)
-        throw new IllegalStateException(
-          s"snapshot chain under $snapDir is torn: batch $beforeId has no " +
-            s"predecessor snapshot but the chain shows it had one " +
-            s"(ids=${ids.sorted.mkString(",")}, own _pred=$ownPred); its " +
-            "predecessor was expired while the batch was uncommitted — " +
-            "restore it or reset the stream")
-    }
-    pred.map(id => spark.read.parquet(s"$snapDir/snap=$id"))
-  }
+  // ─────── exactly-once stream batches into a versioned table (round 12) ───────
 
-  /** The current materialized history: the highest-id snapshot. */
-  def scd2Latest(spark: SparkSession, snapDir: String): DataFrame = {
-    val ids = snapshotIds(spark, snapDir)
-    require(ids.nonEmpty, s"scd2Latest: no snapshots under $snapDir")
-    spark.read.parquet(s"$snapDir/snap=${ids.max}")
-  }
-
-  // ---------------- streaming data-quality accumulation ----------------
-
-  /** Streaming counterpart of [[graft.operators.DataQuality.report]]
-    * for ROW-LOCAL checks: each micro-batch computes its counter
-    * state (ONE aggregate over the batch) and merges it into the
-    * accumulated state — Deequ's incremental-metrics contract, under
-    * the same exactly-once snapshot discipline as [[scd2Stream]]
-    * (batch id reads latest state < id, overwrites `snap=<id>`;
-    * retries/restarts cannot double-count a batch). The final report
-    * over N batches equals the batch report over their union
-    * (counter additivity, law-tested in DataQualitySpec). */
-  def dqStream(spark: SparkSession, stagedDir: String, stateDir: String,
-      ckpt: String, checks: Seq[graft.operators.DataQuality.Check],
-      srcSchema: StructType, maxFilesPerTrigger: Int = 1): Unit = {
-    val stream = spark.readStream
-      .schema(srcSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(stagedDir)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = graft.operators.DataQuality.rowLocalState(batch, checks)
-        val predId = snapshotIds(spark, stateDir).filter(_ < batchId)
-          .maxOption
-        val merged = latestSnapshot(spark, stateDir, batchId) match {
-          case Some(prev) => graft.operators.DataQuality.mergeStates(prev, s)
-          case None => s
-        }
-        merged.write.mode("overwrite").parquet(s"$stateDir/snap=$batchId")
-        writePredMarker(spark, stateDir, batchId, predId)
-        ()
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
-
-  /** The report over everything streamed so far. */
-  def dqLatestReport(spark: SparkSession, stateDir: String,
-      checks: Seq[graft.operators.DataQuality.Check]): DataFrame =
-    graft.operators.DataQuality.reportFromState(
-      scd2Latest(spark, stateDir), checks)
-
-  /** Retention: delete all but the newest `keep` snapshots (driver
-    * metadata work — each snapshot is a directory). The current table
-    * ([[scd2Latest]]) is untouched; a restart replaying an OLD batch
-    * id against an expired predecessor cannot happen because the
-    * checkpoint only replays batches at-or-after the last committed
-    * one, whose predecessor is always within the keep window —
-    * PROVIDED keep >= 2. keep = 1 is refused: a batch that wrote
-    * `snap=B` but crashed before its checkpoint commit leaves B as
-    * the newest snapshot while B's replay still needs B-1; keep = 1
-    * would delete B-1 in that uncommitted window (the replay then
-    * trips [[latestSnapshot]]'s torn-chain guard instead of silently
-    * rebuilding, but the recipe should never get there).
-    * Returns the deleted snapshot ids. */
-  def scd2Expire(spark: SparkSession, snapDir: String, keep: Int): Seq[Long] = {
-    require(keep >= 2, s"keep must be >= 2 (keep=1 can expire the " +
-      s"predecessor of an uncommitted batch mid-replay), got $keep")
-    val ids = snapshotIds(spark, snapDir).sorted
-    val victims = ids.dropRight(keep)
-    val fs = new org.apache.hadoop.fs.Path(snapDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    victims.foreach { id =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$snapDir/snap=$id"), true)
-    }
-    victims
-  }
-
-  // ─────── exactly-once streaming MERGE into a versioned table (round 12) ───────
-
-  /** The newest committed stream-batch marker on `tableDir` for
-    * `marker` — scanned newest manifest first, stopping at the first
-    * hit (bounded by the commits since the stream's last merge). */
-  private def lastStreamBatch(spark: SparkSession, tableDir: String,
-      marker: String): Option[Long] = {
-    import graft.operators.VersionedTable
-    VersionedTable.versions(spark, tableDir).reverseIterator
-      .map(v => VersionedTable.readManifest(spark, tableDir, v).meta.get(marker))
-      .collectFirst { case Some(b) => b.toLong }
-  }
+  /** Manifest `meta` key carrying a stream commit's batch id; its
+    * `.files` sibling carries the batch's file fingerprint. */
+  private val Marker = "stream.merge.batch"
+  /** CAS attempts a stream batch makes against external writers. */
+  private val MaxCasRetries = 5
 
   /** Content fingerprint of a file-source micro-batch: md5 over the
     * sorted input file NAMES (names, not full paths — the fingerprint
     * must survive path re-qualification and replica roots). None when
-    * the batch cannot be attributed to files (non-file source). */
+    * the batch cannot be attributed to files (non-file source).
+    *
+    * A foreachBatch DataFrame wraps the batch's planned RDD in a
+    * `LogicalRDD`, which hides the file relation from
+    * `Dataset.inputFiles` (always empty there), so the names come from
+    * the `FileScanRDD`s in that RDD's lineage — driver metadata, no
+    * job. */
   private def batchFilesHash(batch: DataFrame): Option[String] = {
-    val names = batch.inputFiles.toSeq
-      .map(f => new org.apache.hadoop.fs.Path(f).getName).sorted
+    import org.apache.spark.sql.execution.LogicalRDD
+    import org.apache.spark.sql.execution.datasources.FileScanRDD
+    def scans(rdd: org.apache.spark.rdd.RDD[_]): Seq[FileScanRDD] = rdd match {
+      case f: FileScanRDD => Seq(f)
+      case r => r.dependencies.flatMap(d => scans(d.rdd))
+    }
+    val names = batch.queryExecution.logical.collect { case r: LogicalRDD => r.rdd }
+      .flatMap(scans).flatMap(_.filePartitions.flatMap(_.files))
+      .map(_.toPath.getName).distinct.sorted
     if (names.isEmpty) None
     else Some(java.security.MessageDigest.getInstance("MD5")
       .digest(names.mkString("\n").getBytes("UTF-8"))
       .map("%02x".format(_)).mkString)
   }
 
-  /** The recorded content fingerprint of the commit that carried
-    * stream batch `batchId` (inner Option: the commit exists but
-    * predates fingerprinting). Stream merges are serial, so marker
-    * values descend with versions — the scan stops at the first
-    * marker below `batchId`. */
-  private def committedBatchHash(spark: SparkSession, tableDir: String,
-      marker: String, batchId: Long): Option[Option[String]] = {
-    import graft.operators.VersionedTable
-    VersionedTable.versions(spark, tableDir).reverseIterator
-      .map(v => VersionedTable.readManifest(spark, tableDir, v).meta)
-      .flatMap(meta => meta.get(marker).map(b => (b.toLong, meta)))
-      .takeWhile { case (b, _) => b >= batchId }
-      .collectFirst { case (b, meta) if b == batchId =>
-        meta.get(s"$marker.files")
-      }
-  }
-
-  /** Stream CDC batches (staged files under `stagedDir`, each batch
-    * key-unique) into a [[graft.operators.VersionedTable]] as
-    * file-granular MERGE commits, EXACTLY ONCE across micro-batches,
-    * restarts, and batch retries.
+  /** Commit stream batch `batchId` to the versioned table at
+    * `tableDir` EXACTLY ONCE: the one verdict every stream sink
+    * shares.
     *
-    * The exactly-once hinge: each merge commit carries its stream
-    * batch id as a manifest `meta` entry, so "the batch's rows are in
-    * the table" and "the batch is marked done" are ONE atomic CAS. A
-    * replayed batch (crash after commit, before the checkpoint ack)
-    * finds its id already committed and is inert; a crash before the
-    * commit replays into a fresh merge. Interleaved OTHER writers are
+    * The exactly-once hinge: the commit carries the batch id (and the
+    * batch's file fingerprint) as manifest `meta`, so "the batch's
+    * rows are in the table" and "the batch is marked done" are ONE
+    * atomic CAS. A replayed batch (crash after commit, before the
+    * checkpoint ack) finds its id already committed and is inert; a
+    * crash before the commit replays into a fresh commit.
+    *
+    * Inertness is keyed on batch CONTENT, not the raw batchId: batch
+    * ids are only stable within one checkpoint, so a fresh checkpoint
+    * that groups the staged files differently must not have its
+    * batches silently suppressed by markers from the old checkpoint —
+    * that is data loss, not idempotence. A replay is inert iff a
+    * committed manifest carries BOTH this batchId and this batch's
+    * file fingerprint; a recorded id with a DIFFERENT fingerprint, or
+    * an id below the committed high-water that no retained commit
+    * carries, refuses loudly.
+    *
+    * Otherwise `land(parentVersion, meta)` writes the batch as a child
+    * of `parentVersion` carrying `meta`. Interleaved OTHER writers are
     * handled by re-reading the head and retrying the CAS — the
     * stream's own commits are serial, so the retry loop only races
     * external writers.
     *
+    * One newest-first manifest scan answers both questions: stream
+    * commits are serial, so marker values descend with versions — the
+    * first marker is the high-water, and the scan stops at the first
+    * marker below `batchId` (bounded by the commits since the stream
+    * last reached this batch). */
+  private def commitBatch(spark: SparkSession, tableDir: String,
+      batch: DataFrame, batchId: Long)(land: (Long, Map[String, String]) => Unit): Unit = {
+    import graft.operators.VersionedTable
+    val markers = VersionedTable.versions(spark, tableDir).reverseIterator
+      .map(v => VersionedTable.readManifest(spark, tableDir, v).meta)
+      .flatMap(meta => meta.get(Marker).map(b => (b.toLong, meta.get(s"$Marker.files"))))
+      .takeWhile { case (b, _) => b >= batchId }
+      .buffered
+    val highWater = markers.headOption.map(_._1)
+    // inner Option: the commit exists but predates fingerprinting
+    val recorded = markers.collectFirst { case (b, files) if b == batchId => files }
+    val h = batchFilesHash(batch)
+    recorded match {
+      case Some(r) =>
+        val diverged = (r, h) match {
+          case (Some(x), Some(y)) => x != y
+          case _ => false // pre-fingerprint commit or unattributable batch
+        }
+        if (diverged) throw new IllegalStateException(
+          s"stream batch $batchId replayed with different contents than " +
+            s"its committed marker on $tableDir (recorded files hash " +
+            s"$r, replay $h) — the checkpoint was reset and the " +
+            "new batch grouping diverged; restart from the ORIGINAL " +
+            "checkpoint")
+        // true replay of a committed batch: inert
+      case None if highWater.nonEmpty =>
+        throw new IllegalStateException(
+          s"stream batch $batchId is below the committed high-water " +
+            s"${highWater.get} on $tableDir but no commit carries its marker " +
+            "— either retention expired the marker inside the restart " +
+            "horizon (keep-window too small) or a fresh checkpoint " +
+            "regrouped the source; refusing to guess between " +
+            "double-apply and data loss")
+      case None =>
+        val meta = Map(Marker -> batchId.toString) ++ h.map(x => s"$Marker.files" -> x)
+        var attempts = 0
+        var committed = false
+        while (!committed) {
+          try {
+            land(VersionedTable.latestVersion(spark, tableDir), meta)
+            committed = true
+          } catch {
+            case _: VersionedTable.CommitConflict if attempts < MaxCasRetries =>
+              attempts += 1 // an external writer took the version; re-plan
+          }
+        }
+    }
+  }
+
+  /** Streaming counterpart of
+    * [[graft.operators.Incremental.scd2Apply]]: CDC change batches
+    * arrive as staged files (each carrying ONE `as_of` timestamp) and
+    * fold into a versioned dimension history at `tableDir` (a
+    * [[graft.operators.VersionedTable]]) EXACTLY ONCE across
+    * micro-batches, restarts, and batch retries.
+    *
+    * Each non-empty batch commits `scd2Apply(parent, batch)` as a full
+    * snapshot child of the table's head (`init` when the table has no
+    * version yet) under [[commitBatch]]'s batch marker: a replayed
+    * committed batch is inert, a crash before the CAS replays into a
+    * fresh fold of the same parent. Read the history with
+    * [[scd2Latest]]; retention is
+    * [[graft.operators.VersionedTable.expire]], whose keep >= 2 floor
+    * keeps the newest marker — the replay high-water — retained.
+    *
+    * Scale shape: per batch, one outer join of the head's CURRENT
+    * slice against the (small) change batch — scd2Apply's contract
+    * that closed history is never joined holds here too; the write is
+    * snapshot-sized. A batch mixing multiple as_of timestamps is
+    * REFUSED (bounded 2-row probe): fold order inside one batch would
+    * be ambiguous — stage chunks so a trigger sees one consistent CDC
+    * cut (one staged file per batch enforces that for file sources). */
+  def scd2Stream(spark: SparkSession, stagedDir: String, tableDir: String,
+      ckpt: String, keys: Seq[String], init: DataFrame,
+      chgSchema: StructType): Unit = {
+    import graft.operators.{Incremental, VersionedTable}
+    require(chgSchema.fieldNames.contains("as_of"),
+      "change schema must carry as_of TIMESTAMP")
+    drainStaged(spark, stagedDir, chgSchema, ckpt) { (batch, batchId) =>
+      val asOfs = batch.select(col("as_of")).distinct().limit(2).collect()
+      if (asOfs.nonEmpty) {
+        require(asOfs.length == 1,
+          s"scd2Stream: batch $batchId mixes as_of timestamps")
+        commitBatch(spark, tableDir, batch, batchId) { (parent, meta) =>
+          val hist =
+            if (parent < 0) init else VersionedTable.readVersion(spark, tableDir, parent)
+          VersionedTable.commit(spark, tableDir,
+            Incremental.scd2Apply(hist, batch.drop("as_of"), keys,
+              asOfs(0).getTimestamp(0)),
+            parent, s"stream-b$batchId", meta = meta)
+        }
+      }
+    }
+  }
+
+  /** The current materialized history: the table's head. */
+  def scd2Latest(spark: SparkSession, tableDir: String): DataFrame =
+    graft.operators.VersionedTable.read(spark, tableDir)
+
+  // ---------------- streaming data-quality accumulation ----------------
+
+  /** Streaming counterpart of [[graft.operators.DataQuality.report]]
+    * for ROW-LOCAL checks: each micro-batch computes its counter
+    * state (ONE aggregate over the batch) and commits it merged into
+    * the accumulated state at `tableDir` (a one-row
+    * [[graft.operators.VersionedTable]]) — Deequ's incremental-metrics
+    * contract, under the same batch-marker commit as [[scd2Stream]]
+    * (retries/restarts cannot double-count a batch; a batch with no
+    * rows commits nothing). The final report over N batches equals the
+    * batch report over their union (counter additivity, law-tested in
+    * DataQualitySpec). */
+  def dqStream(spark: SparkSession, stagedDir: String, tableDir: String,
+      ckpt: String, checks: Seq[graft.operators.DataQuality.Check],
+      srcSchema: StructType): Unit = {
+    import graft.operators.{DataQuality, VersionedTable}
+    drainStaged(spark, stagedDir, srcSchema, ckpt) { (batch, batchId) =>
+      val stateDf = DataQuality.rowLocalState(batch, checks)
+      val row = stateDf.head() // one aggregate row: a bounded collect
+      if (row.getLong(0) > 0L) { // __total
+        val state = spark.createDataFrame(java.util.List.of(row), stateDf.schema)
+        commitBatch(spark, tableDir, batch, batchId) { (parent, meta) =>
+          VersionedTable.commit(spark, tableDir,
+            if (parent < 0) state
+            else DataQuality.mergeStates(
+              VersionedTable.readVersion(spark, tableDir, parent), state),
+            parent, s"stream-b$batchId", meta = meta)
+        }
+      }
+    }
+  }
+
+  /** The report over everything streamed so far. */
+  def dqLatestReport(spark: SparkSession, tableDir: String,
+      checks: Seq[graft.operators.DataQuality.Check]): DataFrame =
+    graft.operators.DataQuality.reportFromState(
+      graft.operators.VersionedTable.read(spark, tableDir), checks)
+
+  /** Stream CDC batches (staged files under `stagedDir`, each batch
+    * key-unique) into a [[graft.operators.VersionedTable]] as
+    * file-granular MERGE commits, EXACTLY ONCE across micro-batches,
+    * restarts, and batch retries — each merge lands under
+    * [[commitBatch]]'s batch marker.
+    *
     * Retention contract: the newest stream commit's manifest carries
     * the high-water marker; [[graft.operators.VersionedTable.expire]]
-    * keep-window sizing must retain it across a restart horizon (the
-    * scd2Expire keep >= 2 discipline — a marker expired while its
-    * batch could still replay would double-apply).
+    * keep-window sizing must retain it across a restart horizon (its
+    * keep >= 2 floor — a marker expired while its batch could still
+    * replay is refused as below the high-water).
     *
     * Scale shape per batch: one churn-sized MERGE (envelope-pruned
     * scan + touched-file rewrite) — the table never rewrites beyond
@@ -530,73 +476,13 @@ object CurationStreaming {
     * log only. */
   def tableMergeStream(spark: SparkSession, stagedDir: String,
       tableDir: String, keys: Seq[String], ckpt: String,
-      srcSchema: StructType, deleteCol: Option[String] = None,
-      maxFilesPerTrigger: Int = 1, maxCasRetries: Int = 5,
-      marker: String = "stream.merge.batch"): Unit = {
-    import graft.operators.VersionedTable
-    val stream = spark.readStream
-      .schema(srcSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(stagedDir)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // Inertness is keyed on batch CONTENT, not the raw batchId:
-        // batch ids are only stable within one checkpoint, so a fresh
-        // checkpoint that groups the staged files differently (bigger
-        // maxFilesPerTrigger, interleaved arrivals) must not have its
-        // batches silently suppressed by markers from the old
-        // checkpoint — that is data loss, not idempotence. A replay is
-        // inert iff a committed manifest carries BOTH this batchId and
-        // this batch's file fingerprint; a recorded id with a DIFFERENT
-        // fingerprint refuses loudly (divergent checkpoint).
-        val done = lastStreamBatch(spark, tableDir, marker)
-        val h = batchFilesHash(batch)
-        committedBatchHash(spark, tableDir, marker, batchId) match {
-          case Some(recorded) =>
-            val diverged = (recorded, h) match {
-              case (Some(r), Some(x)) => r != x
-              case _ => false // pre-fingerprint commit or unattributable batch
-            }
-            if (diverged) throw new IllegalStateException(
-              s"stream batch $batchId replayed with different contents than " +
-                s"its committed marker on $tableDir (recorded files hash " +
-                s"$recorded, replay $h) — the checkpoint was reset and the " +
-                "new batch grouping diverged; restart from the ORIGINAL " +
-                "checkpoint, or reset with a fresh marker namespace after " +
-                "verifying the table state")
-            () // true replay of a committed batch: inert
-          case None if done.exists(_ >= batchId) =>
-            throw new IllegalStateException(
-              s"stream batch $batchId is below the committed high-water " +
-                s"${done.get} on $tableDir but no commit carries its marker " +
-                "— either retention expired the marker inside the restart " +
-                "horizon (keep-window too small) or a fresh checkpoint " +
-                "regrouped the source; refusing to guess between " +
-                "double-apply and data loss")
-          case None =>
-            var attempts = 0
-            var committed = false
-            while (!committed) {
-              val cur = VersionedTable.latestVersion(spark, tableDir)
-              try {
-                VersionedTable.merge(spark, tableDir, batch, keys, cur,
-                  s"stream-b$batchId", deleteCol,
-                  meta = Map(marker -> batchId.toString) ++
-                    h.map(x => s"$marker.files" -> x))
-                committed = true
-              } catch {
-                case _: VersionedTable.CommitConflict if attempts < maxCasRetries =>
-                  attempts += 1 // an external writer took the version; re-plan
-              }
-            }
-        }
-        ()
+      srcSchema: StructType, deleteCol: Option[String] = None): Unit =
+    drainStaged(spark, stagedDir, srcSchema, ckpt) { (batch, batchId) =>
+      commitBatch(spark, tableDir, batch, batchId) { (parent, meta) =>
+        graft.operators.VersionedTable.merge(spark, tableDir, batch, keys,
+          parent, s"stream-b$batchId", deleteCol, meta = meta)
       }
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+    }
 
   /** Manifest of a [[exportStream]] output from the READ-BACK files
     * (same stats as the batch exporter — count, tokens, id sum,

@@ -49,31 +49,13 @@ object EventsStreaming {
   def replaySession(s: SparkSession, shufflePartitions: Int = 8): SparkSession = {
     val s2 = s.newSession()
     s2.conf.set("spark.sql.shuffle.partitions", shufflePartitions.toString)
-    // State-store provider lever (round 18, VERDICT r17 #1 — the A/B
-    // the r17 re-pins called for). The stateful-replay family's floor
-    // is per-batch state-store commit I/O on the default HDFS-backed
-    // provider; RocksDB + changelog checkpointing writes only each
-    // batch's changelog, the scale answer when the checkpoint FS is
-    // REMOTE (SCALE.md). Measured HERE (sf0.1, local-disk
-    // checkpoints, quiet-load medians of 3, two bracketed pairs,
-    // r18): RocksDB is the SLOWER provider — family total 26.8 s vs
-    // 23.3 s; q151 5.99→6.48, q138 6.25→6.91, q144 2.94→3.71; state
-    // task-sums RISE (q138 21.6→25.0 s) — at local-fs latency the
-    // JNI boundary + changelog-file round trips cost more than the
-    // full-snapshot writes they replace, and our join states are
-    // small (tens of MB). So the default stays HDFS-backed for the
-    // replay harness, and SPARK_GRAFT_STREAM_STORE=rocksdb is the
-    // opt-in for production-shaped (remote checkpoint) runs. Fresh
-    // checkpoints per replay make switching safe; transformWithState
-    // sessions still force RocksDB via [[ensureRocksDbProvider]]
-    // (the v2 state API requires it).
-    if (sys.env.get("SPARK_GRAFT_STREAM_STORE").contains("rocksdb")) {
-      s2.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state." +
-          "RocksDBStateStoreProvider")
-      s2.conf.set("spark.sql.streaming.stateStore.rocksdb." +
-        "changelogCheckpointing.enabled", "true")
-    }
+    // The state-store provider stays Spark's HDFS-backed default: the
+    // round-18 A/B (Bench, q138 pin site) measured RocksDB + changelog
+    // checkpointing 5-15% SLOWER at local-disk checkpoint latency. A
+    // remote-checkpoint deployment sets Spark's own
+    // `spark.sql.streaming.stateStore.providerClass` in its SparkConf;
+    // transformWithState sessions force RocksDB via
+    // [[ensureRocksDbProvider]] (the v2 state API requires it).
     s2
   }
 

@@ -233,10 +233,10 @@ class StreamingSpec extends SparkSpec {
 
   test("scd2Stream: snapshot chain equals sequential batch scd2Apply; restart-safe") {
     import graft.streaming.CurationStreaming
-    import graft.operators.Incremental
+    import graft.operators.{Incremental, VersionedTable}
     def ts(s: String) = java.sql.Timestamp.valueOf(s)
     val tmp = Files.createTempDirectory("scd2-stream").toString
-    val src = s"$tmp/src"; val snap = s"$tmp/snap"; val ckpt = s"$tmp/ckpt"
+    val src = s"$tmp/src"; val hist = s"$tmp/hist"; val ckpt = s"$tmp/ckpt"
     val t0 = ts("2020-01-01 00:00:00")
     val hist0 = Seq((1L, "a", t0), (2L, "b", t0), (3L, "c", t0))
       .toDF("k", "name", "valid_from")
@@ -246,20 +246,28 @@ class StreamingSpec extends SparkSpec {
     val ch2 = Seq((1L, "AA"), (3L, "c"), (4L, "D")).toDF("k", "name")
       .withColumn("as_of", lit(ts("2022-01-01 00:00:00")))
     val ss = EventsStreaming.replaySession(spark)
+    def run(ck: String = ckpt): Unit =
+      CurationStreaming.scd2Stream(ss, src, hist, ck, Seq("k"), hist0, ch1.schema)
+    def causedBy(e: Throwable, msg: String): Boolean =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+        .exists(x => Option(x.getMessage).exists(_.contains(msg)))
     ch1.coalesce(1).write.mode("append").parquet(src)
-    CurationStreaming.scd2Stream(ss, src, snap, ckpt, Seq("k"), hist0, ch1.schema)
+    run()
     // chunk 2 arrives; RESTART from the same checkpoint
     ch2.coalesce(1).write.mode("append").parquet(src)
-    CurationStreaming.scd2Stream(ss, src, snap, ckpt, Seq("k"), hist0, ch1.schema)
-    // no-new-data run must not add a snapshot's worth of change
-    CurationStreaming.scd2Stream(ss, src, snap, ckpt, Seq("k"), hist0, ch1.schema)
-    val streamed = CurationStreaming.scd2Latest(spark, snap)
+    run()
+    assert(VersionedTable.latestVersion(spark, hist) == 1L,
+      "two change batches must land as two commits")
+    // no-new-data run must not commit
+    run()
+    assert(VersionedTable.latestVersion(spark, hist) == 1L)
+    val streamed = CurationStreaming.scd2Latest(spark, hist)
     val batch = Incremental.scd2Apply(
       Incremental.scd2Apply(hist0, ch1.drop("as_of"), Seq("k"),
         ts("2021-01-01 00:00:00")),
       ch2.drop("as_of"), Seq("k"), ts("2022-01-01 00:00:00"))
     assert(streamed.exceptAll(batch).isEmpty && batch.exceptAll(streamed).isEmpty,
-      "streaming snapshot chain must equal the sequential batch application")
+      "the streamed history must equal the sequential batch application")
     // version chains contiguous for the twice-updated key
     val k1 = streamed.filter($"k" === 1L)
       .as[(Long, String, java.sql.Timestamp, Option[java.sql.Timestamp])]
@@ -269,94 +277,79 @@ class StreamingSpec extends SparkSpec {
       Seq(Some(ts("2021-01-01 00:00:00")), Some(ts("2022-01-01 00:00:00")), None))
     // a batch mixing as_of timestamps is refused
     val tmp2 = Files.createTempDirectory("scd2-mixed").toString
-    ch1.unionByName(ch2.withColumnRenamed("as_of", "as_of"))
-      .coalesce(1).write.parquet(s"$tmp2/src")
+    ch1.unionByName(ch2).coalesce(1).write.parquet(s"$tmp2/src")
     val thrown = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-      CurationStreaming.scd2Stream(ss, s"$tmp2/src", s"$tmp2/snap",
+      CurationStreaming.scd2Stream(ss, s"$tmp2/src", s"$tmp2/hist",
         s"$tmp2/ckpt", Seq("k"), hist0, ch1.schema)
     }
-    assert(thrown.getMessage.contains("mixes as_of") ||
-      Option(thrown.getCause).exists(_.getMessage.contains("mixes as_of")))
-    // retention: keep=1 is refused (it could expire the predecessor of
-    // an uncommitted batch mid-replay); keep=2 deletes older snapshots
-    // but leaves the current table byte-identical
-    val before = streamed.collect().toSet
+    assert(causedBy(thrown, "mixes as_of"))
+    // retention is the table's own: keep=1 is refused; keep=2 drops
+    // older versions but leaves the current history unchanged
     intercept[IllegalArgumentException] {
-      CurationStreaming.scd2Expire(spark, snap, keep = 1)
+      VersionedTable.expire(spark, hist, keep = 1)
     }
     val ch3 = Seq((2L, "BB")).toDF("k", "name")
       .withColumn("as_of", lit(ts("2023-01-01 00:00:00")))
     ch3.coalesce(1).write.mode("append").parquet(src)
-    CurationStreaming.scd2Stream(ss, src, snap, ckpt, Seq("k"), hist0, ch1.schema)
-    val deleted = CurationStreaming.scd2Expire(spark, snap, keep = 2)
-    assert(deleted.nonEmpty, "three applied batches must leave an expirable snapshot")
-    val dirs = new java.io.File(snap).listFiles()
-      .count(d => d.isDirectory && d.getName.startsWith("snap="))
-    assert(dirs == 2)
+    run()
     val after3 = Incremental.scd2Apply(batch, ch3.drop("as_of"), Seq("k"),
       ts("2023-01-01 00:00:00")).collect().toSet
-    assert(CurationStreaming.scd2Latest(spark, snap).collect().toSet == after3)
-    // torn-chain guard: delete the latest snapshot's predecessor by
-    // hand (simulating a keep=1-style expiry racing an uncommitted
-    // batch) — a replay of that batch must refuse, not rebuild from init
-    val ids = new java.io.File(snap).listFiles()
-      .filter(d => d.isDirectory && d.getName.startsWith("snap="))
-      .map(_.getName.stripPrefix("snap=").toLong).sorted
-    val fs = new org.apache.hadoop.fs.Path(snap)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$snap/snap=${ids.head}"), true)
-    val ch4 = Seq((4L, "dd")).toDF("k", "name")
-      .withColumn("as_of", lit(ts("2024-01-01 00:00:00")))
-    ch4.coalesce(1).write.mode("append").parquet(src)
-    val torn = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-      // fresh checkpoint => batch ids restart at 0; snap ids on disk are
-      // all > 0 with none below the replayed id — exactly the torn shape
-      CurationStreaming.scd2Stream(ss, src, snap, s"$tmp/ckpt_torn",
-        Seq("k"), hist0, ch1.schema)
+    assert(CurationStreaming.scd2Latest(spark, hist).collect().toSet == after3)
+    // lost-checkpoint replay: a FRESH checkpoint re-delivers every
+    // batch; the manifest markers make them all inert
+    run(s"$tmp/ckpt_fresh")
+    assert(VersionedTable.latestVersion(spark, hist) == 2L,
+      "replayed batches must be inert, never re-applied")
+    // a fresh checkpoint whose batch 0 holds OTHER files than the
+    // committed batch 0 diverged: refused, never taken as a replay
+    ch2.coalesce(1).write.parquet(s"$tmp/src_regrouped")
+    val diverged = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      CurationStreaming.scd2Stream(ss, s"$tmp/src_regrouped", hist,
+        s"$tmp/ckpt_regrouped", Seq("k"), hist0, ch1.schema)
     }
-    assert(torn.getMessage.contains("torn") ||
-      Option(torn.getCause).exists(_.getMessage.contains("torn")))
+    assert(causedBy(diverged, "different contents"))
+    val deleted = VersionedTable.expire(spark, hist, keep = 2)
+    assert(deleted == Seq(0L), "three applied batches must leave one expirable version")
+    assert(CurationStreaming.scd2Latest(spark, hist).collect().toSet == after3)
+    // batch 0's marker is gone with v0: a fresh-checkpoint replay of
+    // it is below the retained high-water and must refuse, not
+    // re-apply ch1 on top of the current history
+    val refused = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      run(s"$tmp/ckpt_expired")
+    }
+    assert(causedBy(refused, "below the committed high-water"))
+    assert(VersionedTable.latestVersion(spark, hist) == 2L)
   }
 
-  test("scd2Stream torn-chain sidecar: own-partial replay refuses iff it HAD a predecessor") {
+  test("dqStream: state survives restart and replays exactly once; equals the batch report") {
     import graft.streaming.CurationStreaming
-    def ts(s: String) = java.sql.Timestamp.valueOf(s)
-    val t0 = ts("2020-01-01 00:00:00")
-    val hist0 = Seq((1L, "a", t0)).toDF("k", "name", "valid_from")
-      .withColumn("valid_to", lit(null).cast("timestamp"))
-    val ch = Seq((1L, "A")).toDF("k", "name")
-      .withColumn("as_of", lit(ts("2021-01-01 00:00:00")))
+    import graft.operators.{DataQuality, VersionedTable}
+    import graft.operators.DataQuality._
+    val tmp = Files.createTempDirectory("dq-stream").toString
+    val src = s"$tmp/src"; val state = s"$tmp/state"; val ckpt = s"$tmp/ckpt"
+    val docs = tables.documents.select($"doc_id", $"text", $"lang", $"n_chars")
+    val checks = Seq(NotNull("doc_id"), Completeness("text", 0.99),
+      MatchesRatio("lang", "^[a-z]{2}$", 1.0), InRange("n_chars", 1, 100000),
+      MinRowCount(100L))
     val ss = EventsStreaming.replaySession(spark)
-    def stageOwnPartial(pred: String): (String, String) = {
-      // snap dir holding ONLY the replayed batch's own partial output
-      // (snap=0) whose _pred sidecar claims `pred`; fresh checkpoint
-      // so the stream replays batch 0 against it
-      val tmp = Files.createTempDirectory("scd2-sidecar").toString
-      ch.coalesce(1).write.parquet(s"$tmp/src")
-      hist0.write.parquet(s"$tmp/snap/snap=0")
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$tmp/snap/snap=0/_pred"),
-        pred.getBytes("UTF-8"))
-      (tmp, s"$tmp/snap")
-    }
-    // _pred names an expired predecessor -> the ADVICE scenario: the
-    // only surviving snapshot is the batch's own partial; rebuilding
-    // from init must be REFUSED, not silently performed
-    val (tmp1, _) = stageOwnPartial(pred = "7")
-    val torn = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-      CurationStreaming.scd2Stream(ss, s"$tmp1/src", s"$tmp1/snap",
-        s"$tmp1/ckpt", Seq("k"), hist0, ch.schema)
-    }
-    assert(torn.getMessage.contains("torn") ||
-      Option(torn.getCause).exists(_.getMessage.contains("torn")))
-    // _pred=init (a true first fold, e.g. after empty batches) -> the
-    // replay is legal and folds from init again
-    val (tmp2, snap2) = stageOwnPartial(pred = "init")
-    CurationStreaming.scd2Stream(ss, s"$tmp2/src", snap2,
-      s"$tmp2/ckpt", Seq("k"), hist0, ch.schema)
-    assert(CurationStreaming.scd2Latest(spark, snap2)
-      .filter($"name" === "A").count() == 1,
-      "the legal init-fold replay must apply the change batch")
+    def run(ck: String = ckpt): Unit = CurationStreaming.dqStream(
+      ss, src, state, ck, checks, docs.schema)
+    def report(): Set[Seq[Any]] =
+      CurationStreaming.dqLatestReport(spark, state, checks)
+        .collect().map(_.toSeq).toSet
+    docs.filter($"doc_id" % 2 === 0).coalesce(1).write.mode("append").parquet(src)
+    run()
+    // chunk 2 arrives; RESTART from the same checkpoint
+    docs.filter($"doc_id" % 2 =!= 0).coalesce(1).write.mode("append").parquet(src)
+    run()
+    assert(VersionedTable.latestVersion(spark, state) == 1L)
+    val want = DataQuality.report(docs, checks).collect().map(_.toSeq).toSet
+    assert(report() == want, "streamed state must equal the batch report over the union")
+    // no-new-data rerun and a fresh-checkpoint replay: nothing counted twice
+    run()
+    run(s"$tmp/ckpt_fresh")
+    assert(VersionedTable.latestVersion(spark, state) == 1L)
+    assert(report() == want)
   }
 
   test("streaming near-dup: spot checks, partitioned replay, real-corpus parity") {
