@@ -572,7 +572,7 @@ object VersionedTable {
   /** Read `rels` (live files of manifest `m`) with `m`'s deletion
     * vectors applied, keeping the row-identity columns
     * `__graft_rel`/`__graft_pos` for callers that need them
-    * ([[deleteWhere]]). */
+    * ([[hitScan]]). */
   private def readFilesWithRowId(spark: SparkSession, dir: String,
       m: Manifest, rels: Seq[String],
       schema: org.apache.spark.sql.types.StructType): DataFrame = {
@@ -615,6 +615,27 @@ object VersionedTable {
       readPhysical(spark, dir, rels, schema, m.colmap)
     else readFilesWithRowId(spark, dir, m, rels, schema)
       .drop("__graft_rel", "__graft_pos")
+
+  /** The hit scan of the row-level writes ([[merge]], [[updateWhere]],
+    * [[deleteWhere]]): the rows of `rels` read under `m`'s masks that
+    * `hit` keeps, as (`file`, `pos`) row identities, and their count
+    * per file, keyed by the file's dir-relative name. Already-deleted
+    * rows never rematch — except for [[merge]], which scans with the
+    * masks dropped (`m.copy(dv = Map.empty)`): its read set must hold
+    * every file where a change key matches a row, masked or not, or a
+    * racing [[restore]] that lifts the mask would rebase under it and
+    * the merge's insert would duplicate the restored key. */
+  private def hitScan(spark: SparkSession, dir: String, m: Manifest,
+      rels: Seq[String], schema: org.apache.spark.sql.types.StructType)(
+      hit: DataFrame => DataFrame)
+      : (DataFrame, org.apache.spark.sql.Dataset[(String, Long)]) = {
+    val rows = hit(readFilesWithRowId(spark, dir, m, rels, schema))
+      .select(col("__graft_rel").as("file"), col("__graft_pos").as("pos"))
+    (rows, rows.groupBy("file").count()
+      .as(org.apache.spark.sql.Encoders.tuple(
+        org.apache.spark.sql.Encoders.STRING,
+        org.apache.spark.sql.Encoders.scalaLong)))
+  }
 
   /** The schema a version committed with (manifest receipt when
     * present, else footer inference). */
@@ -895,10 +916,6 @@ object VersionedTable {
           }
     }
 
-  /** The live files of version `v` that a conjunction of range bounds
-    * can possibly match, resolved purely from the manifest — plus the
-    * total live count as the skipping receipt. Files without usable
-    * stats for a bounded column are KEPT (conservative). */
   /** Pre-encode range bounds in their columns' stat domains; a bound
     * on a column the schema lacks (or an unsupported type) encodes to
     * nothing — it never prunes, and consumers treat the loss
@@ -917,6 +934,10 @@ object VersionedTable {
       }
     }
 
+  /** The live files of version `v` that a conjunction of range bounds
+    * can possibly match, resolved purely from the manifest — plus the
+    * total live count as the skipping receipt. Files without usable
+    * stats for a bounded column are KEPT (conservative). */
   def prunedFiles(spark: SparkSession, dir: String, v: Long,
       bounds: Seq[ColBound]): (Seq[String], Int) = {
     require(bounds.nonEmpty, "at least one bound (or use readVersion)")
@@ -1394,19 +1415,41 @@ object VersionedTable {
         s"unknown cluster mode '$other' — 'range' or 'zorder'")
     }
 
-  /** A planner's rewrite of touched files, shaped into `nFiles` files:
-    * with a clustering declared at `v`, re-clustered so file-local key
-    * envelopes survive (a join's hash shuffle would otherwise spread
-    * every key range across every output file and kill data skipping
-    * for all future reads); else coalesced — sized to the churn, not
-    * fanned into shuffle.partitions tiny files. */
-  private def clusterRewrite(spark: SparkSession, dir: String, v: Long,
-      rows: DataFrame, nFiles: Int): DataFrame = {
-    val cols = clusterColsOf(spark, dir, v)
-      .filter(schemaOf(spark, dir, v).fieldNames.contains)
-    if (cols.nonEmpty)
-      clusterShape(rows, cols, clusterModeOf(spark, dir, v), nFiles)
-    else rows.coalesce(nFiles)
+  /** The rewrite step of the file-granular writers ([[merge]],
+    * [[updateWhere]], [[purgeDeletes]], [[compactSmallFiles]]): read
+    * `files` of version `planV` through their deletion masks (a rewrite
+    * must never resurrect a DV-deleted row; it materializes the mask),
+    * `transform` the rows, shape them into `nFiles` files and land them
+    * through [[commitDelta]] in place of `files`, with `files` as the
+    * read set. The shape is the caller's `reshape` when given; else,
+    * with a clustering declared at `planV`, the rows re-cluster so
+    * file-local key envelopes survive (a join's hash shuffle would
+    * otherwise spread every key range across every output file and kill
+    * data skipping for all future reads); else they coalesce — sized to
+    * the churn, not fanned into shuffle.partitions tiny files. */
+  private def rewrite(spark: SparkSession, dir: String, planV: Long,
+      writerId: String, files: Seq[String], nFiles: Int,
+      reshape: Option[DataFrame => DataFrame] = None,
+      meta: Map[String, String] = Map.empty,
+      expectations: Map[String, String] = Map.empty,
+      readBounds: Seq[ColBound] = Seq.empty, readsTable: Boolean = false,
+      readScope: Option[String] = None, rebaseAttempts: Int = 0)(
+      transform: DataFrame => DataFrame): DeltaStats = {
+    val schema = schemaOf(spark, dir, planV)
+    val rows = transform(readFilesMasked(spark, dir,
+      readManifest(spark, dir, planV), files, schema))
+    val cols = clusterColsOf(spark, dir, planV)
+      .filter(schema.fieldNames.contains)
+    val shaped = reshape match {
+      case Some(r) => r(rows).coalesce(nFiles)
+      case None if cols.nonEmpty =>
+        clusterShape(rows, cols, clusterModeOf(spark, dir, planV), nFiles)
+      case None => rows.coalesce(nFiles)
+    }
+    commitDelta(spark, dir, Some(shaped), files, planV, writerId,
+      meta = meta, expectations = expectations, readSet = files,
+      readBounds = readBounds, readsTable = readsTable,
+      rebaseAttempts = rebaseAttempts, readScope = readScope)
   }
 
   /** Version `v`'s persisted expectations: name → boolean SQL. */
@@ -2623,24 +2666,23 @@ object VersionedTable {
     * files as removes. Unchanged files are never read past the
     * pruning pass nor rewritten.
     *
-    * Scale shape: one pruning pass (scan keys + input_file_name,
-    * semi-join the change keys — with a clustered layout this is the
-    * files whose key envelopes intersect the change set), one
-    * touched-file-sized rewrite join. The touched FILE LIST is
-    * bounded driver metadata; row data never collects. */
+    * Scale shape: one pruning pass (the row-level writes' [[hitScan]]
+    * over the candidate files, semi-joined with the change keys — with
+    * a clustered layout the candidates are the files whose key
+    * envelopes intersect the change set), one touched-file-sized
+    * rewrite join ([[rewrite]]). The touched FILE LIST is bounded
+    * driver metadata; row data never collects. */
   def merge(spark: SparkSession, dir: String, changes: DataFrame,
       keys: Seq[String], expectedVersion: Long, writerId: String,
       deleteCol: Option[String] = None,
       meta: Map[String, String] = Map.empty,
       expectations: Map[String, String] = Map.empty,
       rebaseAttempts: Int = 0): DeltaStats = {
+    requireWriterId(writerId)
     require(keys.nonEmpty, "at least one merge key")
     val planV = planVersion(spark, dir, expectedVersion, rebaseAttempts)
     val parentM = readManifest(spark, dir, planV)
-    val parentLive = liveFiles(spark, dir, planV)
     val schema = schemaOf(spark, dir, planV)
-    val dirAbs = fs(spark, dir).makeQualified(
-      new org.apache.hadoop.fs.Path(rootOf(dir))).toUri.getPath
     val keyChanges = changes.select(keys.map(col): _*).distinct()
     // the change set's leading-key envelope: drives BOTH the stats
     // pre-prune below and (round 14) the rebase conflict analysis —
@@ -2658,45 +2700,27 @@ object VersionedTable {
         else Some(Some(ColBound(k, Some(row.get(0)), Some(row.get(1)))))
       }
     }
-    // Stats pre-prune (round 12): when the parent manifest carries
-    // stats for the leading merge key, restrict the touched-file SCAN
-    // to files whose key envelope intersects the change set's own
+    // Stats pre-prune (round 12): restrict the touched-file SCAN to
+    // files whose key envelope intersects the change set's own
     // [min, max] — a one-row aggregation over the (churn-sized)
-    // changes. Conservative superset of the semi-join's answer, so
-    // `touched` is unchanged; what changes is that a clustered 100 TB
-    // table with localized churn scans the intersecting files instead
-    // of every live file even in the PRUNING pass.
-    val scanCandidates: Seq[String] = keyEnvelope match {
-      case None => parentLive
+    // changes. Conservative superset of the semi-join's answer (files
+    // without stats for the key are kept), so `touched` is unchanged;
+    // what changes is that a clustered 100 TB table with localized
+    // churn scans the intersecting files instead of every live file
+    // even in the PRUNING pass.
+    val envelope = keyEnvelope.flatten.toSeq
+    val candidates: Seq[String] = keyEnvelope match {
       case Some(None) => Seq.empty // all change keys NULL: no row can match
-      case Some(Some(b)) =>
-        if (!parentM.stats.valuesIterator.exists(_.contains(keys.head)))
-          parentLive
-        else prunedFiles(spark, dir, planV, Seq(b))._1
+      case _ => prunedCandidates(spark, dir, planV, "true", schema, envelope)
     }
+    // touched = files holding a row a change key matches, scanned
+    // UNMASKED ([[hitScan]]: the read set must cover masked matches);
+    // the rewrite itself reads through the mask
     val touched: Seq[String] =
-      if (scanCandidates.isEmpty) Seq.empty
-      else spark.read.schema(physSchema(schema, parentM.colmap))
-        .parquet(scanCandidates.map(rel => s"${rootOf(dir)}/$rel"): _*)
-        .select(keys.map(k =>
-          col(s"`${physName(parentM.colmap, k)}`").as(k)) :+
-          input_file_name().as("__file"): _*)
-        .join(keyChanges, keys, "left_semi")
-        .select(col("__file")).distinct()
-        .collect().map { r =>
-          val p = new org.apache.hadoop.fs.Path(r.getString(0)).toUri.getPath
-          require(p.startsWith(dirAbs + "/"),
-            s"merge: scanned file $p is outside the table at $dirAbs")
-          p.stripPrefix(dirAbs + "/")
-        }.toSeq.sorted
-    // masked read: a rewrite MUST NOT resurrect DV-deleted rows — the
-    // pruning scan above may read them (conservative superset), but
-    // the rows that survive into the rewrite go through the mask
-    val touchedRows = readFilesMasked(spark, dir, parentM, touched, schema)
-    // re-clustered rewrites place inserts range-appropriately too
-    val rewritten = clusterRewrite(spark, dir, planV,
-      Incremental.mergeUpsert(touchedRows, changes, keys, deleteCol),
-      math.max(1, touched.length))
+      if (candidates.isEmpty) Seq.empty
+      else hitScan(spark, dir, parentM.copy(dv = Map.empty), candidates,
+        schema)(_.join(keyChanges, keys, "left_semi"))._2
+        .collect().map(_._1).toSeq.sorted
     // rebase footprint: the merge READ exactly `touched` (files outside
     // it provably held no matching keys at plan time — a winner's mask
     // on them only removes rows, harmless), and its row scope is the
@@ -2709,14 +2733,14 @@ object VersionedTable {
     // LATER scoped loser whose recorded scope is provably disjoint can
     // rebase under this winner instead of refusing on its added files
     // (carried rows are covered by the loser's readSet clash check —
-    // see the rebaseConflict scaladoc)
-    val myScope = encodeScopeMeta(schema, keyEnvelope.flatten.toSeq)
-    commitDelta(spark, dir, Some(rewritten), touched, planV,
-      writerId, meta = withScope(meta, "merge", myScope),
-      expectations = expectations,
-      readSet = touched, readBounds = keyEnvelope.flatten.toSeq,
-      readsTable = true, rebaseAttempts = rebaseAttempts,
-      readScope = myScope)
+    // see the rebaseConflict scaladoc). Re-clustered rewrites place
+    // inserts range-appropriately too.
+    val myScope = encodeScopeMeta(schema, envelope)
+    rewrite(spark, dir, planV, writerId, touched, math.max(1, touched.length),
+      meta = withScope(meta, "merge", myScope), expectations = expectations,
+      readBounds = envelope, readsTable = true,
+      readScope = myScope, rebaseAttempts = rebaseAttempts)(
+      Incremental.mergeUpsert(_, changes, keys, deleteCol))
   }
 
   // ─────────────── persisted change feed (round 13) ───────────────
@@ -3185,8 +3209,9 @@ object VersionedTable {
 
   /** The pruned candidate set for a predicate, resolved through
     * [[impliedAlternatives]] (union of per-disjunct prunes), plus any
-    * explicit extra bounds ANDed into every alternative. Preserves
-    * live-file order. */
+    * explicit extra bounds ANDed into every alternative ([[merge]]
+    * passes `true` with its key envelope as the one bound set).
+    * Preserves live-file order. */
   private def prunedCandidates(spark: SparkSession, dir: String, v: Long,
       predicate: String, schema: org.apache.spark.sql.types.StructType,
       extra: Seq[ColBound]): Seq[String] = {
@@ -3254,9 +3279,8 @@ object VersionedTable {
     def noOp = DeleteStats(-1L, 0L, 0L, 0L, live.length.toLong, 0L,
       candidates.length.toLong)
     if (candidates.isEmpty) return noOp
-    val matched = readFilesWithRowId(spark, dir, m, candidates, schema)
-      .where(expr(predicate))
-      .select(col("__graft_rel").as("file"), col("__graft_pos").as("pos"))
+    val (matched, perFile) = hitScan(spark, dir, m, candidates, schema)(
+      _.where(expr(predicate)))
     // Per touched file (fresh hits, physical rows) from ONE distributed
     // job: hits aggregate per file and each file's footer is read next
     // to its count, so a scattered delete over a 10^7-file table
@@ -3268,16 +3292,12 @@ object VersionedTable {
       val conf = new org.apache.spark.util.SerializableConfiguration(
         spark.sessionState.newHadoopConf())
       val dirStr = rootOf(dir)
-      matched.groupBy("file").count()
-        .as(org.apache.spark.sql.Encoders.tuple(
-          org.apache.spark.sql.Encoders.STRING,
-          org.apache.spark.sql.Encoders.scalaLong))
-        .mapPartitions(_.map { case (rel, hits) =>
-          (rel, hits, footerRows(conf.value, s"$dirStr/$rel"))
-        })(org.apache.spark.sql.Encoders.tuple(
-          org.apache.spark.sql.Encoders.STRING,
-          org.apache.spark.sql.Encoders.scalaLong,
-          org.apache.spark.sql.Encoders.scalaLong))
+      perFile.mapPartitions(_.map { case (rel, hits) =>
+        (rel, hits, footerRows(conf.value, s"$dirStr/$rel"))
+      })(org.apache.spark.sql.Encoders.tuple(
+        org.apache.spark.sql.Encoders.STRING,
+        org.apache.spark.sql.Encoders.scalaLong,
+        org.apache.spark.sql.Encoders.scalaLong))
         .collect().sortBy(_._1)
     }
     val newCounts: Map[String, Long] = hitStats.map(t => t._1 -> t._2).toMap
@@ -3351,6 +3371,7 @@ object VersionedTable {
       sets: Seq[(String, String)], expectedVersion: Long, writerId: String,
       meta: Map[String, String] = Map.empty,
       rebaseAttempts: Int = 0): Option[DeltaStats] = {
+    requireWriterId(writerId)
     require(sets.nonEmpty, "updateWhere: no SET columns")
     val planV = planVersion(spark, dir, expectedVersion, rebaseAttempts)
     val m = readManifest(spark, dir, planV)
@@ -3365,22 +3386,9 @@ object VersionedTable {
       schema, Seq.empty)
     if (candidates.isEmpty) return None
     // touched = files holding at least one matching (unmasked) row
-    val touched = readFilesWithRowId(spark, dir, m, candidates, schema)
-      .where(expr(predicate))
-      .select(col("__graft_rel")).distinct()
-      .collect().map(_.getString(0)).toSeq.sorted
+    val touched = hitScan(spark, dir, m, candidates, schema)(
+      _.where(expr(predicate)))._2.collect().map(_._1).toSeq.sorted
     if (touched.isEmpty) return None
-    val rows = readFilesMasked(spark, dir, m, touched, schema)
-    val updated = rows.select(schema.fields.map { f =>
-      sets.find(_._1 == f.name) match {
-        case Some((_, e)) =>
-          when(expr(predicate), expr(e).cast(f.dataType))
-            .otherwise(col(s"`${f.name}`")).as(f.name)
-        case None => col(s"`${f.name}`")
-      }
-    }.toIndexedSeq: _*)
-    val rewritten = clusterRewrite(spark, dir, planV, updated,
-      math.max(1, touched.length))
     // recorded scope (round 16): the predicate hull restricted to
     // columns this update does NOT set — a SET column's post-image can
     // leave the predicate envelope, so recording its bound would let a
@@ -3390,10 +3398,17 @@ object VersionedTable {
     // claims about every row this commit modified.
     val scopeBounds = bounds.filterNot(b => sets.exists(_._1 == b.col))
     val myScope = encodeScopeMeta(schema, scopeBounds)
-    Some(commitDelta(spark, dir, Some(rewritten), touched, planV, writerId,
-      meta = withScope(meta, "update", myScope), readSet = touched,
-      readBounds = bounds,
-      rebaseAttempts = rebaseAttempts, readScope = myScope))
+    Some(rewrite(spark, dir, planV, writerId, touched, touched.length,
+      meta = withScope(meta, "update", myScope), readBounds = bounds,
+      readScope = myScope, rebaseAttempts = rebaseAttempts)(
+      _.select(schema.fields.map { f =>
+        sets.find(_._1 == f.name) match {
+          case Some((_, e)) =>
+            when(expr(predicate), expr(e).cast(f.dataType))
+              .otherwise(col(s"`${f.name}`")).as(f.name)
+          case None => col(s"`${f.name}`")
+        }
+      }.toIndexedSeq: _*)))
   }
 
   /** Materialize every deletion-vector mask: rewrite the masked files
@@ -3406,22 +3421,16 @@ object VersionedTable {
   def purgeDeletes(spark: SparkSession, dir: String,
       expectedVersion: Long, writerId: String,
       rebaseAttempts: Int = 0): Option[DeltaStats] = {
+    requireWriterId(writerId)
     val planV = planVersion(spark, dir, expectedVersion, rebaseAttempts)
     val m = readManifest(spark, dir, planV)
-    val live = liveFiles(spark, dir, planV)
-    val masked = live.filter(m.dv.contains)
+    val masked = liveFiles(spark, dir, planV).filter(m.dv.contains)
+    // content-neutral rewrite: depends only on its OWN files' bytes
+    // and masks — readsTable stays false, so a racing append/merge
+    // on other files rebases cleanly under it
     if (masked.isEmpty) None
-    else {
-      val rows = readFilesMasked(spark, dir, m, masked,
-        schemaOf(spark, dir, planV))
-      val rewritten = clusterRewrite(spark, dir, planV, rows,
-        math.max(1, masked.length))
-      // content-neutral rewrite: depends only on its OWN files' bytes
-      // and masks — readsTable stays false, so a racing append/merge
-      // on other files rebases cleanly under it
-      Some(commitDelta(spark, dir, Some(rewritten), masked, planV,
-        writerId, readSet = masked, rebaseAttempts = rebaseAttempts))
-    }
+    else Some(rewrite(spark, dir, planV, writerId, masked, masked.length,
+      rebaseAttempts = rebaseAttempts)(identity))
   }
 
   /** OPTIMIZE as a file-granular commit: rewrite only the live files
@@ -3434,31 +3443,22 @@ object VersionedTable {
       targetFileCount: Int = 1,
       reshape: Option[DataFrame => DataFrame] = None,
       rebaseAttempts: Int = 0): Option[DeltaStats] = {
+    requireWriterId(writerId)
     val planV = planVersion(spark, dir, expectedVersion, rebaseAttempts)
     val f = fs(spark, dir)
     val small = liveFiles(spark, dir, planV).filter(rel =>
       f.getFileStatus(new org.apache.hadoop.fs.Path(s"${rootOf(dir)}/$rel"))
         .getLen < smallBytes)
+    // clustering is a table property: with a declaration and no
+    // caller reshape, OPTIMIZE bin-packs INTO the clustering order
+    // (range + sort), so compaction tightens envelopes instead of
+    // scrambling them; an explicit reshape (e.g. z-order) wins.
+    // Content-neutral: OPTIMIZE only repacks its own small files —
+    // a concurrent append/merge/delete on OTHER files rebases under
+    // it instead of forcing the whole bin-pack to redo
     if (small.length < 2) None
-    else {
-      // masked read: bin-packing a DV-masked small file materializes
-      // its mask instead of resurrecting the deleted rows
-      val read = readFilesMasked(spark, dir,
-        readManifest(spark, dir, planV), small, schemaOf(spark, dir, planV))
-      // clustering is a table property: with a declaration and no
-      // caller reshape, OPTIMIZE bin-packs INTO the clustering order
-      // (range + sort), so compaction tightens envelopes instead of
-      // scrambling them; an explicit reshape (e.g. z-order) wins
-      val packed = reshape match {
-        case Some(r) => r(read).coalesce(targetFileCount)
-        case None => clusterRewrite(spark, dir, planV, read, targetFileCount)
-      }
-      // content-neutral: OPTIMIZE only repacks its own small files —
-      // a concurrent append/merge/delete on OTHER files rebases under
-      // it instead of forcing the whole bin-pack to redo
-      Some(commitDelta(spark, dir, Some(packed), small, planV,
-        writerId, readSet = small, rebaseAttempts = rebaseAttempts))
-    }
+    else Some(rewrite(spark, dir, planV, writerId, small, targetFileCount,
+      reshape = reshape, rebaseAttempts = rebaseAttempts)(identity))
   }
 
   // ──────── incremental cross-cluster replication (round 12) ────────
@@ -3952,19 +3952,11 @@ object VersionedTable {
         if (files.isEmpty) None
         else {
           feedFiles += files.length
-          val logical = schemaOf(spark, dir, v)
-          val colmap = readManifest(spark, dir, v).colmap
-          val sch = physSchema(logical, colmap)
+          val sch = schemaOf(spark, dir, v)
             .add("op", org.apache.spark.sql.types.StringType)
             .add("version", org.apache.spark.sql.types.LongType)
-          val raw = spark.read.schema(sch)
-            .parquet(files.map(r => s"${rootOf(dir)}/$r"): _*)
-          val aliased =
-            if (colmap.isEmpty) raw
-            else raw.select(logical.fields.map(f =>
-              col(s"`${physName(colmap, f.name)}`").as(f.name)).toSeq ++
-              Seq(col("op"), col("version")): _*)
-          Some(aliased
+          Some(readPhysical(spark, dir, files, sch,
+              readManifest(spark, dir, v).colmap)
             .filter(col("op") =!= "delete").filter(expr(predicate))
             .select(lit(v).as("v")))
         }

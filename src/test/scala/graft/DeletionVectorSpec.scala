@@ -378,17 +378,14 @@ class DeletionVectorSpec extends SparkSpec {
     * latch-gated UDF, so the winner provably commits BETWEEN the
     * loser's plan and its CAS (a stale entry would otherwise just
     * replan at the tip and never exercise the rebase). */
-  private def raceLoser(dir: String, gate: String, losersPred: String,
-      winner: () => Unit, attempts: Int = 2)
-      : Either[Throwable, VersionedTable.DeleteStats] = {
+  private def raceLoser[T](gate: String, winner: () => Unit)(
+      loserBody: => T): Either[Throwable, T] = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
     import scala.concurrent.ExecutionContext.Implicits.global
     RaceGates.arm(gate)
     val loser = Future {
-      try Right(VersionedTable.deleteWhere(spark, dir,
-        s"race_gate('$gate') AND $losersPred", 0L, s"loser-$gate",
-        rebaseAttempts = attempts))
+      try Right(loserBody)
       catch { case t: Throwable => Left(t) }
     }
     assert(RaceGates.entered(gate).await(60,
@@ -398,6 +395,13 @@ class DeletionVectorSpec extends SparkSpec {
     Await.result(loser, 120.seconds)
   }
 
+  /** A gated deleteWhere planned at v0 as the race loser. */
+  private def raceDelete(dir: String, gate: String, losersPred: String,
+      winner: () => Unit): Either[Throwable, VersionedTable.DeleteStats] =
+    raceLoser(gate, winner)(VersionedTable.deleteWhere(spark, dir,
+      s"race_gate('$gate') AND $losersPred", 0L, s"loser-$gate",
+      rebaseAttempts = 2))
+
   test("mask-union rebase: two scope-disjoint deletes on the SAME hot file both land") {
     val dir = tmp("dv-union")
     mkTable(dir) // 4 files clustered on k: 0-24, 25-49, 50-74, 75-99
@@ -405,7 +409,7 @@ class DeletionVectorSpec extends SparkSpec {
     // both deletes hit the FIRST file: file-granular conflict detection
     // would serialize them; recorded disjoint scopes admit the union.
     // A plans at v0, B wins v1 mid-flight, A mask-merges onto v2.
-    val a = raceLoser(dir, "u1", "k >= 10 AND k <= 12", () => {
+    val a = raceDelete(dir, "u1", "k >= 10 AND k <= 12", () => {
       val b = VersionedTable.deleteWhere(spark, dir, "k >= 2 AND k <= 4",
         0L, "wB")
       assert(b.version == 1L && b.rowsDeleted == 3L)
@@ -441,7 +445,7 @@ class DeletionVectorSpec extends SparkSpec {
     locally { // OVERLAPPING scopes on the same file still lose loudly
       val dir = tmp("dv-union-ovl")
       mkTable(dir)
-      val r = raceLoser(dir, "u2", "k >= 21 AND k <= 23", () => {
+      val r = raceDelete(dir, "u2", "k >= 21 AND k <= 23", () => {
         VersionedTable.deleteWhere(spark, dir, "k >= 20 AND k <= 22",
           0L, "wC")
       })
@@ -451,13 +455,57 @@ class DeletionVectorSpec extends SparkSpec {
     locally { // a winner that REWROTE the file (update) proves nothing
       val dir = tmp("dv-union-upd")
       mkTable(dir)
-      val r = raceLoser(dir, "u3", "k = 11", () => {
+      val r = raceDelete(dir, "u3", "k = 11", () => {
         VersionedTable.updateWhere(spark, dir, "k = 12",
           Seq("v" -> "'x'"), 0L, "wU")
       })
       assert(r.swap.toOption.exists(_.isInstanceOf[VersionedTable.CommitConflict]),
         s"a rewrite winner must refuse the mask merge: $r")
     }
+  }
+
+  test("merge's read set keeps masked key hits: a restore that unmasks them refuses") {
+    // k = 30 is masked at v1, so the merge of (30, "new") inserts it;
+    // the hit scan reads UNMASKED, so k = 30's file is still in the
+    // merge's read set, and a restore winner that lifts the mask
+    // conflicts instead of letting the insert land as a second k = 30
+    val dir = tmp("dv-merge-restore")
+    mkTable(dir)
+    spark.udf.register("race_gate", (name: String) => RaceGates.gate(name))
+    VersionedTable.deleteWhere(spark, dir, "k = 30", 0L, "gdpr")
+    val changes = Seq((30L, "new")).toDF("k", "v")
+      .where(expr("race_gate('r1')"))
+    val r = raceLoser("r1", () => {
+      VersionedTable.restore(spark, dir, toVersion = 0L,
+        expectedVersion = 1L, writerId = "wR")
+    })(VersionedTable.merge(spark, dir, changes, Seq("k"), 1L, "loser-r1",
+      rebaseAttempts = 1))
+    assert(r.swap.toOption.exists(_.isInstanceOf[VersionedTable.CommitConflict]),
+      s"a restore that unmasks the merge's key must refuse it: $r")
+    assert(VersionedTable.read(spark, dir).where($"k" === 30L).count() == 1L,
+      "k = 30 must read exactly once")
+  }
+
+  test("row-level writes refuse a bad writer id before any job") {
+    val dir = tmp("dv-writer-id")
+    mkTable(dir)
+    val changes = Seq((5L, "upd5")).toDF("k", "v")
+    val writes: Seq[(String, () => Any)] = Seq(
+      "merge" -> (() => VersionedTable.merge(spark, dir, changes, Seq("k"),
+        0L, "a/b")),
+      "updateWhere" -> (() => VersionedTable.updateWhere(spark, dir, "k = 5",
+        Seq("v" -> "'x'"), 0L, "a/b")),
+      "purgeDeletes" -> (() => VersionedTable.purgeDeletes(spark, dir, 0L,
+        "a/b")),
+      "compactSmallFiles" -> (() => VersionedTable.compactSmallFiles(spark,
+        dir, 0L, "a/b", smallBytes = Long.MaxValue)))
+    writes.foreach { case (op, write) =>
+      val jobs = jobsStarted {
+        intercept[IllegalArgumentException](write())
+      }
+      assert(jobs == 0, s"$op started $jobs jobs before refusing 'a/b'")
+    }
+    assert(VersionedTable.latestVersion(spark, dir) == 0L)
   }
 
   test("deleteWhere finds its hit stats in one distributed job") {
@@ -483,6 +531,40 @@ class DeletionVectorSpec extends SparkSpec {
     val masks = VersionedTable.readManifest(spark, dir, 1L).dv
     assert(masks.size == 4 && masks.values.map(_._2).sum == hit.length,
       s"per-file mask counts: $masks")
+  }
+
+  test("merge's job footprint: one update key and one insert key") {
+    val dir = tmp("dv-merge-jobs")
+    mkTable(dir)
+    val changes = Seq((5L, "upd5"), (200L, "new200")).toDF("k", "v")
+    var st: VersionedTable.DeltaStats = null
+    val jobs = jobsStarted {
+      st = VersionedTable.merge(spark, dir, changes, Seq("k"), 0L, "m")
+    }
+    // the merge's whole job footprint on this 4-file table
+    assert(jobs == 11, s"merge started $jobs jobs")
+    assert(st.version == 1L && st.filesRemoved == 1L, s"receipt: $st")
+    val got = VersionedTable.read(spark, dir).as[(Long, String)].collect().toSet
+    val want = (0L until 100L).map(k => (k, if (k == 5L) "upd5" else s"r$k"))
+      .toSet + ((200L, "new200"))
+    assert(got == want, "merged rows")
+  }
+
+  test("updateWhere's job footprint") {
+    val dir = tmp("dv-update-jobs")
+    mkTable(dir)
+    var st: Option[VersionedTable.DeltaStats] = None
+    val jobs = jobsStarted {
+      st = VersionedTable.updateWhere(spark, dir, "k = 5 OR k = 60",
+        Seq("v" -> "'x'"), 0L, "u")
+    }
+    // the update's whole job footprint on this 4-file table
+    assert(jobs == 6, s"updateWhere started $jobs jobs")
+    assert(st.exists(s => s.version == 1L && s.filesRemoved == 2L),
+      s"receipt: $st")
+    val got = VersionedTable.read(spark, dir).as[(Long, String)].collect().toSet
+    assert(got == (0L until 100L).map(k =>
+      (k, if (k == 5L || k == 60L) "x" else s"r$k")).toSet, "updated rows")
   }
 }
 
